@@ -103,7 +103,7 @@ final class VersionedScanBuilder(path: String, version: Int, full: StructType,
                                  statsKey: Option[String],
                                  statsKey2: Option[String],
                                  statsCols: Seq[String] = Seq.empty,
-                                 planListener: Option[Seq[Versioned.EntryView] => Unit] = None)
+                                 planListener: Option[Seq[Versioned.Entry] => Unit] = None)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters
     with org.apache.spark.sql.connector.read.SupportsPushDownAggregates {
@@ -332,7 +332,7 @@ final class VersionedScan(path: String, version: Int, full: StructType,
                           stringHi: Map[String, String] = Map.empty,
                           nullCols: Set[String] = Set.empty,
                           notNullCols: Set[String] = Set.empty,
-                          planListener: Option[Seq[Versioned.EntryView] => Unit] = None)
+                          planListener: Option[Seq[Versioned.Entry] => Unit] = None)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeV2Filtering {
   override def readSchema(): StructType = required
@@ -425,7 +425,7 @@ final class VersionedScan(path: String, version: Int, full: StructType,
     statsCols.map(c => dimBounds(Some(c))._1)
   private val anyExtraPredicate = extraBounds.exists(_.isDefined) ||
     statsCols.exists(c => nullCols(c) || notNullCols(c))
-  private def fileSurvives(e: Versioned.EntryView): Boolean = {
+  private def fileSurvives(e: Versioned.Entry): Boolean = {
     val dim1 = (keyBounds, e.kmin, e.kmax) match {
       case (Some((lo, hi)), Some(mn), Some(mx)) =>
         mn <= hi && mx >= lo &&
@@ -545,7 +545,7 @@ final class VersionedScan(path: String, version: Int, full: StructType,
     }
   }
 
-  private def runtimeSurvivors: Seq[Versioned.EntryView] =
+  private def runtimeSurvivors: Seq[Versioned.Entry] =
     survivors
       .filter(e => runtimeKeys.forall(ks => Versioned.viewMayContainKeys(e, ks)))
       .filter(e => runtimeProbes.forall(ps => Versioned.viewMayContainProbes(e, ps)))

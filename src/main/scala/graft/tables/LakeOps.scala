@@ -188,6 +188,15 @@ private[graft] object KeyEnc {
   * sync, so a crash between any two steps leaves the table readable at
   * the previous version.
   *
+  * TABLE METADATA: a manifest opens with `#`-prefixed header lines,
+  * parsed once per version into a [[Versioned.TableMeta]]. TABLE headers
+  * carry into every later version unless the committing operation
+  * changes them: `#schema`, `#statskey`, `#statskey2`, `#statscols`,
+  * `#partcol` and `#constraint` from the operation's base version,
+  * `#colmap` and `#coldropped` (column mapping) from the latest one.
+  * COMMIT headers describe their own commit only: `#tag`, `#changes`,
+  * `#op`, and the entry-encoding lines `#entriesfile`, `#base` and `#rm`.
+  *
   * DELTA COMMITS + CHECKPOINTS (the public Delta-log design: JSON delta
   * actions per commit, a periodic full checkpoint, `_last_checkpoint`
   * resolution — re-derived on the manifest store): a commit whose entry
@@ -329,9 +338,10 @@ object Versioned {
     * optional field from nrows on serializes positionally with "-"
     * padding, so a legacy entry that GAINS a tail field (a deletion
     * vector on a pre-nrows file) keeps it addressable instead of
-    * silently dropping it.
+    * silently dropping it. The DSv2 connector and the table-tail source
+    * plan over these entries directly.
     */
-  private case class Entry(partDir: String, dataDir: String,
+  private[graft] case class Entry(partDir: String, dataDir: String,
                            file: Option[String] = None,
                            kmin: Option[Long] = None,
                            kmax: Option[Long] = None,
@@ -378,6 +388,89 @@ object Versioned {
       longAt(8), longAt(9), longAt(10),
       if (f.length > 11) Some(f(11)).filter(_ != "-") else None)
     else Entry(f(0), f(1))
+  }
+
+  /** Table metadata of one committed version: its manifest's leading `#`
+    * header block, parsed once (and memoized per manifest observation by
+    * [[metaOf]]). The `TABLE` fields — schema, stats dimensions, partition
+    * spec, constraints, column mapping — describe the table and carry into
+    * later versions: a commit starts from its base version's meta and
+    * states only what it changes. The `COMMIT` fields — `tag`, `changesDir`,
+    * `op` and the entry-encoding pointers `entriesFile` / `base` — describe
+    * one commit only; [[commit]] sets them on every write.
+    *
+    * [[header]] is the one writer of these header lines. Serialization is
+    * byte-stable: `TableMeta.parse(block).header` reproduces every line of
+    * the block except the `#rm` entry removals (which commit writes right
+    * after `#base`) and a sidecar manifest's `#commit` terminator.
+    * `#entriesfile` and `#base` never coexist: a sidecar only ever holds a
+    * full checkpoint. Pre-header manifests parse with the defaults (no
+    * schema, op "WRITE").
+    */
+  private[graft] case class TableMeta(
+      // TABLE
+      schema: Option[org.apache.spark.sql.types.StructType] = None,
+      statsKey: Option[String] = None,
+      statsKey2: Option[String] = None,
+      statsCols: Seq[String] = Seq.empty,
+      partCol: Option[String] = None,
+      constraints: Seq[(String, String)] = Seq.empty,
+      colMap: Map[String, Seq[String]] = Map.empty,
+      droppedCols: Set[String] = Set.empty,
+      // COMMIT
+      tag: Option[String] = None,
+      changesDir: Option[String] = None,
+      op: String = "WRITE",
+      entriesFile: Option[String] = None,
+      base: Option[(Int, Int)] = None) { // delta commit: (base version, chain depth)
+
+    def header: String =
+      tag.map(t => s"#tag\t$t\n").getOrElse("") +
+        schema.map(s => s"#schema\t${s.json}\n").getOrElse("") +
+        changesDir.map(d => s"#changes\t$d\n").getOrElse("") +
+        statsKey.map(k => s"#statskey\t$k\n").getOrElse("") +
+        statsKey2.map(k => s"#statskey2\t$k\n").getOrElse("") +
+        (if (statsCols.isEmpty) "" else s"#statscols\t${statsCols.mkString(",")}\n") +
+        partCol.map(c => s"#partcol\t$c\n").getOrElse("") +
+        colMap.toSeq.sortBy(_._1)
+          .map { case (l, as) => s"#colmap\t$l\t${as.mkString(",")}\n" }.mkString +
+        droppedCols.toSeq.sorted.map(n => s"#coldropped\t$n\n").mkString +
+        constraints.map { case (n, e) => s"#constraint\t$n\t$e\n" }.mkString +
+        s"#op\t$op\n" +
+        entriesFile.map(n => s"#entriesfile\t$n\n").getOrElse("") +
+        base.map { case (b, d) => s"#base\t$b\t$d\n" }.getOrElse("")
+  }
+
+  private[graft] object TableMeta {
+    def parse(block: Seq[String]): TableMeta = {
+      def values(prefix: String): Seq[String] =
+        block.collect { case l if l.startsWith(prefix) => l.substring(prefix.length) }
+      def value(prefix: String): Option[String] = values(prefix).headOption
+      TableMeta(
+        schema = value("#schema\t").map(j => org.apache.spark.sql.types.DataType
+          .fromJson(j).asInstanceOf[org.apache.spark.sql.types.StructType]),
+        statsKey = value("#statskey\t"),
+        statsKey2 = value("#statskey2\t"),
+        statsCols = value("#statscols\t").toSeq.flatMap(_.split(",")).filter(_.nonEmpty),
+        partCol = value("#partcol\t"),
+        constraints = values("#constraint\t").map { l =>
+          val c = l.split("\t", 2)
+          (c(0), c(1))
+        },
+        colMap = values("#colmap\t").map { l =>
+          val p = l.split("\t", 2)
+          p(0) -> p(1).split(",").toSeq.filter(_.nonEmpty)
+        }.toMap,
+        droppedCols = values("#coldropped\t").toSet,
+        tag = value("#tag\t"),
+        changesDir = value("#changes\t"),
+        op = value("#op\t").getOrElse("WRITE"),
+        entriesFile = value("#entriesfile\t"),
+        base = value("#base\t").map { l =>
+          val f = l.split("\t")
+          (f(0).toInt, f(1).toInt)
+        })
+    }
   }
 
   /** Parse an `xstats` slot into per-dimension surrogate bounds plus the
@@ -478,18 +571,17 @@ object Versioned {
 
   private def readManifestUncached(fsys: FileSystem, table: Path, v: Int): Seq[Entry] = {
     val body = manifestBody(fsys, table, v)
+    val meta = TableMeta.parse(body.takeWhile(_.startsWith("#")))
     val textOwn = body.filterNot(_.startsWith("#")).map(parseEntry)
     // Parquet-checkpoint manifests hold their entries in a sidecar
     // (`#entriesfile` header) — the text body is headers only.
-    val own = body.find(_.startsWith("#entriesfile\t")) match {
-      case Some(l) => readEntriesFile(fsys, new Path(manifestDir(table),
-        l.substring("#entriesfile\t".length))) ++ textOwn
+    val own = meta.entriesFile match {
+      case Some(n) => readEntriesFile(fsys, new Path(manifestDir(table), n)) ++ textOwn
       case None => textOwn
     }
-    body.find(_.startsWith("#base\t")) match {
+    meta.base match {
       case None => own
-      case Some(bl) =>
-        val bv = bl.split("\t")(1).toInt
+      case Some((bv, _)) =>
         val removed = body.filter(_.startsWith("#rm\t"))
           .map(_.substring("#rm\t".length)).toSet
         readManifest(fsys, table, bv)
@@ -515,93 +607,56 @@ object Versioned {
     lines.dropRight(1)
   }
 
-  /** (base version, chain depth) of `v`'s manifest; None for a full
-    * (checkpoint) manifest, whose depth is 0.
+  /** The parsed header block of version `v` ([[TableMeta]]), memoized on
+    * the manifest's (path, length, mtime) observation; the empty meta when
+    * the manifest does not exist (version 0, vacuumed). Headers precede
+    * entries and the read stops at the first non-`#` line, so manifests of
+    * any size cost a few reads — and a repeat costs one stat.
     */
-  private[graft] def chainBaseOf(fsys: FileSystem, table: Path, v: Int)
-      : Option[(Int, Int)] =
-    headerLine(fsys, table, v, "#base\t").map { l =>
-      val f = l.split("\t")
-      (f(0).toInt, f(1).toInt)
+  private def metaOf(fsys: FileSystem, table: Path, v: Int): TableMeta = {
+    val p = manifestPath(table, v)
+    obsKey(fsys, p) match {
+      case None => TableMeta()
+      case Some(key) =>
+        val hit = metaMemo.get(key)
+        if (hit != null) hit
+        else {
+          val in = fsys.open(p)
+          val m = try {
+            val br = new java.io.BufferedReader(new java.io.InputStreamReader(in, "UTF-8"))
+            TableMeta.parse(Iterator.continually(br.readLine())
+              .takeWhile(l => l != null && l.startsWith("#")).toList)
+          } finally in.close()
+          if (metaMemo.size > MetaMemoMax) metaMemo.clear()
+          metaMemo.put(key, m)
+          m
+        }
     }
+  }
+
+  private[graft] def metaOf(spark: SparkSession, tablePath: String, v: Int): TableMeta = {
+    val (fsys, table) = fs(spark, tablePath)
+    metaOf(fsys, table, v)
+  }
 
   /** Spec introspection: (base version, depth) of a committed version's
     * manifest, None when it is a full checkpoint.
     */
   def manifestChainOf(spark: SparkSession, tablePath: String, v: Int)
-      : Option[(Int, Int)] = {
-    val (fsys, table) = fs(spark, tablePath)
-    chainBaseOf(fsys, table, v)
-  }
-
-  /** The idempotence tag a version was committed with, if any — a
-    * `#tag\t<value>` line in the leading header block (commit() emits it
-    * first, but any header position satisfies this read).
-    */
-  private def readTag(fsys: FileSystem, table: Path, v: Int): Option[String] =
-    // The tag is always the FIRST header line when present (commit writes
-    // it first); reading it through the memoized header block turns
-    // taggedVersion's O(versions) per-file opens into stat calls.
-    headerLine(fsys, table, v, "#tag\t")
+      : Option[(Int, Int)] = metaOf(spark, tablePath, v).base
 
   /** The logical schema version `v` was committed with (`#schema\t<json>`
     * manifest line). Absent on pre-r14 manifests — readers then serve
     * whatever the files carry, which is uniform on a never-evolved table.
     */
   def schemaOf(spark: SparkSession, tablePath: String, v: Int)
-      : Option[org.apache.spark.sql.types.StructType] = {
-    val (fsys, table) = fs(spark, tablePath)
-    readSchemaLine(fsys, table, v)
-  }
-
-  private def headerLine(fsys: FileSystem, table: Path, v: Int,
-                         prefix: String): Option[String] =
-    headerLines(fsys, table, v, prefix).headOption
-
-  /** All header lines with `prefix`, in order. Headers precede entries;
-    * the scan stops at the first non-`#` line, so manifests of any size
-    * cost a few reads.
-    */
-  private def headerLines(fsys: FileSystem, table: Path, v: Int,
-                          prefix: String): Seq[String] = {
-    val p = manifestPath(table, v)
-    obsKey(fsys, p) match {
-      case None => Seq.empty
-      case Some(key) =>
-        val block = {
-          val hit = headerMemo.get(key)
-          if (hit != null) hit
-          else {
-            val in = fsys.open(p)
-            val b = try {
-              val br = new java.io.BufferedReader(
-                new java.io.InputStreamReader(in, "UTF-8"))
-              Iterator.continually(br.readLine())
-                .takeWhile(l => l != null && l.startsWith("#"))
-                .toList
-            } finally in.close()
-            if (headerMemo.size > HeaderMemoMax) headerMemo.clear()
-            headerMemo.put(key, b)
-            b
-          }
-        }
-        block.filter(_.startsWith(prefix)).map(_.substring(prefix.length))
-    }
-  }
-
-  private def readSchemaLine(fsys: FileSystem, table: Path, v: Int)
-      : Option[org.apache.spark.sql.types.StructType] =
-    headerLine(fsys, table, v, "#schema\t").map(j =>
-      org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+      : Option[org.apache.spark.sql.types.StructType] = metaOf(spark, tablePath, v).schema
 
   /** The recorded change-feed dir version `v` committed with, if its merge
     * passed `recordChanges = true` (`#changes\t<dir>` manifest line).
     */
-  def changesDirOf(spark: SparkSession, tablePath: String, v: Int): Option[String] = {
-    val (fsys, table) = fs(spark, tablePath)
-    headerLine(fsys, table, v, "#changes\t")
-  }
+  def changesDirOf(spark: SparkSession, tablePath: String, v: Int): Option[String] =
+    metaOf(spark, tablePath, v).changesDir
 
   /** Present `df` in `schema`'s shape: columns the files predate become
     * NULL (the add-column-with-NULL-backfill contract), order follows the
@@ -614,6 +669,35 @@ object Versioned {
       .foldLeft(df)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
     withAll.select(schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
   }
+
+  /** Rows read from a version's files, presented as that version (`meta`)
+    * serves them. Column mapping: a renamed column's bytes live under its
+    * FORMER name in pre-rename files — each mapped logical column resolves
+    * to the first populated alias (per row exactly one alias can be
+    * populated: name reuse is refused, so no file carries two). Only
+    * mappings whose LOGICAL name is in the version's schema apply: a
+    * branch-merge (`fromVersion`) from a pre-rename base records the OLD
+    * schema while the inherited map still carries the rename — applying
+    * it would drop the old-name column the schema projects. Then schema
+    * alignment: entries spliced from pre-evolution versions lack
+    * later-added columns — they read as NULL (and time travel to an old
+    * version serves the OLD schema, however evolved the files around it
+    * are); dropped columns fall away, the projection is exactly the
+    * schema's fields.
+    */
+  private def asOf(raw: DataFrame, meta: TableMeta): DataFrame = {
+    val mapped = applyColMap(raw, meta.colMap
+      .filter { case (l, _) => meta.schema.forall(_.fieldNames.contains(l)) })
+    meta.schema.map(alignTo(mapped, _)).getOrElse(mapped)
+  }
+
+  /** The schema `meta` (version `v`) records — which ALTER-style,
+    * header-only operations must evolve, so they refuse without one.
+    */
+  private def recordedSchema(meta: TableMeta, v: Int, tablePath: String)
+      : org.apache.spark.sql.types.StructType =
+    meta.schema.getOrElse(throw new IllegalArgumentException(
+      s"v$v of $tablePath records no schema — republish once to record one"))
 
   /** The committed version carrying idempotence tag `tag`, if any — the
     * Delta txn-id lookup: a replayed writer asks before re-applying.
@@ -631,7 +715,7 @@ object Versioned {
     fsys.listStatus(md).toSeq
       .flatMap(_.getPath.getName.stripSuffix(".txt").toIntOption)
       .sorted(Ordering[Int].reverse)
-      .find(v => isCommitted(fsys, table, v) && readTag(fsys, table, v).contains(tag))
+      .find(v => isCommitted(fsys, table, v) && metaOf(fsys, table, v).tag.contains(tag))
   }
 
   // Committed-manifest memo: a committed manifest's BYTES are immutable
@@ -650,17 +734,17 @@ object Versioned {
   // never rewritten in place (exclusive create; vacuum only unlinks), so
   // any parsed form may be cached keyed on the exact (path, length, mtime)
   // observation — a deleted-and-recreated path presents a new observation
-  // and misses. headerMemo holds the leading `#` block (every headerLine
-  // call used to re-open the file — DML lifecycles read 6+ headers per
-  // commit); entriesMemo holds the RESOLVED entry list of a version (a
+  // and misses. metaMemo holds the parsed header block (DML lifecycles
+  // read 6+ headers per commit; taggedVersion walks every version's tag);
+  // entriesMemo holds the RESOLVED entry list of a version (a
   // delta-chain resolution used to cost ≤ MaxChainDepth file reads per
   // call, on every readAt/merge/commit planning pass). Both are cleared
   // wholesale on overflow and by invalidateCommittedMemo, alongside the
   // committed memo, on deleteTree-and-rebuild paths.
-  private val HeaderMemoMax = 65536
+  private val MetaMemoMax = 65536
   private val EntriesMemoMax = 4096
-  private val headerMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
+  private val metaMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, TableMeta]()
   private val entriesMemo =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[Entry]]()
   // Bound entriesMemo by TOTAL cached entry count, not map size: a
@@ -689,14 +773,14 @@ object Versioned {
     * merely be transient: a stale entriesMemo hit could silently serve
     * the previous incarnation's entries. Every deleteTree-and-rebuild
     * path therefore calls this to drop ALL three memos (committed,
-    * header, entries) for the table before recreating it.
+    * meta, entries) for the table before recreating it.
     */
   private[graft] def invalidateCommittedMemo(tablePath: String): Unit = {
     // contains, not startsWith: memoized paths carry the FileSystem
     // scheme ("file:/tmp/...") while callers pass the raw local path.
     val it = committedMemo.iterator()
     while (it.hasNext) if (it.next().contains(tablePath)) it.remove()
-    val hit = headerMemo.keySet.iterator()
+    val hit = metaMemo.keySet.iterator()
     while (hit.hasNext) if (hit.next().contains(tablePath)) hit.remove()
     val eit = entriesMemo.keySet.iterator()
     while (eit.hasNext) if (eit.next().contains(tablePath)) eit.remove()
@@ -741,38 +825,34 @@ object Versioned {
     readManifest(fsys, table, v).map(_.dataDir).distinct
   }
 
-  /** Commit `entries` as the next version. The exclusive manifest create
-    * is the CAS: if another writer claimed the number first, clean up
-    * `orphanDirs` and raise [[ConcurrentWriteException]].
+  /** Commit `entries` as the next version, with table metadata `meta`
+    * (the base version's, plus what the operation changes) and the
+    * per-commit `op`, `tag` and `changesDir`. The exclusive manifest
+    * create is the CAS: if another writer claimed the number first, clean
+    * up `orphanDirs` and raise [[ConcurrentWriteException]].
+    *
+    * Column mapping (`colMap`, `droppedCols`) is taken from the LATEST
+    * version, not from `meta`, unless `ownsColumnMapping`: a rename/drop
+    * must survive every later commit — including branch merges and
+    * rebased commits whose meta came from an older base — or old files'
+    * bytes silently vanish from reads. Only ALTER RENAME/DROP COLUMN,
+    * RESTORE and CLONE set their own.
     */
   private def commit(fsys: FileSystem, table: Path, spark: SparkSession,
                      entries: Seq[Entry], expectedLatest: Option[Int],
-                     orphanDirs: Seq[Path],
+                     orphanDirs: Seq[Path], meta: TableMeta, op: String,
                      tag: Option[String] = None,
-                     schema: Option[org.apache.spark.sql.types.StructType] = None,
                      changesDir: Option[String] = None,
-                     statsKey: Option[String] = None,
-                     statsKey2: Option[String] = None,
-                     statsCols: Seq[String] = Seq.empty,
-                     partColHeader: Option[String] = None,
-                     constraints: Seq[(String, String)] = Seq.empty,
-                     colMap: Option[Seq[(String, Seq[String])]] = None,
-                     droppedCols: Option[Seq[String]] = None,
-                     op: String = "WRITE"): Int = {
+                     ownsColumnMapping: Boolean = false): Int = {
     preCommitHookForTests.foreach(_.apply())
     tag.foreach(t => require(!t.contains('\n') && !t.contains('\t'),
       s"idempotence tag must be single-line, tab-free: $t"))
     fsys.mkdirs(manifestDir(table))
     val latest = latestVersion(spark, table.toString)
-    // Column-mapping headers INHERIT from the base by default: unlike
-    // #partcol (threaded explicitly through every commit site — and
-    // historically dropped by some), a rename/drop must survive every
-    // subsequent commit or old files' bytes silently vanish from reads.
-    // Only the ALTER operations themselves pass an override.
-    val effColMap = colMap.getOrElse(
-      if (latest < 1) Seq.empty else colMapOf(fsys, table, latest).toSeq.sortBy(_._1))
-    val effDropped = droppedCols.getOrElse(
-      if (latest < 1) Seq.empty else droppedColsOf(fsys, table, latest).toSeq.sorted)
+    val latestMeta = metaOf(fsys, table, latest)
+    val withMapping =
+      if (ownsColumnMapping) meta
+      else meta.copy(colMap = latestMeta.colMap, droppedCols = latestMeta.droppedCols)
     def abort(why: String): Nothing = {
       orphanDirs.foreach(d => try fsys.delete(d, true) catch { case _: Throwable => () })
       throw new ConcurrentWriteException(why)
@@ -796,11 +876,11 @@ object Versioned {
     // wins; the depth cap forces a periodic full checkpoint so resolution
     // stays bounded. A racing vacuum of the previous manifest degrades to
     // a full write — never a broken chain.
-    val (deltaLines, ownEntries) = {
-      val full = ("", entries)
+    val (chainBase, removed, ownEntries) = {
+      val full: (Option[(Int, Int)], Seq[String], Seq[Entry]) = (None, Seq.empty, entries)
       if (latest < 1) full
       else {
-        val prevDepth = chainBaseOf(fsys, table, latest).map(_._2).getOrElse(0)
+        val prevDepth = latestMeta.base.map(_._2).getOrElse(0)
         if (prevDepth + 1 > MaxChainDepth) full
         else {
           try {
@@ -811,8 +891,7 @@ object Versioned {
             val removed = prevSer.filterNot(newSet)
             val added = entries.filterNot(e => prevSet(e.serialized))
             if (removed.size + added.size < entries.size)
-              (s"#base\t$latest\t${prevDepth + 1}\n" +
-                removed.map(r => s"#rm\t$r\n").mkString, added)
+              (Some((latest, prevDepth + 1)), removed, added)
             else full
           } catch { case _: Exception => full }
         }
@@ -829,7 +908,7 @@ object Versioned {
     // The sidecar is written AFTER the exclusive claim (the version
     // number is ours) and under a unique name; an abort deletes it.
     val useEntriesFile =
-      deltaLines.isEmpty && ownEntries.size >= ParquetCheckpointMinEntries
+      chainBase.isEmpty && ownEntries.size >= ParquetCheckpointMinEntries
     val entriesFile: Option[String] =
       if (!useEntriesFile) None
       else {
@@ -852,19 +931,9 @@ object Versioned {
               s"failed to write checkpoint sidecar for v$next", e)
         }
       }
-    val body = (tag.map(t => s"#tag\t$t\n").getOrElse("") +
-      schema.map(s => s"#schema\t${s.json}\n").getOrElse("") +
-      changesDir.map(d => s"#changes\t$d\n").getOrElse("") +
-      statsKey.map(k => s"#statskey\t$k\n").getOrElse("") +
-      statsKey2.map(k => s"#statskey2\t$k\n").getOrElse("") +
-      (if (statsCols.isEmpty) ""
-       else s"#statscols\t${statsCols.mkString(",")}\n") +
-      partColHeader.map(c => s"#partcol\t$c\n").getOrElse("") +
-      effColMap.map { case (l, as) => s"#colmap\t$l\t${as.mkString(",")}\n" }.mkString +
-      effDropped.map(n => s"#coldropped\t$n\n").mkString +
-      constraints.map { case (n, e) => s"#constraint\t$n\t$e\n" }.mkString +
-      s"#op\t$op\n" + deltaLines +
-      entriesFile.map(n => s"#entriesfile\t$n\n").getOrElse("") +
+    val body = (withMapping.copy(tag = tag, changesDir = changesDir, op = op,
+        entriesFile = entriesFile, base = chainBase).header +
+      removed.map(r => s"#rm\t$r\n").mkString +
       (if (entriesFile.isDefined) s"$Terminator\n"
        else ownEntries.map(_.serialized).mkString("", "\n", s"\n$Terminator\n")))
       .getBytes("UTF-8")
@@ -946,8 +1015,15 @@ object Versioned {
       "fileStatsKey2 requires fileStatsKey")
     require(fileStatsCols.isEmpty || fileStatsKey.isDefined,
       "fileStatsCols requires fileStatsKey")
-    validateConstraints(df,
-      constraintLines(fsys, table, latestVersion(spark, tablePath)))
+    // Constraints (and the column mapping — see commit) carry over from
+    // the latest version; a publish restates every other table header.
+    // Recording the partition column (CREATE already does) keeps partColOf
+    // off the directory-name fallback and lets adoptStaged exempt it from
+    // the staged-type check (its type is directory-inferred there).
+    val meta = metaOf(fsys, table, latestVersion(spark, tablePath)).copy(
+      schema = Some(df.schema), statsKey = fileStatsKey, statsKey2 = fileStatsKey2,
+      statsCols = fileStatsCols, partCol = partCol)
+    validateConstraints(df, meta.constraints)
     val dd = newDataDir(fsys, table)
     val entries = partCol match {
       case Some(pc) =>
@@ -956,27 +1032,14 @@ object Versioned {
           s"partition column $c: type ${df.schema(c).dataType} renders " +
             "format-dependent directory names; use int/long/string/boolean"))
         df.write.mode(SaveMode.ErrorIfExists).partitionBy(cols: _*).parquet(dd.toString)
-        fileStatsKey match {
-          case Some(k) => fileStatsOf(spark, table, dd, k,
-            stats2Col = fileStatsKey2, extraCols = fileStatsCols)
-          case None => listPartDirs(fsys, dd, cols.length).map(Entry(_, dd.getName))
-        }
+        if (fileStatsKey.isDefined) fileStatsOf(spark, table, dd, meta)
+        else listPartDirs(fsys, dd, cols.length).map(Entry(_, dd.getName))
       case None =>
         require(fileStatsKey.isEmpty, "fileStatsKey requires partCol")
         df.write.mode(SaveMode.ErrorIfExists).parquet(dd.toString)
         Seq(Entry("-", dd.getName))
     }
-    val cons = constraintLines(fsys, table, latestVersion(spark, tablePath))
-    commit(fsys, table, spark, entries, expectedLatest, Seq(dd),
-      schema = Some(df.schema), statsKey = fileStatsKey,
-      statsKey2 = fileStatsKey2, statsCols = fileStatsCols,
-      constraints = cons,
-      // Record the partition column (CREATE already does): partColOf
-      // stops depending on the directory-name fallback, and adoptStaged
-      // can exempt it from the staged-type check (its type is
-      // directory-inferred on the staged side).
-      partColHeader = partCol,
-      op = "PUBLISH")
+    commit(fsys, table, spark, entries, expectedLatest, Seq(dd), meta, "PUBLISH")
   }
 
   /** Back-compat alias: unpartitioned snapshot publish. */
@@ -1016,9 +1079,8 @@ object Versioned {
         s"stats column $c must be integral, string, or date")
     }
     commit(fsys, table, spark, Seq.empty, Some(0), Seq.empty,
-      schema = Some(schema), statsKey = statsKey, statsKey2 = statsKey2,
-      statsCols = statsCols,
-      partColHeader = partCol, op = "CREATE")
+      TableMeta(schema = Some(schema), statsKey = statsKey, statsKey2 = statsKey2,
+        statsCols = statsCols, partCol = partCol), "CREATE")
   }
 
   /** CTAS: CREATE + first data as ONE manifest commit (`op = CTAS`) —
@@ -1058,25 +1120,22 @@ object Versioned {
       require(KeyEnc.supported(schema(c).dataType),
         s"stats column $c must be integral, string, or date")
     }
+    val meta = TableMeta(schema = Some(schema), statsKey = statsKey,
+      statsKey2 = statsKey2, statsCols = statsCols, partCol = partCol)
     val entries = dataDirName match {
       case None => Seq.empty
       case Some(n) =>
         val dd = new Path(table, n)
         require(fsys.exists(dd), s"staged dir $dd does not exist")
         (statsKey, partCol) match {
-          case (Some(k), _) =>
-            fileStatsOf(spark, table, dd, k, stats2Col = statsKey2,
-              extraCols = statsCols)
+          case (Some(_), _) => fileStatsOf(spark, table, dd, meta)
           case (None, Some(pc)) =>
             listPartDirs(fsys, dd, partColsOf(pc).length).map(Entry(_, n))
           case _ => Seq(Entry("-", n))
         }
     }
     commit(fsys, table, spark, entries, Some(0),
-      dataDirName.map(n => new Path(table, n)).toSeq,
-      schema = Some(schema), statsKey = statsKey, statsKey2 = statsKey2,
-      statsCols = statsCols, partColHeader = partCol,
-      op = "CTAS")
+      dataDirName.map(n => new Path(table, n)).toSeq, meta, "CTAS")
   }
 
   /** REPLACE a scanned entry set with freshly staged files — the commit
@@ -1094,32 +1153,19 @@ object Versioned {
     val (fsys, table) = fs(spark, tablePath)
     val baseEntries = readManifest(fsys, table, baseV)
     val dd = new Path(table, dataDirName)
-    val baseKey = headerLine(fsys, table, baseV, "#statskey\t")
-    val (baseKey2, baseXCols) =
-      if (baseKey.isEmpty) (None, Seq.empty[String])
-      else statsDimsOf(fsys, table, baseV)
-    val cons = constraintLines(fsys, table, baseV)
+    val meta = metaOf(fsys, table, baseV)
     val fresh =
       if (!fsys.exists(dd)) Seq.empty
       else {
-        if (cons.nonEmpty) validateConstraints(spark.read.parquet(dd.toString), cons)
-        baseKey match {
-          case Some(k) =>
-            fileStatsOf(spark, table, dd, k, stats2Col = baseKey2, extraCols = baseXCols)
-          case None =>
-            val depth = headerLine(fsys, table, baseV, "#partcol\t")
-              .map(partColsOf(_).length).getOrElse(1)
-            listPartDirs(fsys, dd, depth).map(Entry(_, dataDirName))
-        }
+        if (meta.constraints.nonEmpty)
+          validateConstraints(spark.read.parquet(dd.toString), meta.constraints)
+        if (meta.statsKey.isDefined) fileStatsOf(spark, table, dd, meta)
+        else listPartDirs(fsys, dd, partDepth(meta)).map(Entry(_, dataDirName))
       }
     val entries = baseEntries
       .filterNot(e => drop.contains((e.partDir, e.dataDir, e.file))) ++ fresh
     commit(fsys, table, spark, entries, Some(baseV),
-      if (fsys.exists(dd)) Seq(dd) else Seq.empty,
-      schema = readSchemaLine(fsys, table, baseV),
-      statsKey = baseKey, statsKey2 = baseKey2, statsCols = baseXCols,
-      partColHeader = headerLine(fsys, table, baseV, "#partcol\t"),
-      constraints = cons, op = op)
+      if (fsys.exists(dd)) Seq(dd) else Seq.empty, meta, op)
   }
 
   /** The table's partition column: the `#partcol` header (recorded by
@@ -1128,10 +1174,13 @@ object Versioned {
     */
   def partColOf(spark: SparkSession, tablePath: String, v: Int): Option[String] = {
     val (fsys, table) = fs(spark, tablePath)
-    headerLine(fsys, table, v, "#partcol\t").orElse(
-      readManifest(fsys, table, v).find(_.partDir != "-")
-        .map(_.partDir.split('/').map(_.takeWhile(_ != '=')).mkString(",")))
+    metaOf(fsys, table, v).partCol.orElse(readManifest(fsys, table, v)
+      .collectFirst { case e if e.partDir != "-" => entryLayout(e.partDir).mkString(",") })
   }
+
+  /** Directory levels of `meta`'s partition spec (1 when none is recorded). */
+  private def partDepth(meta: TableMeta): Int =
+    meta.partCol.map(partColsOf(_).length).getOrElse(1)
 
   /** Adopt an externally STAGED data dir (already laid out
     * `<partCol>=<value>/file.parquet` under `<tablePath>/<dataDirName>`)
@@ -1161,8 +1210,8 @@ object Versioned {
     var attempts = 0
     while (true) {
       val base = latestVersion(spark, tablePath)
-      val baseSchema = if (base == 0) None else readSchemaLine(fsys, table, base)
-      baseSchema.foreach { s =>
+      val bm = metaOf(fsys, table, base)
+      bm.schema.foreach { s =>
         require(df.columns.toSet == s.fieldNames.toSet,
           s"staged columns ${df.columns.mkString(",")} do not match the " +
             s"table's ${s.fieldNames.mkString(",")} — appends never evolve schema")
@@ -1171,8 +1220,7 @@ object Versioned {
         // are exempt — their type is directory-inferred on the staged
         // side (int where the table says long) and readEntries re-derives
         // it from the recorded schema anyway.
-        val partC = headerLine(fsys, table, base, "#partcol\t")
-          .toSeq.flatMap(partColsOf)
+        val partC = bm.partCol.toSeq.flatMap(partColsOf)
         s.fields.filterNot(f => partC.contains(f.name)).foreach { f =>
           val got = df.schema(f.name).dataType
           require(got == f.dataType,
@@ -1182,8 +1230,7 @@ object Versioned {
       }
       // Keep the table's file granularity: stats must stay on the base's
       // recorded column (or establish one on a fresh table).
-      val baseKey = if (base == 0) None else headerLine(fsys, table, base, "#statskey\t")
-      val effKey = (baseKey, fileStatsKey) match {
+      val effKey = (bm.statsKey, fileStatsKey) match {
         case (Some(b), Some(k)) =>
           require(b == k, s"table stats are on $b, staged stats on $k"); Some(b)
         case (Some(b), None) => Some(b)
@@ -1193,32 +1240,15 @@ object Versioned {
       // and the extra `#statscols` dimensions are recomputed for the
       // staged files in the same scan, so 2-D/N-dim skipping never
       // degrades on ingest.
-      val (baseKey2, baseXCols) =
-        if (effKey.isEmpty) (None, Seq.empty[String])
-        else statsDimsOf(fsys, table, base)
-      val fresh = effKey match {
-        case Some(k) =>
-          fileStatsOf(spark, table, dd, k, stats2Col = baseKey2, extraCols = baseXCols)
-        case None =>
-          val depth =
-            if (base == 0) 1
-            else headerLine(fsys, table, base, "#partcol\t")
-              .map(partColsOf(_).length).getOrElse(1)
-          listPartDirs(fsys, dd, depth).map(Entry(_, dataDirName))
-      }
+      val meta = bm.copy(schema = bm.schema.orElse(Some(df.schema)), statsKey = effKey)
+      val fresh =
+        if (effKey.isDefined) fileStatsOf(spark, table, dd, meta)
+        else listPartDirs(fsys, dd, partDepth(bm)).map(Entry(_, dataDirName))
       val baseEntries = if (base == 0) Seq.empty else readManifest(fsys, table, base)
-      val cons = constraintLines(fsys, table, base)
-      validateConstraints(df, cons)
+      validateConstraints(df, bm.constraints)
       try {
         return commit(fsys, table, spark, baseEntries ++ fresh, Some(base),
-          if (attempts >= retries) Seq(dd) else Seq.empty, tag,
-          schema = baseSchema.orElse(Some(df.schema)),
-          statsKey = effKey,
-          statsKey2 = baseKey2,
-          statsCols = baseXCols,
-          partColHeader =
-            if (base == 0) None else headerLine(fsys, table, base, "#partcol\t"),
-          constraints = cons, op = "APPEND")
+          if (attempts >= retries) Seq(dd) else Seq.empty, meta, "APPEND", tag)
       } catch {
         case e: ConcurrentWriteException =>
           if (attempts >= retries) throw e
@@ -1257,12 +1287,19 @@ object Versioned {
   def hasUniformLayout(spark: SparkSession, tablePath: String, v: Int): Boolean = {
     val (fsys, table) = fs(spark, tablePath)
     val entries = readManifest(fsys, table, v)
-    val header = headerLine(fsys, table, v, "#partcol\t").map(partColsOf)
-      .orElse(entries.collectFirst {
-        case e if e.partDir != "-" => entryLayout(e.partDir) })
-      .getOrElse(Seq.empty)
-    entries.forall(e => e.partDir == "-" || entryLayout(e.partDir) == header)
+    val layout = currentLayout(metaOf(fsys, table, v), entries)
+    entries.forall(e => e.partDir == "-" || entryLayout(e.partDir) == layout)
   }
+
+  /** The partition layout new writes use: the `#partcol` spec, or — on
+    * pre-header tables — the first partitioned entry's (exactly
+    * partColOf's fallback; only a real evolution, which always writes the
+    * header, can mix layouts).
+    */
+  private def currentLayout(meta: TableMeta, entries: Seq[Entry]): Seq[String] =
+    meta.partCol.map(partColsOf)
+      .orElse(entries.collectFirst { case e if e.partDir != "-" => entryLayout(e.partDir) })
+      .getOrElse(Seq.empty)
 
   /** Refuse a partition-VALUE-scoped operation on a mixed-layout table:
     * its touched-set splice matches entries by the CURRENT header's dir
@@ -1271,15 +1308,9 @@ object Versioned {
     * (loss). SQL row-level DML (entry-identity splice) and the full
     * rewrites (zorder / repartitionTable) stay available while mixed.
     */
-  private def requireUniformLayout(fsys: FileSystem, table: Path, base: Int,
+  private def requireUniformLayout(table: Path, bm: TableMeta,
                                    baseEntries: Seq[Entry], what: String): Unit = {
-    // Pre-header tables (no #partcol recorded) derive the reference from
-    // the first partitioned entry — exactly partColOf's fallback; only a
-    // real evolution (which always writes the header) can mix layouts.
-    val header = headerLine(fsys, table, base, "#partcol\t").map(partColsOf)
-      .orElse(baseEntries.collectFirst {
-        case e if e.partDir != "-" => entryLayout(e.partDir) })
-      .getOrElse(Seq.empty)
+    val header = currentLayout(bm, baseEntries)
     baseEntries.find(e => e.partDir != "-" && entryLayout(e.partDir) != header)
       .foreach(e => throw new IllegalStateException(
         s"$what on $table: entry ${e.partDir} is laid out by " +
@@ -1311,9 +1342,8 @@ object Versioned {
     val (fsys, table) = fs(spark, tablePath)
     val base = latestVersion(spark, tablePath)
     require(base >= 1, s"$tablePath has no committed version")
-    val baseSchema = readSchemaLine(fsys, table, base).getOrElse(
-      throw new IllegalArgumentException(
-        s"v$base of $tablePath records no schema — republish once to record one"))
+    val bm = metaOf(fsys, table, base)
+    val baseSchema = recordedSchema(bm, base, tablePath)
     val newCols = partColsOf(newPartCol)
     require(newCols.nonEmpty, "evolvePartitioning: empty partition spec")
     newCols.foreach { c =>
@@ -1323,20 +1353,12 @@ object Versioned {
         s"partition column $c: type ${baseSchema(c).dataType} renders " +
           "format-dependent directory names; use int/long/string/boolean")
     }
-    val oldCols = headerLine(fsys, table, base, "#partcol\t")
-      .toSeq.flatMap(partColsOf)
+    val oldCols = bm.partCol.toSeq.flatMap(partColsOf)
     require(newCols != oldCols,
       s"table is already partitioned by (${newCols.mkString(",")})")
     commit(fsys, table, spark, readManifest(fsys, table, base),
-      expectedLatest.orElse(Some(base)), Seq.empty,
-      schema = Some(baseSchema),
-      statsKey = headerLine(fsys, table, base, "#statskey\t"),
-      statsKey2 = headerLine(fsys, table, base, "#statskey2\t"),
-      statsCols = headerLine(fsys, table, base, "#statscols\t")
-        .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Seq.empty),
-      partColHeader = Some(newPartCol),
-      constraints = constraintLines(fsys, table, base),
-      op = s"EVOLVE_PARTITIONING(${oldCols.mkString(",")}->${newCols.mkString(",")})")
+      expectedLatest.orElse(Some(base)), Seq.empty, bm.copy(partCol = Some(newPartCol)),
+      s"EVOLVE_PARTITIONING(${oldCols.mkString(",")}->${newCols.mkString(",")})")
   }
 
   /** Rewrite the WHOLE table into the current `#partcol` layout — the
@@ -1349,13 +1371,10 @@ object Versioned {
     val (fsys, table) = fs(spark, tablePath)
     val base = latestVersion(spark, tablePath)
     require(base >= 1, s"$tablePath has no committed version")
-    val spec = headerLine(fsys, table, base, "#partcol\t").getOrElse(
+    val bm = metaOf(fsys, table, base)
+    val cols = partColsOf(bm.partCol.getOrElse(
       throw new IllegalArgumentException(
-        s"$tablePath records no partition column — nothing to repartition to"))
-    val cols = partColsOf(spec)
-    val baseSchema = readSchemaLine(fsys, table, base)
-    val statsKey = headerLine(fsys, table, base, "#statskey\t")
-    val (key2, xcols) = statsDimsOf(fsys, table, base)
+        s"$tablePath records no partition column — nothing to repartition to")))
     val baseEntries = readManifest(fsys, table, base)
     // Files ALREADY in the current spec at full recorded stats
     // granularity splice unchanged (§6: a normalization owes work only
@@ -1365,25 +1384,20 @@ object Versioned {
     // property; "-" (unpartitioned snapshot) entries never conform.
     def conforms(e: Entry): Boolean =
       entryLayout(e.partDir) == cols && e.dv.isEmpty &&
-        (statsKey.isEmpty || (e.file.isDefined && e.kmin.isDefined &&
+        (bm.statsKey.isEmpty || (e.file.isDefined && e.kmin.isDefined &&
           e.kmax.isDefined && e.nrows.isDefined &&
-          (key2.isEmpty || (e.k2min.isDefined && e.k2max.isDefined)) &&
-          (xcols.isEmpty || e.xstats.isDefined)))
+          (bm.statsKey2.isEmpty || (e.k2min.isDefined && e.k2max.isDefined)) &&
+          (bm.statsCols.isEmpty || e.xstats.isDefined)))
     val (keep, rewriteEs) = baseEntries.partition(conforms)
     val (dirs, fresh) =
       if (rewriteEs.isEmpty) (Seq.empty[Path], Seq.empty[Entry])
       else {
         // Subset read with readAt's full treatment (per-entry layout
         // decode, column mapping, schema alignment).
-        val df = {
-          val raw = readEntries(spark, table, rewriteEs)
-          val mapped = applyColMap(raw, colMapOf(fsys, table, base)
-            .filter { case (l, _) => baseSchema.forall(_.fieldNames.contains(l)) })
-          baseSchema.map(alignTo(mapped, _)).getOrElse(mapped)
-        }
+        val df = asOf(readEntries(spark, table, rewriteEs), bm)
         // cluster inside each cell by the stats key so the fresh per-file
         // bounds come out range-tight, the layout every skipping tier rides
-        val shaped = statsKey match {
+        val shaped = bm.statsKey match {
           case Some(k) => df.repartitionByRange(
             (cols :+ k).map(col): _*).sortWithinPartitions((cols :+ k).map(col): _*)
           case None => df
@@ -1392,17 +1406,13 @@ object Versioned {
         dumpPlan("repartition_rewrite", shaped)
         shaped.write.mode(SaveMode.ErrorIfExists)
           .partitionBy(cols: _*).parquet(dd.toString)
-        val es = statsKey match {
-          case Some(k) =>
-            fileStatsOf(spark, table, dd, k, stats2Col = key2, extraCols = xcols)
-          case None => listPartDirs(fsys, dd, cols.length).map(Entry(_, dd.getName))
-        }
+        val es =
+          if (bm.statsKey.isDefined) fileStatsOf(spark, table, dd, bm)
+          else listPartDirs(fsys, dd, cols.length).map(Entry(_, dd.getName))
         (Seq(dd), es)
       }
     commit(fsys, table, spark, keep ++ fresh, expectedLatest.orElse(Some(base)), dirs,
-      schema = baseSchema, statsKey = statsKey, statsKey2 = key2,
-      statsCols = xcols, partColHeader = Some(spec),
-      constraints = constraintLines(fsys, table, base), op = "REPARTITION")
+      bm, "REPARTITION")
   }
 
   /** Leaf partition dirs of a freshly written data dir, as RELATIVE
@@ -1442,29 +1452,22 @@ object Versioned {
         "use an integral, string, or date column")
   }
 
-  /** The FULL stats granularity a base version records beyond the first
-    * key: (`#statskey2`, `#statscols`). Every rewrite — DML, merge,
-    * compaction, optimize — recomputes ALL recorded dimensions for the
-    * files it writes (the rewrite scans every row it writes anyway), so
-    * multi-dimension skipping survives routine maintenance instead of
-    * degrading to off until the next re-optimize.
-    */
-  private def statsDimsOf(fsys: FileSystem, table: Path, v: Int)
-      : (Option[String], Seq[String]) =
-    if (v < 1) (None, Seq.empty)
-    else (headerLine(fsys, table, v, "#statskey2\t"),
-      headerLine(fsys, table, v, "#statscols\t")
-        .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Seq.empty))
-
   /** Per-file manifest entries for a freshly written data dir: one scan of
     * the key column grouped by `input_file_name()` — the parquet-footer
     * min/max surrogate, computed with public API only. File count is
     * bounded by the write's task count, so the collect is metadata-sized.
+    * The entries carry EVERY stats dimension `stats` records (`statsKey`,
+    * which must be set, plus `statsKey2` and `statsCols`): each rewrite —
+    * DML, merge, compaction, optimize — recomputes them for the files it
+    * writes (it scans every row it writes anyway), so multi-dimension
+    * skipping survives routine maintenance instead of degrading to off
+    * until the next re-optimize.
     */
   private def fileStatsOf(spark: SparkSession, table: Path, dd: Path,
-                          keyCol: String,
-                          stats2Col: Option[String] = None,
-                          extraCols: Seq[String] = Seq.empty): Seq[Entry] = {
+                          stats: TableMeta): Seq[Entry] = {
+    val keyCol = stats.statsKey.get
+    val stats2Col = stats.statsKey2
+    val extraCols = stats.statsCols
     val marker = "/" + dd.getName + "/"
     // Byte sizes recorded at WRITE time (one walk of the fresh data dir,
     // ∝ files just written) so every later planning pass serves
@@ -1649,10 +1652,11 @@ object Versioned {
   def readAt(spark: SparkSession, tablePath: String, version: Int): DataFrame = {
     val (fsys, table) = fs(spark, tablePath)
     val entries = readManifest(fsys, table, version)
+    val meta = metaOf(fsys, table, version)
     if (entries.isEmpty) {
       // A freshly CREATEd (or fully emptied) version: serve its recorded
       // schema with zero rows — the SQL catalog's CREATE-then-INSERT flow.
-      val schema = readSchemaLine(fsys, table, version).getOrElse(
+      val schema = meta.schema.getOrElse(
         throw new IllegalArgumentException(
           s"version $version of $table is empty and records no schema"))
       return spark.createDataFrame(
@@ -1662,23 +1666,7 @@ object Versioned {
       if (entries.forall(_.partDir == "-"))
         spark.read.parquet(entries.map(e => new Path(table, e.dataDir).toString): _*)
       else readEntries(spark, table, entries)
-    // Column mapping: a renamed column's bytes live under its FORMER
-    // name in pre-rename files — resolve each mapped logical column to
-    // the first populated alias (per row exactly one alias can be
-    // populated: name reuse is refused, so no file carries two). Only
-    // entries whose LOGICAL name is in THIS version's schema apply: a
-    // branch-merge (`fromVersion`) from a pre-rename base records the
-    // OLD schema while the inherited map still carries the rename —
-    // applying it would drop the old-name column the schema projects.
-    val schemaLine = readSchemaLine(fsys, table, version)
-    val mapped = applyColMap(raw, colMapOf(fsys, table, version)
-      .filter { case (l, _) => schemaLine.forall(_.fieldNames.contains(l)) })
-    // Align to the version's committed schema: entries spliced from
-    // pre-evolution versions lack later-added columns — they read as NULL
-    // (and, symmetrically, time travel to an old version serves the OLD
-    // schema, however evolved the files around it are). Dropped columns
-    // fall away here: the projection is exactly the schema's fields.
-    schemaLine.map(alignTo(mapped, _)).getOrElse(mapped)
+    asOf(raw, meta)
   }
 
   /** Resolve mapped logical columns against whatever names the scanned
@@ -1741,16 +1729,16 @@ object Versioned {
         .filter(isCommitted(fsys, table, _)).sorted
         .map { v =>
           val entries = readManifest(fsys, table, v)
+          val meta = metaOf(fsys, table, v)
           val nrows = if (entries.nonEmpty && entries.forall(_.nrows.isDefined))
             Some(entries.map(_.nrows.get).sum) else None
-          (v,
-            headerLine(fsys, table, v, "#op\t").getOrElse("WRITE"),
+          (v, meta.op,
             fsys.getFileStatus(manifestPath(table, v)).getModificationTime,
             entries.size.toLong,
             nrows,
-            readSchemaLine(fsys, table, v).map(_.fields.length),
-            readTag(fsys, table, v),
-            headerLine(fsys, table, v, "#changes\t").isDefined)
+            meta.schema.map(_.fields.length),
+            meta.tag,
+            meta.changesDir.isDefined)
         }
     rows.toDF("version", "op", "commit_ms", "n_entries", "n_rows", "n_cols",
       "tag", "has_change_feed")
@@ -1830,7 +1818,8 @@ object Versioned {
     }
     val base = fromVersion.getOrElse(latestVersion(spark, tablePath))
     val baseEntries = readManifest(fsys, table, base)
-    requireUniformLayout(fsys, table, base, baseEntries, "merge")
+    val bm = metaOf(fsys, table, base)
+    requireUniformLayout(table, bm, baseEntries, "merge")
     val target = readAt(spark, tablePath, base)
     // Schema evolution (the Delta mergeSchema contract): the source may
     // carry MORE columns than the target — the new version's schema gains
@@ -2010,18 +1999,13 @@ object Versioned {
     val inserts = insertsSrc.select(dataCols.map(c => col(s"_s_$c").as(c)): _*)
     val rewrite = rewritten.unionByName(inserts)
 
-    val cons = constraintLines(fsys, table, base)
-    if (cons.nonEmpty) {
+    if (bm.constraints.nonEmpty) {
       val changed = joined.filter(isU ||
           (if (nmsUpdate.isDefined) col("_sop").isNull else lit(false)))
         .select(imageCols: _*)
-      validateConstraints(changed.unionByName(inserts), cons)
+      validateConstraints(changed.unionByName(inserts), bm.constraints)
     }
-    // A file-granular base keeps its granularity: rewritten partitions get
-    // fresh per-file stats on the recorded stats key, so compaction /
-    // optimize / stats-pruned reads keep working after a partition merge.
-    val baseStatsKey = headerLine(fsys, table, base, "#statskey\t")
-      .filter(_ => baseEntries.nonEmpty && baseEntries.forall(_.file.isDefined))
+    val meta = partitionRewriteMeta(bm, baseEntries).copy(schema = Some(rewrite.schema))
     val dd = newDataDir(fsys, table)
     dumpPlan("merge_rewrite", rewrite)
     rewrite.write.mode(SaveMode.ErrorIfExists).partitionBy(partCols: _*).parquet(dd.toString)
@@ -2051,24 +2035,32 @@ object Versioned {
       }
     // Splice: untouched entries ride the base manifest; touched partitions
     // are served from the fresh dir; an emptied partition appears nowhere.
-    // ALL recorded stats dimensions recompute in the one stats scan, so
-    // 2-D / N-D skipping survives the merge on the rewritten files.
-    val (baseKey2, baseXCols) =
-      if (baseStatsKey.isEmpty) (None, Seq.empty[String])
-      else statsDimsOf(fsys, table, base)
-    val fresh = baseStatsKey match {
-      case Some(k) if written.nonEmpty =>
-        fileStatsOf(spark, table, dd, k, stats2Col = baseKey2, extraCols = baseXCols)
-      case _ => written.map(Entry(_, dd.getName))
-    }
-    val entries = baseEntries.filterNot(e => touchedDirs.contains(e.partDir)) ++ fresh
+    val entries = baseEntries.filterNot(e => touchedDirs.contains(e.partDir)) ++
+      rewrittenEntries(spark, table, dd, written, meta)
     val expect = expectedLatest.orElse(if (fromVersion.isEmpty) Some(base) else None)
-    commit(fsys, table, spark, entries, expect, Seq(dd) ++ feedDir.toSeq, tag,
-      schema = Some(rewrite.schema), changesDir = feedDir.map(_.getName),
-      constraints = cons, op = "MERGE", statsKey = baseStatsKey,
-      statsKey2 = baseKey2, statsCols = baseXCols,
-      partColHeader = headerLine(fsys, table, base, "#partcol\t"))
+    commit(fsys, table, spark, entries, expect, Seq(dd) ++ feedDir.toSeq, meta, "MERGE",
+      tag, feedDir.map(_.getName))
   }
+
+  /** `bm` as a partition-scoped rewrite of `baseEntries` records it: a
+    * file-granular base keeps its granularity — rewritten partitions get
+    * fresh per-file stats on EVERY recorded dimension in the one stats
+    * scan, so compaction, optimize and 2-D / N-D stats-pruned reads keep
+    * working after the rewrite — while a base with partition-granular
+    * entries (or none) drops the stats headers.
+    */
+  private def partitionRewriteMeta(bm: TableMeta, baseEntries: Seq[Entry]): TableMeta =
+    if (baseEntries.nonEmpty && baseEntries.forall(_.file.isDefined)) bm
+    else bm.copy(statsKey = None, statsKey2 = None, statsCols = Seq.empty)
+
+  /** Manifest entries for a partition rewrite's fresh data dir `dd`, whose
+    * leaf partition dirs are `written`: per file when `meta` records file
+    * stats, else per partition dir.
+    */
+  private def rewrittenEntries(spark: SparkSession, table: Path, dd: Path,
+                               written: Seq[String], meta: TableMeta): Seq[Entry] =
+    if (meta.statsKey.isDefined && written.nonEmpty) fileStatsOf(spark, table, dd, meta)
+    else written.map(Entry(_, dd.getName))
 
   /** DELETE WHERE: remove every row where `predicate` IS TRUE (NULL keeps
     * the row — SQL DELETE semantics), publishing the result as a new
@@ -2088,7 +2080,8 @@ object Versioned {
     val (fsys, table) = fs(spark, tablePath)
     val base = fromVersion.getOrElse(latestVersion(spark, tablePath))
     val baseEntries = readManifest(fsys, table, base)
-    requireUniformLayout(fsys, table, base, baseEntries, "deleteWhere")
+    val bm = metaOf(fsys, table, base)
+    requireUniformLayout(table, bm, baseEntries, "deleteWhere")
     val target = readAt(spark, tablePath, base)
     val isMatch = coalesce(predicate, lit(false)) // NULL predicate = keep
     val partCols = partColsOf(partCol)
@@ -2109,8 +2102,8 @@ object Versioned {
         partCols.zip(vs).map { case (c, v) => col(c) === lit(v) }.reduce(_ && _))
         .reduce(_ || _))
     val rewrite = scoped.filter(!isMatch)
-    val baseStatsKey = headerLine(fsys, table, base, "#statskey\t")
-      .filter(_ => baseEntries.nonEmpty && baseEntries.forall(_.file.isDefined))
+    // deletions add no rows — constraints cannot be violated, only carried
+    val meta = partitionRewriteMeta(bm, baseEntries).copy(schema = Some(target.schema))
     val dd = newDataDir(fsys, table)
     dumpPlan("deletewhere_rewrite", rewrite)
     rewrite.write.mode(SaveMode.ErrorIfExists).partitionBy(partCols: _*).parquet(dd.toString)
@@ -2122,22 +2115,11 @@ object Versioned {
       if (!recordChanges) None
       else Some(writeChangeFeed(fsys, table,
         scoped.filter(isMatch), rewrite.limit(0)))
-    val (baseKey2, baseXCols) =
-      if (baseStatsKey.isEmpty) (None, Seq.empty[String])
-      else statsDimsOf(fsys, table, base)
-    val fresh = baseStatsKey match {
-      case Some(k) if written.nonEmpty =>
-        fileStatsOf(spark, table, dd, k, stats2Col = baseKey2, extraCols = baseXCols)
-      case _ => written.map(Entry(_, dd.getName))
-    }
-    val entries = baseEntries.filterNot(e => touchedDirs.contains(e.partDir)) ++ fresh
+    val entries = baseEntries.filterNot(e => touchedDirs.contains(e.partDir)) ++
+      rewrittenEntries(spark, table, dd, written, meta)
     val expect = expectedLatest.orElse(if (fromVersion.isEmpty) Some(base) else None)
-    // deletions add no rows — constraints cannot be violated, only carried
-    commit(fsys, table, spark, entries, expect, Seq(dd) ++ feedDir.toSeq,
-      schema = Some(target.schema), changesDir = feedDir.map(_.getName),
-      constraints = constraintLines(fsys, table, base), op = "DELETE",
-      partColHeader = headerLine(fsys, table, base, "#partcol\t"),
-      statsKey = baseStatsKey, statsKey2 = baseKey2, statsCols = baseXCols)
+    commit(fsys, table, spark, entries, expect, Seq(dd) ++ feedDir.toSeq, meta, "DELETE",
+      changesDir = feedDir.map(_.getName))
   }
 
   /** UPDATE WHERE: apply `assignments` (column → new-value expression,
@@ -2156,7 +2138,8 @@ object Versioned {
     val (fsys, table) = fs(spark, tablePath)
     val base = fromVersion.getOrElse(latestVersion(spark, tablePath))
     val baseEntries = readManifest(fsys, table, base)
-    requireUniformLayout(fsys, table, base, baseEntries, "updateWhere")
+    val bm = metaOf(fsys, table, base)
+    requireUniformLayout(table, bm, baseEntries, "updateWhere")
     val target = readAt(spark, tablePath, base)
     val unknown = assignments.keySet -- target.columns.toSet
     require(unknown.isEmpty,
@@ -2189,10 +2172,8 @@ object Versioned {
         s"(got ${updated.schema.simpleString} vs ${target.schema.simpleString})")
     val rewrite = scoped.filter(!isMatch).unionByName(updated)
     dumpPlan("updatewhere_rewrite", rewrite)
-    val cons = constraintLines(fsys, table, base)
-    validateConstraints(updated, cons)
-    val baseStatsKey = headerLine(fsys, table, base, "#statskey\t")
-      .filter(_ => baseEntries.nonEmpty && baseEntries.forall(_.file.isDefined))
+    validateConstraints(updated, bm.constraints)
+    val meta = partitionRewriteMeta(bm, baseEntries).copy(schema = Some(target.schema))
     val dd = newDataDir(fsys, table)
     rewrite.write.mode(SaveMode.ErrorIfExists).partitionBy(partCols: _*).parquet(dd.toString)
     val written = listPartDirs(fsys, dd, partCols.length)
@@ -2202,21 +2183,11 @@ object Versioned {
     val feedDir =
       if (!recordChanges) None
       else Some(writeChangeFeed(fsys, table, scoped.filter(isMatch), updated))
-    val (baseKey2, baseXCols) =
-      if (baseStatsKey.isEmpty) (None, Seq.empty[String])
-      else statsDimsOf(fsys, table, base)
-    val fresh = baseStatsKey match {
-      case Some(k) if written.nonEmpty =>
-        fileStatsOf(spark, table, dd, k, stats2Col = baseKey2, extraCols = baseXCols)
-      case _ => written.map(Entry(_, dd.getName))
-    }
-    val entries = baseEntries.filterNot(e => touchedDirs.contains(e.partDir)) ++ fresh
+    val entries = baseEntries.filterNot(e => touchedDirs.contains(e.partDir)) ++
+      rewrittenEntries(spark, table, dd, written, meta)
     val expect = expectedLatest.orElse(if (fromVersion.isEmpty) Some(base) else None)
-    commit(fsys, table, spark, entries, expect, Seq(dd) ++ feedDir.toSeq,
-      schema = Some(target.schema), changesDir = feedDir.map(_.getName),
-      constraints = cons, op = "UPDATE", statsKey = baseStatsKey,
-      statsKey2 = baseKey2, statsCols = baseXCols,
-      partColHeader = headerLine(fsys, table, base, "#partcol\t"))
+    commit(fsys, table, spark, entries, expect, Seq(dd) ++ feedDir.toSeq, meta, "UPDATE",
+      changesDir = feedDir.map(_.getName))
   }
 
   /** Persist a merge's change images (delete pre-images + insert
@@ -2260,7 +2231,8 @@ object Versioned {
     val baseEntries = readManifest(fsys, table, base)
     require(baseEntries.forall(_.file.isDefined),
       "deleteKeys needs a file-granular table (publish with fileStatsKey)")
-    val keyCol = headerLine(fsys, table, base, "#statskey\t").getOrElse(
+    val bm = metaOf(fsys, table, base)
+    val keyCol = bm.statsKey.getOrElse(
       throw new IllegalArgumentException(
         s"v$base of $tablePath carries no #statskey — deletion vectors key on it"))
     val sorted = keys.distinct.sorted.toArray
@@ -2268,7 +2240,7 @@ object Versioned {
     // Long-keyed probes are only meaningful against integral-key stats:
     // a string/date-keyed table's [kmin, kmax] are ordered surrogates
     // ([[KeyEnc]]), and raw longs would probe the wrong domain.
-    readSchemaLine(fsys, table, base).foreach { s =>
+    bm.schema.foreach { s =>
       require(KeyEnc.Integral.contains(s(keyCol).dataType),
         s"deleteKeys takes Long keys; $keyCol is ${s(keyCol).dataType} — " +
           "use deleteWhere/mergeByFiles for non-integral keys")
@@ -2300,17 +2272,10 @@ object Versioned {
       writeDvFile(fsys, new Path(table, rel), keyCol, merged)
       e.copy(dv = Some(rel))
     }
+    // DV commits rewrite no file, so every recorded stats bound stays valid
     commit(fsys, table, spark, baseEntries.filterNot(victimSet) ++ fresh,
-      expectedLatest.orElse(Some(base)), Seq(dvDir) ++ feedDir.toSeq,
-      schema = readSchemaLine(fsys, table, base),
-      changesDir = feedDir.map(_.getName),
-      statsKey = Some(keyCol),
-      // DV commits rewrite no file, so second-dimension bounds stay valid
-      statsKey2 = headerLine(fsys, table, base, "#statskey2\t"),
-      statsCols = headerLine(fsys, table, base, "#statscols\t")
-        .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Seq.empty),
-      partColHeader = headerLine(fsys, table, base, "#partcol\t"),
-      constraints = constraintLines(fsys, table, base), op = "DELETE_DV")
+      expectedLatest.orElse(Some(base)), Seq(dvDir) ++ feedDir.toSeq, bm, "DELETE_DV",
+      changesDir = feedDir.map(_.getName))
   }
 
   /** File-scoped MERGE — the q208 manifest idea applied to the merge
@@ -2349,24 +2314,23 @@ object Versioned {
     }
     val base = fromVersion.getOrElse(latestVersion(spark, tablePath))
     val baseEntries = readManifest(fsys, table, base)
-    requireUniformLayout(fsys, table, base, baseEntries, "mergeByFiles")
+    val bm = metaOf(fsys, table, base)
+    requireUniformLayout(table, bm, baseEntries, "mergeByFiles")
     require(baseEntries.forall(_.file.isDefined),
       s"mergeByFiles needs a file-granular base — publish with fileStatsKey")
     // The pruning below reads each entry's [kmin, kmax] as stats ON
     // keyCol; if the base recorded stats on a DIFFERENT column, skipping
     // a "non-covering" file could silently drop a matched update. Refuse
     // the mismatch loudly instead.
-    val baseKeyStats = headerLine(fsys, table, base, "#statskey\t")
-    require(baseKeyStats.contains(keyCol),
-      s"base v$base carries file stats on ${baseKeyStats.getOrElse("<none>")}, " +
+    require(bm.statsKey.contains(keyCol),
+      s"base v$base carries file stats on ${bm.statsKey.getOrElse("<none>")}, " +
         s"not $keyCol — range pruning on mismatched stats would be unsound")
     // Subset reads must present the base version's schema: after an
     // earlier schema-evolving merge, a rewrite/check subset could land
     // entirely on pre-evolution files and silently lack the added columns.
-    val baseSchema = readSchemaLine(fsys, table, base)
     def readAligned(es: Seq[Entry]): DataFrame = {
       val df = readEntries(spark, table, es)
-      baseSchema.map(alignTo(df, _)).getOrElse(df)
+      bm.schema.map(alignTo(df, _)).getOrElse(df)
     }
     val target = readAligned(baseEntries)
     // Same evolution contract as [[merge]]: source may ADD columns.
@@ -2449,19 +2413,16 @@ object Versioned {
 
     def updatedImgs = joinedOpt.map(_.filter(isU)
       .select(dataCols.map(c => col(s"_s_$c").as(c)): _*))
-    val cons = constraintLines(fsys, table, base)
-    if (cons.nonEmpty) validateConstraints(
-      updatedImgs.map(_.unionByName(inserts)).getOrElse(inserts), cons)
+    if (bm.constraints.nonEmpty) validateConstraints(
+      updatedImgs.map(_.unionByName(inserts)).getOrElse(inserts), bm.constraints)
     val dd = newDataDir(fsys, table)
     dumpPlan("mergebyfiles_rewrite", rewrite)
     rewrite.write.mode(SaveMode.ErrorIfExists).partitionBy(partColsOf(partCol): _*).parquet(dd.toString)
     // Recompute EVERY recorded stats dimension for the rewritten files in
     // the one stats scan — z-order 2-D bounds and N-dim xstats survive a
     // file-scoped merge instead of degrading to off on the touched files.
-    val (baseKey2, baseXCols) = statsDimsOf(fsys, table, base)
     val written =
-      if (fsys.listStatus(dd).exists(s => s.isDirectory))
-        fileStatsOf(spark, table, dd, keyCol, stats2Col = baseKey2, extraCols = baseXCols)
+      if (fsys.listStatus(dd).exists(s => s.isDirectory)) fileStatsOf(spark, table, dd, bm)
       else Seq.empty // every affected row deleted, nothing inserted
     val feedDir =
       if (!recordChanges) None
@@ -2479,11 +2440,8 @@ object Versioned {
     val orphans = Seq(dd) ++ feedDir.toSeq
     def commitOnto(onto: Seq[Entry], expectV: Option[Int], keepOrphans: Boolean): Int =
       commit(fsys, table, spark, onto.filterNot(rewriteKeys) ++ written, expectV,
-        if (keepOrphans) Seq.empty else orphans, tag,
-        schema = Some(rewrite.schema), changesDir = feedDir.map(_.getName),
-        statsKey = Some(keyCol), statsKey2 = baseKey2, statsCols = baseXCols,
-        partColHeader = headerLine(fsys, table, base, "#partcol\t"),
-        constraints = cons, op = "MERGE_FILES")
+        if (keepOrphans) Seq.empty else orphans, bm.copy(schema = Some(rewrite.schema)),
+        "MERGE_FILES", tag, feedDir.map(_.getName))
     if (rebaseRetries <= 0 || expect.isEmpty)
       return commitOnto(baseEntries, expect, keepOrphans = false)
 
@@ -2523,21 +2481,8 @@ object Versioned {
           }
           val newV = latestVersion(spark, tablePath)
           val newEntries = readManifest(fsys, table, newV)
-          // Shape = (name, type) pairs: nullability legitimately drifts
-          // between publish and merge rewrites and does not affect the
-          // splice; an ADDED column (schema evolution) does, loudly.
-          def shapeOf(v: Int) = readSchemaLine(fsys, table, v)
-            .map(_.fields.map(f => (f.name, f.dataType)).toSeq)
-          if (shapeOf(newV) != shapeOf(base))
-            giveUp(s"concurrent schema change at v$newV of $table — cannot rebase")
-          if (constraintLines(fsys, table, newV) != cons)
-            giveUp(s"concurrent constraint change at v$newV of $table — cannot rebase")
-          if (!headerLine(fsys, table, newV, "#statskey\t").contains(keyCol))
-            giveUp(s"v$newV of $table no longer carries $keyCol file stats — cannot rebase")
-          // The rebased commit re-asserts OUR stats-dimension headers; a
-          // competitor that changed them would get them silently reverted.
-          if (statsDimsOf(fsys, table, newV) != ((baseKey2, baseXCols)))
-            giveUp(s"concurrent stats-dimension change at v$newV of $table — cannot rebase")
+          rebaseConflict(bm, metaOf(fsys, table, newV), keyCol).foreach(why =>
+            giveUp(s"$why at v$newV of $table — cannot rebase"))
           val delta = (newEntries.toSet -- ontoEntries) ++ (ontoEntries.toSet -- newEntries)
           delta.find(readSet).foreach(d => giveUp(
             s"concurrent writer rewrote ${d.partDir}/${d.file.getOrElse("")} " +
@@ -2555,6 +2500,24 @@ object Versioned {
     throw new IllegalStateException("unreachable")
   }
 
+  /** Why a commit prepared against base meta `bm` cannot rebase onto a
+    * competitor's version (meta `nm`), if it cannot: the rebased commit
+    * re-asserts the base's schema, constraints and stats headers, so a
+    * competitor that changed any of them would be silently reverted.
+    * Shape = (name, type) pairs: nullability legitimately drifts between
+    * publish and merge rewrites and does not affect the splice; an ADDED
+    * column (schema evolution) does, loudly.
+    */
+  private def rebaseConflict(bm: TableMeta, nm: TableMeta, keyCol: String): Option[String] = {
+    def shape(m: TableMeta) = m.schema.map(_.fields.map(f => (f.name, f.dataType)).toSeq)
+    if (shape(nm) != shape(bm)) Some("concurrent schema change")
+    else if (nm.constraints != bm.constraints) Some("concurrent constraint change")
+    else if (!nm.statsKey.contains(keyCol)) Some(s"file stats no longer on $keyCol")
+    else if ((nm.statsKey2, nm.statsCols) != ((bm.statsKey2, bm.statsCols)))
+      Some("concurrent stats-dimension change")
+    else None
+  }
+
   /** True iff some probe of `sorted` — (range encoding, bloom key) pairs
     * ascending by encoding ([[KeyEnc.probeOf]]; for integral keys both
     * are the value) — lands in the entry's [kmin, kmax] range AND passes
@@ -2566,118 +2529,80 @@ object Versioned {
     * saturated bloom degrades to the pure range probe.
     */
   private def coversAnyKey(e: Entry, sorted: Array[(Long, Long)]): Boolean = {
-    val lo = e.kmin.get
+    val bloom = e.bloom.map(KeyBloom.fromHex)
     val hi = e.kmax.get
-    e.bloom match {
-      case None => coversAnyEnc(lo, hi, sorted)
-      case Some(hex) =>
-        val buf = KeyBloom.fromHex(hex)
-        var l = 0
-        var r = sorted.length
-        while (l < r) { val m = (l + r) >>> 1; if (sorted(m)._1 < lo) l = m + 1 else r = m }
-        while (l < sorted.length && sorted(l)._1 <= hi) {
-          if (KeyBloom.mightContain(buf, sorted(l)._2)) return true
-          l += 1
-        }
-        false
+    var l = firstAtLeast(e.kmin.get, sorted.length)(sorted(_)._1)
+    while (l < sorted.length && sorted(l)._1 <= hi) {
+      if (bloom.forall(KeyBloom.mightContain(_, sorted(l)._2))) return true
+      l += 1
     }
-  }
-
-  private def coversAnyEnc(lo: Long, hi: Long, sorted: Array[(Long, Long)]): Boolean = {
-    var l = 0
-    var r = sorted.length
-    while (l < r) {
-      val m = (l + r) >>> 1
-      if (sorted(m)._1 < lo) l = m + 1 else r = m
-    }
-    l < sorted.length && sorted(l)._1 <= hi
+    false
   }
 
   /** True iff `sorted` (ascending) contains a key in [lo, hi]: binary
     * search for the first key ≥ lo, then one bound check.
     */
   private[graft] def coversAny(lo: Long, hi: Long, sorted: Array[Long]): Boolean = {
+    val l = firstAtLeast(lo, sorted.length)(sorted(_))
+    l < sorted.length && sorted(l) <= hi
+  }
+
+  /** Index of the first of `n` ascending keys (`keyAt(i)`) that is ≥ `lo`,
+    * `n` when there is none — the binary search behind both range probes.
+    */
+  private def firstAtLeast(lo: Long, n: Int)(keyAt: Int => Long): Int = {
     var l = 0
-    var r = sorted.length
+    var r = n
     while (l < r) {
       val m = (l + r) >>> 1
-      if (sorted(m) < lo) l = m + 1 else r = m
+      if (keyAt(m) < lo) l = m + 1 else r = m
     }
-    l < sorted.length && sorted(l) <= hi
+    l
   }
 
   /** The column whose per-file min/max the version's file entries carry
     * (`#statskey` manifest line) — what a reader may prune on.
     */
-  def statsKeyOf(spark: SparkSession, tablePath: String, v: Int): Option[String] = {
-    val (fsys, table) = fs(spark, tablePath)
-    headerLine(fsys, table, v, "#statskey\t")
-  }
+  def statsKeyOf(spark: SparkSession, tablePath: String, v: Int): Option[String] =
+    metaOf(spark, tablePath, v).statsKey
 
   /** The CHECK constraints version `v` carries, as (name, SQL expr). */
-  def constraintsOf(spark: SparkSession, tablePath: String, v: Int): Seq[(String, String)] = {
-    val (fsys, table) = fs(spark, tablePath)
-    constraintLines(fsys, table, v)
-  }
+  def constraintsOf(spark: SparkSession, tablePath: String, v: Int): Seq[(String, String)] =
+    metaOf(spark, tablePath, v).constraints
 
-  private def constraintLines(fsys: FileSystem, table: Path, v: Int): Seq[(String, String)] =
-    headerLines(fsys, table, v, "#constraint\t").map { l =>
-      val c = l.split("\t", 2)
-      (c(0), c(1))
-    }
-
-  /** COLUMN MAPPING (`#colmap\t<logical>\t<former1>,<former2>` headers):
-    * logical column → the FORMER names its bytes may carry in files
-    * written before a rename, newest first. The store's rename/drop are
-    * header-only (Delta's name-mapping re-derived without physical
-    * UUIDs): files are never rewritten, writers always write CURRENT
-    * logical names, and reads resolve each logical column to the first
-    * of (logical, aliases...) present in a file. Soundness rests on a
-    * NAME-REUSE REFUSAL: a name that ever left the schema (renamed away
-    * or dropped) is tombstoned (`#coldropped`) and can never be re-added
-    * — otherwise old files' bytes under that name would resurrect into
-    * the new column instead of NULL-backfilling.
-    */
-  private def colMapOf(fsys: FileSystem, table: Path, v: Int): Map[String, Seq[String]] =
-    headerLines(fsys, table, v, "#colmap\t").map { l =>
-      val p = l.split("\t", 2)
-      p(0) -> p(1).split(",").toSeq.filter(_.nonEmpty)
-    }.toMap
-
-  private def droppedColsOf(fsys: FileSystem, table: Path, v: Int): Set[String] =
-    headerLines(fsys, table, v, "#coldropped\t").toSet
-
-  /** Public alias view for the DSv2 readers: logical column → former
-    * on-file names, for version `v`.
+  /** COLUMN MAPPING (`#colmap\t<logical>\t<former1>,<former2>` headers)
+    * of version `v`, for the DSv2 readers: logical column → the FORMER
+    * names its bytes may carry in files written before a rename, newest
+    * first. The store's rename/drop are header-only (Delta's name-mapping
+    * re-derived without physical UUIDs): files are never rewritten,
+    * writers always write CURRENT logical names, and reads resolve each
+    * logical column to the first of (logical, aliases...) present in a
+    * file. Soundness rests on a NAME-REUSE REFUSAL: a name that ever left
+    * the schema (renamed away or dropped) is tombstoned (`#coldropped`)
+    * and can never be re-added — otherwise old files' bytes under that
+    * name would resurrect into the new column instead of NULL-backfilling.
     */
   def columnAliasesOf(spark: SparkSession, tablePath: String, v: Int)
-      : Map[String, Seq[String]] = {
-    val (fsys, table) = fs(spark, tablePath)
-    colMapOf(fsys, table, v)
-  }
+      : Map[String, Seq[String]] = metaOf(spark, tablePath, v).colMap
 
   /** Names banned from re-introduction at version `v` (spec/DDL
     * introspection): every tombstoned former name.
     */
   def tombstonedColumnsOf(spark: SparkSession, tablePath: String, v: Int)
-      : Set[String] = {
-    val (fsys, table) = fs(spark, tablePath)
-    droppedColsOf(fsys, table, v)
-  }
+      : Set[String] = metaOf(spark, tablePath, v).droppedCols
 
   // A column is load-bearing when a header or constraint names it — the
   // partition layout, the stats domain, and constraint expressions all
   // break under a rename/drop, so those are refused loudly.
-  private def requireNotLoadBearing(fsys: FileSystem, table: Path, base: Int,
-                                    name: String, what: String): Unit = {
-    headerLine(fsys, table, base, "#partcol\t").foreach(pc =>
-      require(!pc.split(",").map(_.trim).contains(name),
+  private def requireNotLoadBearing(bm: TableMeta, name: String, what: String): Unit = {
+    bm.partCol.foreach(pc =>
+      require(!partColsOf(pc).contains(name),
         s"cannot $what $name: it is the partition column"))
-    headerLine(fsys, table, base, "#statskey\t").foreach(k =>
+    bm.statsKey.foreach(k =>
       require(k != name, s"cannot $what $name: it is the file-stats key"))
-    headerLine(fsys, table, base, "#statskey2\t").foreach(k =>
+    bm.statsKey2.foreach(k =>
       require(k != name, s"cannot $what $name: it is the second stats column"))
-    constraintLines(fsys, table, base).foreach { case (cn, expr) =>
+    bm.constraints.foreach { case (cn, expr) =>
       require(!s"\\b${java.util.regex.Pattern.quote(name)}\\b".r
           .findFirstIn(expr).isDefined,
         s"cannot $what $name: CHECK constraint $cn references it ($expr)")
@@ -2699,43 +2624,32 @@ object Versioned {
     val (fsys, table) = fs(spark, tablePath)
     val base = latestVersion(spark, tablePath)
     require(base >= 1, s"$tablePath has no committed version")
-    val baseSchema = readSchemaLine(fsys, table, base).getOrElse(
-      throw new IllegalArgumentException(
-        s"v$base of $tablePath records no schema — republish once to record one"))
+    val bm = metaOf(fsys, table, base)
+    val baseSchema = recordedSchema(bm, base, tablePath)
     require(baseSchema.fieldNames.contains(oldName),
       s"no such column $oldName in ${baseSchema.fieldNames.mkString(",")}")
     require(!baseSchema.fieldNames.exists(_.equalsIgnoreCase(newName)),
       s"column $newName already exists")
-    requireNotLoadBearing(fsys, table, base, oldName, "rename")
-    val map = colMapOf(fsys, table, base)
-    val dropped = droppedColsOf(fsys, table, base)
-    val taken = dropped ++ map.values.flatten
+    requireNotLoadBearing(bm, oldName, "rename")
+    val map = bm.colMap
+    val taken = bm.droppedCols ++ map.values.flatten
     require(!taken.contains(newName),
       s"column name $newName was previously used (files may still carry " +
         "its bytes) — pick a fresh name")
     val evolved = org.apache.spark.sql.types.StructType(baseSchema.fields.map(f =>
       if (f.name == oldName) f.copy(name = newName) else f))
-    val newMap = (map - oldName) +
-      (newName -> (oldName +: map.getOrElse(oldName, Seq.empty)))
     // An EXTRA stats dimension renames WITH the column (same position, so
     // every entry's positional xstats bounds stay valid — they are bounds
     // over values, not names); unlike the first-class stats keys this is
     // not load-bearing for merges, so refusing would be needless friction.
-    val renamedStatsCols = headerLine(fsys, table, base, "#statscols\t")
-      .map(_.split(",").toSeq.filter(_.nonEmpty))
-      .getOrElse(Seq.empty)
-      .map(c => if (c == oldName) newName else c)
     commit(fsys, table, spark, readManifest(fsys, table, base),
       expectedLatest.orElse(Some(base)), Seq.empty,
-      schema = Some(evolved),
-      statsKey = headerLine(fsys, table, base, "#statskey\t"),
-      statsKey2 = headerLine(fsys, table, base, "#statskey2\t"),
-      statsCols = renamedStatsCols,
-      partColHeader = headerLine(fsys, table, base, "#partcol\t"),
-      constraints = constraintLines(fsys, table, base),
-      colMap = Some(newMap.toSeq.sortBy(_._1)),
-      droppedCols = Some((dropped + oldName).toSeq.sorted),
-      op = s"RENAME_COLUMN($oldName->$newName)")
+      bm.copy(schema = Some(evolved),
+        statsCols = bm.statsCols.map(c => if (c == oldName) newName else c),
+        colMap = (map - oldName) +
+          (newName -> (oldName +: map.getOrElse(oldName, Seq.empty))),
+        droppedCols = bm.droppedCols + oldName),
+      s"RENAME_COLUMN($oldName->$newName)", ownsColumnMapping = true)
   }
 
   /** ALTER TABLE DROP COLUMN — header-only commit: the schema loses the
@@ -2748,15 +2662,12 @@ object Versioned {
     val (fsys, table) = fs(spark, tablePath)
     val base = latestVersion(spark, tablePath)
     require(base >= 1, s"$tablePath has no committed version")
-    val baseSchema = readSchemaLine(fsys, table, base).getOrElse(
-      throw new IllegalArgumentException(
-        s"v$base of $tablePath records no schema — republish once to record one"))
+    val bm = metaOf(fsys, table, base)
+    val baseSchema = recordedSchema(bm, base, tablePath)
     require(baseSchema.fieldNames.contains(name),
       s"no such column $name in ${baseSchema.fieldNames.mkString(",")}")
     require(baseSchema.fields.length > 1, "cannot drop the last column")
-    requireNotLoadBearing(fsys, table, base, name, "drop")
-    val map = colMapOf(fsys, table, base)
-    val dropped = droppedColsOf(fsys, table, base)
+    requireNotLoadBearing(bm, name, "drop")
     val evolved = org.apache.spark.sql.types.StructType(
       baseSchema.fields.filterNot(_.name == name))
     // Dropping an EXTRA stats dimension drops it from the header AND
@@ -2764,11 +2675,7 @@ object Versioned {
     // stale name would permanently break ingest (every later append's
     // stats scan would look the dropped column up), and leaving the slot
     // would misalign the surviving dimensions' positional bounds.
-    val baseStatsCols = headerLine(fsys, table, base, "#statscols\t")
-      .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Seq.empty)
-    val dimIdx = baseStatsCols.indexOf(name)
-    val keptStatsCols =
-      if (dimIdx < 0) baseStatsCols else baseStatsCols.filterNot(_ == name)
+    val dimIdx = bm.statsCols.indexOf(name)
     val entries = readManifest(fsys, table, base).map { e =>
       if (dimIdx < 0) e
       else e.copy(xstats = e.xstats.flatMap { x =>
@@ -2780,15 +2687,10 @@ object Versioned {
     }
     commit(fsys, table, spark, entries,
       expectedLatest.orElse(Some(base)), Seq.empty,
-      schema = Some(evolved),
-      statsKey = headerLine(fsys, table, base, "#statskey\t"),
-      statsKey2 = headerLine(fsys, table, base, "#statskey2\t"),
-      statsCols = keptStatsCols,
-      partColHeader = headerLine(fsys, table, base, "#partcol\t"),
-      constraints = constraintLines(fsys, table, base),
-      colMap = Some((map - name).toSeq.sortBy(_._1)),
-      droppedCols = Some((dropped ++ map.getOrElse(name, Seq.empty) + name).toSeq.sorted),
-      op = s"DROP_COLUMN($name)")
+      bm.copy(schema = Some(evolved), statsCols = bm.statsCols.filterNot(_ == name),
+        colMap = bm.colMap - name,
+        droppedCols = bm.droppedCols ++ bm.colMap.getOrElse(name, Seq.empty) + name),
+      s"DROP_COLUMN($name)", ownsColumnMapping = true)
   }
 
   /** ALTER TABLE ADD COLUMN: commit a new version with the SAME entries
@@ -2805,11 +2707,9 @@ object Versioned {
     val (fsys, table) = fs(spark, tablePath)
     val base = latestVersion(spark, tablePath)
     require(base >= 1, s"$tablePath has no committed version")
-    val baseSchema = readSchemaLine(fsys, table, base).getOrElse(
-      throw new IllegalArgumentException(
-        s"v$base of $tablePath records no schema — republish once to record one"))
-    val unusable = droppedColsOf(fsys, table, base) ++
-      colMapOf(fsys, table, base).values.flatten
+    val bm = metaOf(fsys, table, base)
+    val baseSchema = recordedSchema(bm, base, tablePath)
+    val unusable = bm.droppedCols ++ bm.colMap.values.flatten
     fields.foreach { f =>
       require(!baseSchema.fieldNames.exists(_.equalsIgnoreCase(f.name)),
         s"column ${f.name} already exists in ${baseSchema.fieldNames.mkString(",")}")
@@ -2823,15 +2723,8 @@ object Versioned {
     }
     val evolved = org.apache.spark.sql.types.StructType(baseSchema.fields ++ fields)
     commit(fsys, table, spark, readManifest(fsys, table, base),
-      expectedLatest.orElse(Some(base)), Seq.empty,
-      schema = Some(evolved),
-      statsKey = headerLine(fsys, table, base, "#statskey\t"),
-      statsKey2 = headerLine(fsys, table, base, "#statskey2\t"),
-      statsCols = headerLine(fsys, table, base, "#statscols\t")
-        .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Seq.empty),
-      partColHeader = headerLine(fsys, table, base, "#partcol\t"),
-      constraints = constraintLines(fsys, table, base),
-      op = s"ADD_COLUMN(${fields.map(_.name).mkString(",")})")
+      expectedLatest.orElse(Some(base)), Seq.empty, bm.copy(schema = Some(evolved)),
+      s"ADD_COLUMN(${fields.map(_.name).mkString(",")})")
   }
 
   /** ALTER TABLE ALTER COLUMN TYPE — WIDENING only (int family upward,
@@ -2855,9 +2748,8 @@ object Versioned {
     val (fsys, table) = fs(spark, tablePath)
     val base = latestVersion(spark, tablePath)
     require(base >= 1, s"$tablePath has no committed version")
-    val baseSchema = readSchemaLine(fsys, table, base).getOrElse(
-      throw new IllegalArgumentException(
-        s"v$base of $tablePath records no schema — republish once to record one"))
+    val bm = metaOf(fsys, table, base)
+    val baseSchema = recordedSchema(bm, base, tablePath)
     require(baseSchema.fieldNames.contains(name),
       s"no such column $name in ${baseSchema.fieldNames.mkString(",")}")
     val oldType = baseSchema(name).dataType
@@ -2876,21 +2768,14 @@ object Versioned {
         "float -> double)")
     // Partition values are directory strings typed by the recorded schema;
     // widening one buys nothing and complicates the layout contract.
-    headerLine(fsys, table, base, "#partcol\t").foreach(pc =>
+    bm.partCol.foreach(pc =>
       require(!partColsOf(pc).contains(name),
         s"cannot alter $name: it is a partition column"))
-    val evolved = org.apache.spark.sql.types.StructType(baseSchema.fields.map(f =>
+    val evolved = StructType(baseSchema.fields.map(f =>
       if (f.name == name) f.copy(dataType = newType) else f))
     commit(fsys, table, spark, readManifest(fsys, table, base),
-      expectedLatest.orElse(Some(base)), Seq.empty,
-      schema = Some(evolved),
-      statsKey = headerLine(fsys, table, base, "#statskey\t"),
-      statsKey2 = headerLine(fsys, table, base, "#statskey2\t"),
-      statsCols = headerLine(fsys, table, base, "#statscols\t")
-        .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Seq.empty),
-      partColHeader = headerLine(fsys, table, base, "#partcol\t"),
-      constraints = constraintLines(fsys, table, base),
-      op = s"WIDEN_COLUMN($name:${oldType.simpleString}->${newType.simpleString})")
+      expectedLatest.orElse(Some(base)), Seq.empty, bm.copy(schema = Some(evolved)),
+      s"WIDEN_COLUMN($name:${oldType.simpleString}->${newType.simpleString})")
   }
 
   /** The operation that committed version `v` (`#op` header); "WRITE" on
@@ -2904,7 +2789,7 @@ object Versioned {
     // vacuumed version should hear "vacuumed", not a default op).
     require(fsys.exists(manifestPath(table, v)),
       s"version $v does not exist (or was vacuumed) at $table")
-    headerLine(fsys, table, v, "#op\t").getOrElse("WRITE")
+    metaOf(fsys, table, v).op
   }
 
   /** The entries version `v` ADDED relative to `v - 1` (serialized-form
@@ -2913,14 +2798,11 @@ object Versioned {
     * metadata for the append-tail streaming source.
     */
   private[graft] def appendedEntriesOf(spark: SparkSession, tablePath: String,
-                                       v: Int): Seq[EntryView] = {
+                                       v: Int): Seq[Entry] = {
     val (fsys, table) = fs(spark, tablePath)
     val prev = if (v <= 1) Set.empty[String]
       else readManifest(fsys, table, v - 1).map(_.serialized).toSet
-    readManifest(fsys, table, v)
-      .filterNot(e => prev(e.serialized))
-      .map(e => EntryView(e.partDir, e.dataDir, e.file, e.kmin, e.kmax,
-        e.bloom, e.dv, e.k2min, e.k2max, e.fsize, e.xstats, e.nrows))
+    readManifest(fsys, table, v).filterNot(e => prev(e.serialized))
   }
 
   /** ADD a CHECK constraint (SQL-expression CHECK, NULL = pass — the SQL
@@ -2939,14 +2821,12 @@ object Versioned {
       "constraint name must be tab/newline-free and the expression single-line")
     val (fsys, table) = fs(spark, tablePath)
     val base = latestVersion(spark, tablePath)
-    val existing = constraintLines(fsys, table, base)
-    require(!existing.exists(_._1 == name), s"constraint $name already exists")
+    val bm = metaOf(fsys, table, base)
+    require(!bm.constraints.exists(_._1 == name), s"constraint $name already exists")
     validateConstraints(readAt(spark, tablePath, base), Seq((name, sqlExpr)))
     commit(fsys, table, spark, readManifest(fsys, table, base),
       expectedLatest.orElse(Some(base)), Seq.empty,
-      schema = readSchemaLine(fsys, table, base),
-      statsKey = headerLine(fsys, table, base, "#statskey\t"),
-      constraints = existing :+ ((name, sqlExpr)), op = "ADD_CONSTRAINT")
+      bm.copy(constraints = bm.constraints :+ ((name, sqlExpr))), "ADD_CONSTRAINT")
   }
 
   /** DROP a CHECK constraint by name (a new version without it). */
@@ -2954,13 +2834,11 @@ object Versioned {
                      expectedLatest: Option[Int] = None): Int = {
     val (fsys, table) = fs(spark, tablePath)
     val base = latestVersion(spark, tablePath)
-    val existing = constraintLines(fsys, table, base)
-    require(existing.exists(_._1 == name), s"no constraint named $name")
+    val bm = metaOf(fsys, table, base)
+    require(bm.constraints.exists(_._1 == name), s"no constraint named $name")
     commit(fsys, table, spark, readManifest(fsys, table, base),
       expectedLatest.orElse(Some(base)), Seq.empty,
-      schema = readSchemaLine(fsys, table, base),
-      statsKey = headerLine(fsys, table, base, "#statskey\t"),
-      constraints = existing.filterNot(_._1 == name), op = "DROP_CONSTRAINT")
+      bm.copy(constraints = bm.constraints.filterNot(_._1 == name)), "DROP_CONSTRAINT")
   }
 
   /** Fail loudly if any row of `df` violates a constraint (NULL passes —
@@ -2975,46 +2853,26 @@ object Versioned {
           s"CHECK constraint $n ($e) violated, e.g. by row ${bad.head}")
     }
 
-  /** Raw manifest entries of a version for external readers:
-    * (partDir, dataDir, file, kmin, kmax) with file/stat fields None on
-    * partition-granular entries. Metadata only.
+  /** Range + bloom probe of an entry against a sorted key set — the
+    * runtime-filter variant of the pruning [[mergeByFiles]] uses. Entries
+    * without stats conservatively survive.
     */
-  /** Planning view of a manifest entry for the DSv2 connector. */
-  private[graft] case class EntryView(partDir: String, dataDir: String,
-                                      file: Option[String],
-                                      kmin: Option[Long], kmax: Option[Long],
-                                      bloom: Option[String], dv: Option[String],
-                                      k2min: Option[Long], k2max: Option[Long],
-                                      fsize: Option[Long] = None,
-                                      xstats: Option[String] = None,
-                                      nrows: Option[Long] = None)
-
-  /** Range + bloom probe of a planning view against a sorted key set —
-    * the runtime-filter variant of the pruning [[mergeByFiles]] uses.
-    * Views without stats conservatively survive.
-    */
-  private[graft] def viewMayContainKeys(e: EntryView, sorted: Array[Long]): Boolean =
+  private[graft] def viewMayContainKeys(e: Entry, sorted: Array[Long]): Boolean =
     viewMayContainProbes(e, sorted.map(k => (k, k)))
 
   /** Range + bloom check of an entry against (range-surrogate, bloom-key)
     * probes ([[KeyEnc.probeOf]]) — the string-keyed runtime-filter analog
     * of [[viewMayContainKeys]], sorted by the range surrogate.
     */
-  private[graft] def viewMayContainProbes(e: EntryView,
+  private[graft] def viewMayContainProbes(e: Entry,
                                           sorted: Array[(Long, Long)]): Boolean =
-    (e.kmin, e.kmax) match {
-      case (Some(lo), Some(hi)) =>
-        coversAnyKey(Entry(e.partDir, e.dataDir, e.file, Some(lo), Some(hi),
-          None, e.bloom), sorted)
-      case _ => true
-    }
+    e.kmin.isEmpty || e.kmax.isEmpty || coversAnyKey(e, sorted)
 
+  /** The resolved manifest entries of version `v` (planning metadata). */
   private[graft] def entriesOf(spark: SparkSession, tablePath: String, v: Int)
-      : Seq[EntryView] = {
+      : Seq[Entry] = {
     val (fsys, table) = fs(spark, tablePath)
-    readManifest(fsys, table, v).map(e => EntryView(e.partDir, e.dataDir,
-      e.file, e.kmin, e.kmax, e.bloom, e.dv, e.k2min, e.k2max, e.fsize,
-      e.xstats, e.nrows))
+    readManifest(fsys, table, v)
   }
 
   /** Deleted keys of a serialized deletion-vector path — planning-time
@@ -3226,10 +3084,7 @@ object Versioned {
     // Across a schema evolution both versions are compared in toV's shape
     // (the Delta CDF convention): a row whose only difference is the
     // NULL-backfilled added column is NOT a change.
-    val toSchema = {
-      val (fsys, table) = fs(spark, tablePath)
-      readSchemaLine(fsys, table, toV)
-    }
+    val toSchema = schemaOf(spark, tablePath, toV)
     def digests(v: Int): DataFrame = {
       val raw = readAt(spark, tablePath, v)
       val df = toSchema.map(alignTo(raw, _)).getOrElse(raw)
@@ -3281,7 +3136,7 @@ object Versioned {
     // Rows are presented in toV's schema (the Delta CDF convention): a
     // from-side row read through an added column NULL-backfills, so a
     // schema-evolving merge's unchanged-but-rewritten rows still cancel.
-    val toSchema = readSchemaLine(fsys, table, toV)
+    val toSchema = metaOf(fsys, table, toV).schema
     def side(entries: Seq[Entry]): DataFrame = {
       val raw = if (entries.isEmpty) empty else readEntries(spark, table, entries)
       val df = toSchema.map(alignTo(raw, _)).getOrElse(raw)
@@ -3317,9 +3172,9 @@ object Versioned {
                       fromV: Int, toV: Int,
                       strict: Boolean = true): DataFrame = {
     val (fsys, table) = fs(spark, tablePath)
-    val toSchema = readSchemaLine(fsys, table, toV)
+    val toSchema = metaOf(fsys, table, toV).schema
     val range = (fromV + 1) to toV
-    val recorded = range.flatMap(v => headerLine(fsys, table, v, "#changes\t").map((v, _)))
+    val recorded = range.flatMap(v => metaOf(fsys, table, v).changesDir.map((v, _)))
     if (strict) {
       val missing = range.toSet -- recorded.map(_._1).toSet
       require(missing.isEmpty,
@@ -3355,24 +3210,17 @@ object Versioned {
               expectedLatest: Option[Int] = None): Int = {
     val (fsys, table) = fs(spark, tablePath)
     val entries = readManifest(fsys, table, v)
-    // The restored version serves v's schema too — rolling back past a
-    // schema-evolving merge rolls the added columns back with it.
+    // The restored version serves v's table metadata — rolling back past a
+    // schema-evolving merge rolls the added columns back with it, and the
+    // restored schema resolves with the restored column MAP, not the
+    // latest one (rolling back past a rename rolls the map back too).
+    // Tombstones stay UNIONED with the latest — a name once used in files
+    // is never safe to re-introduce, whatever version serves.
+    val vm = metaOf(fsys, table, v)
     commit(fsys, table, spark, entries, expectedLatest, Seq.empty,
-      schema = readSchemaLine(fsys, table, v),
-      statsKey = headerLine(fsys, table, v, "#statskey\t"),
-      statsKey2 = headerLine(fsys, table, v, "#statskey2\t"),
-      statsCols = headerLine(fsys, table, v, "#statscols\t")
-        .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Seq.empty),
-      partColHeader = headerLine(fsys, table, v, "#partcol\t"),
-      constraints = constraintLines(fsys, table, v),
-      // the restored schema resolves with the restored MAP, not the
-      // latest one (rolling back past a rename rolls the map back too);
-      // tombstones stay UNIONED with the latest — a name once used in
-      // files is never safe to re-introduce, whatever version serves
-      colMap = Some(colMapOf(fsys, table, v).toSeq.sortBy(_._1)),
-      droppedCols = Some((droppedColsOf(fsys, table, v) ++
-        droppedColsOf(fsys, table, latestVersion(spark, tablePath))).toSeq.sorted),
-      op = s"RESTORE($v)")
+      vm.copy(droppedCols = vm.droppedCols ++
+        metaOf(fsys, table, latestVersion(spark, tablePath)).droppedCols),
+      s"RESTORE($v)", ownsColumnMapping = true)
   }
 
   /** Shallow CLONE (the public Delta `CLONE ... SHALLOW` / Iceberg
@@ -3409,19 +3257,11 @@ object Versioned {
     val abs = entries.map(e => e.copy(
       dataDir = new Path(srcQ, e.dataDir).toString,
       dv = e.dv.map(d => new Path(srcQ, d).toString)))
-    commit(dfs, dst, spark, abs, Some(0), Seq.empty,
-      schema = readSchemaLine(sfs, src, v),
-      statsKey = headerLine(sfs, src, v, "#statskey\t"),
-      statsKey2 = headerLine(sfs, src, v, "#statskey2\t"),
-      statsCols = headerLine(sfs, src, v, "#statscols\t")
-        .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Seq.empty),
-      partColHeader = headerLine(sfs, src, v, "#partcol\t"),
-      constraints = constraintLines(sfs, src, v),
-      // the clone references the source's files — its column map (and
-      // the name-reuse tombstones protecting those files) carry over
-      colMap = Some(colMapOf(sfs, src, v).toSeq.sortBy(_._1)),
-      droppedCols = Some(droppedColsOf(sfs, src, v).toSeq.sorted),
-      op = "CLONE")
+    // the clone references the source's files — its column map (and the
+    // name-reuse tombstones protecting those files) carry over with the
+    // rest of the table metadata
+    commit(dfs, dst, spark, abs, Some(0), Seq.empty, metaOf(sfs, src, v), "CLONE",
+      ownsColumnMapping = true)
   }
 
   /** Candidate files for a point-lookup batch, by pruning mode — the
@@ -3460,9 +3300,10 @@ object Versioned {
     val entries = readManifest(fsys, table, v)
     require(entries.forall(_.file.isDefined),
       "lookupKeys needs a file-granular table (publish with fileStatsKey)")
-    val keyCol = headerLine(fsys, table, v, "#statskey\t").getOrElse(
+    val meta = metaOf(fsys, table, v)
+    val keyCol = meta.statsKey.getOrElse(
       throw new IllegalArgumentException(s"v$v of $tablePath carries no #statskey"))
-    val schemaLine = readSchemaLine(fsys, table, v)
+    val schemaLine = meta.schema
     schemaLine.foreach { s =>
       require(KeyEnc.Integral.contains(s(keyCol).dataType),
         s"lookupKeys takes Long keys; $keyCol is ${s(keyCol).dataType}")
@@ -3505,38 +3346,34 @@ object Versioned {
     val (fsys, table) = fs(spark, tablePath)
     val base = latestVersion(spark, tablePath)
     val baseEntries = readManifest(fsys, table, base)
-    requireUniformLayout(fsys, table, base, baseEntries, "compactFiles")
+    val bm = metaOf(fsys, table, base)
+    requireUniformLayout(table, bm, baseEntries, "compactFiles")
     require(baseEntries.forall(_.file.isDefined),
       "compactFiles needs a file-granular table (publish with fileStatsKey)")
     // Spliced entries keep their old stats, so the recorded stats column
     // must already BE keyCol — otherwise the new manifest would mix stats
     // on two columns under one #statskey header.
-    val baseKeyStats = headerLine(fsys, table, base, "#statskey\t")
-    require(baseKeyStats.contains(keyCol),
-      s"base v$base carries file stats on ${baseKeyStats.getOrElse("<none>")}, " +
+    require(bm.statsKey.contains(keyCol),
+      s"base v$base carries file stats on ${bm.statsKey.getOrElse("<none>")}, " +
         s"not $keyCol — compacting would mix stats columns")
     val victims = baseEntries.filter(_.partDir == partDir)
     require(victims.nonEmpty, s"no files under $partDir in v$base of $tablePath")
-    val baseSchema = readSchemaLine(fsys, table, base)
     val victimRows = {
       val df = readEntries(spark, table, victims)
-      baseSchema.map(alignTo(df, _)).getOrElse(df)
+      bm.schema.map(alignTo(df, _)).getOrElse(df)
     }
     val dd = newDataDir(fsys, table)
     victimRows
       .coalesce(1)
       .write.mode(SaveMode.ErrorIfExists).partitionBy(partColsOf(partCol): _*).parquet(dd.toString)
-    val written = {
-      val (k2, xc) = statsDimsOf(fsys, table, base)
-      fileStatsOf(spark, table, dd, keyCol, stats2Col = k2, extraCols = xc)
-    }
+    val written = fileStatsOf(spark, table, dd, bm)
     require(written.forall(_.partDir == partDir),
       s"compaction leaked rows outside $partDir: ${written.map(_.partDir)}")
     // Compaction pins the base it rewrote: a concurrent commit either
     // rebases (disjoint, rebaseRetries > 0) or fails this rerunnable
     // maintenance loudly — never erases the competitor.
-    maintenanceCommit(spark, fsys, table, base, baseEntries, victims.toSet,
-      written, dd, baseSchema, keyCol, expectedLatest, rebaseRetries, "COMPACT")
+    maintenanceCommit(spark, fsys, table, base, bm, baseEntries, victims.toSet,
+      written, dd, keyCol, expectedLatest, rebaseRetries, "COMPACT")
   }
 
   /** Whole-table OPTIMIZE: bin-pack EVERY partition's small files toward
@@ -3574,15 +3411,15 @@ object Versioned {
     val (fsys, table) = fs(spark, tablePath)
     val base = latestVersion(spark, tablePath)
     val baseEntries = readManifest(fsys, table, base)
-    requireUniformLayout(fsys, table, base, baseEntries, "optimizeTable")
+    val bm = metaOf(fsys, table, base)
+    requireUniformLayout(table, bm, baseEntries, "optimizeTable")
     require(baseEntries.forall(e => e.file.isDefined && e.nrows.isDefined),
       "optimizeTable needs a file-granular base with per-file row counts " +
         "(publish with fileStatsKey on r14+, or compact/merge once to refresh stats)")
     // Spliced (single-file) bins keep their old stats — the recorded stats
     // column must already BE keyCol or the manifest would mix columns.
-    val baseKeyStats = headerLine(fsys, table, base, "#statskey\t")
-    require(baseKeyStats.contains(keyCol),
-      s"base v$base carries file stats on ${baseKeyStats.getOrElse("<none>")}, " +
+    require(bm.statsKey.contains(keyCol),
+      s"base v$base carries file stats on ${bm.statsKey.getOrElse("<none>")}, " +
         s"not $keyCol — optimizing would mix stats columns")
     // First-fit pack in key order: bins stay key-contiguous per partition.
     val bins: Seq[(String, Int, Seq[Entry])] =
@@ -3604,7 +3441,6 @@ object Versioned {
     val victims = bins.filter(_._3.size >= 2)
     if (victims.isEmpty) return base
     val victimEntries = victims.flatMap(_._3).toSet
-    val baseSchema = readSchemaLine(fsys, table, base)
     // One task per bin: ordinal bin ids (already (partition, key) ordered)
     // range-repartitioned with an EXPLICIT partition count — an implicit
     // `repartition(col)` lets AQE coalesce the tiny shuffle into one task,
@@ -3614,23 +3450,20 @@ object Versioned {
     // key order, so the merged file's bounds stay contiguous.
     val rewrite = victims.zipWithIndex.map { case ((_, _, es), ord) =>
       val df = readEntries(spark, table, es)
-      baseSchema.map(alignTo(df, _)).getOrElse(df)
+      bm.schema.map(alignTo(df, _)).getOrElse(df)
         .withColumn("_bin", lit(ord))
     }.reduce(_.unionByName(_))
       .repartitionByRange(victims.size, col("_bin"))
       .drop("_bin")
     val dd = newDataDir(fsys, table)
     rewrite.write.mode(SaveMode.ErrorIfExists).partitionBy(partColsOf(partCol): _*).parquet(dd.toString)
-    val written = {
-      val (k2, xc) = statsDimsOf(fsys, table, base)
-      fileStatsOf(spark, table, dd, keyCol, stats2Col = k2, extraCols = xc)
-    }
+    val written = fileStatsOf(spark, table, dd, bm)
     val victimParts = victims.map(_._1).toSet
     require(written.forall(e => victimParts.contains(e.partDir)),
       s"optimize leaked rows outside its victim partitions: " +
         s"${written.map(_.partDir).filterNot(victimParts).distinct.mkString(",")}")
-    maintenanceCommit(spark, fsys, table, base, baseEntries, victimEntries,
-      written, dd, baseSchema, keyCol, expectedLatest, rebaseRetries, "OPTIMIZE")
+    maintenanceCommit(spark, fsys, table, base, bm, baseEntries, victimEntries,
+      written, dd, keyCol, expectedLatest, rebaseRetries, "OPTIMIZE")
   }
 
   /** Commit half of a CONTENT-PRESERVING maintenance rewrite (optimize /
@@ -3645,25 +3478,17 @@ object Versioned {
     * disjoint conflicts loudly, exactly like the zero-retry path.
     */
   private def maintenanceCommit(spark: SparkSession, fsys: FileSystem,
-                                table: Path, base: Int,
+                                table: Path, base: Int, bm: TableMeta,
                                 baseEntries: Seq[Entry], victims: Set[Entry],
                                 written: Seq[Entry], dd: Path,
-                                baseSchema: Option[org.apache.spark.sql.types.StructType],
                                 keyCol: String, expectedLatest: Option[Int],
                                 rebaseRetries: Int, op: String): Int = {
-    val cons = constraintLines(fsys, table, base)
-    val (baseKey2, baseXCols) = statsDimsOf(fsys, table, base)
     // First attempt honors the caller's pin; REBASED retries pin the
     // version actually spliced onto (mirroring mergeByFiles) — pinning
     // the stale caller value would make every retry lose the same CAS.
     def commitOnto(onto: Seq[Entry], expectV: Option[Int], keepOrphans: Boolean): Int =
       commit(fsys, table, spark, onto.filterNot(victims) ++ written,
-        expectV,
-        if (keepOrphans) Seq.empty else Seq(dd),
-        schema = baseSchema, statsKey = Some(keyCol),
-        statsKey2 = baseKey2, statsCols = baseXCols,
-        partColHeader = headerLine(fsys, table, base, "#partcol\t"),
-        constraints = cons, op = op)
+        expectV, if (keepOrphans) Seq.empty else Seq(dd), bm, op)
     if (rebaseRetries <= 0)
       return commitOnto(baseEntries, expectedLatest.orElse(Some(base)), keepOrphans = false)
     var attempts = 0
@@ -3682,16 +3507,8 @@ object Versioned {
           attempts += 1
           val newV = latestVersion(spark, table.toString)
           val newEntries = readManifest(fsys, table, newV)
-          def shapeOf(v: Int) = readSchemaLine(fsys, table, v)
-            .map(_.fields.map(f => (f.name, f.dataType)).toSeq)
-          if (shapeOf(newV) != shapeOf(base))
-            giveUp(s"concurrent schema change at v$newV of $table — cannot rebase $op")
-          if (constraintLines(fsys, table, newV) != cons)
-            giveUp(s"concurrent constraint change at v$newV of $table — cannot rebase $op")
-          if (!headerLine(fsys, table, newV, "#statskey\t").contains(keyCol))
-            giveUp(s"v$newV of $table no longer carries $keyCol stats — cannot rebase $op")
-          if (statsDimsOf(fsys, table, newV) != ((baseKey2, baseXCols)))
-            giveUp(s"concurrent stats-dimension change at v$newV of $table — cannot rebase $op")
+          rebaseConflict(bm, metaOf(fsys, table, newV), keyCol).foreach(why =>
+            giveUp(s"$why at v$newV of $table — cannot rebase $op"))
           val delta = (newEntries.toSet -- ontoEntries) ++ (ontoEntries.toSet -- newEntries)
           delta.find(victims).foreach(d => giveUp(
             s"concurrent writer touched ${d.partDir}/${d.file.getOrElse("")} " +
@@ -3707,19 +3524,14 @@ object Versioned {
     * carry (`#statskey2`, written by [[optimizeZOrder]]) — the second
     * pruning dimension.
     */
-  def statsKey2Of(spark: SparkSession, tablePath: String, v: Int): Option[String] = {
-    val (fsys, table) = fs(spark, tablePath)
-    headerLine(fsys, table, v, "#statskey2\t")
-  }
+  def statsKey2Of(spark: SparkSession, tablePath: String, v: Int): Option[String] =
+    metaOf(spark, tablePath, v).statsKey2
 
   /** Extra stat columns of version `v` (`#statscols` header) — the
     * dimensions each entry's `xstats` slot records, in order.
     */
-  def statsColsOf(spark: SparkSession, tablePath: String, v: Int): Seq[String] = {
-    val (fsys, table) = fs(spark, tablePath)
-    headerLine(fsys, table, v, "#statscols\t")
-      .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Seq.empty)
-  }
+  def statsColsOf(spark: SparkSession, tablePath: String, v: Int): Seq[String] =
+    metaOf(spark, tablePath, v).statsCols
 
   /** 32-bit Morton interleave of two 16-bit-quantized integral columns —
     * the z-order clustering value (public Delta `OPTIMIZE ZORDER BY` /
@@ -3765,10 +3577,9 @@ object Versioned {
     require(filesPerPart > 0, s"filesPerPart must be positive: $filesPerPart")
     val (fsys, table) = fs(spark, tablePath)
     val base = latestVersion(spark, tablePath)
-    val baseKeyStats = headerLine(fsys, table, base, "#statskey\t")
-    require(baseKeyStats.forall(_ == keyCol),
-      s"base v$base carries file stats on ${baseKeyStats.getOrElse("<none>")}, not $keyCol")
-    val baseSchema = readSchemaLine(fsys, table, base)
+    val bm = metaOf(fsys, table, base)
+    require(bm.statsKey.forall(_ == keyCol),
+      s"base v$base carries file stats on ${bm.statsKey.getOrElse("<none>")}, not $keyCol")
     val df = {
       val raw = readAt(spark, tablePath, base)
       Seq(keyCol, col2).foreach(c => require(KeyEnc.supported(raw.schema(c).dataType),
@@ -3799,14 +3610,9 @@ object Versioned {
       .write.mode(SaveMode.ErrorIfExists).partitionBy(partColsOf(partCol): _*).parquet(dd.toString)
     // z-order establishes/replaces the SECOND key; extra `#statscols`
     // dimensions carry through and recompute in the same stats scan.
-    val baseXCols = statsDimsOf(fsys, table, base)._2
-    val written = fileStatsOf(spark, table, dd, keyCol, stats2Col = Some(col2),
-      extraCols = baseXCols)
-    commit(fsys, table, spark, written, expectedLatest.orElse(Some(base)), Seq(dd),
-      schema = baseSchema, statsKey = Some(keyCol), statsKey2 = Some(col2),
-      statsCols = baseXCols,
-      partColHeader = headerLine(fsys, table, base, "#partcol\t"),
-      constraints = constraintLines(fsys, table, base), op = s"ZORDER($col2)")
+    val meta = bm.copy(statsKey = Some(keyCol), statsKey2 = Some(col2))
+    commit(fsys, table, spark, fileStatsOf(spark, table, dd, meta),
+      expectedLatest.orElse(Some(base)), Seq(dd), meta, s"ZORDER($col2)")
   }
 
   /** Delete every manifest NOT in `keep` plus every data dir no retained
@@ -3854,7 +3660,7 @@ object Versioned {
         // a deletion-vector sidecar dir is live while any kept manifest's
         // entry points into it
         e.dataDir +: e.dv.map(_.split('/').head).toSeq)).toSet ++
-      liveVs.flatMap(v => headerLine(fsys, table, v, "#changes\t")).toSet
+      liveVs.flatMap(v => metaOf(fsys, table, v).changesDir).toSet
     // A tail stream's appended-set for kept version v diffs against
     // v-1's manifest (appendedEntriesOf), so each kept version's
     // PREDECESSOR manifest survives too — manifest text only, its
@@ -3873,7 +3679,7 @@ object Versioned {
     // then fails at data time, like Delta time travel past data retention.
     val chainKeep: Set[Int] = (liveVs.toSet ++ predKeep).flatMap { v0 =>
       Iterator.iterate(Option(v0))(_.flatMap(v =>
-        chainBaseOf(fsys, table, v).map(_._1)))
+        metaOf(fsys, table, v).base.map(_._1)))
         .takeWhile(_.isDefined).take(MaxChainDepth + 2).flatten
     }
     dropped.filterNot(protectedV.contains).filterNot(chainKeep)
@@ -3885,7 +3691,7 @@ object Versioned {
       if (n.endsWith(".entries.parquet")) {
         val ownerAlive = n.takeWhile(_ != '-').toIntOption.exists { x =>
           fsys.exists(manifestPath(table, x)) &&
-            headerLine(fsys, table, x, "#entriesfile\t").contains(n)
+            metaOf(fsys, table, x).entriesFile.contains(n)
         }
         if (!ownerAlive && now - st.getModificationTime > retentionMs)
           fsys.delete(st.getPath, false)

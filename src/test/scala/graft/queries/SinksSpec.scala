@@ -878,6 +878,38 @@ class SinksSpec extends SparkSpec {
     assert(Versioned.readAt(spark, tbl, v6).filter(col("v") < 0).count() == 1)
   }
 
+  test("ADD/DROP CONSTRAINT carry every table header: stats dimensions, partition spec and its evolution") {
+    import spark.implicits._
+    val tbl = freshTable("check_headers")
+    Versioned.publish(spark, tbl,
+      Seq((1L, 10L, 100L, "a"), (2L, 20L, 200L, "b")).toDF("k", "v", "w", "p"),
+      partCol = Some("p"), fileStatsKey = Some("k"), fileStatsKey2 = Some("v"),
+      fileStatsCols = Seq("w"))
+    def headerBlock(v: Int): Seq[String] = {
+      val src = scala.io.Source.fromFile(s"$tbl/_manifests/$v.txt", "UTF-8")
+      try src.getLines().takeWhile(_.startsWith("#")).toList finally src.close()
+    }
+    def assertHeaders(v: Int, partCol: String): Unit = {
+      assert(Versioned.statsKeyOf(spark, tbl, v).contains("k"), s"v$v #statskey")
+      assert(Versioned.statsKey2Of(spark, tbl, v).contains("v"), s"v$v #statskey2")
+      assert(Versioned.statsColsOf(spark, tbl, v) == Seq("w"), s"v$v #statscols")
+      assert(Versioned.partColOf(spark, tbl, v).contains(partCol), s"v$v #partcol")
+      val block = headerBlock(v)
+      Seq("#statskey\tk", "#statskey2\tv", "#statscols\tw", s"#partcol\t$partCol")
+        .foreach(h => assert(block.contains(h), s"v$v header block lacks $h: $block"))
+    }
+    val vAdd = Versioned.addConstraint(spark, tbl, "k_pos", "k > 0")
+    assertHeaders(vAdd, "p")
+    val vDrop = Versioned.dropConstraint(spark, tbl, "k_pos")
+    assertHeaders(vDrop, "p")
+    // a constraint change must not undo a partition evolution
+    Versioned.evolvePartitioning(spark, tbl, "w")
+    val vAfter = Versioned.addConstraint(spark, tbl, "v_pos", "v > 0")
+    assert(Versioned.partColOf(spark, tbl, vAfter).contains("w"))
+    assert(!Versioned.hasUniformLayout(spark, tbl, vAfter),
+      "pre-evolution files are still laid out by p")
+  }
+
   test("TIMESTAMP AS OF and DESCRIBE HISTORY: mtime-resolved version travel; metadata-only history") {
     import spark.implicits._
     val tbl = freshTable("asof")

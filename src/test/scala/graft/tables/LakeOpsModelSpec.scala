@@ -14,7 +14,13 @@ import org.apache.spark.sql.functions.{col, lit}
   *
   * The seed is fixed, so a failure replays deterministically; ops that
   * cannot apply in a state (restore with one version, optimize with
-  * nothing to gain) degrade to no-ops exactly like the store's.
+  * nothing to gain) degrade to no-ops exactly like the store's. Every
+  * manifest the walk writes must also re-serialize byte for byte from its
+  * parsed header block.
+  *
+  * A second, table-driven test pins header inheritance: each header-only
+  * commit's [[Versioned.TableMeta]] equals its base's except for exactly
+  * the fields the operation states.
   */
 class LakeOpsModelSpec extends SparkSpec {
 
@@ -24,6 +30,22 @@ class LakeOpsModelSpec extends SparkSpec {
     import spark.implicits._
     m.toSeq.map { case (k, (v, p)) => (k, v, p) }.toDF("k", "v", "p")
   }
+
+  /** Every committed manifest under `tbl` re-serializes from its parsed
+    * header block byte for byte (the `#rm` entry removals and a sidecar
+    * manifest's terminator are not metadata, so they drop out).
+    */
+  private def assertHeadersRoundTrip(tbl: String): Unit =
+    new java.io.File(tbl, "_manifests").listFiles()
+      .filter(_.getName.endsWith(".txt")).foreach { f =>
+        val lines = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+          .split("\n").toSeq
+        assert(lines.lastOption.contains("#commit"), s"$f is not committed")
+        val block = lines.takeWhile(_.startsWith("#"))
+        val meta = block.filterNot(l => l.startsWith("#rm\t") || l == "#commit")
+        assert(Versioned.TableMeta.parse(block).header == meta.map(_ + "\n").mkString,
+          s"header block of $f does not round-trip")
+      }
 
   private def storeState(tbl: String, ver: Int): Model = {
     import spark.implicits._
@@ -160,7 +182,65 @@ class LakeOpsModelSpec extends SparkSpec {
           Seq((k, k * 10, "a", "I")).toDF("k", "v", "p", "_op"), "k", "p")
         history += ver -> model
       }
+      assertHeadersRoundTrip(tbl)
     }
     assert(history.size >= 2, "the walk should retain a multi-version history")
+  }
+
+  test("header-only commits inherit their base's TableMeta except the fields they state") {
+    import spark.implicits._
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    import Versioned.TableMeta
+    val tbl = new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft_meta_${System.nanoTime()}").getPath
+    val rows = Seq((1L, 10L, 100L, 1, "a"), (2L, 20L, 200L, 2, "b"))
+    Versioned.publish(spark, tbl, rows.toDF("k", "v", "w", "i", "p"), partCol = Some("p"),
+      fileStatsKey = Some("k"), fileStatsKey2 = Some("v"), fileStatsCols = Seq("w"))
+    Versioned.addConstraint(spark, tbl, "k_pos", "k > 0")
+    def meta(t: String, v: Int) = Versioned.metaOf(spark, t, v)
+    // TABLE fields only: the per-commit fields never inherit
+    def tableOf(m: TableMeta) =
+      m.copy(tag = None, changesDir = None, op = "", entriesFile = None, base = None)
+    def schema(m: TableMeta) = m.schema.get
+    val staged = s"d_stage${System.nanoTime()}"
+    Seq((3L, 30L, 300L, 3, "a")).toDF("k", "v", "w", "i", "p")
+      .write.partitionBy("p").parquet(s"$tbl/$staged")
+    val clone = tbl + "_clone"
+    // (operation, run it -> new version, expected meta from the base's)
+    val ops: Seq[(String, () => Int, TableMeta => TableMeta)] = Seq(
+      ("replaceEntries", () => Versioned.replaceEntries(spark, tbl,
+          Versioned.latestVersion(spark, tbl), Set.empty, staged, "REPLACE"),
+        m => m),
+      ("addColumns", () => Versioned.addColumns(spark, tbl,
+          Seq(StructField("n", LongType))),
+        m => m.copy(schema = Some(StructType(schema(m).fields :+ StructField("n", LongType))))),
+      ("widenColumnType", () => Versioned.widenColumnType(spark, tbl, "i", LongType),
+        m => m.copy(schema = Some(StructType(schema(m).fields.map(f =>
+          if (f.name == "i") f.copy(dataType = LongType) else f))))),
+      ("renameColumn", () => Versioned.renameColumn(spark, tbl, "w", "w2"),
+        m => m.copy(schema = Some(StructType(schema(m).fields.map(f =>
+            if (f.name == "w") f.copy(name = "w2") else f))),
+          statsCols = Seq("w2"), colMap = m.colMap + ("w2" -> Seq("w")),
+          droppedCols = m.droppedCols + "w")),
+      ("dropColumn", () => Versioned.dropColumn(spark, tbl, "n"),
+        m => m.copy(schema = Some(StructType(schema(m).fields.filterNot(_.name == "n"))),
+          droppedCols = m.droppedCols + "n")),
+      ("addConstraint", () => Versioned.addConstraint(spark, tbl, "v_pos", "v > 0"),
+        m => m.copy(constraints = m.constraints :+ (("v_pos", "v > 0")))),
+      ("dropConstraint", () => Versioned.dropConstraint(spark, tbl, "k_pos"),
+        m => m.copy(constraints = m.constraints.filterNot(_._1 == "k_pos"))),
+      ("evolvePartitioning", () => Versioned.evolvePartitioning(spark, tbl, "i"),
+        m => m.copy(partCol = Some("i"))),
+      // restore to v2 (before every ALTER): v2's metadata, with the
+      // tombstones unioned with the latest's
+      ("restore", () => Versioned.restore(spark, tbl, 2),
+        m => meta(tbl, 2).copy(droppedCols = meta(tbl, 2).droppedCols ++ m.droppedCols)),
+      ("cloneTable", () => Versioned.cloneTable(spark, tbl, clone), m => m))
+    ops.foreach { case (name, run, expected) =>
+      val base = meta(tbl, Versioned.latestVersion(spark, tbl))
+      val v = run()
+      val got = if (name == "cloneTable") meta(clone, v) else meta(tbl, v)
+      assert(tableOf(got) == tableOf(expected(base)), s"$name: inherited metadata differs")
+    }
   }
 }
