@@ -1744,11 +1744,384 @@ object Versioned {
       "tag", "has_change_feed")
   }
 
+  /** ONE REWRITE PIPELINE serves every row-level rewrite of the store:
+    * [[merge]], [[mergeByFiles]], [[deleteWhere]], [[updateWhere]],
+    * [[compactFiles]] and [[optimizeTable]]. A public entry point decides
+    * only its SCOPE; every stage after it is shared.
+    *
+    *  1. Scope ([[Scope]]): which base entries the rewrite replaces, and
+    *     which partition dirs it may write. A PARTITION scope (merge,
+    *     deleteWhere, updateWhere; [[partitionScope]]) replaces every
+    *     entry of the touched partition dirs. A FILE scope (mergeByFiles,
+    *     compactFiles, optimizeTable) replaces, by identity, exactly the
+    *     entries its manifest stats select: key range and bloom, or bin
+    *     packing.
+    *  2. Discovery: touched partitions come from one scan of the target,
+    *     key-probed for a merge and predicate-filtered for predicate DML;
+    *     victim files come from manifest metadata alone.
+    *  3. Rewrite: one DataFrame holding the new content of the whole
+    *     scope — the merge batch front ([[MergeBatch]]), the predicate
+    *     body ([[rewriteWhere]]) or a maintenance repack.
+    *  4. Splice ([[rewriteCommit]]): the rows land in a FRESH `d_*` dir;
+    *     the written partitions must stay inside the scope; the new files'
+    *     entries ([[rewrittenEntries]]) replace the scope's base entries
+    *     and every other base entry carries over unchanged. No committed
+    *     file is ever touched, so readers of every version are unaffected,
+    *     and work is ∝ the scope, never ∝ the table. A recorded change
+    *     feed lands in a `c_*` dir.
+    *  5. Commit/rebase ([[commitRebasing]]): one manifest CAS pinned to
+    *     the base ([[Base]]); a file scope may re-validate a lost CAS and
+    *     splice its already-written output onto a winner that left the
+    *     scope's `readSet` entries and its batch key `probes` alone.
+    */
+  private final case class Scope(replaces: Entry => Boolean, dirs: Option[Set[String]],
+                                 readSet: Set[Entry] = Set.empty,
+                                 probes: Array[(Long, Long)] = Array.empty)
+
+  /** The table and version a rewrite reads, and the latest version its
+    * commit expects: `expectedLatest`, else the base itself unless the
+    * caller branched from an explicit `fromVersion` (then it owns the
+    * reconciliation).
+    */
+  private final case class Base(fsys: FileSystem, table: Path, v: Int,
+                                entries: Seq[Entry], meta: TableMeta,
+                                expect: Option[Int])
+
+  private def baseOf(spark: SparkSession, tablePath: String, fromVersion: Option[Int],
+                     expectedLatest: Option[Int], what: String): Base = {
+    val (fsys, table) = fs(spark, tablePath)
+    val v = fromVersion.getOrElse(latestVersion(spark, tablePath))
+    val entries = readManifest(fsys, table, v)
+    val meta = metaOf(fsys, table, v)
+    requireUniformLayout(table, meta, entries, what)
+    Base(fsys, table, v, entries, meta,
+      expectedLatest.orElse(if (fromVersion.isEmpty) Some(v) else None))
+  }
+
+  /** A scoped rewrite: the entry point `what` (for messages), the
+    * manifest `op`, the `rows` holding the new content of the whole scope
+    * (written partitioned by `partCols`), the header block the commit
+    * records, the change feed's (pre, post) images when recorded, the
+    * idempotence `tag`, and how often a lost CAS may rebase.
+    */
+  private final case class Rewrite(what: String, op: String, rows: DataFrame,
+                                   partCols: Seq[String], meta: TableMeta, scope: Scope,
+                                   feed: Option[(DataFrame, DataFrame)] = None,
+                                   tag: Option[String] = None, retries: Int = 0)
+
+  /** PARTITION scope over the touched partition value tuples `vals`, and
+    * the literal predicate selecting their rows (planning-time partition
+    * pruning). Tuples dedupe by RENDERED dir name — the `String.valueOf`
+    * rendering Spark's writer uses, so int-vs-long boxing across target
+    * and source rows collapses — keeping one representative per dir.
+    */
+  private def partitionScope(partCols: Seq[String], vals: Seq[Seq[Any]]): (Scope, Column) = {
+    val byDir = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Any]]
+    vals.foreach(vs => byDir.getOrElseUpdate(partDirName(partCols, vs), vs))
+    val dirs = byDir.keySet.toSet
+    val pruning =
+      if (byDir.isEmpty) lit(false)
+      else byDir.values.map(vs =>
+        partCols.zip(vs).map { case (c, v) => col(c) === lit(v) }.reduce(_ && _))
+        .reduce(_ || _)
+    (Scope(e => dirs(e.partDir), Some(dirs)), pruning)
+  }
+
+  /** FILE scope of a content-preserving maintenance rewrite: `victims`,
+    * replaced by identity; their rows stay in their own partitions.
+    */
+  private def victimScope(victims: Seq[Entry]): Scope = {
+    val vs = victims.toSet
+    Scope(vs, Some(vs.map(_.partDir)), readSet = vs)
+  }
+
+  /** The partition columns of `partCols` as `_tp0`, `_tp1`, … */
+  private def partValues(partCols: Seq[String]): Seq[Column] =
+    partCols.zipWithIndex.map { case (c, i) => col(c).as(s"_tp$i") }
+
+  /** Stages 4 and 5 of the pipeline: write, check, splice, commit. */
+  private def rewriteCommit(spark: SparkSession, base: Base, rw: Rewrite): Int = {
+    val dd = newDataDir(base.fsys, base.table)
+    rw.rows.write.mode(SaveMode.ErrorIfExists).partitionBy(rw.partCols: _*).parquet(dd.toString)
+    val written = listPartDirs(base.fsys, dd, rw.partCols.length)
+    rw.scope.dirs.foreach(allowed => require(written.toSet.subsetOf(allowed),
+      s"${rw.what} wrote partitions outside the touched set: " +
+        s"${(written.toSet -- allowed).mkString(",")} — partition-value " +
+        "rendering drifted from Spark's writer"))
+    val fresh = rewrittenEntries(spark, base.table, dd, written, rw.meta)
+    val feedDir = rw.feed.map { case (pre, post) =>
+      writeChangeFeed(base.fsys, base.table, pre, post) }
+    commitRebasing(spark, base, rw, fresh, Seq(dd) ++ feedDir, feedDir.map(_.getName))
+  }
+
+  /** Commit `fresh` in place of the base entries `rw.scope` replaces,
+    * pinned to `base.expect` (a branch with no pin never rebases). With
+    * `rw.retries` > 0 a lost CAS REBASES — the Delta conflict
+    * re-validation re-derived on file stats: the winner's commit is
+    * re-checked against everything this rewrite read or decided on. If the winner's entry delta touches no entry of the
+    * scope's read set and no file that may hold a batch key (so a merge's
+    * matched/insert classification still holds), and schema, constraints
+    * and stats headers are unchanged, the already-written output splices
+    * onto the winner's manifest and the commit retries — no re-execution.
+    * Retries pin the version actually spliced onto. A winner that WAS
+    * this tagged batch (a redelivery) is honored as its result. Anything
+    * the re-validation cannot prove disjoint conflicts loudly, exactly
+    * like the zero-retry path, and removes `orphans`.
+    */
+  private def commitRebasing(spark: SparkSession, base: Base, rw: Rewrite,
+                             fresh: Seq[Entry], orphans: Seq[Path],
+                             changesDir: Option[String]): Int = {
+    val (fsys, table) = (base.fsys, base.table)
+    def commitOnto(onto: Seq[Entry], expect: Option[Int], orphanDirs: Seq[Path]): Int =
+      commit(fsys, table, spark, onto.filterNot(rw.scope.replaces) ++ fresh, expect,
+        orphanDirs, rw.meta, rw.op, rw.tag, changesDir)
+    if (rw.retries <= 0 || base.expect.isEmpty)
+      return commitOnto(base.entries, base.expect, orphans)
+    def dropOrphans(): Unit =
+      orphans.foreach(d => try fsys.delete(d, true) catch { case _: Throwable => () })
+    def giveUp(why: String): Nothing = {
+      dropOrphans()
+      throw new ConcurrentWriteException(why)
+    }
+    val probes = rw.scope.probes
+    var attempts = 0
+    var ontoV = base.expect.get
+    var onto = base.entries
+    while (true) {
+      try return commitOnto(onto, Some(ontoV), Seq.empty)
+      catch {
+        case e: ConcurrentWriteException =>
+          if (attempts >= rw.retries)
+            giveUp(s"${e.getMessage} (after $attempts rebase attempt(s))")
+          attempts += 1
+          rw.tag.flatMap(taggedVersion(spark, table.toString, _)) match {
+            case Some(applied) =>
+              dropOrphans()
+              return applied
+            case None =>
+          }
+          val newV = latestVersion(spark, table.toString)
+          val newEntries = readManifest(fsys, table, newV)
+          rebaseConflict(base.meta, metaOf(fsys, table, newV)).foreach(why =>
+            giveUp(s"$why at v$newV of $table — cannot rebase"))
+          val delta = (newEntries.toSet -- onto) ++ (onto.toSet -- newEntries)
+          delta.find(rw.scope.readSet).foreach(d => giveUp(
+            s"concurrent writer rewrote ${d.partDir}/${d.file.getOrElse("")} " +
+              s"this ${rw.what} read — cannot rebase"))
+          // Same bloom-assisted probe as the pruning: a delta file whose
+          // stats PROVE it holds none of the batch keys cannot change the
+          // matched/insert classification, added or removed.
+          if (probes.nonEmpty)
+            delta.find(d => d.kmin.isEmpty || coversAnyKey(d, probes)).foreach(d => giveUp(
+              s"concurrent writer touched this ${rw.what}'s key space " +
+                s"(${d.partDir}/${d.file.getOrElse("")}) — cannot rebase"))
+          ontoV = newV
+          onto = newEntries
+      }
+    }
+    throw new IllegalStateException("unreachable")
+  }
+
+  /** Why a commit prepared against base meta `bm` cannot rebase onto a
+    * competitor's version (meta `nm`), if it cannot: the rebased commit
+    * re-asserts the base's schema, constraints and stats headers, so a
+    * competitor that changed any of them would be silently reverted.
+    * Shape = (name, type) pairs: nullability legitimately drifts between
+    * publish and merge rewrites and does not affect the splice; an ADDED
+    * column (schema evolution) does, loudly.
+    */
+  private def rebaseConflict(bm: TableMeta, nm: TableMeta): Option[String] = {
+    def shape(m: TableMeta) = m.schema.map(_.fields.map(f => (f.name, f.dataType)).toSeq)
+    if (shape(nm) != shape(bm)) Some("concurrent schema change")
+    else if (nm.constraints != bm.constraints) Some("concurrent constraint change")
+    else if ((nm.statsKey, nm.statsKey2, nm.statsCols) !=
+        ((bm.statsKey, bm.statsKey2, bm.statsCols)))
+      Some("concurrent stats-dimension change")
+    else None
+  }
+
+  /** `bm` as a partition-scoped rewrite of `baseEntries` records it: a
+    * file-granular base keeps its granularity — rewritten partitions get
+    * fresh per-file stats on EVERY recorded dimension in the one stats
+    * scan, so compaction, optimize and 2-D / N-D stats-pruned reads keep
+    * working after the rewrite — while a base with partition-granular
+    * entries (or none) drops the stats headers.
+    */
+  private def partitionRewriteMeta(bm: TableMeta, baseEntries: Seq[Entry]): TableMeta =
+    if (baseEntries.nonEmpty && baseEntries.forall(_.file.isDefined)) bm
+    else bm.copy(statsKey = None, statsKey2 = None, statsCols = Seq.empty)
+
+  /** Manifest entries for a rewrite's fresh data dir `dd`, whose leaf
+    * partition dirs are `written`: per file when `meta` records file
+    * stats, else per partition dir.
+    */
+  private def rewrittenEntries(spark: SparkSession, table: Path, dd: Path,
+                               written: Seq[String], meta: TableMeta): Seq[Entry] =
+    if (meta.statsKey.isDefined && written.nonEmpty) fileStatsOf(spark, table, dd, meta)
+    else written.map(Entry(_, dd.getName))
+
+  /** Persist a rewrite's change images (delete pre-images + insert
+    * post-images) to a fresh `c_*` dir — batch-sized, flat parquet.
+    */
+  private def writeChangeFeed(fsys: FileSystem, table: Path,
+                              preImages: DataFrame, postImages: DataFrame): Path = {
+    val cd = new Path(table,
+      s"c_${java.util.UUID.randomUUID().toString.replace("-", "")}")
+    preImages.withColumn("_change", lit("delete"))
+      .unionByName(postImages.withColumn("_change", lit("insert")))
+      .write.mode(SaveMode.ErrorIfExists).parquet(cd.toString)
+    cd
+  }
+
+  /** Subset read of `es` in `meta`'s recorded schema: a subset may land
+    * entirely on files written before a schema-evolving merge, and must
+    * still carry the added columns.
+    */
+  private def readAligned(spark: SparkSession, table: Path, meta: TableMeta,
+                          es: Seq[Entry]): DataFrame = {
+    val df = readEntries(spark, table, es)
+    meta.schema.map(alignTo(df, _)).getOrElse(df)
+  }
+
+  /** `df` with `assignments` (column → new-value expression, evaluated
+    * against the row) applied.
+    */
+  private def assign(df: DataFrame, assignments: Map[String, Column]): DataFrame =
+    df.select(df.columns.toSeq.map(c => assignments.get(c).map(_.as(c)).getOrElse(col(c))): _*)
+
+  /** Refuse `assignments` that name a column `target` lacks or change a
+    * column's type.
+    */
+  private def requireAssignable(target: DataFrame, assignments: Map[String, Column],
+                                what: String): Unit = {
+    val unknown = assignments.keySet -- target.columns.toSet
+    require(unknown.isEmpty,
+      s"$what: assignments to unknown columns ${unknown.mkString(",")} — " +
+        "assignments update existing columns; add columns via a schema-evolving merge")
+    val shaped = assign(target.limit(0), assignments)
+    require(shaped.schema.map(f => (f.name, f.dataType)) ==
+        target.schema.map(f => (f.name, f.dataType)),
+      s"$what: assignments must preserve column types " +
+        s"(got ${shaped.schema.simpleString} vs ${target.schema.simpleString})")
+  }
+
+  /** `WHEN NOT MATCHED BY SOURCE` clause of a full-sync MERGE: what
+    * happens to TARGET rows whose key appears nowhere in the source —
+    * delete them (mirror sync: target becomes exactly the source's key
+    * set) or update them in place (e.g. flag stale rows). The SQL
+    * standard's third merge clause, applied by [[Versioned.merge]].
+    */
+  sealed trait NotMatchedBySource
+  object NotMatchedBySource {
+    case object Delete extends NotMatchedBySource
+    final case class Update(assignments: Map[String, Column])
+        extends NotMatchedBySource
+  }
+
+  /** Stage 3 of both MERGE scopes: the CDC `source` batch against
+    * `target`. Construction validates the batch — an `_op` column, no
+    * dropped target column, the target's key type — and collects it ONCE
+    * on the driver ([[collectBatch]]): every decision derivable from the
+    * batch alone is made on that metadata. [[rewrite]] turns a discovered
+    * scope into the one-pass rewrite.
+    *
+    * Schema evolution (the Delta mergeSchema contract): the source may
+    * carry MORE columns than the target — the new version's schema gains
+    * them, pre-merge entries NULL-backfill on read, and time travel to
+    * older versions still serves the old schema. Dropping a column is
+    * refused: a narrower source usually means a wiring bug, not intent.
+    */
+  private final class MergeBatch(spark: SparkSession, source: DataFrame, target: DataFrame,
+                                 keyCol: String, extraCols: Seq[String], ops: Seq[String],
+                                 nms: Option[NotMatchedBySource], what: String) {
+    require(source.columns.contains("_op"),
+      s"$what: source must carry an _op column, got ${source.columns.mkString(",")}")
+    private val dataCols = source.columns.toSeq.filter(_ != "_op")
+    private val missing = target.columns.filterNot(dataCols.contains)
+    require(missing.isEmpty,
+      s"$what: source is missing target columns ${missing.mkString(",")} — " +
+        "columns may be ADDED, never dropped")
+    val keyDt: org.apache.spark.sql.types.DataType = target.schema(keyCol).dataType
+    // Driver-side key sets compare collected values with Java equals after
+    // [[normKey]] widens integral types: decimals of different scales, a
+    // float and a double, a string and a number never compare equal, so a
+    // matched U would be lost and a matched I would duplicate its key.
+    private val sourceKeyDt = source.schema(keyCol).dataType
+    require(sourceKeyDt == keyDt ||
+        (KeyEnc.Integral.contains(sourceKeyDt) && KeyEnc.Integral.contains(keyDt)),
+      s"$what: source key $keyCol is ${sourceKeyDt.simpleString} but the target's is " +
+        s"${keyDt.simpleString} — cast the source key to the target's type")
+    val nmsUpdate: Option[Map[String, Column]] =
+      nms.collect { case NotMatchedBySource.Update(as) => as }
+    nmsUpdate.foreach(requireAssignable(target, _, s"$what notMatchedBySource"))
+    /** The winning (key, _op, extraCols…) rows, and the source filtered to them. */
+    val (batchRows, src) = collectBatch(spark, source, keyCol, extraCols, ops)
+    private val keyed = src.select((col(keyCol).as("_sk") +: col("_op").as("_sop") +:
+      dataCols.map(c => col(c).as(s"_s_$c"))): _*)
+
+    /** Keys of the winning rows carrying `op`, in batch order. */
+    def keysOf(op: String): Seq[Any] =
+      batchRows.iterator.filter(_.getString(1) == op).map(_.get(0)).toSeq
+
+    /** The rewrite of a discovered scope — `scoped`, the target rows it
+      * replaces (None: no file to rewrite); `matched`, the normalized batch
+      * keys found in the target (a matched I is noise, an unmatched one an
+      * insert) — validated against `constraints`, with the change feed's
+      * (pre, post) images when `recordChanges`. Survivors, updated images
+      * and NOT MATCHED BY SOURCE rows come out of ONE per-column
+      * when/otherwise select over the scoped join; inserts need no target
+      * anti-join, their keys are driver metadata already.
+      */
+    def rewrite(scoped: Option[DataFrame], matched: Set[Any],
+                constraints: Seq[(String, String)], recordChanges: Boolean)
+        : (DataFrame, Option[(DataFrame, DataFrame)]) = {
+      val sop = col("_sop")
+      val isU = sop === "U"
+      // Matched I and K (membership only) rows always survive; a
+      // source-less row survives unless NOT MATCHED BY SOURCE deletes it
+      // (an Update rewrites it in the select below).
+      val noise = sop.isin(ops.filter(o => o == "I" || o == "K"): _*)
+      val keep =
+        if (nms.contains(NotMatchedBySource.Delete)) noise else sop.isNull || noise
+      def prior(c: String): Column =
+        if (target.columns.contains(c)) col(c) else lit(null).cast(source.schema(c).dataType)
+      def survivor(c: String): Column =
+        nmsUpdate.flatMap(_.get(c)).fold(prior(c))(a => when(sop.isNull, a).otherwise(col(c)))
+      val images = dataCols.map(c => when(isU, col(s"_s_$c")).otherwise(survivor(c)).as(c))
+      val joined = scoped.map(_.join(broadcast(keyed), col(keyCol) === col("_sk"), "left"))
+      val iKeys = keysOf("I")
+      val insertKeys = iKeys.filterNot(k => matched(normKey(k)))
+      val iRows = keyed.filter(sop === "I")
+      val inserts =
+        (if (insertKeys.size == iKeys.size) iRows
+         else filterByKeys(spark, iRows, col("_sk"), keyDt, insertKeys, keep = true))
+          .select(dataCols.map(c => col(s"_s_$c").as(c)): _*)
+      val rows = joined.fold(inserts)(_.filter(keep || isU).select(images: _*).unionByName(inserts))
+      val changedRow = if (nmsUpdate.isDefined) isU || sop.isNull else isU
+      lazy val changed =
+        joined.fold(inserts)(_.filter(changedRow).select(images: _*).unionByName(inserts))
+      if (constraints.nonEmpty) validateConstraints(changed, constraints)
+      dumpPlan(s"${what.toLowerCase}_rewrite", rows)
+      val feed =
+        if (!recordChanges) None
+        else {
+          // pre-images (in the NEW schema: added columns NULL-backfill) of
+          // every row the merge deletes or updates
+          val removed = if (nms.isEmpty) sop.isin("U", "D") else sop.isin("U", "D") || sop.isNull
+          Some((joined.fold(changed.limit(0))(
+            _.filter(removed).select(dataCols.map(c => prior(c).as(c)): _*)), changed))
+        }
+      (rows, feed)
+    }
+  }
+
   /** MERGE `source` INTO the table, against base version `fromVersion`
-    * (default: latest), publishing the result as a new version.
+    * (default: latest), publishing the result as a new version — the
+    * PARTITION-scoped merge of the rewrite pipeline.
     *
     * `source` carries the table's columns plus `_op` ('U' update / 'D'
-    * delete / 'I' insert / 'K' keep). Per key, AT MOST ONE operation
+    * delete / 'I' insert / 'K' keep), keyed by a column of the target's
+    * key type (integral widths may differ). Per key, AT MOST ONE operation
     * applies: if the batch carries several rows for a key, precedence is
     * D > U > I > K (a batch that says both "update" and "delete"
     * deletes); two rows with the SAME op for one key are rejected loudly
@@ -1758,21 +2131,18 @@ object Versioned {
     * unchanged keys without rewriting their partitions.
     *
     * Scale shape: only partitions containing a matched or inserted row
-    * are rewritten, into a FRESH data dir; every other partition's entry
-    * is spliced from the base manifest unchanged — work ∝ touched
-    * partitions + |source|, never ∝ |table|, and no pre-merge file is
-    * ever deleted, so concurrent readers of any committed version are
-    * unaffected (the commit itself is the manifest CAS). The only driver
-    * collects are partition METADATA bounded by the CDC batch. An update
-    * may MOVE its row across partitions; an emptied partition just has no
-    * manifest entry.
+    * are rewritten; every other partition's entry is spliced from the base
+    * manifest unchanged. The only driver collects are partition METADATA
+    * bounded by the CDC batch. An update may MOVE its row across
+    * partitions; an emptied partition just has no manifest entry.
     *
     * Concurrency: when `fromVersion` is None (merge against latest),
     * `expectedLatest` defaults to the base actually read, so a concurrent
     * writer that advanced the table mid-merge fails THIS commit loudly
     * instead of this commit silently discarding that writer's version.
     * Passing `fromVersion` opts into deliberate branching from an old
-    * base (no default pin — the caller owns reconciliation).
+    * base (no default pin — the caller owns reconciliation). A `tag`
+    * already committed is an idempotent replay: its version returns.
     *
     * `recordChanges = true` additionally persists the merge's per-row
     * change images (Delta CDF's _change_data convention: an update is a
@@ -1790,19 +2160,6 @@ object Versioned {
     * stays scoped to partitions actually holding unmatched rows — a
     * source covering every key rewrites nothing extra.
     */
-  /** `WHEN NOT MATCHED BY SOURCE` clause of a full-sync MERGE: what
-    * happens to TARGET rows whose key appears nowhere in the source —
-    * delete them (mirror sync: target becomes exactly the source's key
-    * set) or update them in place (e.g. flag stale rows). The SQL
-    * standard's third merge clause, applied by [[Versioned.merge]].
-    */
-  sealed trait NotMatchedBySource
-  object NotMatchedBySource {
-    case object Delete extends NotMatchedBySource
-    final case class Update(assignments: Map[String, Column])
-        extends NotMatchedBySource
-  }
-
   def merge(spark: SparkSession, tablePath: String, source: DataFrame,
             keyCol: String, partCol: String,
             fromVersion: Option[Int] = None,
@@ -1810,61 +2167,15 @@ object Versioned {
             tag: Option[String] = None,
             recordChanges: Boolean = false,
             notMatchedBySource: Option[NotMatchedBySource] = None): Int = {
-    val (fsys, table) = fs(spark, tablePath)
-    // Idempotent replay (see mergeByFiles): an already-committed tag wins.
-    tag.flatMap(taggedVersion(spark, tablePath, _)) match {
-      case Some(applied) => return applied
-      case None =>
-    }
-    val base = fromVersion.getOrElse(latestVersion(spark, tablePath))
-    val baseEntries = readManifest(fsys, table, base)
-    val bm = metaOf(fsys, table, base)
-    requireUniformLayout(table, bm, baseEntries, "merge")
-    val target = readAt(spark, tablePath, base)
-    // Schema evolution (the Delta mergeSchema contract): the source may
-    // carry MORE columns than the target — the new version's schema gains
-    // them, pre-merge entries NULL-backfill on read, and time travel to
-    // older versions still serves the old schema. Dropping a column is
-    // refused: a narrower source usually means a wiring bug, not intent.
-    require(source.columns.contains("_op"),
-      s"merge: source must carry an _op column, got ${source.columns.mkString(",")}")
-    val dataCols = source.columns.filter(_ != "_op")
-    val missing = target.columns.filterNot(dataCols.contains)
-    require(missing.isEmpty,
-      s"merge: source is missing target columns ${missing.mkString(",")} — " +
-        "columns may be ADDED, never dropped")
-    val newCols = dataCols.filterNot(target.columns.contains)
+    val replayed = tag.flatMap(taggedVersion(spark, tablePath, _))
+    if (replayed.isDefined) return replayed.get
+    val base = baseOf(spark, tablePath, fromVersion, expectedLatest, "merge")
+    val target = readAt(spark, tablePath, base.v)
     val partCols = partColsOf(partCol)
     partCols.foreach(c => require(partitionableTypes.contains(target.schema(c).dataType),
       s"partition column $c has a non-path-stable type"))
-
-    // CDC batch: ONE driver collect validates ops/keys/duplicates,
-    // resolves precedence, and yields every batch-side decision input
-    // (key, op, the source row's partition values) as metadata — the
-    // former dup-check job, per-key window Exchange, and the batch side
-    // of three discovery joins all collapse into it (§2.4).
-    val (batchRows, src) = collectBatch(spark, source, keyCol,
-      extraCols = partCols, allowedOps = Seq("U", "D", "I", "K"))
-    val keyed = src.select((col(keyCol).as("_sk") +: col("_op").as("_sop") +:
-      dataCols.map(c => col(c).as(s"_s_$c"))): _*)
-
-    def nmsApplied(df: DataFrame, as: Map[String, Column]): DataFrame =
-      df.select(target.columns.map(c =>
-        as.get(c).map(_.as(c)).getOrElse(col(c))): _*)
-    val nmsUpdate: Option[Map[String, Column]] = notMatchedBySource.collect {
-      case NotMatchedBySource.Update(as) => as }
-    notMatchedBySource.foreach {
-      case NotMatchedBySource.Update(as) =>
-        val unknown = as.keySet -- target.columns.toSet
-        require(unknown.isEmpty, "merge notMatchedBySource: assignments to " +
-          s"unknown columns ${unknown.mkString(",")}")
-        val shaped = nmsApplied(target.limit(0), as)
-        require(shaped.schema.map(f => (f.name, f.dataType)) ==
-            target.schema.map(f => (f.name, f.dataType)),
-          "merge notMatchedBySource: assignments must preserve column types " +
-            s"(got ${shaped.schema.simpleString} vs ${target.schema.simpleString})")
-      case NotMatchedBySource.Delete => ()
-    }
+    val b = new MergeBatch(spark, source, target, keyCol, extraCols = partCols,
+      ops = Seq("U", "D", "I", "K"), notMatchedBySource, "merge")
 
     // Touched-partition discovery: ONE scan of the target — its only
     // inherent cost ("which of my rows carry a batch key", plus, under
@@ -1873,21 +2184,15 @@ object Versioned {
     // group skipping reaches the scan) or a broadcast join beyond
     // [[IsinMaxKeys]]. Where updated rows land, where inserts land, and
     // which matched keys carry U/D are pure batch-metadata math on the
-    // driver. (Formerly: three target joins unioned + a distinct
-    // Exchange, with the source plan replanned under each branch.)
-    val tpCols = partCols.indices.map(i => s"_tp$i")
-    def asTp(cs: Seq[Column]) = cs.zip(tpCols).map { case (c, n) => c.as(n) }
-    val keyDt = target.schema(keyCol).dataType
-    val batchKeys = batchRows.map(_.get(0)).toSeq.distinct
+    // driver.
+    val batchKeys = b.batchRows.map(_.get(0)).toSeq.distinct
     val nPart = partCols.length
     // (matched keys, per-partition matched key sets, partitions holding
     // source-less rows [NMS only])
     val (matchedKeys, matchedByPart, nmsFromVals) =
       if (notMatchedBySource.isEmpty) {
-        val probe = target.select((col(keyCol).as("_mk") +:
-          asTp(partCols.map(col))): _*)
-        val disc = filterByKeys(spark, probe, col("_mk"), keyDt, batchKeys,
-          keep = true)
+        val probe = target.select((col(keyCol).as("_mk") +: partValues(partCols)): _*)
+        val disc = filterByKeys(spark, probe, col("_mk"), b.keyDt, batchKeys, keep = true)
         dumpPlan("merge_discovery", disc)
         val rows = disc.collect()
         val byPart = rows.groupBy(r => (1 to nPart).map(r.get): Seq[Any]).toSeq
@@ -1898,8 +2203,8 @@ object Versioned {
         // undecidable without looking at every row) doubles as the match
         // probe: one aggregate returns, per partition, the row count, the
         // matched count and the matched keys (bounded by the batch).
-        val (df0, mk) = withMatchedKey(spark, target, col(keyCol), keyDt, batchKeys)
-        val disc = df0.groupBy(asTp(partCols.map(col)): _*)
+        val (df0, mk) = withMatchedKey(spark, target, col(keyCol), b.keyDt, batchKeys)
+        val disc = df0.groupBy(partValues(partCols): _*)
           .agg(count(lit(1)).as("_n"), count(mk).as("_nm"),
             collect_set(mk).as("_mks"))
         dumpPlan("merge_discovery", disc)
@@ -1913,9 +2218,7 @@ object Versioned {
           .map(r => (0 until nPart).map(r.get): Seq[Any])
         (byPart.iterator.flatMap(_._2).toSet, byPart, unmatchedParts)
       }
-    val udKeys: Set[Any] = batchRows.iterator
-      .filter(r => r.getString(1) == "U" || r.getString(1) == "D")
-      .map(r => normKey(r.get(0))).toSet
+    val udKeys: Set[Any] = (b.keysOf("U") ++ b.keysOf("D")).map(normKey).toSet
     val matchedPartsVals: Seq[Seq[Any]] =
       matchedByPart.collect { case (pv, ks) if ks.exists(udKeys) => pv }
     def srcParts(r: Row): Seq[Any] = (2 until 2 + nPart).map(r.get)
@@ -1928,279 +2231,96 @@ object Versioned {
       it.foreach(seen += _)
       seen.toSeq
     }
-    val landingVals: Seq[Seq[Any]] = distinctVals(batchRows.iterator
-      .filter(r => r.getString(1) == "U" && matchedKeys(normKey(r.get(0))))
-      .map(srcParts))
-    val insertRowsMeta = batchRows.filter(r =>
-      r.getString(1) == "I" && !matchedKeys(normKey(r.get(0))))
-    val insertVals: Seq[Seq[Any]] = distinctVals(insertRowsMeta.iterator.map(srcParts))
+    def rowsOf(op: String, isMatched: Boolean): Iterator[Row] = b.batchRows.iterator
+      .filter(r => r.getString(1) == op && matchedKeys(normKey(r.get(0))) == isMatched)
+    val landingVals = distinctVals(rowsOf("U", isMatched = true).map(srcParts))
+    val insertVals = distinctVals(rowsOf("I", isMatched = false).map(srcParts))
     // NMS Update may MOVE source-less rows: only assignments to a
     // partition column can — then (and only then) the landing partitions
     // need one more pass evaluating the assignments on the unmatched rows.
-    val nmsLandingVals: Seq[Seq[Any]] = nmsUpdate match {
+    val nmsLandingVals: Seq[Seq[Any]] = b.nmsUpdate match {
       case Some(as) if partCols.exists(as.contains) =>
-        val unmatched = filterByKeys(spark, target, col(keyCol), keyDt,
+        val unmatched = filterByKeys(spark, target, col(keyCol), b.keyDt,
           batchKeys, keep = false)
-        nmsApplied(unmatched, as).select(asTp(partCols.map(col)): _*)
+        assign(unmatched, as).select(partValues(partCols): _*)
           .distinct().collect().toSeq.map(r => (0 until nPart).map(r.get))
       case _ => Seq.empty
     }
-    // Distinct by RENDERED dir name (the same String.valueOf rendering
-    // Spark's writer uses — int-vs-long boxing across target/source rows
-    // collapses), one representative value tuple per dir for the pruning
-    // predicate.
-    val touchedValsByDir = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Any]]
-    (matchedPartsVals ++ landingVals ++ insertVals ++ nmsFromVals ++ nmsLandingVals)
-      .foreach(vs => touchedValsByDir.getOrElseUpdate(partDirName(partCols, vs), vs))
-    val touchedDirs: Set[String] = touchedValsByDir.keySet.toSet
-
-    // New content of the touched partitions only, scoped by a LITERAL
-    // partition predicate (planning-time partition pruning — the former
-    // broadcast semi-join against the collected dir values resolved to
-    // the same rows one exchange later). Surviving target rows
-    // NULL-backfill any newly added columns; updated/inserted rows carry
-    // the source's values for them. One select over the scoped join
-    // replaces the former survivors/updated/not-matched-by-source
-    // branches (three replans of the same join, unioned): per-column
-    // when/otherwise produces the identical multiset in one pass, and
-    // inserts need no target anti-join at all — the unmatched I keys are
-    // already driver metadata from the discovery.
-    val pruning =
-      if (touchedValsByDir.isEmpty) lit(false)
-      else touchedValsByDir.values.map(vs =>
-        partCols.zip(vs).map { case (c, v) => col(c) === lit(v) }.reduce(_ && _))
-        .reduce(_ || _)
-    val scoped = target.filter(pruning)
-    val joined = scoped.join(broadcast(keyed), col(keyCol) === col("_sk"), "left")
-    val isU = col("_sop") === "U"
-    // With a NOT-MATCHED-BY-SOURCE clause, source-less rows no longer
-    // survive untouched: Delete drops them, Update rewrites them.
-    // Matched K (membership-only) and matched-I noise always survive.
-    val keepCond =
-      if (notMatchedBySource.isEmpty)
-        col("_sop").isNull || col("_sop").isin("I", "K")
-      else if (nmsUpdate.isDefined)
-        col("_sop").isin("I", "K") || col("_sop").isNull
-      else col("_sop").isin("I", "K")
-    def survivorVal(c: String): Column =
-      if (!target.columns.contains(c)) lit(null).cast(source.schema(c).dataType)
-      else nmsUpdate.flatMap(_.get(c)) match {
-        case Some(assigned) => when(col("_sop").isNull, assigned).otherwise(col(c))
-        case None => col(c)
-      }
-    def imageCols: Seq[Column] = dataCols.map(c =>
-      when(isU, col(s"_s_$c")).otherwise(survivorVal(c)).as(c))
-    val rewritten = joined.filter(keepCond || isU).select(imageCols: _*)
-    val insertKeys = insertRowsMeta.map(_.get(0)).toSeq.distinct
-    val iRows = keyed.filter(col("_sop") === "I")
-    val insertsSrc =
-      if (insertKeys.size == batchRows.count(_.getString(1) == "I")) iRows
-      else filterByKeys(spark, iRows, col("_sk"), keyDt, insertKeys, keep = true)
-    val inserts = insertsSrc.select(dataCols.map(c => col(s"_s_$c").as(c)): _*)
-    val rewrite = rewritten.unionByName(inserts)
-
-    if (bm.constraints.nonEmpty) {
-      val changed = joined.filter(isU ||
-          (if (nmsUpdate.isDefined) col("_sop").isNull else lit(false)))
-        .select(imageCols: _*)
-      validateConstraints(changed.unionByName(inserts), bm.constraints)
-    }
-    val meta = partitionRewriteMeta(bm, baseEntries).copy(schema = Some(rewrite.schema))
-    val dd = newDataDir(fsys, table)
-    dumpPlan("merge_rewrite", rewrite)
-    rewrite.write.mode(SaveMode.ErrorIfExists).partitionBy(partCols: _*).parquet(dd.toString)
-    val written = listPartDirs(fsys, dd, partCols.length)
-    require(written.toSet.subsetOf(touchedDirs),
-      s"merge wrote partitions outside the touched set: " +
-        s"${(written.toSet -- touchedDirs).mkString(",")} — partition-value " +
-        "rendering drifted from Spark's writer")
-    val feedDir =
-      if (!recordChanges) None
-      else {
-        // pre-images of matched U/D rows — plus, under a NOT-MATCHED-BY-
-        // SOURCE clause, of the source-less rows it deletes/updates (in
-        // the NEW schema: added columns NULL-backfill)
-        val preCond =
-          if (notMatchedBySource.isEmpty) col("_sop").isin("U", "D")
-          else col("_sop").isin("U", "D") || col("_sop").isNull
-        val preImages = joined.filter(preCond)
-          .select(dataCols.map(c =>
-            (if (target.columns.contains(c)) col(c)
-             else lit(null).cast(source.schema(c).dataType)).as(c)): _*)
-        val postImages = joined.filter(isU ||
-            (if (nmsUpdate.isDefined) col("_sop").isNull else lit(false)))
-          .select(imageCols: _*)
-          .unionByName(inserts)
-        Some(writeChangeFeed(fsys, table, preImages, postImages))
-      }
-    // Splice: untouched entries ride the base manifest; touched partitions
-    // are served from the fresh dir; an emptied partition appears nowhere.
-    val entries = baseEntries.filterNot(e => touchedDirs.contains(e.partDir)) ++
-      rewrittenEntries(spark, table, dd, written, meta)
-    val expect = expectedLatest.orElse(if (fromVersion.isEmpty) Some(base) else None)
-    commit(fsys, table, spark, entries, expect, Seq(dd) ++ feedDir.toSeq, meta, "MERGE",
-      tag, feedDir.map(_.getName))
+    val (scope, pruning) = partitionScope(partCols,
+      matchedPartsVals ++ landingVals ++ insertVals ++ nmsFromVals ++ nmsLandingVals)
+    val (rows, feed) = b.rewrite(Some(target.filter(pruning)), matchedKeys,
+      base.meta.constraints, recordChanges)
+    rewriteCommit(spark, base, Rewrite("merge", "MERGE", rows, partCols,
+      partitionRewriteMeta(base.meta, base.entries).copy(schema = Some(rows.schema)),
+      scope, feed, tag))
   }
-
-  /** `bm` as a partition-scoped rewrite of `baseEntries` records it: a
-    * file-granular base keeps its granularity — rewritten partitions get
-    * fresh per-file stats on EVERY recorded dimension in the one stats
-    * scan, so compaction, optimize and 2-D / N-D stats-pruned reads keep
-    * working after the rewrite — while a base with partition-granular
-    * entries (or none) drops the stats headers.
-    */
-  private def partitionRewriteMeta(bm: TableMeta, baseEntries: Seq[Entry]): TableMeta =
-    if (baseEntries.nonEmpty && baseEntries.forall(_.file.isDefined)) bm
-    else bm.copy(statsKey = None, statsKey2 = None, statsCols = Seq.empty)
-
-  /** Manifest entries for a partition rewrite's fresh data dir `dd`, whose
-    * leaf partition dirs are `written`: per file when `meta` records file
-    * stats, else per partition dir.
-    */
-  private def rewrittenEntries(spark: SparkSession, table: Path, dd: Path,
-                               written: Seq[String], meta: TableMeta): Seq[Entry] =
-    if (meta.statsKey.isDefined && written.nonEmpty) fileStatsOf(spark, table, dd, meta)
-    else written.map(Entry(_, dd.getName))
 
   /** DELETE WHERE: remove every row where `predicate` IS TRUE (NULL keeps
     * the row — SQL DELETE semantics), publishing the result as a new
-    * version. Only partitions CONTAINING a matching row are rewritten —
-    * the discovery pass is one filtered scan whose predicate Catalyst
-    * pushes down (a predicate on the partition column prunes the
-    * discovery itself), and the collected output is partition VALUES,
-    * metadata-sized. Untouched partitions splice; an emptied partition
-    * vanishes; same base pinning as [[merge]]; `recordChanges` persists
-    * the deleted pre-images for the change feed.
+    * version; [[rewriteWhere]] with no surviving image. Same base pinning
+    * as [[merge]]; `recordChanges` persists the deleted pre-images for the
+    * change feed.
     */
   def deleteWhere(spark: SparkSession, tablePath: String, predicate: Column,
                   partCol: String,
                   fromVersion: Option[Int] = None,
                   expectedLatest: Option[Int] = None,
-                  recordChanges: Boolean = false): Int = {
-    val (fsys, table) = fs(spark, tablePath)
-    val base = fromVersion.getOrElse(latestVersion(spark, tablePath))
-    val baseEntries = readManifest(fsys, table, base)
-    val bm = metaOf(fsys, table, base)
-    requireUniformLayout(table, bm, baseEntries, "deleteWhere")
-    val target = readAt(spark, tablePath, base)
-    val isMatch = coalesce(predicate, lit(false)) // NULL predicate = keep
-    val partCols = partColsOf(partCol)
-    val tpCols = partCols.indices.map(i => s"_tp$i")
-    def asTp(cs: Seq[Column]) = cs.zip(tpCols).map { case (c, n) => c.as(n) }
-    val touchedRows = target.filter(isMatch)
-      .select(asTp(partCols.map(col)): _*)
-      .distinct().collect()
-    if (touchedRows.isEmpty && !recordChanges) return base // nothing matches
-    val touchedVals = touchedRows.toSeq.map(r => partCols.indices.map(r.get))
-    val touchedDirs = touchedVals.map(partDirName(partCols, _)).toSet
-    // Literal partition predicate from the collected values: planning-time
-    // partition pruning, where the former broadcast semi-join resolved to
-    // the same rows one exchange later.
-    val scoped = target.filter(
-      if (touchedVals.isEmpty) lit(false)
-      else touchedVals.map(vs =>
-        partCols.zip(vs).map { case (c, v) => col(c) === lit(v) }.reduce(_ && _))
-        .reduce(_ || _))
-    val rewrite = scoped.filter(!isMatch)
-    // deletions add no rows — constraints cannot be violated, only carried
-    val meta = partitionRewriteMeta(bm, baseEntries).copy(schema = Some(target.schema))
-    val dd = newDataDir(fsys, table)
-    dumpPlan("deletewhere_rewrite", rewrite)
-    rewrite.write.mode(SaveMode.ErrorIfExists).partitionBy(partCols: _*).parquet(dd.toString)
-    val written = listPartDirs(fsys, dd, partCols.length)
-    require(written.toSet.subsetOf(touchedDirs),
-      s"deleteWhere wrote partitions outside the touched set: " +
-        s"${(written.toSet -- touchedDirs).mkString(",")}")
-    val feedDir =
-      if (!recordChanges) None
-      else Some(writeChangeFeed(fsys, table,
-        scoped.filter(isMatch), rewrite.limit(0)))
-    val entries = baseEntries.filterNot(e => touchedDirs.contains(e.partDir)) ++
-      rewrittenEntries(spark, table, dd, written, meta)
-    val expect = expectedLatest.orElse(if (fromVersion.isEmpty) Some(base) else None)
-    commit(fsys, table, spark, entries, expect, Seq(dd) ++ feedDir.toSeq, meta, "DELETE",
-      changesDir = feedDir.map(_.getName))
-  }
+                  recordChanges: Boolean = false): Int =
+    rewriteWhere(spark, tablePath, predicate, None, partCol, fromVersion,
+      expectedLatest, recordChanges, "deleteWhere", "DELETE")
 
   /** UPDATE WHERE: apply `assignments` (column → new-value expression,
     * evaluated against the row) to every row where `predicate` IS TRUE
-    * (NULL leaves the row unchanged — SQL UPDATE semantics). Rewrites the
-    * partitions holding a matching row PLUS the partitions updated rows
-    * land in (an assignment may move rows across partitions); everything
-    * else splices. Same base pinning as [[merge]]; `recordChanges`
+    * (NULL leaves the row unchanged — SQL UPDATE semantics); see
+    * [[rewriteWhere]]. Same base pinning as [[merge]]; `recordChanges`
     * persists the update's delete+insert image pairs.
     */
   def updateWhere(spark: SparkSession, tablePath: String, predicate: Column,
                   assignments: Map[String, Column], partCol: String,
                   fromVersion: Option[Int] = None,
                   expectedLatest: Option[Int] = None,
-                  recordChanges: Boolean = false): Int = {
-    val (fsys, table) = fs(spark, tablePath)
-    val base = fromVersion.getOrElse(latestVersion(spark, tablePath))
-    val baseEntries = readManifest(fsys, table, base)
-    val bm = metaOf(fsys, table, base)
-    requireUniformLayout(table, bm, baseEntries, "updateWhere")
-    val target = readAt(spark, tablePath, base)
-    val unknown = assignments.keySet -- target.columns.toSet
-    require(unknown.isEmpty,
-      s"updateWhere: assignments to unknown columns ${unknown.mkString(",")} — " +
-        "predicate DML updates existing columns; add columns via a schema-evolving merge")
-    val isMatch = coalesce(predicate, lit(false))
-    def applied(df: DataFrame): DataFrame =
-      df.select(target.columns.map(c =>
-        assignments.get(c).map(_.as(c)).getOrElse(col(c))): _*)
-    val partCols = partColsOf(partCol)
-    val tpCols = partCols.indices.map(i => s"_tp$i")
-    def asTp(cs: Seq[Column]) = cs.zip(tpCols).map { case (c, n) => c.as(n) }
-    val srcParts = target.filter(isMatch).select(asTp(partCols.map(col)): _*)
-    val dstParts = applied(target.filter(isMatch)).select(asTp(partCols.map(col)): _*)
-    val touchedRows = srcParts.union(dstParts).distinct().collect()
-    if (touchedRows.isEmpty && !recordChanges) return base
-    val touchedVals = touchedRows.toSeq.map(r => partCols.indices.map(r.get))
-    val touchedDirs = touchedVals.map(partDirName(partCols, _)).toSet
-    // Same literal-predicate scoping as deleteWhere (partition pruning at
-    // planning time instead of a broadcast semi-join).
-    val scoped = target.filter(
-      if (touchedVals.isEmpty) lit(false)
-      else touchedVals.map(vs =>
-        partCols.zip(vs).map { case (c, v) => col(c) === lit(v) }.reduce(_ && _))
-        .reduce(_ || _))
-    val updated = applied(scoped.filter(isMatch))
-    require(updated.schema.map(f => (f.name, f.dataType)) ==
-        target.schema.map(f => (f.name, f.dataType)),
-      "updateWhere: assignments must preserve column types " +
-        s"(got ${updated.schema.simpleString} vs ${target.schema.simpleString})")
-    val rewrite = scoped.filter(!isMatch).unionByName(updated)
-    dumpPlan("updatewhere_rewrite", rewrite)
-    validateConstraints(updated, bm.constraints)
-    val meta = partitionRewriteMeta(bm, baseEntries).copy(schema = Some(target.schema))
-    val dd = newDataDir(fsys, table)
-    rewrite.write.mode(SaveMode.ErrorIfExists).partitionBy(partCols: _*).parquet(dd.toString)
-    val written = listPartDirs(fsys, dd, partCols.length)
-    require(written.toSet.subsetOf(touchedDirs),
-      s"updateWhere wrote partitions outside the touched set: " +
-        s"${(written.toSet -- touchedDirs).mkString(",")}")
-    val feedDir =
-      if (!recordChanges) None
-      else Some(writeChangeFeed(fsys, table, scoped.filter(isMatch), updated))
-    val entries = baseEntries.filterNot(e => touchedDirs.contains(e.partDir)) ++
-      rewrittenEntries(spark, table, dd, written, meta)
-    val expect = expectedLatest.orElse(if (fromVersion.isEmpty) Some(base) else None)
-    commit(fsys, table, spark, entries, expect, Seq(dd) ++ feedDir.toSeq, meta, "UPDATE",
-      changesDir = feedDir.map(_.getName))
-  }
+                  recordChanges: Boolean = false): Int =
+    rewriteWhere(spark, tablePath, predicate, Some(assignments), partCol, fromVersion,
+      expectedLatest, recordChanges, "updateWhere", "UPDATE")
 
-  /** Persist a merge's change images (delete pre-images + insert
-    * post-images) to a fresh `c_*` dir — batch-sized, flat parquet.
+  /** Predicate DML, a partition scope: rows where `predicate` IS TRUE get
+    * `assignments` applied; a delete (None) keeps no image of them.
+    * Discovery is one filtered scan whose predicate Catalyst pushes down
+    * (a predicate on the partition column prunes the discovery itself),
+    * collecting the partition VALUES the matching rows leave and — for an
+    * update, whose assignment may move rows — land in: metadata-sized.
+    * Those partitions are rewritten, everything else splices, an emptied
+    * partition vanishes. Nothing matching (and no feed to record) commits
+    * nothing and returns the base.
     */
-  private def writeChangeFeed(fsys: FileSystem, table: Path,
-                              preImages: DataFrame, postImages: DataFrame): Path = {
-    val cd = new Path(table,
-      s"c_${java.util.UUID.randomUUID().toString.replace("-", "")}")
-    preImages.withColumn("_change", lit("delete"))
-      .unionByName(postImages.withColumn("_change", lit("insert")))
-      .write.mode(SaveMode.ErrorIfExists).parquet(cd.toString)
-    cd
+  private def rewriteWhere(spark: SparkSession, tablePath: String, predicate: Column,
+                           assignments: Option[Map[String, Column]], partCol: String,
+                           fromVersion: Option[Int], expectedLatest: Option[Int],
+                           recordChanges: Boolean, what: String, op: String): Int = {
+    val base = baseOf(spark, tablePath, fromVersion, expectedLatest, what)
+    val target = readAt(spark, tablePath, base.v)
+    assignments.foreach(requireAssignable(target, _, what))
+    def applied(df: DataFrame): Option[DataFrame] = assignments.map(assign(df, _))
+    val isMatch = coalesce(predicate, lit(false)) // NULL predicate = keep
+    val partCols = partColsOf(partCol)
+    val matching = target.filter(isMatch)
+    val left = matching.select(partValues(partCols): _*)
+    val touched = applied(matching)
+      .fold(left)(u => left.union(u.select(partValues(partCols): _*)))
+      .distinct().collect()
+    if (touched.isEmpty && !recordChanges) return base.v
+    val (scope, pruning) =
+      partitionScope(partCols, touched.toSeq.map(r => partCols.indices.map(r.get)))
+    val scoped = target.filter(pruning)
+    val updated = applied(scoped.filter(isMatch))
+    val rows = updated.fold(scoped.filter(!isMatch))(scoped.filter(!isMatch).unionByName(_))
+    dumpPlan(s"${what.toLowerCase}_rewrite", rows)
+    // a delete adds no rows: constraints cannot be violated, only carried
+    updated.foreach(validateConstraints(_, base.meta.constraints))
+    rewriteCommit(spark, base, Rewrite(what, op, rows, partCols,
+      partitionRewriteMeta(base.meta, base.entries).copy(schema = Some(target.schema)), scope,
+      if (recordChanges) Some((scoped.filter(isMatch), updated.getOrElse(rows.limit(0))))
+      else None))
   }
 
   /** DELETE by key via DELETION VECTORS — the public Delta DV / Iceberg
@@ -2294,8 +2414,9 @@ object Versioned {
     *  - a key outside every file's range cannot exist in the table, so
     *    unmatched-U/D fall out for free and such inserts skip the join
     *    entirely. Updated rows that change partition and inserts land as
-    *    NEW files in the fresh data dir. Same duplicate-key precedence
-    *    (D > U > I) and CAS commit as [[merge]].
+    *    NEW files in the fresh data dir. Same batch contract, duplicate-key
+    *    precedence (D > U > I), tag replay and CAS commit as [[merge]];
+    *    `rebaseRetries` > 0 lets a lost CAS rebase ([[commitRebasing]]).
     */
   def mergeByFiles(spark: SparkSession, tablePath: String, source: DataFrame,
                    keyCol: String, partCol: String,
@@ -2304,218 +2425,74 @@ object Versioned {
                    tag: Option[String] = None,
                    recordChanges: Boolean = false,
                    rebaseRetries: Int = 0): Int = {
-    val (fsys, table) = fs(spark, tablePath)
     // Idempotent replay: a batch whose tag already committed is a no-op —
     // the exactly-once contract a streaming CDC writer needs when a
     // micro-batch is redelivered after a crash or task retry.
-    tag.flatMap(taggedVersion(spark, tablePath, _)) match {
-      case Some(applied) => return applied
-      case None =>
-    }
-    val base = fromVersion.getOrElse(latestVersion(spark, tablePath))
-    val baseEntries = readManifest(fsys, table, base)
-    val bm = metaOf(fsys, table, base)
-    requireUniformLayout(table, bm, baseEntries, "mergeByFiles")
-    require(baseEntries.forall(_.file.isDefined),
-      s"mergeByFiles needs a file-granular base — publish with fileStatsKey")
-    // The pruning below reads each entry's [kmin, kmax] as stats ON
-    // keyCol; if the base recorded stats on a DIFFERENT column, skipping
-    // a "non-covering" file could silently drop a matched update. Refuse
-    // the mismatch loudly instead.
-    require(bm.statsKey.contains(keyCol),
-      s"base v$base carries file stats on ${bm.statsKey.getOrElse("<none>")}, " +
-        s"not $keyCol — range pruning on mismatched stats would be unsound")
-    // Subset reads must present the base version's schema: after an
-    // earlier schema-evolving merge, a rewrite/check subset could land
-    // entirely on pre-evolution files and silently lack the added columns.
-    def readAligned(es: Seq[Entry]): DataFrame = {
-      val df = readEntries(spark, table, es)
-      bm.schema.map(alignTo(df, _)).getOrElse(df)
-    }
-    val target = readAligned(baseEntries)
-    // Same evolution contract as [[merge]]: source may ADD columns.
-    require(source.columns.contains("_op"),
-      s"merge: source must carry an _op column, got ${source.columns.mkString(",")}")
-    val dataCols = source.columns.filter(_ != "_op")
-    val missingCols = target.columns.filterNot(dataCols.contains)
-    require(missingCols.isEmpty,
-      s"merge: source is missing target columns ${missingCols.mkString(",")} — " +
-        "columns may be ADDED, never dropped")
-    val newCols = dataCols.filterNot(target.columns.contains)
+    val replayed = tag.flatMap(taggedVersion(spark, tablePath, _))
+    if (replayed.isDefined) return replayed.get
+    val base = baseOf(spark, tablePath, fromVersion, expectedLatest, "mergeByFiles")
+    requireFileStats(base, keyCol, "mergeByFiles")
+    val target = readAligned(spark, base.table, base.meta, base.entries)
     require(KeyEnc.supported(target.schema(keyCol).dataType),
       s"mergeByFiles prunes on ordered key stats; $keyCol is " +
         s"${target.schema(keyCol).dataType} — use an integral, string, or date column")
+    val b = new MergeBatch(spark, source, target, keyCol, extraCols = Seq.empty,
+      ops = Seq("U", "D", "I"), nms = None, "mergeByFiles")
 
-    // ONE driver collect validates the batch and resolves precedence
-    // (formerly a validation job + per-key window Exchange + a second
-    // collect); its (key, op) pairs are driver metadata. Keys encode to
-    // (range surrogate, bloom key) probe pairs ([[KeyEnc]]) so the same
-    // manifest pruning covers integral, string, and date keys; membership
-    // is still decided by real key equality below.
-    val (batchRows, src) = collectBatch(spark, source, keyCol,
-      extraCols = Seq.empty, allowedOps = Seq("U", "D", "I"))
-    val keyed = src.select((col(keyCol).as("_sk") +: col("_op").as("_sop") +:
-      dataCols.map(c => col(c).as(s"_s_$c"))): _*)
-    val batch = batchRows.map(r => (KeyEnc.probeOf(r.get(0)), r.getString(1)))
-    val udKeys = batch.collect { case (p, op) if op == "U" || op == "D" => p }.sortBy(_._1)
-    val iKeys = batch.collect { case (p, "I") => p }.sortBy(_._1)
-    // Range probe against SORTED keys: O(|files| log |keys|) instead of the
-    // naive O(|files|·|keys|) scan — at Delta-checkpoint manifest sizes
-    // (10^5 files × 10^4 batch keys) the difference is 10^9 comparisons vs
-    // 10^6, keeping the driver-side planning metadata-cheap. Entries that
-    // carry a key Bloom filter additionally drop files whose range covers
-    // a batch key the file provably does not contain (sparse key spaces) —
+    // Keys encode to (range surrogate, bloom key) probe pairs ([[KeyEnc]])
+    // so the same manifest pruning covers integral, string, and date keys;
+    // membership is still decided by real key equality. Range probe
+    // against SORTED keys: O(|files| log |keys|) instead of the naive
+    // O(|files|·|keys|) scan — at Delta-checkpoint manifest sizes (10^5
+    // files × 10^4 batch keys) the difference is 10^9 comparisons vs 10^6,
+    // keeping the driver-side planning metadata-cheap. Entries that carry
+    // a key Bloom filter additionally drop files whose range covers a
+    // batch key the file provably does not contain (sparse key spaces) —
     // sound, because blooms have no false negatives.
-    val rewriteSet = baseEntries.filter(coversAnyKey(_, udKeys))
+    def probes(ops: String*) = ops.flatMap(b.keysOf).map(KeyEnc.probeOf).toArray.sortBy(_._1)
+    val udKeys = probes("U", "D")
+    val iKeys = probes("I")
+    val rewriteSet = base.entries.filter(coversAnyKey(_, udKeys))
     val rewriteKeys = rewriteSet.toSet
-    val checkSet = baseEntries.filterNot(rewriteKeys)
-      .filter(coversAnyKey(_, iKeys))
+    val checkSet = base.entries.filterNot(rewriteKeys).filter(coversAnyKey(_, iKeys))
 
     // Matched-I membership: ONE scan of the files whose stats cover an I
     // key, with the key probe PUSHED into the scan (row-group skipping
-    // prunes it further), collected as driver metadata. The former
-    // anti-join made the rewrite job itself scan the whole check set;
-    // now the rewrite reads exactly the rewrite set, and inserts are a
-    // driver-side filter of the batch.
-    val keyDt = target.schema(keyCol).dataType
-    val iKeyVals = batchRows.filter(_.getString(1) == "I").map(_.get(0)).toSeq
+    // prunes it further), collected as driver metadata — so the rewrite
+    // reads exactly the rewrite set, and inserts are a driver-side filter
+    // of the batch.
+    val iKeyVals = b.keysOf("I")
     val matchedIKeys: Set[Any] =
       if (iKeyVals.isEmpty || (rewriteSet.isEmpty && checkSet.isEmpty)) Set.empty
       else {
-        val aff = readAligned(rewriteSet ++ checkSet).select(col(keyCol))
-        val m = filterByKeys(spark, aff, col(keyCol), keyDt, iKeyVals, keep = true)
+        val aff = readAligned(spark, base.table, base.meta, rewriteSet ++ checkSet)
+          .select(col(keyCol))
+        val m = filterByKeys(spark, aff, col(keyCol), b.keyDt, iKeyVals, keep = true)
         dumpPlan("mergebyfiles_imembership", m)
         m.collect().iterator.map(r => normKey(r.get(0))).toSet
       }
-    val insertKeys = iKeyVals.filterNot(v => matchedIKeys(normKey(v)))
-    val iRows = keyed.filter(col("_sop") === "I")
-    val insertsSrc =
-      if (insertKeys.size == iKeyVals.size) iRows
-      else filterByKeys(spark, iRows, col("_sk"), keyDt, insertKeys, keep = true)
-    val inserts = insertsSrc.select(dataCols.map(c => col(s"_s_$c").as(c)): _*)
-    val joinedOpt =
+    val (rows, feed) = b.rewrite(
       if (rewriteSet.isEmpty) None
-      else Some(readAligned(rewriteSet)
-        .join(broadcast(keyed), col(keyCol) === col("_sk"), "left"))
-    // Survivors and updated images in ONE pass over the rewrite-set join
-    // (per-column when/otherwise — the former two branches replanned the
-    // join twice and unioned).
-    val isU = col("_sop") === "U"
-    val rewrite = joinedOpt match {
-      case None => inserts
-      case Some(joined) =>
-        joined.filter(col("_sop").isNull || col("_sop") === "I" || isU)
-          .select(dataCols.map(c => when(isU, col(s"_s_$c")).otherwise(
-            if (target.columns.contains(c)) col(c)
-            else lit(null).cast(source.schema(c).dataType)).as(c)): _*)
-          .unionByName(inserts)
-    }
-
-    def updatedImgs = joinedOpt.map(_.filter(isU)
-      .select(dataCols.map(c => col(s"_s_$c").as(c)): _*))
-    if (bm.constraints.nonEmpty) validateConstraints(
-      updatedImgs.map(_.unionByName(inserts)).getOrElse(inserts), bm.constraints)
-    val dd = newDataDir(fsys, table)
-    dumpPlan("mergebyfiles_rewrite", rewrite)
-    rewrite.write.mode(SaveMode.ErrorIfExists).partitionBy(partColsOf(partCol): _*).parquet(dd.toString)
-    // Recompute EVERY recorded stats dimension for the rewritten files in
-    // the one stats scan — z-order 2-D bounds and N-dim xstats survive a
-    // file-scoped merge instead of degrading to off on the touched files.
-    val written =
-      if (fsys.listStatus(dd).exists(s => s.isDirectory)) fileStatsOf(spark, table, dd, bm)
-      else Seq.empty // every affected row deleted, nothing inserted
-    val feedDir =
-      if (!recordChanges) None
-      else {
-        val postImages = updatedImgs.map(_.unionByName(inserts)).getOrElse(inserts)
-        val preImages = joinedOpt.map(j => newCols.foldLeft(
-            j.filter(col("_sop").isin("U", "D"))
-              .select(target.columns.map(col): _*)
-          )((d, c) => d.withColumn(c, lit(null).cast(source.schema(c).dataType)))
-          .select(dataCols.map(col): _*))
-          .getOrElse(postImages.limit(0))
-        Some(writeChangeFeed(fsys, table, preImages, postImages))
-      }
-    val expect = expectedLatest.orElse(if (fromVersion.isEmpty) Some(base) else None)
-    val orphans = Seq(dd) ++ feedDir.toSeq
-    def commitOnto(onto: Seq[Entry], expectV: Option[Int], keepOrphans: Boolean): Int =
-      commit(fsys, table, spark, onto.filterNot(rewriteKeys) ++ written, expectV,
-        if (keepOrphans) Seq.empty else orphans, bm.copy(schema = Some(rewrite.schema)),
-        "MERGE_FILES", tag, feedDir.map(_.getName))
-    if (rebaseRetries <= 0 || expect.isEmpty)
-      return commitOnto(baseEntries, expect, keepOrphans = false)
-
-    // Optimistic concurrency with REBASE (the Delta conflict-re-validation
-    // protocol re-derived on file stats): when the version CAS loses, the
-    // winner's commit is re-validated against everything THIS merge read
-    // or decided on — if the winner's entry delta neither touches a file
-    // this merge rewrote/checked nor covers any batch key (so the
-    // matched/insert classification still holds), and schema, constraints
-    // and the stats column are unchanged, the already-written output is
-    // spliced onto the winner's manifest and the commit retried — no
-    // re-execution. Anything the re-validation cannot prove disjoint
-    // conflicts loudly, exactly like the zero-retry path.
-    var attempts = 0
-    var ontoV = expect.get
-    var ontoEntries = baseEntries
-    val readSet: Set[Entry] = rewriteKeys ++ checkSet
-    val allKeys = (udKeys ++ iKeys).sortBy(_._1)
-    def giveUp(why: String): Nothing = {
-      orphans.foreach(d => try fsys.delete(d, true) catch { case _: Throwable => () })
-      throw new ConcurrentWriteException(why)
-    }
-    while (true) {
-      try return commitOnto(ontoEntries, Some(ontoV), keepOrphans = true)
-      catch {
-        case e: ConcurrentWriteException =>
-          if (attempts >= rebaseRetries)
-            giveUp(s"${e.getMessage} (after $attempts rebase attempt(s))")
-          attempts += 1
-          // The competing writer may have BEEN this batch (a redelivered
-          // tagged commit): honor idempotence before calling it a conflict.
-          tag.flatMap(taggedVersion(spark, tablePath, _)) match {
-            case Some(applied) =>
-              orphans.foreach(d => try fsys.delete(d, true) catch { case _: Throwable => () })
-              return applied
-            case None =>
-          }
-          val newV = latestVersion(spark, tablePath)
-          val newEntries = readManifest(fsys, table, newV)
-          rebaseConflict(bm, metaOf(fsys, table, newV), keyCol).foreach(why =>
-            giveUp(s"$why at v$newV of $table — cannot rebase"))
-          val delta = (newEntries.toSet -- ontoEntries) ++ (ontoEntries.toSet -- newEntries)
-          delta.find(readSet).foreach(d => giveUp(
-            s"concurrent writer rewrote ${d.partDir}/${d.file.getOrElse("")} " +
-              s"this merge read — cannot rebase"))
-          // Same bloom-assisted probe as the pruning: a delta file whose
-          // stats PROVE it holds none of this batch's keys cannot change
-          // the matched/insert classification, added or removed.
-          delta.find(d => d.kmin.isEmpty || coversAnyKey(d, allKeys)).foreach(d => giveUp(
-            s"concurrent writer touched this merge's key space " +
-              s"(${d.partDir}/${d.file.getOrElse("")}) — cannot rebase"))
-          ontoV = newV
-          ontoEntries = newEntries
-      }
-    }
-    throw new IllegalStateException("unreachable")
+      else Some(readAligned(spark, base.table, base.meta, rewriteSet)),
+      matchedIKeys, base.meta.constraints, recordChanges)
+    rewriteCommit(spark, base, Rewrite("mergeByFiles", "MERGE_FILES", rows,
+      partColsOf(partCol), base.meta.copy(schema = Some(rows.schema)),
+      Scope(rewriteKeys, None, rewriteKeys ++ checkSet, (udKeys ++ iKeys).sortBy(_._1)),
+      feed, tag, rebaseRetries))
   }
 
-  /** Why a commit prepared against base meta `bm` cannot rebase onto a
-    * competitor's version (meta `nm`), if it cannot: the rebased commit
-    * re-asserts the base's schema, constraints and stats headers, so a
-    * competitor that changed any of them would be silently reverted.
-    * Shape = (name, type) pairs: nullability legitimately drifts between
-    * publish and merge rewrites and does not affect the splice; an ADDED
-    * column (schema evolution) does, loudly.
+  /** A file scope splices every entry it does not replace with the stats
+    * it recorded, and prunes on them: the base must be file-granular with
+    * its stats on `keyCol` — range pruning on another column's stats could
+    * skip a file that holds a key, and the new files' stats would mix two
+    * columns under one `#statskey`.
     */
-  private def rebaseConflict(bm: TableMeta, nm: TableMeta, keyCol: String): Option[String] = {
-    def shape(m: TableMeta) = m.schema.map(_.fields.map(f => (f.name, f.dataType)).toSeq)
-    if (shape(nm) != shape(bm)) Some("concurrent schema change")
-    else if (nm.constraints != bm.constraints) Some("concurrent constraint change")
-    else if (!nm.statsKey.contains(keyCol)) Some(s"file stats no longer on $keyCol")
-    else if ((nm.statsKey2, nm.statsCols) != ((bm.statsKey2, bm.statsCols)))
-      Some("concurrent stats-dimension change")
-    else None
+  private def requireFileStats(base: Base, keyCol: String, what: String): Unit = {
+    require(base.entries.forall(_.file.isDefined),
+      s"$what needs a file-granular base — publish with fileStatsKey")
+    require(base.meta.statsKey.contains(keyCol),
+      s"base v${base.v} carries file stats on ${base.meta.statsKey.getOrElse("<none>")}, " +
+        s"not $keyCol — $what on mismatched stats would be unsound")
   }
 
   /** True iff some probe of `sorted` — (range encoding, bloom key) pairs
@@ -2980,16 +2957,16 @@ object Versioned {
 
   /** Rows of `df` whose `keyExpr` is (keep) / is not (!keep) one of
     * `keys`: an In filter below [[IsinMaxKeys]] (pushed to the scan), a
-    * broadcast semi/anti join above it. `keyExpr` must be non-null on
-    * every row (merge keys are, by validation) — the negated In, like the
-    * anti join's null semantics, is only equivalent under that contract.
+    * broadcast semi/anti join above it. `keys` must be non-null (batch
+    * keys are, by validation); a NULL `keyExpr` is one of no key, so
+    * !keep keeps its row in both forms.
     */
   private def filterByKeys(spark: SparkSession, df: DataFrame, keyExpr: Column,
                            dt: org.apache.spark.sql.types.DataType,
                            keys: Seq[Any], keep: Boolean): DataFrame =
     if (keys.isEmpty) { if (keep) df.filter(lit(false)) else df }
     else if (keys.size <= IsinMaxKeys)
-      df.filter(if (keep) keyExpr.isin(keys: _*) else !keyExpr.isin(keys: _*))
+      df.filter(if (keep) keyExpr.isin(keys: _*) else keyExpr.isNull || !keyExpr.isin(keys: _*))
     else df.join(broadcast(keysDf(spark, dt, keys)), keyExpr === col("_gqk"),
       if (keep) "left_semi" else "left_anti")
 
@@ -3010,14 +2987,13 @@ object Versioned {
   /** ONE driver pass over the bounded CDC batch: collect (key, _op, the
     * listed extra columns), validate — allowed ops, NULL keys, duplicate
     * (key, op) rows (no silent image-picking) — and resolve per-key op
-    * precedence D > U > I > K. This replaces the former validation job
-    * plus per-key window (an Exchange re-planned under every downstream
-    * evaluation of the source): the batch is driver metadata by the merge
+    * precedence D > U > I > K. The batch is driver metadata by the merge
     * contract — every caller already broadcasts it whole into the rewrite
-    * join — so every decision derivable from the batch alone is made
-    * here, once. Returns (winning rows' collected metadata, source
-    * filtered to winners — the source itself when no key carries two
-    * ops, the common case).
+    * join — so every decision derivable from the batch alone is made here,
+    * once, with no job or per-key window (an Exchange re-planned under
+    * every downstream evaluation of the source). Returns (winning rows'
+    * collected metadata, source filtered to winners — the source itself
+    * when no key carries two ops, the common case).
     */
   private def collectBatch(spark: SparkSession, source: DataFrame,
                            keyCol: String, extraCols: Seq[String],
@@ -3318,11 +3294,8 @@ object Versioned {
         case None =>
           readEntries(spark, table, entries.take(1)).filter(lit(false))
       }
-    } else {
-      val df = readEntries(spark, table, hits)
-      schemaLine.map(alignTo(df, _)).getOrElse(df)
-        .filter(col(keyCol).isin(sorted.map(java.lang.Long.valueOf): _*))
-    }
+    } else readAligned(spark, table, meta, hits)
+      .filter(col(keyCol).isin(sorted.map(java.lang.Long.valueOf): _*))
   }
 
   /** OPTIMIZE inside the store: rewrite ONE partition's files into a
@@ -3343,37 +3316,16 @@ object Versioned {
                    keyCol: String, partCol: String,
                    expectedLatest: Option[Int] = None,
                    rebaseRetries: Int = 0): Int = {
-    val (fsys, table) = fs(spark, tablePath)
-    val base = latestVersion(spark, tablePath)
-    val baseEntries = readManifest(fsys, table, base)
-    val bm = metaOf(fsys, table, base)
-    requireUniformLayout(table, bm, baseEntries, "compactFiles")
-    require(baseEntries.forall(_.file.isDefined),
-      "compactFiles needs a file-granular table (publish with fileStatsKey)")
-    // Spliced entries keep their old stats, so the recorded stats column
-    // must already BE keyCol — otherwise the new manifest would mix stats
-    // on two columns under one #statskey header.
-    require(bm.statsKey.contains(keyCol),
-      s"base v$base carries file stats on ${bm.statsKey.getOrElse("<none>")}, " +
-        s"not $keyCol — compacting would mix stats columns")
-    val victims = baseEntries.filter(_.partDir == partDir)
-    require(victims.nonEmpty, s"no files under $partDir in v$base of $tablePath")
-    val victimRows = {
-      val df = readEntries(spark, table, victims)
-      bm.schema.map(alignTo(df, _)).getOrElse(df)
-    }
-    val dd = newDataDir(fsys, table)
-    victimRows
-      .coalesce(1)
-      .write.mode(SaveMode.ErrorIfExists).partitionBy(partColsOf(partCol): _*).parquet(dd.toString)
-    val written = fileStatsOf(spark, table, dd, bm)
-    require(written.forall(_.partDir == partDir),
-      s"compaction leaked rows outside $partDir: ${written.map(_.partDir)}")
+    val base = baseOf(spark, tablePath, None, expectedLatest, "compactFiles")
+    requireFileStats(base, keyCol, "compactFiles")
+    val victims = base.entries.filter(_.partDir == partDir)
+    require(victims.nonEmpty, s"no files under $partDir in v${base.v} of $tablePath")
     // Compaction pins the base it rewrote: a concurrent commit either
     // rebases (disjoint, rebaseRetries > 0) or fails this rerunnable
     // maintenance loudly — never erases the competitor.
-    maintenanceCommit(spark, fsys, table, base, bm, baseEntries, victims.toSet,
-      written, dd, keyCol, expectedLatest, rebaseRetries, "COMPACT")
+    rewriteCommit(spark, base, Rewrite("compactFiles", "COMPACT",
+      readAligned(spark, base.table, base.meta, victims).coalesce(1), partColsOf(partCol),
+      base.meta, victimScope(victims), retries = rebaseRetries))
   }
 
   /** Whole-table OPTIMIZE: bin-pack EVERY partition's small files toward
@@ -3394,8 +3346,10 @@ object Versioned {
     * range-pruning property of [[mergeByFiles]] survives compaction.
     * Content is identical by construction; every prior version stays
     * readable; the commit pins the base (concurrent merge wins, the
-    * rerunnable maintenance loses). Returns the base version unchanged
-    * when no partition has anything to gain.
+    * rerunnable maintenance loses) unless `rebaseRetries` > 0 lets it
+    * rebase onto a competitor that left every victim alone
+    * ([[commitRebasing]]). Returns the base version unchanged when no
+    * partition has anything to gain.
     *
     * Scale note: the per-bin union grows the plan with victim-bin count;
     * victim bins are bounded by the small-file population (the thing
@@ -3408,22 +3362,14 @@ object Versioned {
                     expectedLatest: Option[Int] = None,
                     rebaseRetries: Int = 0): Int = {
     require(targetRows > 0, s"targetRows must be positive, got $targetRows")
-    val (fsys, table) = fs(spark, tablePath)
-    val base = latestVersion(spark, tablePath)
-    val baseEntries = readManifest(fsys, table, base)
-    val bm = metaOf(fsys, table, base)
-    requireUniformLayout(table, bm, baseEntries, "optimizeTable")
-    require(baseEntries.forall(e => e.file.isDefined && e.nrows.isDefined),
-      "optimizeTable needs a file-granular base with per-file row counts " +
+    val base = baseOf(spark, tablePath, None, expectedLatest, "optimizeTable")
+    requireFileStats(base, keyCol, "optimizeTable")
+    require(base.entries.forall(_.nrows.isDefined),
+      "optimizeTable needs per-file row counts " +
         "(publish with fileStatsKey on r14+, or compact/merge once to refresh stats)")
-    // Spliced (single-file) bins keep their old stats — the recorded stats
-    // column must already BE keyCol or the manifest would mix columns.
-    require(bm.statsKey.contains(keyCol),
-      s"base v$base carries file stats on ${bm.statsKey.getOrElse("<none>")}, " +
-        s"not $keyCol — optimizing would mix stats columns")
     // First-fit pack in key order: bins stay key-contiguous per partition.
     val bins: Seq[(String, Int, Seq[Entry])] =
-      baseEntries.groupBy(_.partDir).toSeq.sortBy(_._1).flatMap { case (p, es) =>
+      base.entries.groupBy(_.partDir).toSeq.sortBy(_._1).flatMap { case (p, es) =>
         val sorted = es.sortBy(e => (e.kmin.get, e.file.get))
         val packed = scala.collection.mutable.ListBuffer.empty[(Long, scala.collection.mutable.ListBuffer[Entry])]
         sorted.foreach { e =>
@@ -3439,8 +3385,7 @@ object Versioned {
         packed.toSeq.zipWithIndex.map { case ((_, b), i) => (p, i, b.toSeq) }
       }
     val victims = bins.filter(_._3.size >= 2)
-    if (victims.isEmpty) return base
-    val victimEntries = victims.flatMap(_._3).toSet
+    if (victims.isEmpty) return base.v
     // One task per bin: ordinal bin ids (already (partition, key) ordered)
     // range-repartitioned with an EXPLICIT partition count — an implicit
     // `repartition(col)` lets AQE coalesce the tiny shuffle into one task,
@@ -3448,76 +3393,13 @@ object Versioned {
     // key-contiguity (and with it the post-optimize stats tightness). If
     // range sampling ever fuses two bins into a task they are ADJACENT in
     // key order, so the merged file's bounds stay contiguous.
-    val rewrite = victims.zipWithIndex.map { case ((_, _, es), ord) =>
-      val df = readEntries(spark, table, es)
-      bm.schema.map(alignTo(df, _)).getOrElse(df)
-        .withColumn("_bin", lit(ord))
+    val rows = victims.zipWithIndex.map { case ((_, _, es), ord) =>
+      readAligned(spark, base.table, base.meta, es).withColumn("_bin", lit(ord))
     }.reduce(_.unionByName(_))
       .repartitionByRange(victims.size, col("_bin"))
       .drop("_bin")
-    val dd = newDataDir(fsys, table)
-    rewrite.write.mode(SaveMode.ErrorIfExists).partitionBy(partColsOf(partCol): _*).parquet(dd.toString)
-    val written = fileStatsOf(spark, table, dd, bm)
-    val victimParts = victims.map(_._1).toSet
-    require(written.forall(e => victimParts.contains(e.partDir)),
-      s"optimize leaked rows outside its victim partitions: " +
-        s"${written.map(_.partDir).filterNot(victimParts).distinct.mkString(",")}")
-    maintenanceCommit(spark, fsys, table, base, bm, baseEntries, victimEntries,
-      written, dd, keyCol, expectedLatest, rebaseRetries, "OPTIMIZE")
-  }
-
-  /** Commit half of a CONTENT-PRESERVING maintenance rewrite (optimize /
-    * compact): base-minus-victims plus the rewritten files, CAS-pinned.
-    * With `rebaseRetries` > 0, a lost CAS re-validates the competitor
-    * Delta-style: maintenance preserves exactly the victim entries'
-    * content, so as long as the competing commit did not touch a VICTIM
-    * (by exact entry identity) and left schema/constraints/stats-column
-    * alone, the rewritten output splices onto the competitor's manifest
-    * unchanged — maintenance never loses a race to a disjoint writer and
-    * never needs re-execution. Anything the re-validation cannot prove
-    * disjoint conflicts loudly, exactly like the zero-retry path.
-    */
-  private def maintenanceCommit(spark: SparkSession, fsys: FileSystem,
-                                table: Path, base: Int, bm: TableMeta,
-                                baseEntries: Seq[Entry], victims: Set[Entry],
-                                written: Seq[Entry], dd: Path,
-                                keyCol: String, expectedLatest: Option[Int],
-                                rebaseRetries: Int, op: String): Int = {
-    // First attempt honors the caller's pin; REBASED retries pin the
-    // version actually spliced onto (mirroring mergeByFiles) — pinning
-    // the stale caller value would make every retry lose the same CAS.
-    def commitOnto(onto: Seq[Entry], expectV: Option[Int], keepOrphans: Boolean): Int =
-      commit(fsys, table, spark, onto.filterNot(victims) ++ written,
-        expectV, if (keepOrphans) Seq.empty else Seq(dd), bm, op)
-    if (rebaseRetries <= 0)
-      return commitOnto(baseEntries, expectedLatest.orElse(Some(base)), keepOrphans = false)
-    var attempts = 0
-    var ontoV = expectedLatest.getOrElse(base)
-    var ontoEntries = baseEntries
-    def giveUp(why: String): Nothing = {
-      try fsys.delete(dd, true) catch { case _: Throwable => () }
-      throw new ConcurrentWriteException(why)
-    }
-    while (true) {
-      try return commitOnto(ontoEntries, Some(ontoV), keepOrphans = true)
-      catch {
-        case e: ConcurrentWriteException =>
-          if (attempts >= rebaseRetries)
-            giveUp(s"${e.getMessage} (after $attempts rebase attempt(s))")
-          attempts += 1
-          val newV = latestVersion(spark, table.toString)
-          val newEntries = readManifest(fsys, table, newV)
-          rebaseConflict(bm, metaOf(fsys, table, newV), keyCol).foreach(why =>
-            giveUp(s"$why at v$newV of $table — cannot rebase $op"))
-          val delta = (newEntries.toSet -- ontoEntries) ++ (ontoEntries.toSet -- newEntries)
-          delta.find(victims).foreach(d => giveUp(
-            s"concurrent writer touched ${d.partDir}/${d.file.getOrElse("")} " +
-              s"this $op rewrote — cannot rebase"))
-          ontoV = newV
-          ontoEntries = newEntries
-      }
-    }
-    throw new IllegalStateException("unreachable")
+    rewriteCommit(spark, base, Rewrite("optimizeTable", "OPTIMIZE", rows, partColsOf(partCol),
+      base.meta, victimScope(victims.flatMap(_._3)), retries = rebaseRetries))
   }
 
   /** The column whose per-file bounds a version's entries ADDITIONALLY

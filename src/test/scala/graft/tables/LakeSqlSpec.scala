@@ -302,6 +302,51 @@ class LakeSqlSpec extends SparkSpec {
     assert(after(8L) == 888L, "the competing merge must survive the failed optimize")
   }
 
+  test("maintenance OCC rebase: compactFiles splices onto a disjoint concurrent merge; a victim-touching competitor conflicts loudly and leaves no orphan") {
+    val tbl = Files.createTempDirectory("compreb").toString + "/t"
+    val base = (0L until 40L).map(k => (k, k * 10, (k % 2).toString))
+    Versioned.publish(spark, tbl, base.toDF("k", "v", "p")
+        .repartitionByRange(8, col("p"), col("k")),
+      partCol = Some("p"), fileStatsKey = Some("k"))
+    def update(k: Long, v: Long, p: String): Unit = Versioned.mergeByFiles(spark, tbl,
+      Seq((k, v, p, "U")).toDF("k", "v", "p", "_op"), "k", "p")
+    def state(v: Int) = Versioned.readAt(spark, tbl, v).as[(Long, Long, String)]
+      .collect().map(t => t._1 -> t._2).toMap
+    // DISJOINT race: a merge into partition 1 lands between the compaction
+    // of partition 0 and its commit — the compaction rebases onto it.
+    Versioned.preCommitHookForTests = Some(() => {
+      Versioned.preCommitHookForTests = None // one-shot: not for the competitor
+      update(1L, 111L, "1")
+    })
+    try {
+      val v = Versioned.compactFiles(spark, tbl, "p=0", "k", "p", rebaseRetries = 1)
+      assert(v == 3, "the rebased compaction must land on top of the competitor")
+      val got = state(v)
+      assert(got.size == 40 && got(1L) == 111L && got(8L) == 80L,
+        "the rebased compaction must carry BOTH the compaction and the merge")
+      assert(Versioned.fileEntriesOf(spark, tbl, v).count(_._1 == "p=0") == 1,
+        "partition 0 must be compacted to one file")
+    } finally Versioned.preCommitHookForTests = None
+    // CLASHING race: the competitor rewrites partition 0's file — a victim
+    // of the compaction — so the rebase cannot prove disjointness.
+    def dataDirs = new java.io.File(tbl).list().filter(_.startsWith("d_")).toSet
+    val dirsBefore = dataDirs
+    Versioned.preCommitHookForTests = Some(() => {
+      Versioned.preCommitHookForTests = None
+      update(8L, 888L, "0")
+    })
+    try {
+      intercept[ConcurrentWriteException] {
+        Versioned.compactFiles(spark, tbl, "p=0", "k", "p", rebaseRetries = 2)
+      }
+    } finally Versioned.preCommitHookForTests = None
+    val latest = Versioned.latestVersion(spark, tbl)
+    assert(latest == 4 && state(latest)(8L) == 888L,
+      "the competing merge must survive the failed compaction")
+    assert((dataDirs -- dirsBefore).subsetOf(Versioned.dataDirsOf(spark, tbl, latest).toSet),
+      s"the failed compaction must delete its data dir: ${dataDirs -- dirsBefore}")
+  }
+
   test("columnar DSv2 read: multi-batch files, NULLs, evolution backfill, and DV'd scans stay vectorized via the fill-time mask") {
     val tbl = Files.createTempDirectory("colread").toString + "/t"
     // 10k rows in ONE file → three 4096-row batches; s NULL every 7th row

@@ -834,6 +834,57 @@ class SourcesSpec extends SparkSpec {
     assert(err2.getMessage.contains("allowed"), err2.getMessage)
   }
 
+  test("merge NOT MATCHED BY SOURCE: a partition-moving Update also moves NULL-keyed target rows") {
+    import org.apache.spark.sql.functions.lit
+    import spark.implicits._
+    // partition-granular (no file stats), so the target can hold a NULL key
+    val tbl = Files.createTempDirectory("vnmsnull").toString + "/table"
+    Versioned.publish(spark, tbl,
+      Seq((Option(1L), 10L, 1995), (Option(2L), 20L, 1995), (Option.empty[Long], 30L, 1996))
+        .toDF("k", "v", "y"), partCol = Some("y"))
+    // every non-NULL key is in the source: the NULL-keyed row is the only
+    // source-less row, and the only one landing in y=2001
+    val v = Versioned.merge(spark, tbl,
+      Seq((1L, 10L, 1995, "K"), (2L, 20L, 1995, "K")).toDF("k", "v", "y", "_op"), "k", "y",
+      notMatchedBySource = Some(Versioned.NotMatchedBySource.Update(Map("y" -> lit(2001)))))
+    assert(Versioned.readAt(spark, tbl, v).as[(Option[Long], Long, Int)].collect().toSet ==
+      Set((Option(1L), 10L, 1995), (Option(2L), 20L, 1995), (Option.empty[Long], 30L, 2001)))
+  }
+
+  test("merge refuses a source key of another type than the target's, in both scopes; integral widths still match") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.DecimalType
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("vkeytype").toString
+    // partition scope: decimal(10,2) target keys never equal decimal(12,0)
+    // source keys on the driver (BigDecimal.equals compares the scale), so
+    // the U on an existing key would be silently lost
+    val dec = s"$tmp/dec"
+    Versioned.publish(spark, dec, Seq((1L, 10L, "a"), (2L, 20L, "a")).toDF("k", "v", "p")
+      .withColumn("k", col("k").cast(DecimalType(10, 2))), partCol = Some("p"))
+    val e1 = intercept[IllegalArgumentException](Versioned.merge(spark, dec,
+      Seq((1L, 11L, "a", "U")).toDF("k", "v", "p", "_op")
+        .withColumn("k", col("k").cast(DecimalType(12, 0))), "k", "p"))
+    assert(e1.getMessage.contains("decimal(12,0)") && e1.getMessage.contains("decimal(10,2)"),
+      e1.getMessage)
+    // file scope: an int source key against a string-keyed table
+    val str = s"$tmp/str"
+    Versioned.publish(spark, str, Seq(("1", 10L, "a"), ("2", 20L, "a")).toDF("k", "v", "p"),
+      partCol = Some("p"), fileStatsKey = Some("k"))
+    val e2 = intercept[IllegalArgumentException](Versioned.mergeByFiles(spark, str,
+      Seq((1, 11L, "a", "U")).toDF("k", "v", "p", "_op"), "k", "p"))
+    assert(e2.getMessage.contains("int") && e2.getMessage.contains("string"), e2.getMessage)
+    // integral widths compare by value: an int source key updates a long key
+    val lng = s"$tmp/long"
+    Versioned.publish(spark, lng, Seq((1L, 10L, "a")).toDF("k", "v", "p"),
+      partCol = Some("p"), fileStatsKey = Some("k"))
+    val intSrc = Seq((1, 11L, "a", "U")).toDF("k", "v", "p", "_op")
+    Versioned.merge(spark, lng, intSrc, "k", "p")
+    Versioned.mergeByFiles(spark, lng, intSrc.withColumn("v", col("v") + 1), "k", "p")
+    assert(Versioned.read(spark, lng).as[(Long, Long, String)].collect().toSeq ==
+      Seq((1L, 12L, "a")))
+  }
+
   test("null-count file skipping: IS NULL skips null-free files, IS NOT NULL and ranges skip all-null files") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
