@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-audit tool: prints the formatted physical plan of selected queries
   * (pushdown / pruning / join strategy / codegen span review — the per-
@@ -9,14 +8,8 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val nameFilter = if (args.length > 1) args(1) else ".*"
-    val spark = SessionEnv.applyMaster(SparkSession.builder(), "4")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SessionEnv.session("4")
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(_._1.matches(nameFilter))
       .foreach { case (name, fn) =>

@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: per-JOB wall-clock attribution of one query's steady-state
   * invocation — where Profile.scala answers "how much", this answers "which
@@ -22,15 +21,8 @@ object JobProfile {
     val nameFilter = if (args.length > 1) args(1) else ".*"
     val reps = if (args.length > 2) args(2).toInt else 3
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionEnv.applyMaster(SparkSession.builder(), cpus)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    val spark = SessionEnv.session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
 
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRec]()
     val stageToJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()

@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: time a regex-selected subset of SparkEntry.queries N times in
   * one warmed session — separates real per-query cost from JIT/GC noise that
@@ -31,15 +30,8 @@ object Profile {
     val reps = if (args.length > 2) args(2).toInt else 3
     val jsonOut = if (args.length > 3) Some(args(3)) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionEnv.applyMaster(SparkSession.builder(), cpus)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    val spark = SessionEnv.session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
 
     // Task-end accumulator: zeroed (by re-reading baselines) around each
     // timed run; the listener bus is drained before every read so trailing

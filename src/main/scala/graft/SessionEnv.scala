@@ -40,4 +40,22 @@ object SessionEnv {
         .config("spark.executor.extraJavaOptions", opens)
     }
   }
+
+  /** The engine session the dev tools (Profile, JobProfile, StreamBench,
+    * Explain) run on: [[applyMaster]] at `cpus` cores with as many shuffle
+    * partitions, UTC session time, the nanos-as-long parquet read the
+    * events fixture needs at build time, no UI, graft's Catalyst
+    * extensions and its registered functions.
+    */
+  def session(cpus: String): SparkSession = {
+    val spark = applyMaster(SparkSession.builder(), cpus)
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .getOrCreate()
+    graft.functions.GraftFunctions.register(spark)
+    spark
+  }
 }

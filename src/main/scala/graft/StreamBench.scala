@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.streaming.Trigger
 
 /** Dev tool: end-to-end Structured-Streaming THROUGHPUT over the events
@@ -19,13 +19,7 @@ object StreamBench {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val shards = if (args.length > 1) args(1).toInt else 16
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionEnv.applyMaster(SparkSession.builder(), cpus)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    val spark = SessionEnv.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

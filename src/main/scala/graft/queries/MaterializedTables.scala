@@ -25,7 +25,7 @@ object MaterializedTables {
     java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
 
   Runtime.getRuntime.addShutdownHook(new Thread(() => {
-    live.forEach(p => try deleteTree(p) catch { case _: Throwable => () })
+    live.forEach(p => try deleteTree(p.toString) catch { case _: Throwable => () })
   }, "graft-materialized-tables-sweep"))
 
   def materialize[K](
@@ -41,13 +41,21 @@ object MaterializedTables {
   /** Delete a materialized table's files and stop tracking it. */
   def delete(path: java.nio.file.Path): Unit = {
     live.remove(path)
-    deleteTree(path)
+    deleteTree(path.toString)
   }
 
-  private def deleteTree(path: java.nio.file.Path): Unit = {
-    val files = java.nio.file.Files.walk(path)
-    try files.sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => java.nio.file.Files.deleteIfExists(p))
-    finally files.close()
+  /** Delete `path` and everything under it; a no-op for a missing path. */
+  private[queries] def deleteTree(path: String): Unit = {
+    val p = java.nio.file.Paths.get(path)
+    if (java.nio.file.Files.exists(p)) {
+      val files = java.nio.file.Files.walk(p)
+      try files.sorted(java.util.Comparator.reverseOrder())
+        .forEach(f => java.nio.file.Files.deleteIfExists(f))
+      finally files.close()
+    }
+    // The committed-manifest memo keys on (path, length, mtime); a
+    // republish under the same paths could false-positive on coarse-mtime
+    // filesystems — invalidate the subtree's verdicts with the tree.
+    graft.tables.Versioned.invalidateCommittedMemo(path)
   }
 }

@@ -1,7 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.queries.MaterializedTables.deleteTree
 import graft.tables.Tables._
 import graft.tables.Versioned
 
@@ -388,56 +389,106 @@ object Sinks {
       .orderBy("lang")
   }
 
-  private def deleteTree(path: String): Unit = {
-    val p = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.exists(p)) {
-      val files = java.nio.file.Files.walk(p)
-      try files.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      finally files.close()
-    }
-    // The committed-manifest memo keys on (path, length, mtime); a
-    // republish under the same paths could false-positive on coarse-mtime
-    // filesystems — invalidate the subtree's verdicts with the tree.
-    Versioned.invalidateCommittedMemo(path)
+  /** Substrates: the input tables the versioned-store queries stage from
+    * the corpus (orders snapshots published as versions, the sources of
+    * per-call clones, SQL catalog tables with a maintenance history). Each
+    * lives under a fixed name — a `tmpOut` path or a `lakeCatalog` table —
+    * so it is built once per corpus and reused by every later invocation,
+    * session and JVM: a warehouse does not re-ingest its fact table per
+    * query, and the store's operations never mutate the versions a
+    * substrate serves. Reuse is checked, never assumed: `valid` probes the
+    * on-disk state (version chain, recorded headers, row counts against the
+    * source), any exception counts as invalid, and only a failed probe
+    * clears `paths` and runs `build` — a stale, foreign or half-built
+    * substrate restages rather than composing wrongly. Returns `build`'s
+    * result when it ran. Substrates staged through [[perSession]] probe
+    * once per session; the rest probe on every call.
+    */
+  private def restage[T](paths: String*)(valid: => Boolean)(build: => T): Option[T] = {
+    val ok = try valid catch { case _: Exception => false }
+    if (ok) None else { paths.foreach(deleteTree); Some(build) }
   }
 
-  // The merge target staged as v1 of a Versioned table ONCE per corpus —
-  // the substrate convention. r12 restaged the full table per invocation
-  // (judge-measured ~3 s of the query's cost) only because the in-place
-  // merge destroyed its target; the versioned merge never mutates v1, so
-  // every invocation — and every SESSION — can branch from the same
-  // immutable snapshot. A new session validates the on-disk v1 against
-  // the source (footer-only row-count equality + column set) and restages
-  // only on mismatch: a warehouse does not re-ingest its fact table per
-  // session. Stale merged versions from prior sessions are retired by the
-  // query's own vacuum.
-  // Keyed by sessionUUID, not the SparkSession itself: the value is just a
-  // path, and holding the session in a static map would retain every
-  // session ever used for the JVM's lifetime (notebook servers, test JVMs).
-  private val mergeBaseCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
+  /** The substrate `name` of `dir`, staged by `stage` on its first use in a
+    * session and reused for the rest of it. Keyed by sessionUUID, not the
+    * SparkSession itself: the value is just a path, and holding the session
+    * in a static map would retain every session ever used for the JVM's
+    * lifetime (notebook servers, test JVMs).
+    */
+  private val sessionMemo =
+    scala.collection.concurrent.TrieMap.empty[(String, String, String), String]
 
+  private def perSession(spark: SparkSession, dir: String, name: String)(
+      stage: => String): String =
+    sessionMemo.synchronized {
+      sessionMemo.getOrElseUpdate((sessionKey(spark), dir, name), stage)
+    }
+
+  /** Order prices in integer cents: sums stay exact on both engines. */
+  private def cents: Column = floor(col("o_totalprice") * 100 + 0.5)
+  private def priceC: Column = cents.cast("long").as("o_price_c")
+
+  /** Orders in the substrates' shape: key, customer, price in cents,
+    * `extra`, order year.
+    */
+  private def ordersCents(spark: SparkSession, dir: String, extra: Column*): DataFrame =
+    orders(spark, dir).select(Seq(col("o_orderkey"), col("o_custkey"), priceC) ++
+      extra :+ year(col("o_orderdate")).as("o_year"): _*)
+
+  /** A merge batch row's operation column (U/D/I). */
+  private def op(o: String): Column = lit(o).as("_op")
+
+  /** What the orders-substrate queries report per group: row count,
+    * customer sum and cents sum.
+    */
+  private def sums(g: RelationalGroupedDataset): DataFrame =
+    g.agg(count(lit(1)).as("n"), sum("o_custkey").as("sum_cust"),
+          sum("o_price_c").as("sum_price_c"))
+
+  /** [[sums]] per `by` columns and year, in that order. */
+  private def perYear(df: DataFrame, by: String*): DataFrame = {
+    val keys = by :+ "o_year"
+    sums(df.groupBy(keys.head, keys.tail: _*)).orderBy(keys.head, keys.tail: _*)
+  }
+
+  /** [[sums]] per `grp` labelled with `phase`, for the multi-phase reads. */
+  private def phaseSums(phase: String, g: RelationalGroupedDataset): DataFrame =
+    sums(g).select(lit(phase).as("phase"), col("grp"), col("n"),
+      col("sum_cust"), col("sum_price_c"))
+
+  /** 1995's rows of `base` staged as three parquet shards under `stage`
+    * and read back as a file stream at one shard per trigger — three
+    * micro-batches, so a lost or doubled batch shifts a 1995 sum.
+    */
+  private def y95ShardStream(spark: SparkSession, base: DataFrame,
+                             stage: String): DataFrame = {
+    import org.apache.spark.sql.types._
+    val y95 = base.filter(col("o_year") === 1995)
+    (0 until 3).foreach(i => y95.filter(col("o_orderkey") % 3 === i)
+      .coalesce(1).write.mode("append").parquet(stage))
+    val sch = StructType(Seq(
+      StructField("o_orderkey", LongType), StructField("o_custkey", LongType),
+      StructField("o_price_c", LongType), StructField("o_year", IntegerType)))
+    spark.readStream.schema(sch).option("maxFilesPerTrigger", "1").parquet(stage)
+  }
+
+  // The merge target, staged as v1 of a versioned table. The versioned
+  // merge never mutates v1, so every invocation — and every session —
+  // branches from the same immutable snapshot; stale merged versions from
+  // prior sessions are retired by the query's own vacuum. The probe
+  // compares v1 with the source on column set and (footer-only) row count.
   private def ordersVersioned(spark: SparkSession, dir: String): String =
-    mergeBaseCache.synchronized { mergeBaseCache.getOrElseUpdate((sessionKey(spark), dir), {
+    perSession(spark, dir, "merge_vt") {
       val tbl = tmpOut(dir, "merge_vt")
-      val base = orders(spark, dir).select(
-        col("o_orderkey"), col("o_custkey"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("o_price_c"),
-        col("o_orderpriority"),
-        year(col("o_orderdate")).as("o_year"))
-      val valid = try {
+      val base = ordersCents(spark, dir, col("o_orderpriority"))
+      restage(tbl) {
         Versioned.latestVersion(spark, tbl) >= 1 && {
           val v1 = Versioned.readAt(spark, tbl, 1)
           v1.columns.toSet == base.columns.toSet && v1.count() == base.count()
         }
-      } catch { case _: Exception => false }
-      if (!valid) {
-        deleteTree(tbl)
-        Versioned.publish(spark, tbl, base, partCol = Some("o_year"))
-      }
+      } { Versioned.publish(spark, tbl, base, partCol = Some("o_year")) }
       tbl
-    }) }
+    }
 
   /** q210 — MERGE INTO / row-level upsert (`Versioned.merge`): the single
     * most common warehouse write op, as a partition-scoped, ATOMICALLY
@@ -464,7 +515,6 @@ object Sinks {
     val tbl = ordersVersioned(spark, dir)
     val base = Versioned.readAt(spark, tbl, 1)
     val y95 = base.filter(col("o_year") === 1995)
-    def op(o: String) = lit(o).as("_op")
     val updates = y95.filter(col("o_orderkey") % 100 === 1)
       .withColumn("o_price_c", col("o_price_c") + 100000).select(col("*"), op("U"))
     val moves = y95.filter(col("o_orderkey") % 100 === 7)
@@ -485,30 +535,18 @@ object Sinks {
     // superseded number); v1 and the fresh v keep their files, so the
     // lazy aggregate below reads only retained dirs.
     Versioned.vacuum(spark, tbl, keep = Set(1, v))
-    Versioned.readAt(spark, tbl, v)
-      .groupBy("o_year")
-      .agg(count(lit(1)).as("n"), sum("o_custkey").as("sum_cust"),
-           sum("o_price_c").as("sum_price_c"))
-      .orderBy("o_year")
+    perYear(Versioned.readAt(spark, tbl, v))
   }
 
   // q212's target: the same orders snapshot, but published FILE-GRANULAR —
   // range-repartitioned on (year, orderkey) so each year's keys split
   // across several key-contiguous files, manifest carrying per-file
-  // orderkey min/max. Cross-session reuse with the same validation as the
-  // q210 substrate plus a file-granularity check.
-  private val mergeFileCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
+  // orderkey min/max.
   private def ordersVersionedFiles(spark: SparkSession, dir: String): String =
-    mergeFileCache.synchronized { mergeFileCache.getOrElseUpdate((sessionKey(spark), dir), {
+    perSession(spark, dir, "merge_ft") {
       val tbl = tmpOut(dir, "merge_ft")
-      val base = orders(spark, dir).select(
-        col("o_orderkey"), col("o_custkey"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("o_price_c"),
-        col("o_orderpriority"),
-        year(col("o_orderdate")).as("o_year"))
-      val valid = try {
+      val base = ordersCents(spark, dir, col("o_orderpriority"))
+      restage(tbl) {
         Versioned.latestVersion(spark, tbl) >= 1 &&
           Versioned.fileEntriesOf(spark, tbl, 1).nonEmpty &&
           // q223 reads v1 through the DSv2 connector, which needs the
@@ -517,15 +555,13 @@ object Sinks {
             val v1 = Versioned.readAt(spark, tbl, 1)
             v1.columns.toSet == base.columns.toSet && v1.count() == base.count()
           }
-      } catch { case _: Exception => false }
-      if (!valid) {
-        deleteTree(tbl)
+      } {
         Versioned.publish(spark, tbl,
           base.repartitionByRange(32, col("o_year"), col("o_orderkey")),
           partCol = Some("o_year"), fileStatsKey = Some("o_orderkey"))
       }
       tbl
-    }) }
+    }
 
   // (lo, hi) of the merge key within one partition of a FILE-GRANULAR
   // version, from manifest metadata alone: per-file [kmin, kmax] are
@@ -567,7 +603,6 @@ object Sinks {
     def cut(i: Long) = lo + (hi - lo + 1) * i / 50
     def band(df: DataFrame, i: Long) =
       df.filter(col("o_orderkey") >= cut(i) && col("o_orderkey") < cut(i + 1))
-    def op(o: String) = lit(o).as("_op")
     val updates = band(y95, 0)
       .withColumn("o_price_c", col("o_price_c") + 100000).select(col("*"), op("U"))
     val deletes = band(y95, 1).select(col("*"), op("D"))
@@ -583,11 +618,7 @@ object Sinks {
         .unionByName(noiseU).unionByName(noiseI),
       "o_orderkey", "o_year", fromVersion = Some(1))
     Versioned.vacuum(spark, tbl, keep = Set(1, v))
-    Versioned.readAt(spark, tbl, v)
-      .groupBy("o_year")
-      .agg(count(lit(1)).as("n"), sum("o_custkey").as("sum_cust"),
-           sum("o_price_c").as("sum_price_c"))
-      .orderBy("o_year")
+    perYear(Versioned.readAt(spark, tbl, v))
   }
 
   /** q226 — MERGE with OPTIMISTIC-CONCURRENCY REBASE (`rebaseRetries`):
@@ -612,7 +643,6 @@ object Sinks {
     def cut(i: Long) = lo + (hi - lo + 1) * i / 50
     def band(i: Long) =
       y95.filter(col("o_orderkey") >= cut(i) && col("o_orderkey") < cut(i + 1))
-    def op(o: String) = lit(o).as("_op")
     val l0 = Versioned.latestVersion(spark, tbl)
     val batchA = band(15).withColumn("o_price_c", col("o_price_c") + 70000)
       .select(col("*"), op("U"))
@@ -628,11 +658,7 @@ object Sinks {
     // No per-invocation vacuum: the demonstration is the rebase, and each
     // run adds two small dirs (bands of one partition) — q210/q212 cover
     // vacuum-after-merge; the racing-vacuum spec covers its safety.
-    Versioned.readAt(spark, tbl, vB)
-      .groupBy("o_year")
-      .agg(count(lit(1)).as("n"), sum("o_custkey").as("sum_cust"),
-           sum("o_price_c").as("sum_price_c"))
-      .orderBy("o_year")
+    perYear(Versioned.readAt(spark, tbl, vB))
   }
 
   /** q227 — SHALLOW CLONE (`Versioned.cloneTable`): the clone's v1 is one
@@ -657,47 +683,35 @@ object Sinks {
     def cut(i: Long) = lo + (hi - lo + 1) * i / 50
     def band(i: Long) =
       y95.filter(col("o_orderkey") >= cut(i) && col("o_orderkey") < cut(i + 1))
-    def op(o: String) = lit(o).as("_op")
     val batch = band(20).withColumn("o_price_c", col("o_price_c") + 333)
       .select(col("*"), op("U"))
       .unionByName(band(21).select(col("*"), op("D")))
     val v = Versioned.mergeByFiles(spark, dst, batch, "o_orderkey", "o_year")
-    Versioned.readAt(spark, dst, v)
-      .groupBy("o_year")
-      .agg(count(lit(1)).as("n"), sum("o_custkey").as("sum_cust"),
-           sum("o_price_c").as("sum_price_c"))
-      .orderBy("o_year")
+    perYear(Versioned.readAt(spark, dst, v))
   }
 
   // q228's substrate: orders with an EVEN surrogate key (o_key = 2 ×
   // o_orderkey), range-laid-out and published file-granular — every odd
   // key is in-range but guaranteed absent, the sparse-key-space shape
-  // where per-file Bloom filters beat min/max stats. Built once per
-  // corpus; reuse validated on stats column + full bloom coverage.
-  private val bloomCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
+  // where per-file Bloom filters beat min/max stats.
   private def evenKeyVersionedFiles(spark: SparkSession, dir: String): String =
-    bloomCache.synchronized { bloomCache.getOrElseUpdate((sessionKey(spark), dir), {
+    perSession(spark, dir, "bloom_vt") {
       val tbl = tmpOut(dir, "bloom_vt")
       val base = orders(spark, dir).select(
-        (col("o_orderkey") * 2).as("o_key"), col("o_custkey"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("o_price_c"),
+        (col("o_orderkey") * 2).as("o_key"), col("o_custkey"), priceC,
         year(col("o_orderdate")).as("o_year"))
-      val valid = try {
+      restage(tbl) {
         Versioned.latestVersion(spark, tbl) >= 1 &&
           Versioned.statsKeyOf(spark, tbl, 1).contains("o_key") &&
           Versioned.bloomCoverage(spark, tbl, 1) == 1.0 &&
           Versioned.readAt(spark, tbl, 1).count() == base.count()
-      } catch { case _: Exception => false }
-      if (!valid) {
-        deleteTree(tbl)
+      } {
         Versioned.publish(spark, tbl,
           base.repartitionByRange(32, col("o_year"), col("o_key")),
           partCol = Some("o_year"), fileStatsKey = Some("o_key"))
       }
       tbl
-    }) }
+    }
 
   /** q228 — BLOOM-PRUNED point lookups (`Versioned.lookupKeys`): the
     * manifest carries a per-file key Bloom filter next to the min/max
@@ -720,11 +734,7 @@ object Sinks {
       .filter(col("o_year") === 1995 && col("o_key") % 200 === 82)
       .select("o_key").collect().map(_.getLong(0))
     val probes = (present ++ present.map(_ + 1)).toSeq
-    Versioned.lookupKeys(spark, tbl, probes, version = Some(1))
-      .groupBy("o_year")
-      .agg(count(lit(1)).as("n"), sum("o_custkey").as("sum_cust"),
-           sum("o_price_c").as("sum_price_c"))
-      .orderBy("o_year")
+    perYear(Versioned.lookupKeys(spark, tbl, probes, version = Some(1)))
   }
 
   /** q229 — DELETION VECTORS (`Versioned.deleteKeys`): a small point
@@ -753,11 +763,7 @@ object Sinks {
     val keys = y95.filter(col("o_orderkey") >= cut(30) && col("o_orderkey") < cut(31))
       .select("o_orderkey").collect().map(_.getLong(0)).toSeq
     val v = if (keys.isEmpty) 1 else Versioned.deleteKeys(spark, dst, keys)
-    Versioned.readAt(spark, dst, v)
-      .groupBy("o_year")
-      .agg(count(lit(1)).as("n"), sum("o_custkey").as("sum_cust"),
-           sum("o_price_c").as("sum_price_c"))
-      .orderBy("o_year")
+    perYear(Versioned.readAt(spark, dst, v))
   }
 
   /** q230 — DSv2 STREAMING SINK into the store
@@ -777,31 +783,18 @@ object Sinks {
     * + streamed year must equal the table exactly.
     */
   def streamSinkAppend(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
     val tbl = tmpOut(dir, "sink_vt")
     val stage = tmpOut(dir, "sink_shards")
     val ckpt = tmpOut(dir, "sink_ck")
-    val base = orders(spark, dir).select(
-      col("o_orderkey"), col("o_custkey"),
-      floor(col("o_totalprice") * 100 + 0.5).cast("long").as("o_price_c"),
-      year(col("o_orderdate")).as("o_year"))
+    val base = ordersCents(spark, dir)
     val expected = base.count()
-    val valid = try {
+    restage(tbl, stage, ckpt) {
       Versioned.latestVersion(spark, tbl) >= 2 &&
         Versioned.read(spark, tbl).count() == expected
-    } catch { case _: Exception => false }
-    if (!valid) {
-      deleteTree(tbl); deleteTree(stage); deleteTree(ckpt)
+    } {
       Versioned.publish(spark, tbl, base.filter(col("o_year") =!= 1995),
         partCol = Some("o_year"), fileStatsKey = Some("o_orderkey"))
-      val y95 = base.filter(col("o_year") === 1995)
-      (0 until 3).foreach(i => y95.filter(col("o_orderkey") % 3 === i)
-        .coalesce(1).write.mode("append").parquet(stage))
-      val sch = StructType(Seq(
-        StructField("o_orderkey", LongType), StructField("o_custkey", LongType),
-        StructField("o_price_c", LongType), StructField("o_year", IntegerType)))
-      val q = spark.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(stage)
+      val q = y95ShardStream(spark, base, stage)
         .writeStream.format("graft.sources.VersionedSink")
         .option("checkpointLocation", ckpt)
         .option("partCol", "o_year")
@@ -809,34 +802,21 @@ object Sinks {
         .start(tbl)
       try q.processAllAvailable() finally q.stop()
     }
-    Versioned.read(spark, tbl)
-      .groupBy("o_year")
-      .agg(count(lit(1)).as("n"), sum("o_custkey").as("sum_cust"),
-           sum("o_price_c").as("sum_price_c"))
-      .orderBy("o_year")
+    perYear(Versioned.read(spark, tbl))
   }
 
   // q231's substrate: orders published file-granular (v1, range layout on
   // the key), then OPTIMIZE ZORDER BY (o_orderkey, o_custkey) as v2 —
-  // per-file bounds recorded on BOTH columns. Built once per corpus,
-  // reuse validated on the #statskey2 header + row count.
-  private val zorderCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
+  // per-file bounds recorded on BOTH columns.
   private def ordersZOrdered(spark: SparkSession, dir: String): String =
-    zorderCache.synchronized { zorderCache.getOrElseUpdate((sessionKey(spark), dir), {
+    perSession(spark, dir, "zorder_vt") {
       val tbl = tmpOut(dir, "zorder_vt")
-      val base = orders(spark, dir).select(
-        col("o_orderkey"), col("o_custkey"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("o_price_c"),
-        year(col("o_orderdate")).as("o_year"))
-      val valid = try {
+      val base = ordersCents(spark, dir)
+      restage(tbl) {
         Versioned.latestVersion(spark, tbl) >= 2 &&
           Versioned.statsKey2Of(spark, tbl, 2).contains("o_custkey") &&
           Versioned.readAt(spark, tbl, 2).count() == base.count()
-      } catch { case _: Exception => false }
-      if (!valid) {
-        deleteTree(tbl)
+      } {
         Versioned.publish(spark, tbl,
           base.repartitionByRange(32, col("o_year"), col("o_orderkey")),
           partCol = Some("o_year"), fileStatsKey = Some("o_orderkey"))
@@ -844,7 +824,7 @@ object Sinks {
           "o_custkey", filesPerPart = 6)
       }
       tbl
-    }) }
+    }
 
   /** q231 — OPTIMIZE ZORDER + 2-D file skipping
     * (`Versioned.optimizeZOrder` + the DSv2 scan's `#statskey2` bounds):
@@ -869,14 +849,10 @@ object Sinks {
       (mm.getLong(0), mm.getLong(1), mm.getLong(2), mm.getLong(3))
     def kcut(i: Long) = klo + (khi - klo + 1) * i / 50
     def ccut(i: Long) = clo + (chi - clo + 1) * i / 50
-    spark.read.format("graft.sources.VersionedSource")
+    perYear(spark.read.format("graft.sources.VersionedSource")
       .option("versionAsOf", "2").load(tbl)
       .filter(col("o_orderkey") >= kcut(20) && col("o_orderkey") < kcut(30) &&
-              col("o_custkey") >= ccut(20) && col("o_custkey") < ccut(30))
-      .groupBy("o_year")
-      .agg(count(lit(1)).as("n"), sum("o_custkey").as("sum_cust"),
-           sum("o_price_c").as("sum_price_c"))
-      .orderBy("o_year")
+              col("o_custkey") >= ccut(20) && col("o_custkey") < ccut(30)))
   }
 
   /** q232 — SQL CATALOG over the store (`graft.sources.GraftCatalog`):
@@ -909,10 +885,7 @@ object Sinks {
   def sqlCatalogDml(spark: SparkSession, dir: String): DataFrame = {
     val cat = lakeCatalog(spark, dir)
     val view = s"graft_sql_src_${dirTag(dir)}"
-    orders(spark, dir).select(
-      col("o_orderkey"), col("o_custkey"),
-      floor(col("o_totalprice") * 100 + 0.5).cast("long").as("o_price_c"),
-      year(col("o_orderdate")).as("o_year")).createOrReplaceTempView(view)
+    ordersCents(spark, dir).createOrReplaceTempView(view)
     val tbl = s"$cat.sqlns.orders_sql"
     spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.sqlns")
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
@@ -980,11 +953,7 @@ object Sinks {
     // 18 separate commits — the POINT is the chain, not the batch — all
     // driver metadata + one tiny sidecar each, no Spark job.
     victims.foreach(k => Versioned.deleteKeys(spark, dst, Seq(k)))
-    Versioned.read(spark, dst)
-      .groupBy("o_year")
-      .agg(count(lit(1)).as("n"), sum("o_custkey").as("sum_cust"),
-           sum("o_price_c").as("sum_price_c"))
-      .orderBy("o_year")
+    perYear(Versioned.read(spark, dst))
   }
 
   /** q234 — SQL-ONLY MAINTENANCE LIFECYCLE (CTAS + CALL procedures): the
@@ -994,8 +963,8 @@ object Sinks {
     * `CALL sys.zorder` re-clusters recording 2-D bounds, SQL DELETE drops
     * 1996, `CALL sys.restore` rolls it back as a forward commit, and
     * `CALL sys.vacuum` retires the retired versions — every step a SQL
-    * statement, no Scala API. Built once per corpus (maintenance is not
-    * per-query work — the q215 convention); each invocation re-reads the
+    * statement, no Scala API. The lifecycle is the query's substrate
+    * (maintenance is not per-query work); each invocation re-reads the
     * latest AND the time-travelled deleted state, so the hash proves the
     * whole chain: optimize/zorder preserved content exactly, restore
     * undid the delete, and the pre-restore version still serves.
@@ -1015,12 +984,12 @@ object Sinks {
     // only through the tail-source predecessor-retention rule, and v1's
     // DATA is reclaimed regardless. Probing retired versions here would
     // couple validity to retention details and, on a miss, permanently
-    // flip `valid` false and re-run the whole DROP+CTAS+optimize+zorder+
+    // fail the probe and re-run the whole DROP+CTAS+optimize+zorder+
     // delete+restore+vacuum lifecycle on EVERY invocation — defeating the
-    // build-once-per-corpus convention (q215) and racing concurrent
-    // sessions on the DROP. v4 readability (the phase-2 time-travel read)
-    // is probed via its schema line.
-    val valid = try {
+    // build-once substrate and racing concurrent sessions on the DROP. v4
+    // readability (the phase-2 time-travel read) is probed via its schema
+    // line.
+    restage() {
       Versioned.latestVersion(spark, path) == 5 &&
         (2 to 5).map(Versioned.opOf(spark, path, _)) == expectOps.drop(1) &&
         Versioned.schemaOf(spark, path, 4).nonEmpty &&
@@ -1029,16 +998,11 @@ object Sinks {
         // delete targeted a year outside the fixture's 1995-2001 span
         !Versioned.fileEntriesOf(spark, path, 4).exists(_._1 == "o_year=1996") &&
         Versioned.fileEntriesOf(spark, path, 3).exists(_._1 == "o_year=1996")
-    } catch { case _: Exception => false }
-    if (!valid) {
+    } {
       spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.sqlns")
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
       val view = s"graft_maint_src_${dirTag(dir)}"
-      orders(spark, dir).select(
-        col("o_orderkey"), col("o_custkey"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("o_price_c"),
-        year(col("o_orderdate")).as("o_year"))
-        .createOrReplaceTempView(view)
+      ordersCents(spark, dir).createOrReplaceTempView(view)
       // CTAS repartitioned so every partition has files to bin-pack
       spark.sql(
         s"""CREATE TABLE $tbl PARTITIONED BY (o_year)
@@ -1088,20 +1052,15 @@ object Sinks {
     val wh = tmpOut(dir, "warehouse")
     val tbl = s"$cat.sqlns.orders_addcol"
     val path = s"$wh/sqlns/orders_addcol"
-    val valid = try {
+    restage() {
       Versioned.latestVersion(spark, path) == 4 &&
         Versioned.opOf(spark, path, 3).startsWith("ADD_COLUMN") &&
         Versioned.schemaOf(spark, path, 4).exists(_.fieldNames.contains("o_flag"))
-    } catch { case _: Exception => false }
-    if (!valid) {
+    } {
       spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.sqlns")
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
       val view = s"graft_addcol_src_${dirTag(dir)}"
-      orders(spark, dir).select(
-        col("o_orderkey"), col("o_custkey"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("o_price_c"),
-        year(col("o_orderdate")).as("o_year"))
-        .createOrReplaceTempView(view)
+      ordersCents(spark, dir).createOrReplaceTempView(view)
       spark.sql(
         s"""CREATE TABLE $tbl (
            |  o_orderkey BIGINT, o_custkey BIGINT, o_price_c BIGINT, o_year INT)
@@ -1146,22 +1105,17 @@ object Sinks {
     val wh = tmpOut(dir, "warehouse")
     val tbl = s"$cat.sqlns.orders_colmap"
     val path = s"$wh/sqlns/orders_colmap"
-    val valid = try {
+    restage() {
       Versioned.latestVersion(spark, path) == 5 &&
         Versioned.opOf(spark, path, 3) == "RENAME_COLUMN(o_price_c->o_cents)" &&
         Versioned.opOf(spark, path, 5) == "DROP_COLUMN(o_status)" &&
         Versioned.schemaOf(spark, path, 5).exists(s =>
           s.fieldNames.contains("o_cents") && !s.fieldNames.contains("o_status"))
-    } catch { case _: Exception => false }
-    if (!valid) {
+    } {
       spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.sqlns")
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
       val view = s"graft_colmap_src_${dirTag(dir)}"
-      orders(spark, dir).select(
-        col("o_orderkey"), col("o_custkey"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("o_price_c"),
-        col("o_orderstatus").as("o_status"),
-        year(col("o_orderdate")).as("o_year"))
+      ordersCents(spark, dir, col("o_orderstatus").as("o_status"))
         .createOrReplaceTempView(view)
       spark.sql(
         s"""CREATE TABLE $tbl (
@@ -1210,7 +1164,6 @@ object Sinks {
     * shifts a 1995 sum.
     */
   def streamToTable(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
     val cat = lakeCatalog(spark, dir)
     val wh = tmpOut(dir, "warehouse")
     val tbl = s"$cat.sqlns.orders_stream"
@@ -1218,19 +1171,14 @@ object Sinks {
     val stage = tmpOut(dir, "stt_shards")
     val ckpt = tmpOut(dir, "stt_ck")
     val view = s"graft_stt_src_${dirTag(dir)}"
-    val base = orders(spark, dir).select(
-      col("o_orderkey"), col("o_custkey"),
-      floor(col("o_totalprice") * 100 + 0.5).cast("long").as("o_price_c"),
-      year(col("o_orderdate")).as("o_year"))
+    val base = ordersCents(spark, dir)
     val expected = base.count()
-    val valid = try {
+    restage(stage, ckpt) {
       Versioned.latestVersion(spark, path) >= 5 &&
         Versioned.read(spark, path).count() == expected
-    } catch { case _: Exception => false }
-    if (!valid) {
+    } {
       spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.sqlns")
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
-      deleteTree(stage); deleteTree(ckpt)
       base.filter(col("o_year") =!= 1995).createOrReplaceTempView(view)
       spark.sql(
         s"""CREATE TABLE $tbl (
@@ -1238,15 +1186,7 @@ object Sinks {
            |PARTITIONED BY (o_year) TBLPROPERTIES ('statskey' = 'o_orderkey')
            |""".stripMargin)
       spark.sql(s"INSERT INTO $tbl SELECT * FROM $view")
-      val y95 = base.filter(col("o_year") === 1995)
-      (0 until 3).foreach(i => y95.filter(col("o_orderkey") % 3 === i)
-        .coalesce(1).write.mode("append").parquet(stage))
-      val sch = StructType(Seq(
-        StructField("o_orderkey", LongType), StructField("o_custkey", LongType),
-        StructField("o_price_c", LongType), StructField("o_year", IntegerType)))
-      val q = spark.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(stage)
-        .writeStream
+      val q = y95ShardStream(spark, base, stage).writeStream
         .option("checkpointLocation", ckpt)
         .toTable(tbl)
       try q.processAllAvailable() finally q.stop()
@@ -1272,11 +1212,7 @@ object Sinks {
     val cat = lakeCatalog(spark, dir)
     val tbl = s"$cat.sqlns.orders_mpart"
     val view = s"graft_mpart_src_${dirTag(dir)}"
-    orders(spark, dir).select(
-      col("o_orderkey"), col("o_custkey"),
-      floor(col("o_totalprice") * 100 + 0.5).cast("long").as("o_price_c"),
-      col("o_orderpriority").as("o_prio"),
-      year(col("o_orderdate")).as("o_year"))
+    ordersCents(spark, dir, col("o_orderpriority").as("o_prio"))
       .createOrReplaceTempView(view)
     spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.sqlns")
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
@@ -1312,27 +1248,19 @@ object Sinks {
   // 'o_odate,o_prio'` — N extra per-file stat dimensions beyond the key
   // — ingested clustered priority-major then by date, so every file is a
   // tight (priority, date-range) cell in the xstats domain.
-  private val ndimCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
   private def ordersNdimTable(spark: SparkSession, dir: String): String =
-    ndimCache.synchronized { ndimCache.getOrElseUpdate((sessionKey(spark), dir), {
+    perSession(spark, dir, "orders_ndim") {
       val cat = lakeCatalog(spark, dir)
       val wh = tmpOut(dir, "warehouse")
       val tbl = s"$cat.sqlns.orders_ndim"
       val path = s"$wh/sqlns/orders_ndim"
-      val base = orders(spark, dir).select(
-        col("o_orderkey"), col("o_custkey"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("o_price_c"),
-        to_date(col("o_orderdate")).as("o_odate"),
-        col("o_orderpriority").as("o_prio"),
-        year(col("o_orderdate")).as("o_year"))
-      val valid = try {
+      val base = ordersCents(spark, dir, to_date(col("o_orderdate")).as("o_odate"),
+        col("o_orderpriority").as("o_prio"))
+      restage() {
         Versioned.latestVersion(spark, path) == 2 &&
           Versioned.statsColsOf(spark, path, 2) == Seq("o_odate", "o_prio") &&
           Versioned.readAt(spark, path, 2).count() == base.count()
-      } catch { case _: Exception => false }
-      if (!valid) {
+      } {
         spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.sqlns")
         spark.sql(s"DROP TABLE IF EXISTS $tbl")
         val view = s"graft_ndim_src_${dirTag(dir)}"
@@ -1351,7 +1279,7 @@ object Sinks {
              |FROM $view""".stripMargin)
       }
       path
-    }) }
+    }
 
   /** q242 — N-DIMENSION FILE STATS (`'statscols'`, the Delta
     * collect-stats-on-leading-columns convention): beyond the first-class
@@ -1371,50 +1299,32 @@ object Sinks {
   def ndimStatsSkipping(spark: SparkSession, dir: String): DataFrame = {
     val path = ordersNdimTable(spark, dir)
     def src = spark.read.format("graft.sources.VersionedSource").load(path)
-    val full = src.groupBy(col("o_year").cast("string").as("grp"))
-      .agg(count(lit(1)).as("n"), sum("o_custkey").as("sum_cust"),
-           sum("o_price_c").as("sum_price_c"))
-      .select(lit("1_full").as("phase"), col("grp"), col("n"),
-        col("sum_cust"), col("sum_price_c"))
-    val box = src
+    val full = phaseSums("1_full", src.groupBy(col("o_year").cast("string").as("grp")))
+    val box = phaseSums("2_box", src
       .filter(col("o_odate") >= to_date(lit("1996-02-01")) &&
               col("o_odate") <= to_date(lit("1996-07-31")) &&
               col("o_prio") === "5-LOW")
-      .groupBy(col("o_prio").as("grp"))
-      .agg(count(lit(1)).as("n"), sum("o_custkey").as("sum_cust"),
-           sum("o_price_c").as("sum_price_c"))
-      .select(lit("2_box").as("phase"), col("grp"), col("n"),
-        col("sum_cust"), col("sum_price_c"))
+      .groupBy(col("o_prio").as("grp")))
     full.unionByName(box).orderBy("phase", "grp")
   }
 
   // q236's substrate: orders WITHOUT 1995, published file-granular — the
-  // q236's substrate: orders WITHOUT 1995, published file-granular — the
   // snapshot half of the tail (the 1995 appends stream per invocation).
-  private val tailBaseCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
   private def ordersTailBase(spark: SparkSession, dir: String): String =
-    tailBaseCache.synchronized { tailBaseCache.getOrElseUpdate((sessionKey(spark), dir), {
+    perSession(spark, dir, "tail_vt") {
       val tbl = tmpOut(dir, "tail_vt")
-      val base = orders(spark, dir).select(
-        col("o_orderkey"), col("o_custkey"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("o_price_c"),
-        year(col("o_orderdate")).as("o_year"))
-        .filter(col("o_year") =!= 1995)
-      val valid = try {
+      val base = ordersCents(spark, dir).filter(col("o_year") =!= 1995)
+      restage(tbl) {
         Versioned.latestVersion(spark, tbl) >= 1 && {
           val v1 = Versioned.readAt(spark, tbl, 1)
           v1.columns.toSet == base.columns.toSet && v1.count() == base.count()
         }
-      } catch { case _: Exception => false }
-      if (!valid) {
-        deleteTree(tbl)
+      } {
         Versioned.publish(spark, tbl, base,
           partCol = Some("o_year"), fileStatsKey = Some("o_orderkey"))
       }
       tbl
-    }) }
+    }
 
   /** q236 — APPEND-MODE STREAMING READ of the table itself
     * (`graft.sources.TableTailSource`): `readStream` of a versioned table
@@ -1435,11 +1345,7 @@ object Sinks {
     val ckpt = tmpOut(dir, "tail_ckpt")
     deleteTree(dst); deleteTree(out); deleteTree(ckpt)
     Versioned.cloneTable(spark, src, dst, version = Some(1))
-    val y95 = orders(spark, dir).select(
-      col("o_orderkey"), col("o_custkey"),
-      floor(col("o_totalprice") * 100 + 0.5).cast("long").as("o_price_c"),
-      year(col("o_orderdate")).as("o_year"))
-      .filter(col("o_year") === 1995)
+    val y95 = ordersCents(spark, dir).filter(col("o_year") === 1995)
     Seq(0, 1).foreach { par =>
       val dd = s"d_tail$par"
       y95.filter(col("o_orderkey") % 2 === par)
@@ -1453,43 +1359,32 @@ object Sinks {
       .writeStream.format("parquet").option("path", out)
       .option("checkpointLocation", ckpt).start()
     try q.processAllAvailable() finally q.stop()
-    spark.read.parquet(out)
-      .groupBy("o_year")
-      .agg(count(lit(1)).as("n"), sum("o_custkey").as("sum_cust"),
-           sum("o_price_c").as("sum_price_c"))
-      .orderBy("o_year")
+    perYear(spark.read.parquet(out))
   }
 
   // q237's substrate: orders keyed by a STRING surrogate ('K' +
   // zero-padded orderkey — fixed width, so string order equals numeric
   // order and the oracle can replay bands numerically), published
   // file-granular with per-file stats ON THE STRING column.
-  private val mergeStrCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
   private def ordersVersionedString(spark: SparkSession, dir: String): String =
-    mergeStrCache.synchronized { mergeStrCache.getOrElseUpdate((sessionKey(spark), dir), {
+    perSession(spark, dir, "merge_st") {
       val tbl = tmpOut(dir, "merge_st")
       val base = orders(spark, dir).select(
         concat(lit("K"), lpad(col("o_orderkey").cast("string"), 12, "0")).as("o_skey"),
-        col("o_custkey"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("o_price_c"),
-        year(col("o_orderdate")).as("o_year"))
-      val valid = try {
+        col("o_custkey"), priceC, year(col("o_orderdate")).as("o_year"))
+      restage(tbl) {
         Versioned.latestVersion(spark, tbl) >= 1 &&
           Versioned.statsKeyOf(spark, tbl, 1).contains("o_skey") && {
             val v1 = Versioned.readAt(spark, tbl, 1)
             v1.columns.toSet == base.columns.toSet && v1.count() == base.count()
           }
-      } catch { case _: Exception => false }
-      if (!valid) {
-        deleteTree(tbl)
+      } {
         Versioned.publish(spark, tbl,
           base.repartitionByRange(32, col("o_year"), col("o_skey")),
           partCol = Some("o_year"), fileStatsKey = Some("o_skey"))
       }
       tbl
-    }) }
+    }
 
   /** q237 — FILE-scoped MERGE on a STRING key (`Versioned.mergeByFiles`
     * over [[graft.tables.Versioned]]'s ordered-surrogate stats): the q212
@@ -1516,7 +1411,6 @@ object Sinks {
     def skey(k: Long) = "K" + ("%012d".format(k))
     def band(df: DataFrame, i: Long) =
       df.filter(col("o_skey") >= skey(cut(i)) && col("o_skey") < skey(cut(i + 1)))
-    def op(o: String) = lit(o).as("_op")
     val updates = band(y95, 10)
       .withColumn("o_price_c", col("o_price_c") + 50000).select(col("*"), op("U"))
     val deletes = band(y95, 11).select(col("*"), op("D"))
@@ -1528,11 +1422,7 @@ object Sinks {
       updates.unionByName(deletes).unionByName(inserts).unionByName(noiseI),
       "o_skey", "o_year", fromVersion = Some(1))
     Versioned.vacuum(spark, tbl, keep = Set(1, v))
-    Versioned.readAt(spark, tbl, v)
-      .groupBy("o_year")
-      .agg(count(lit(1)).as("n"), sum("o_custkey").as("sum_cust"),
-           sum("o_price_c").as("sum_price_c"))
-      .orderBy("o_year")
+    perYear(Versioned.readAt(spark, tbl, v))
   }
 
   // q238's substrate: orders keyed by DATE with a STRING second stats
@@ -1541,28 +1431,21 @@ object Sinks {
   // the layout a 2-D box predicate skips on BOTH dimensions without a
   // z-order rewrite (z-order needs integral domains; leading-column
   // clustering is how a warehouse gets 2-D skipping on typed columns).
-  private val box2dCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
   private def ordersVersioned2D(spark: SparkSession, dir: String): String =
-    box2dCache.synchronized { box2dCache.getOrElseUpdate((sessionKey(spark), dir), {
+    perSession(spark, dir, "box2d_vt") {
       val tbl = tmpOut(dir, "box2d_vt")
       val base = orders(spark, dir).select(
         col("o_orderkey"), col("o_custkey"),
         // the fixture stores order dates as timestamps; the stats key is
         // a true DATE column (epoch-day surrogates in the manifest)
         to_date(col("o_orderdate")).as("o_orderdate"),
-        col("o_orderpriority"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("o_price_c"),
-        year(col("o_orderdate")).as("o_year"))
-      val valid = try {
+        col("o_orderpriority"), priceC, year(col("o_orderdate")).as("o_year"))
+      restage(tbl) {
         Versioned.latestVersion(spark, tbl) >= 1 &&
           Versioned.statsKeyOf(spark, tbl, 1).contains("o_orderdate") &&
           Versioned.statsKey2Of(spark, tbl, 1).contains("o_orderpriority") &&
           Versioned.readAt(spark, tbl, 1).count() == base.count()
-      } catch { case _: Exception => false }
-      if (!valid) {
-        deleteTree(tbl)
+      } {
         Versioned.publish(spark, tbl,
           base.repartitionByRange(32, col("o_year"), col("o_orderpriority"),
             col("o_orderdate")),
@@ -1571,7 +1454,7 @@ object Sinks {
           fileStatsKey2 = Some("o_orderpriority"))
       }
       tbl
-    }) }
+    }
 
   /** q238 — 2-D FILE SKIPPING on (DATE, STRING) stats through the DSv2
     * reader: the manifest records per-file bounds for a DATE key
@@ -1591,46 +1474,27 @@ object Sinks {
   def box2dSkipping(spark: SparkSession, dir: String): DataFrame = {
     val tbl = ordersVersioned2D(spark, dir)
     def src = spark.read.format("graft.sources.VersionedSource").load(tbl)
-    val full = src.groupBy(col("o_year").cast("string").as("grp"))
-      .agg(count(lit(1)).as("n"), sum("o_custkey").as("sum_cust"),
-           sum("o_price_c").as("sum_price_c"))
-      .select(lit("1_full").as("phase"), col("grp"), col("n"),
-        col("sum_cust"), col("sum_price_c"))
-    val box = src
+    val full = phaseSums("1_full", src.groupBy(col("o_year").cast("string").as("grp")))
+    val box = phaseSums("2_box", src
       .filter(col("o_orderdate") >= to_date(lit("1995-04-01")) &&
               col("o_orderdate") <= to_date(lit("1995-09-30")) &&
               col("o_orderpriority") >= "1-URGENT" &&
               col("o_orderpriority") <= "2-HIGH")
-      .groupBy(col("o_orderpriority").as("grp"))
-      .agg(count(lit(1)).as("n"), sum("o_custkey").as("sum_cust"),
-           sum("o_price_c").as("sum_price_c"))
-      .select(lit("2_box").as("phase"), col("grp"), col("n"),
-        col("sum_cust"), col("sum_price_c"))
+      .groupBy(col("o_orderpriority").as("grp")))
     full.unionByName(box).orderBy("phase", "grp")
   }
 
   // q214's substrate: orders staged as v1, one deterministic tagged MERGE
-  // applied as v2 — built once per corpus, reused across sessions behind
-  // the usual validation (count + the idempotence tag present).
-  private val changeFeedCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
+  // applied as v2.
   private def ordersChangeFeedTable(spark: SparkSession, dir: String): String =
-    changeFeedCache.synchronized { changeFeedCache.getOrElseUpdate((sessionKey(spark), dir), {
+    perSession(spark, dir, "cf_vt") {
       val tbl = tmpOut(dir, "cf_vt")
-      val base = orders(spark, dir).select(
-        col("o_orderkey"), col("o_custkey"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("o_price_c"),
-        col("o_orderpriority"),
-        year(col("o_orderdate")).as("o_year"))
-      val valid = try {
+      val base = ordersCents(spark, dir, col("o_orderpriority"))
+      restage(tbl) {
         Versioned.taggedVersion(spark, tbl, "cf_batch_1995").contains(2) &&
           Versioned.readAt(spark, tbl, 1).count() == base.count()
-      } catch { case _: Exception => false }
-      if (!valid) {
-        deleteTree(tbl)
+      } {
         Versioned.publish(spark, tbl, base, partCol = Some("o_year"))
-        def op(o: String) = lit(o).as("_op")
         // 1995-keyed batch: the merge touches {1995, 1999} only, so the
         // feed's manifest pruning has untouched partitions to skip
         val y95 = base.filter(col("o_year") === 1995)
@@ -1645,7 +1509,7 @@ object Sinks {
           fromVersion = Some(1), tag = Some("cf_batch_1995"))
       }
       tbl
-    }) }
+    }
 
   /** q214 — table CHANGE FEED (`Versioned.changes`): the rows a MERGE
     * actually added and removed between two committed versions, each
@@ -1662,11 +1526,7 @@ object Sinks {
     */
   def changeFeed(spark: SparkSession, dir: String): DataFrame = {
     val tbl = ordersChangeFeedTable(spark, dir)
-    Versioned.changes(spark, tbl, 1, 2)
-      .groupBy("_change", "o_year")
-      .agg(count(lit(1)).as("n"), sum("o_custkey").as("sum_cust"),
-           sum("o_price_c").as("sum_price_c"))
-      .orderBy("_change", "o_year")
+    perYear(Versioned.changes(spark, tbl, 1, 2), "_change")
   }
 
   /** q215 — RESTORE / rollback (`Versioned.restore`): v1 publishes an
@@ -1679,24 +1539,17 @@ object Sinks {
     * version's content from the source table alone.
     */
   def restoreRollback(spark: SparkSession, dir: String): DataFrame = {
-    // Once-per-corpus substrate (the q208 convention — nobody re-runs a
-    // rollback per query): publish v1, bad-merge v2, restore v3, then
-    // every invocation re-reads all three versions; cross-session reuse
-    // behind count + zero-copy-restore validation.
+    // The whole rollback is the substrate (nobody re-runs a rollback per
+    // query): publish v1, bad-merge v2, restore v3; every invocation
+    // re-reads all three versions.
     val tbl = tmpOut(dir, "restore_vt")
-    val base = orders(spark, dir).select(
-      col("o_orderkey"), col("o_custkey"),
-      floor(col("o_totalprice") * 100 + 0.5).cast("long").as("o_price_c"),
-      year(col("o_orderdate")).as("o_year"))
-    val valid = try {
+    val base = ordersCents(spark, dir)
+    restage(tbl) {
       Versioned.latestVersion(spark, tbl) == 3 &&
         Versioned.dataDirsOf(spark, tbl, 3) == Versioned.dataDirsOf(spark, tbl, 1) &&
         Versioned.readAt(spark, tbl, 1).count() == base.count()
-    } catch { case _: Exception => false }
-    if (!valid) {
-      deleteTree(tbl)
+    } {
       Versioned.publish(spark, tbl, base, partCol = Some("o_year"))
-      def op(o: String) = lit(o).as("_op")
       val bad = base.filter(col("o_orderkey") % 10 === 3)
         .withColumn("o_price_c", col("o_price_c") * 1000).select(col("*"), op("U"))
         .unionByName(base.filter(col("o_orderkey") % 10 === 4).select(col("*"), op("D")))
@@ -1722,22 +1575,16 @@ object Sinks {
     * SinksSpec pins the file-count collapse itself).
     */
   def optimizeCompact(spark: SparkSession, dir: String): DataFrame = {
-    // Once-per-corpus substrate: v1 + three band merges + the compaction
-    // (v5, 1995 collapsed to one file) — maintenance runs once; every
-    // invocation reads the compacted version. Reuse validation: version
-    // chain complete, 1995 really is one file, base count matches.
+    // The substrate is v1 + three band merges + the compaction (v5, 1995
+    // collapsed to one file): maintenance runs once, every invocation
+    // reads the compacted version.
     val tbl = tmpOut(dir, "opt_vt")
-    val base = orders(spark, dir).select(
-      col("o_orderkey"), col("o_custkey"),
-      floor(col("o_totalprice") * 100 + 0.5).cast("long").as("o_price_c"),
-      year(col("o_orderdate")).as("o_year"))
-    val valid = try {
+    val base = ordersCents(spark, dir)
+    restage(tbl) {
       Versioned.latestVersion(spark, tbl) == 5 &&
         Versioned.fileEntriesOf(spark, tbl, 5).count(_._1 == "o_year=1995") == 1 &&
         Versioned.readAt(spark, tbl, 1).count() == base.count()
-    } catch { case _: Exception => false }
-    if (!valid) {
-      deleteTree(tbl)
+    } {
       Versioned.publish(spark, tbl,
         base.repartitionByRange(16, col("o_year"), col("o_orderkey")),
         partCol = Some("o_year"), fileStatsKey = Some("o_orderkey"))
@@ -1745,7 +1592,6 @@ object Sinks {
       val mm = y95.agg(min("o_orderkey"), max("o_orderkey")).head()
       val (lo, hi) = (mm.getLong(0), mm.getLong(1))
       def cut(i: Long) = lo + (hi - lo + 1) * i / 25
-      def op(o: String) = lit(o).as("_op")
       // three merges, each bumping one 4% band: 1995 accumulates files
       (0L to 2L).foreach { i =>
         val b = y95.filter(col("o_orderkey") >= cut(i) && col("o_orderkey") < cut(i + 1))
@@ -1755,11 +1601,7 @@ object Sinks {
       }
       Versioned.compactFiles(spark, tbl, "o_year=1995", "o_orderkey", "o_year")
     }
-    Versioned.readAt(spark, tbl, 5)
-      .groupBy("o_year")
-      .agg(count(lit(1)).as("n"), sum("o_custkey").as("sum_cust"),
-           sum("o_price_c").as("sum_price_c"))
-      .orderBy("o_year")
+    perYear(Versioned.readAt(spark, tbl, 5))
   }
 
   /** q217 — whole-table OPTIMIZE (`Versioned.optimizeTable`): v1 publishes
@@ -1775,24 +1617,16 @@ object Sinks {
     * nightly maintenance op: work ∝ small-file population, never ∝ table.
     */
   def optimizeTableQuery(spark: SparkSession, dir: String): DataFrame = {
-    // Once-per-corpus substrate (the q216 convention — maintenance runs
-    // once); reuse validation: two-version chain, layout actually
-    // collapsed, content count intact.
     val tbl = tmpOut(dir, "optall_vt")
-    val base = orders(spark, dir).select(
-      col("o_orderkey"), col("o_custkey"),
-      floor(col("o_totalprice") * 100 + 0.5).cast("long").as("o_price_c"),
-      year(col("o_orderdate")).as("o_year"))
+    val base = ordersCents(spark, dir)
     val total = base.count()
     val target = math.max(1L, total / 8)
-    val valid = try {
+    restage(tbl) {
       Versioned.latestVersion(spark, tbl) == 2 &&
         Versioned.fileEntriesOf(spark, tbl, 2).size <
           Versioned.fileEntriesOf(spark, tbl, 1).size &&
         Versioned.readAt(spark, tbl, 2).count() == total
-    } catch { case _: Exception => false }
-    if (!valid) {
-      deleteTree(tbl)
+    } {
       Versioned.publish(spark, tbl,
         base.repartitionByRange(48, col("o_year"), col("o_orderkey")),
         partCol = Some("o_year"), fileStatsKey = Some("o_orderkey"))
@@ -1800,10 +1634,7 @@ object Sinks {
       require(v2 == 2, s"optimize should have found small files to collapse, got v$v2")
     }
     (1 to 2).map { v =>
-      Versioned.readAt(spark, tbl, v)
-        .groupBy("o_year")
-        .agg(count(lit(1)).as("n"), sum("o_custkey").as("sum_cust"),
-             sum("o_price_c").as("sum_price_c"))
+      sums(Versioned.readAt(spark, tbl, v).groupBy("o_year"))
         .select(lit(v).as("ver"), col("o_year"), col("n"),
           col("sum_cust"), col("sum_price_c"))
     }.reduce(_.unionByName(_)).orderBy("ver", "o_year")
@@ -1822,23 +1653,15 @@ object Sinks {
     * table" event.
     */
   def schemaEvolutionVersioned(spark: SparkSession, dir: String): DataFrame = {
-    // Once-per-corpus substrate; reuse validation: v2 carries o_note, v1
-    // does not, base count intact.
     val tbl = tmpOut(dir, "se_vt")
-    val base = orders(spark, dir).select(
-      col("o_orderkey"), col("o_custkey"),
-      floor(col("o_totalprice") * 100 + 0.5).cast("long").as("o_price_c"),
-      year(col("o_orderdate")).as("o_year"))
-    val valid = try {
+    val base = ordersCents(spark, dir)
+    restage(tbl) {
       Versioned.latestVersion(spark, tbl) == 2 &&
         Versioned.readAt(spark, tbl, 2).columns.contains("o_note") &&
         !Versioned.readAt(spark, tbl, 1).columns.contains("o_note") &&
         Versioned.readAt(spark, tbl, 1).count() == base.count()
-    } catch { case _: Exception => false }
-    if (!valid) {
-      deleteTree(tbl)
+    } {
       Versioned.publish(spark, tbl, base, partCol = Some("o_year"))
-      def op(o: String) = lit(o).as("_op")
       val y95 = base.filter(col("o_year") === 1995)
       val batch = y95.filter(col("o_orderkey") % 100 === 1)
         .withColumn("o_price_c", col("o_price_c") + 5000)
@@ -1857,10 +1680,8 @@ object Sinks {
            sum("o_price_c").as("sum_price_c"), count(col("o_note")).as("n_noted"))
       .select(lit(2).as("ver"), col("o_year"), col("n"), col("sum_cust"),
         col("sum_price_c"), col("n_noted"))
-    val v1 = Versioned.readAt(spark, tbl, 1) // old schema: no o_note column
-      .groupBy("o_year")
-      .agg(count(lit(1)).as("n"), sum("o_custkey").as("sum_cust"),
-           sum("o_price_c").as("sum_price_c"))
+    // old schema: no o_note column
+    val v1 = sums(Versioned.readAt(spark, tbl, 1).groupBy("o_year"))
       .select(lit(1).as("ver"), col("o_year"), col("n"), col("sum_cust"),
         col("sum_price_c"), lit(0L).as("n_noted"))
     v1.unionByName(v2).orderBy("ver", "o_year")
@@ -1880,11 +1701,7 @@ object Sinks {
       col("o_year") === 1995 && col("o_orderpriority") === "1-URGENT",
       "o_year", fromVersion = Some(1))
     Versioned.vacuum(spark, tbl, keep = Set(1, v))
-    Versioned.readAt(spark, tbl, v)
-      .groupBy("o_year")
-      .agg(count(lit(1)).as("n"), sum("o_custkey").as("sum_cust"),
-           sum("o_price_c").as("sum_price_c"))
-      .orderBy("o_year")
+    perYear(Versioned.readAt(spark, tbl, v))
   }
 
   /** q222 — predicate UPDATE (`Versioned.updateWhere`, Delta's UPDATE):
@@ -1902,11 +1719,7 @@ object Sinks {
       Map("o_price_c" -> (col("o_price_c") + col("o_custkey") % 1000)),
       "o_year", fromVersion = Some(1))
     Versioned.vacuum(spark, tbl, keep = Set(1, v))
-    Versioned.readAt(spark, tbl, v)
-      .groupBy("o_year")
-      .agg(count(lit(1)).as("n"), sum("o_custkey").as("sum_cust"),
-           sum("o_price_c").as("sum_price_c"))
-      .orderBy("o_year")
+    perYear(Versioned.readAt(spark, tbl, v))
   }
 
   /** q223 — SQL-surface read of the versioned store
@@ -1950,52 +1763,35 @@ object Sinks {
     */
   def checkConstraintQuery(spark: SparkSession, dir: String): DataFrame = {
     val tbl = tmpOut(dir, "cons_vt")
-    val base = orders(spark, dir).select(
-      col("o_orderkey"), col("o_custkey"),
-      floor(col("o_totalprice") * 100 + 0.5).cast("long").as("o_price_c"),
-      year(col("o_orderdate")).as("o_year"))
-    val valid = try {
+    val base = ordersCents(spark, dir)
+    restage(tbl) {
       Versioned.latestVersion(spark, tbl) == 3 &&
         Versioned.constraintsOf(spark, tbl, 3)
           .exists(_._1 == "price_nonneg") &&
         Versioned.readAt(spark, tbl, 1).count() == base.count()
-    } catch { case _: Exception => false }
-    if (!valid) {
-      deleteTree(tbl)
+    } {
       Versioned.publish(spark, tbl, base, partCol = Some("o_year"))
       Versioned.addConstraint(spark, tbl, "price_nonneg", "o_price_c >= 0")
       val batch = base.filter(col("o_year") === 1995 && col("o_orderkey") % 100 === 21)
         .withColumn("o_price_c", col("o_price_c") + 999)
-        .select(col("*"), lit("U").as("_op"))
+        .select(col("*"), op("U"))
       Versioned.merge(spark, tbl, batch, "o_orderkey", "o_year")
     }
-    Versioned.readAt(spark, tbl, 3)
-      .groupBy("o_year")
-      .agg(count(lit(1)).as("n"), sum("o_custkey").as("sum_cust"),
-           sum("o_price_c").as("sum_price_c"))
-      .orderBy("o_year")
+    perYear(Versioned.readAt(spark, tbl, 3))
   }
 
   // q219/q220's substrate: v1 publishes orders, then three RECORDING
   // merges (update band v2, delete band v3, insert band v4) persist their
-  // per-row change images as c_* dirs — built once per corpus, reused
-  // across sessions behind version-chain + feed-presence validation.
+  // per-row change images as c_* dirs.
   private def ordersRecordedFeedTable(spark: SparkSession, dir: String): String = {
     val tbl = tmpOut(dir, "rcf_vt")
-    val base = orders(spark, dir).select(
-      col("o_orderkey"), col("o_custkey"),
-      floor(col("o_totalprice") * 100 + 0.5).cast("long").as("o_price_c"),
-      col("o_orderpriority"),
-      year(col("o_orderdate")).as("o_year"))
-    val valid = try {
+    val base = ordersCents(spark, dir, col("o_orderpriority"))
+    restage(tbl) {
       Versioned.latestVersion(spark, tbl) == 4 &&
         (2 to 4).forall(v => Versioned.changesDirOf(spark, tbl, v).isDefined) &&
         Versioned.readAt(spark, tbl, 1).count() == base.count()
-    } catch { case _: Exception => false }
-    if (!valid) {
-      deleteTree(tbl)
+    } {
       Versioned.publish(spark, tbl, base, partCol = Some("o_year"))
-      def op(o: String) = lit(o).as("_op")
       val y95 = base.filter(col("o_year") === 1995)
       val batches = Seq(
         y95.filter(col("o_orderkey") % 100 === 11)
@@ -2024,11 +1820,7 @@ object Sinks {
     */
   def recordedChangeFeed(spark: SparkSession, dir: String): DataFrame = {
     val tbl = ordersRecordedFeedTable(spark, dir)
-    Versioned.recordedChanges(spark, tbl, 1, 4)
-      .groupBy("_version", "_change", "o_year")
-      .agg(count(lit(1)).as("n"), sum("o_custkey").as("sum_cust"),
-           sum("o_price_c").as("sum_price_c"))
-      .orderBy("_version", "_change", "o_year")
+    perYear(Versioned.recordedChanges(spark, tbl, 1, 4), "_version", "_change")
   }
 
   /** q220 — STREAMING change-feed source (`graft.sources.ChangeFeedSource`):
@@ -2048,11 +1840,7 @@ object Sinks {
     val q = spark.readStream.format("graft.sources.ChangeFeedSource").load(tbl)
       .writeStream.format("memory").queryName(qn).outputMode("append").start()
     try q.processAllAvailable() finally q.stop()
-    spark.table(qn)
-      .groupBy("_version", "_change", "o_year")
-      .agg(count(lit(1)).as("n"), sum("o_custkey").as("sum_cust"),
-           sum("o_price_c").as("sum_price_c"))
-      .orderBy("_version", "_change", "o_year")
+    perYear(spark.table(qn), "_version", "_change")
   }
 
   /** q225 — END-TO-END CDC REPLICATION: table B starts as a copy of A's
@@ -2073,12 +1861,10 @@ object Sinks {
     val dst = tmpOut(dir, "repl_vt")
     val ckpt = tmpOut(dir, "repl_ck")
     val expected = Versioned.read(spark, srcTbl).count()
-    val valid = try {
+    restage(dst, ckpt) {
       Versioned.latestVersion(spark, dst) >= 1 &&
         Versioned.read(spark, dst).count() == expected
-    } catch { case _: Exception => false }
-    if (!valid) {
-      deleteTree(dst); deleteTree(ckpt)
+    } {
       Versioned.publish(spark, dst, Versioned.readAt(spark, srcTbl, 1),
         partCol = Some("o_year"))
       val q = spark.readStream.format("graft.sources.ChangeFeedSource")
@@ -2106,11 +1892,7 @@ object Sinks {
         }.start()
       try q.processAllAvailable() finally q.stop()
     }
-    Versioned.read(spark, dst)
-      .groupBy("o_year")
-      .agg(count(lit(1)).as("n"), sum("o_custkey").as("sum_cust"),
-           sum("o_price_c").as("sum_price_c"))
-      .orderBy("o_year")
+    perYear(Versioned.read(spark, dst))
   }
 
   /** q213 — STREAMING CDC ingestion into the versioned store with
@@ -2132,11 +1914,7 @@ object Sinks {
     import org.apache.spark.sql.types._
     val tbl = tmpOut(dir, "cdc_vt")
     val stage = tmpOut(dir, "cdc_shards")
-    val base = orders(spark, dir).select(
-      col("o_orderkey"), col("o_custkey"),
-      floor(col("o_totalprice") * 100 + 0.5).cast("long").as("o_price_c"),
-      col("o_orderpriority"),
-      year(col("o_orderdate")).as("o_year"))
+    val base = ordersCents(spark, dir, col("o_orderpriority"))
     val y95 = base.filter(col("o_year") === 1995)
     // base count + 1995 key bounds in ONE scan (the count feeds the
     // validity check below; it used to be its own job)
@@ -2150,7 +1928,6 @@ object Sinks {
     def cut(i: Long) = lo + (hi - lo + 1) * i / 25
     def band(i: Long) =
       y95.filter(col("o_orderkey") >= cut(i) && col("o_orderkey") < cut(i + 1))
-    def op(o: String) = lit(o).as("_op")
     val batches = Seq(
       band(5).withColumn("o_price_c", col("o_price_c") + 50000).select(col("*"), op("U")),
       band(6).select(col("*"), op("D")),
@@ -2161,7 +1938,7 @@ object Sinks {
     // band); base.count() was folded into the bounds agg above.
     def bandCond(i: Long) =
       col("o_orderkey") >= cut(i) && col("o_orderkey") < cut(i + 1)
-    val valid = try {
+    restage(tbl, stage) {
       Versioned.latestVersion(spark, tbl) >= 1 &&
         Versioned.fileEntriesOf(spark, tbl, 1).nonEmpty &&
         Versioned.readAt(spark, tbl, 1).count() == baseCount && {
@@ -2177,9 +1954,7 @@ object Sinks {
                 "band_" + mins.getLong(i)).isDefined
           }
         }
-    } catch { case _: Exception => false }
-    if (!valid) {
-      deleteTree(tbl); deleteTree(stage)
+    } {
       Versioned.publish(spark, tbl,
         base.repartitionByRange(32, col("o_year"), col("o_orderkey")),
         partCol = Some("o_year"), fileStatsKey = Some("o_orderkey"))
@@ -2213,11 +1988,7 @@ object Sinks {
         }
       }.start()
     try q.processAllAvailable() finally q.stop()
-    Versioned.read(spark, tbl)
-      .groupBy("o_year")
-      .agg(count(lit(1)).as("n"), sum("o_custkey").as("sum_cust"),
-           sum("o_price_c").as("sum_price_c"))
-      .orderBy("o_year")
+    perYear(Versioned.read(spark, tbl))
   }
 
   /** q211 — versioned-table time travel (`Versioned`): v1 publishes a
@@ -2232,17 +2003,11 @@ object Sinks {
     * proves the store served exactly the published bytes for each version.
     */
   def timeTravel(spark: SparkSession, dir: String): DataFrame = {
-    // Once-per-corpus substrate (the q210 convention — r13 restaged both
-    // versions per invocation, ~2 s of pure re-publish the judge flagged):
-    // the two snapshots are immutable, so every invocation — and session —
-    // can reuse them; the operator's WORK (time-travel reads + the digest
-    // diff) still runs per invocation. Reuse validation: exact two-version
-    // chain with both row counts intact, else restage.
+    // The two immutable snapshots are the substrate; the operator's WORK
+    // (time-travel reads + the digest diff) runs per invocation.
     val tbl = tmpOut(dir, "ttv")
-    val base = orders(spark, dir).select(
-      col("o_orderkey"), col("o_custkey"),
-      floor(col("o_totalprice") * 100 + 0.5).cast("long").as("o_price_c"),
-      col("o_orderpriority"))
+    val base = orders(spark, dir)
+      .select(col("o_orderkey"), col("o_custkey"), priceC, col("o_orderpriority"))
     val v1df = base.filter(col("o_orderkey") % 10 < 5)
     val v2df = v1df.filter(col("o_orderkey") % 10 =!= 4)
       .withColumn("o_price_c",
@@ -2261,17 +2026,13 @@ object Sinks {
       (count(when(kmod < 5 && kmod =!= 4, lit(1))) +
         count(when(kmod.isin(5, 6), lit(1)))).as("c2")).head()
     val (c1, c2) = (cRow.getLong(0), cRow.getLong(1))
-    val valid = try {
+    val (ver1, ver2) = restage(tbl) {
       Versioned.latestVersion(spark, tbl) == 2 &&
         Versioned.readAt(spark, tbl, 1).count() == c1 &&
         Versioned.readAt(spark, tbl, 2).count() == c2
-    } catch { case _: Exception => false }
-    val (ver1, ver2) =
-      if (valid) (1, 2)
-      else {
-        deleteTree(tbl)
-        (Versioned.write(spark, tbl, v1df), Versioned.write(spark, tbl, v2df))
-      }
+    } {
+      (Versioned.write(spark, tbl, v1df), Versioned.write(spark, tbl, v2df))
+    }.getOrElse((1, 2))
     val (a2, r2) = Versioned.diff(spark, tbl, ver1, ver2)
     def summarize(v: Int, added: Long, removed: Long): DataFrame =
       Versioned.readAt(spark, tbl, v) // v1 read AFTER v2 was published
@@ -2299,7 +2060,6 @@ object Sinks {
   def mergeMirrorSync(spark: SparkSession, dir: String): DataFrame = {
     val tbl = ordersVersioned(spark, dir)
     val base = Versioned.readAt(spark, tbl, 1)
-    def op(o: String) = lit(o).as("_op")
     // the DESIRED state: every key to keep rides as an upsert image
     val keep = base.filter(col("o_orderkey") % 10 =!= 3 && col("o_orderkey") % 10 =!= 7)
       .withColumn("o_price_c",
@@ -2314,39 +2074,28 @@ object Sinks {
       "o_orderkey", "o_year", fromVersion = Some(1),
       notMatchedBySource = Some(Versioned.NotMatchedBySource.Delete))
     Versioned.vacuum(spark, tbl, keep = Set(1, v))
-    Versioned.readAt(spark, tbl, v)
-      .groupBy("o_year")
-      .agg(count(lit(1)).as("n"), sum("o_custkey").as("sum_cust"),
-           sum("o_price_c").as("sum_price_c"))
-      .orderBy("o_year")
+    perYear(Versioned.readAt(spark, tbl, v))
   }
 
   // q244's substrate: a table whose extra stats column (`'statscols' =
   // 'o_ship'`) is NULLABLE by construction — urgent orders carry no ship
   // date — ingested priority-major so whole files are all-null or
   // null-free in the dimension, the shape null-count skipping prunes.
-  private val nullStatsCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
   private def ordersNullTable(spark: SparkSession, dir: String): String =
-    nullStatsCache.synchronized { nullStatsCache.getOrElseUpdate((sessionKey(spark), dir), {
+    perSession(spark, dir, "orders_nullx") {
       val cat = lakeCatalog(spark, dir)
       val wh = tmpOut(dir, "warehouse")
       val tbl = s"$cat.sqlns.orders_nullx"
       val path = s"$wh/sqlns/orders_nullx"
-      val base = orders(spark, dir).select(
-        col("o_orderkey"), col("o_custkey"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("o_price_c"),
+      val base = ordersCents(spark, dir,
         when(col("o_orderpriority") === "1-URGENT", lit(null))
           .otherwise(to_date(col("o_orderdate"))).as("o_ship"),
-        col("o_orderpriority").as("o_prio"),
-        year(col("o_orderdate")).as("o_year"))
-      val valid = try {
+        col("o_orderpriority").as("o_prio"))
+      restage() {
         Versioned.latestVersion(spark, path) == 2 &&
           Versioned.statsColsOf(spark, path, 2) == Seq("o_ship") &&
           Versioned.readAt(spark, path, 2).count() == base.count()
-      } catch { case _: Exception => false }
-      if (!valid) {
+      } {
         spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.sqlns")
         spark.sql(s"DROP TABLE IF EXISTS $tbl")
         val view = s"graft_nullx_src_${dirTag(dir)}"
@@ -2364,7 +2113,7 @@ object Sinks {
              |FROM $view""".stripMargin)
       }
       path
-    }) }
+    }
 
   /** q244 — NULL-COUNT FILE SKIPPING (per-dimension null counts in the
     * manifest's `xstats` slots, the Delta/Iceberg nullCount convention):
@@ -2382,20 +2131,12 @@ object Sinks {
   def nullStatsSkipping(spark: SparkSession, dir: String): DataFrame = {
     val path = ordersNullTable(spark, dir)
     def src = spark.read.format("graft.sources.VersionedSource").load(path)
-    val nullSide = src.filter(col("o_ship").isNull)
-      .groupBy(col("o_year").cast("string").as("grp"))
-      .agg(count(lit(1)).as("n"), sum("o_custkey").as("sum_cust"),
-           sum("o_price_c").as("sum_price_c"))
-      .select(lit("1_null").as("phase"), col("grp"), col("n"),
-        col("sum_cust"), col("sum_price_c"))
-    val band = src.filter(col("o_ship").isNotNull &&
+    val nullSide = phaseSums("1_null", src.filter(col("o_ship").isNull)
+      .groupBy(col("o_year").cast("string").as("grp")))
+    val band = phaseSums("2_band", src.filter(col("o_ship").isNotNull &&
         col("o_ship") >= to_date(lit("1996-03-01")) &&
         col("o_ship") <= to_date(lit("1996-08-31")))
-      .groupBy(col("o_prio").as("grp"))
-      .agg(count(lit(1)).as("n"), sum("o_custkey").as("sum_cust"),
-           sum("o_price_c").as("sum_price_c"))
-      .select(lit("2_band").as("phase"), col("grp"), col("n"),
-        col("sum_cust"), col("sum_price_c"))
+      .groupBy(col("o_prio").as("grp")))
     nullSide.unionByName(band).orderBy("phase", "grp")
   }
 
@@ -2415,10 +2156,8 @@ object Sinks {
     val cat = lakeCatalog(spark, dir)
     val tbl = s"$cat.sqlns.orders_widen"
     val view = s"graft_widen_src_${dirTag(dir)}"
-    orders(spark, dir).select(
-      col("o_orderkey"), col("o_custkey"),
-      floor(col("o_totalprice") * 100 + 0.5).cast("int").as("o_price_i"),
-      year(col("o_orderdate")).as("o_year"))
+    orders(spark, dir).select(col("o_orderkey"), col("o_custkey"),
+      cents.cast("int").as("o_price_i"), year(col("o_orderdate")).as("o_year"))
       .createOrReplaceTempView(view)
     spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.sqlns")
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
@@ -2497,11 +2236,7 @@ object Sinks {
     val cat = lakeCatalog(spark, dir)
     val tbl = s"$cat.sqlns.orders_evo"
     val view = s"graft_evo_src_${dirTag(dir)}"
-    orders(spark, dir).select(
-      col("o_orderkey"), col("o_custkey"),
-      floor(col("o_totalprice") * 100 + 0.5).cast("long").as("o_price_c"),
-      col("o_orderpriority").as("o_prio"),
-      year(col("o_orderdate")).as("o_year"))
+    ordersCents(spark, dir, col("o_orderpriority").as("o_prio"))
       .createOrReplaceTempView(view)
     spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.sqlns")
     spark.sql(s"DROP TABLE IF EXISTS $tbl")

@@ -1274,4 +1274,49 @@ class SinksSpec extends SparkSpec {
     assert(src(v3).filter(col("y") <= 7).count() == 512)
     assert(Versioned.read(spark, tbl).count() == 64L * 63L)
   }
+
+  test("substrates are reused while their probe passes and restaged once lost; a memoized one re-probes in a new session") {
+    // A private corpus dir: substrate paths are keyed by the corpus dir,
+    // so this test's tables are its own.
+    val corpus = java.nio.file.Files.createTempDirectory("graft_spec_corpus")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(sfDir, "orders.parquet"),
+      corpus.resolve("orders.parquet"))
+    val dir = corpus.toString
+    def substrate(name: String): String = new java.io.File(
+      sys.props("java.io.tmpdir"), s"graft_${name}_${Sinks.dirTag(dir)}").getPath
+    def disjoint(a: Map[String, _], b: Map[String, _]) =
+      a.nonEmpty && b.nonEmpty && a.keySet.intersect(b.keySet).isEmpty
+
+    // q215: probed on every call
+    val restore = substrate("restore_vt")
+    val r1 = Sinks.restoreRollback(spark, dir).collect().toSeq
+    val built = fileState(new java.io.File(restore))
+    assert(Sinks.restoreRollback(spark, dir).collect().toSeq == r1)
+    assert(Versioned.latestVersion(spark, restore) == 3,
+      "a valid substrate must not gain a version")
+    assert(fileState(new java.io.File(restore)) == built,
+      "a valid substrate's data files must not be rewritten")
+    MaterializedTables.deleteTree(restore)
+    assert(Sinks.restoreRollback(spark, dir).collect().toSeq == r1)
+    assert(Versioned.latestVersion(spark, restore) == 3)
+    assert(disjoint(fileState(new java.io.File(restore)), built),
+      "a lost substrate must restage into fresh data dirs")
+
+    // q210's merge target: probed once per session
+    val mergeVt = substrate("merge_vt")
+    val m1 = Sinks.mergeUpsert(spark, dir).collect().toSeq
+    val v1Files = dataDirFiles(mergeVt, 1)
+    assert(Sinks.mergeUpsert(spark, dir).collect().toSeq == m1)
+    assert(Sinks.mergeUpsert(spark.newSession(), dir).collect().toSeq == m1)
+    assert(dataDirFiles(mergeVt, 1) == v1Files,
+      "a valid v1 must be reused, in this session and in a new one")
+    MaterializedTables.deleteTree(mergeVt)
+    assert(Sinks.mergeUpsert(spark.newSession(), dir).collect().toSeq == m1)
+    assert(disjoint(dataDirFiles(mergeVt, 1), v1Files),
+      "a new session must find the lost v1 and restage it")
+
+    Seq(restore, mergeVt, dir).foreach(MaterializedTables.deleteTree)
+    MaterializedTables.deleteTree(dir) // a missing tree is a no-op
+    assert(!new java.io.File(dir).exists())
+  }
 }
