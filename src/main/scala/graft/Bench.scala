@@ -90,10 +90,7 @@ object Bench {
     // sf0.001 substrates must not pin executor storage while sf0.1 runs,
     // and the prestage below rebuilds the target-SF ones the timed pass
     // will ride.
-    graft.queries.Dedup.evictCaches(spark)
-    graft.queries.Similarity.evictCaches(spark)
-    graft.queries.TextAnalysis.evictCaches(spark)
-    graft.queries.ExactSubstr.evictCaches(spark)
+    graft.queries.Substrates.evict(spark)
     // Prestage the shared substrates at the TARGET SF, untimed:
     //  - the lake substrates (sinks family): versioned tables are
     //    cross-session disk artifacts — a warehouse's table exists before

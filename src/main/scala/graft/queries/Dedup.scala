@@ -42,67 +42,11 @@ object Dedup {
     * noise floor the oracles already accept.
     */
   // The shingle index is the shared substrate of every near-dup variant
-  // (Jaccard, MinHash, SimHash, clustering): computed once per (session,
-  // corpus) and materialized as PARQUET, exactly as a production dedup pass
-  // would materialize it rather than re-shingling the corpus per algorithm.
-  // Parquet rather than `persist` for the measured reason documented at
-  // TextAnalysis.tokenizedDocs: the in-memory columnar cache row-decodes
-  // ARRAY columns on every consumer read (the sh array rides ~8 consumers),
-  // while the parquet nested reader is vectorized and prunes.
-  private val shingleCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, java.nio.file.Path)]
-
-  // Complex-typed substrates go through MaterializedTables.materialize
-  // (parquet, not persist — see its Scaladoc for the measured rationale);
-  // primitive-typed tables stay on `persist`, whose in-memory vectorized
-  // read path handles them well.
-  private def materializeParquet[K](
-      cache: scala.collection.concurrent.TrieMap[K, (DataFrame, java.nio.file.Path)],
-      key: K, spark: SparkSession, prefix: String)(build: => DataFrame): DataFrame =
-    MaterializedTables.materialize(cache, key, spark, prefix)(build)
-
-  // Per-doc signature tables (minhash, simhash): one short row per document,
-  // consumed on BOTH sides of their band/chunk self-join — materialized so
-  // the signature pipeline runs once per corpus, not once per join side.
-  private val sigCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
-
-  private def materializedSig(spark: SparkSession, dir: String, name: String)
-                             (build: => DataFrame): DataFrame =
-    sigCache.synchronized { sigCache.getOrElseUpdate((spark, dir, name),
-      build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)) }
-
-  /** Unpersist and drop every cached index belonging to `spark` (all corpora).
-    * Call when a corpus pass is over — e.g. Bench evicts the warm-phase
-    * entries before the timed run so sf0.001 indexes don't pin executor
-    * storage while sf0.1 executes, and long-lived sessions don't accumulate
-    * per-corpus tables forever.
-    */
-  def evictCaches(spark: SparkSession): Unit = {
-    Seq(rarePairCache, pairCache).foreach { cache =>
-      cache.keys.filter(_._1 eq spark).foreach { k =>
-        cache.remove(k).foreach(_.unpersist(blocking = false))
-      }
-    }
-    sigCache.keys.filter(_._1 eq spark).foreach { k =>
-      sigCache.remove(k).foreach(_.unpersist(blocking = false))
-    }
-    Seq(shingleCache, orientedCache, bucketCache).foreach { cache =>
-      cache.synchronized {
-        cache.keys.filter(_._1 eq spark).foreach { k =>
-          cache.remove(k).foreach { case (_, path) =>
-            MaterializedTables.delete(path)
-          }
-        }
-      }
-    }
-  }
-
-  // builds are guarded: TrieMap.getOrElseUpdate may evaluate the by-name
-  // builder in two racing threads, and the loser's persisted DataFrame
-  // would be unreachable by evictCaches forever.
+  // (Jaccard, MinHash, SimHash, clustering), as a production dedup pass
+  // would materialize it rather than re-shingle the corpus per algorithm;
+  // its sh array rides ~8 consumers, hence parquet (see Substrates).
   private def shingled(spark: SparkSession, dir: String): DataFrame =
-    materializeParquet(shingleCache, (spark, dir), spark, "graft_shingles") {
+    Substrates.parquet(spark, dir, "dedup/shingles") {
       documents(spark, dir)
         // The test corpus arrives as ONE parquet row group → one input
         // partition, which would serialize all the per-doc string work onto a
@@ -145,10 +89,7 @@ object Dedup {
     */
   // The verified near-dup pair table (J ≥ 0.6) is itself a shared pipeline
   // artifact: the reporting query (q36) and cluster formation (q62) both
-  // consume it, so like the shingle index it is materialized once per
-  // (session, corpus).
-  private val pairCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  // consume it.
 
   /** (id_a, id_b, jac) with exact Jaccard ≥ 0.6, id_a < id_b, unrounded.
     * Pair generation is ONE groupBy(shingle) into sorted doc-id buckets,
@@ -159,15 +100,12 @@ object Dedup {
     */
   // The FULL (uncapped) inverted-index bucket table (s64 → sorted doc ids):
   // the one groupBy(shingle) the whole family derives from. Materialized
-  // separately from pairCache because TWO consumers with different cap
+  // separately from the pair table because TWO consumers with different cap
   // policies read it — nearDupPairs (df ≤ 100 rare buckets) and q169's
   // salted variant (rare + salted hot) — and the collect_set aggregation is
   // the expensive step they'd otherwise each repeat.
-  private val bucketCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, java.nio.file.Path)]
-
   private[queries] def shingleBuckets(spark: SparkSession, dir: String): DataFrame =
-    materializeParquet(bucketCache, (spark, dir), spark, "graft_buckets") {
+    Substrates.parquet(spark, dir, "dedup/buckets") {
       shingled(spark, dir)
         .select(col("doc_id"), explode(col("sh")).as("s64"))
         .groupBy("s64").agg(sort_array(collect_set("doc_id")).as("ids"))
@@ -180,20 +118,17 @@ object Dedup {
   // 0.6 after joining set sizes) and the filter funnel's near-dup stage
   // (c ≥ 5 among survivors). This is the "candidate table" a production
   // near-dup pipeline persists between stages.
-  private val rarePairCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private[queries] def rarePairCounts(spark: SparkSession, dir: String): DataFrame =
-    rarePairCache.synchronized { rarePairCache.getOrElseUpdate((spark, dir),
+    Substrates.persisted(spark, dir, "dedup/rarepairs") {
       shingleBuckets(spark, dir)
         .filter(size(col("ids")).between(2, 100))
         .select(explode(pairGen).as("p"))
         .groupBy(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
         .agg(count(lit(1)).as("c"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)) }
+    }
 
   private[queries] def nearDupPairs(spark: SparkSession, dir: String): DataFrame =
-    pairCache.synchronized { pairCache.getOrElseUpdate((spark, dir), {
+    Substrates.persisted(spark, dir, "dedup/pairs") {
       val buckets = shingleBuckets(spark, dir)
         .filter(size(col("ids")) <= 100)
       val sizes = buckets.select(explode(col("ids")).as("doc_id"))
@@ -204,8 +139,7 @@ object Dedup {
         .withColumn("jac", col("c").cast("double") / (col("na") + col("nb") - col("c")))
         .filter(col("jac") >= 0.6)
         .select(col("id_a"), col("id_b"), col("jac"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }) }
+    }
 
   def ngramJaccard(spark: SparkSession, dir: String): DataFrame =
     nearDupPairs(spark, dir)
@@ -342,7 +276,7 @@ object Dedup {
     // at any scale the signature pass is map-only. h = s mod P is hoisted
     // once per element; each h·a+b stays < 2⁶² (both factors < 2³¹).
     // Materialized because the band self-join consumes it on both sides.
-    val mh = materializedSig(spark, dir, "minhash") {
+    val mh = Substrates.persisted(spark, dir, "dedup/minhash") {
       val mhCols = (0 until 64).map(j => expr(
         s"array_min(transform(hs, x -> pmod(x * ${seeds(j)._1}L + ${seeds(j)._2}L, ${P}L)))")
         .as(s"mh$j"))
@@ -417,7 +351,7 @@ object Dedup {
         .reduce(_ + _)
     // Materialized: 16 bytes per doc, consumed by both chunk-join sides —
     // without it the whole shingle+md5+vote pipeline runs twice.
-    val sig = materializedSig(spark, dir, "simhash") {
+    val sig = Substrates.persisted(spark, dir, "dedup/simhash") {
       votes.select(col("doc_id"), half(0).as("lo"), half(32).as("hi"))
     }
     sig.select(col("doc_id"), col("lo"), col("hi"),
@@ -494,11 +428,10 @@ object Dedup {
   }
 
   /** The connected-component labels (doc_id, cluster_id) behind q62/q153 —
-    * min-label propagation + pointer halving, materialized once per
-    * (session, corpus) like the pair table it rides on.
+    * min-label propagation + pointer halving.
     */
   private[queries] def ccLabels(spark: SparkSession, dir: String): DataFrame =
-   materializedSig(spark, dir, "cc_labels") {
+   Substrates.persisted(spark, dir, "dedup/cc_labels") {
     val pairs = nearDupPairs(spark, dir).select("id_a", "id_b")
     val edges = pairs.union(pairs.select(col("id_b"), col("id_a")))
       .toDF("src", "dst").persist()
@@ -579,13 +512,9 @@ object Dedup {
   // The oriented edge set is consumed THREE times inside the triangle query
   // (e1/e2 wedge sides + e3 closing probe); without materialization each
   // consumer recomputes the degree aggregation and both degree joins from
-  // the pair table — measured at +1.6 s on sf0.1 (r8 bench). Cached per
-  // (session, corpus) like the pair table it derives from.
-  private val orientedCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, java.nio.file.Path)]
-
+  // the pair table — measured at +1.6 s on sf0.1 (r8 bench).
   private[queries] def orientedEdges(spark: SparkSession, dir: String): DataFrame =
-    materializeParquet(orientedCache, (spark, dir), spark, "graft_oriented") {
+    Substrates.parquet(spark, dir, "dedup/oriented") {
       val pairs = nearDupPairs(spark, dir).select("id_a", "id_b")
       val deg = pairs.union(pairs.select(col("id_b"), col("id_a")))
         .toDF("id", "nbr")
@@ -825,7 +754,7 @@ object Dedup {
     * every shingle in the corpus.
     */
   private[queries] def sourceHashes(spark: SparkSession, dir: String): DataFrame =
-    materializedSig(spark, dir, "srchash") {
+    Substrates.persisted(spark, dir, "dedup/srchash") {
       val src = documents(spark, dir).select("doc_id", "source")
       shingleStrings(spark, dir)
         .join(src, "doc_id")
@@ -833,16 +762,24 @@ object Dedup {
           expr("cast(conv(substring(md5(s), 1, 15), 16, 10) as bigint)").as("x"))
     }
 
-  def crossSourceMinhash(spark: SparkSession, dir: String): DataFrame = {
-    val h = sourceHashes(spark, dir).select(col("source"), pmod(col("x"), lit(P)).as("h"))
-    val mins = (0 until 64).map(j =>
-      min(pmod(col("h") * seeds(j)._1 + seeds(j)._2, lit(P))).as(s"m$j"))
-    // Materialized like the per-doc signature tables: the pairwise estimate
-    // reads the sketch on BOTH sides of its self-join, and without this the
-    // full corpus hash scan would run twice.
-    val sig = materializedSig(spark, dir, "srcsketch") {
-      h.groupBy("source").agg(mins.head, mins.tail: _*)
+  /** The 64 MinHash slots m0..m63 over a hash column `h` (already mod P). */
+  private val sketchSlots: Seq[Column] = (0 until 64).map(j =>
+    min(pmod(col("h") * seeds(j)._1 + seeds(j)._2, lit(P))).as(s"m$j"))
+
+  /** (source, m0..m63): each source's union sketch over its whole corpus.
+    * Materialized like the per-doc signature tables: q159's pairwise
+    * estimate reads it on BOTH sides of its self-join (without this the
+    * full corpus hash scan would run twice), and q172 checks its merged
+    * sketch against it.
+    */
+  private def sourceSketch(spark: SparkSession, dir: String): DataFrame =
+    Substrates.persisted(spark, dir, "dedup/srcsketch") {
+      sourceHashes(spark, dir).select(col("source"), pmod(col("x"), lit(P)).as("h"))
+        .groupBy("source").agg(sketchSlots.head, sketchSlots.tail: _*)
     }
+
+  def crossSourceMinhash(spark: SparkSession, dir: String): DataFrame = {
+    val sig = sourceSketch(spark, dir)
     val matches = (0 until 64).map(j =>
       when(col(s"a.m$j") === col(s"b.m$j"), 1).otherwise(0)).reduce(_ + _)
     // |sources|-row side broadcast: the pairwise estimate is a bounded-build
@@ -869,12 +806,10 @@ object Dedup {
     * the (source, is_new) sketch table is |sources|·2 rows.
     */
   def sketchMergeMaintenance(spark: SparkSession, dir: String): DataFrame = {
-    val h = sourceHashes(spark, dir)
-      .select(col("source"), col("grp"), pmod(col("x"), lit(P)).as("h"))
-    val mins = (0 until 64).map(j =>
-      min(pmod(col("h") * seeds(j)._1 + seeds(j)._2, lit(P))).as(s"m$j"))
-    val parts = materializedSig(spark, dir, "srcsketch_parts") {
-      h.groupBy("source", "grp").agg(mins.head, mins.tail: _*)
+    val parts = Substrates.persisted(spark, dir, "dedup/srcsketch_parts") {
+      sourceHashes(spark, dir)
+        .select(col("source"), col("grp"), pmod(col("x"), lit(P)).as("h"))
+        .groupBy("source", "grp").agg(sketchSlots.head, sketchSlots.tail: _*)
     }
     // merged slot j = min over the two group sketches — the union-merge; a
     // source with no batch docs merges its standing sketch alone (min over
@@ -882,10 +817,7 @@ object Dedup {
     val merged = parts.groupBy("source")
       .agg((0 until 64).map(j => min(col(s"m$j")).as(s"m$j")).head,
            (0 until 64).map(j => min(col(s"m$j")).as(s"m$j")).tail: _*)
-    // The directly-computed full-corpus sketch: q159's cached artifact.
-    val full = materializedSig(spark, dir, "srcsketch") {
-      h.drop("grp").groupBy("source").agg(mins.head, mins.tail: _*)
-    }
+    val full = sourceSketch(spark, dir)
     val standing = parts.filter(col("grp") === 0).drop("grp")
     val eqSlots = (0 until 64).map(j =>
       when(col(s"g.m$j") === col(s"f.m$j"), 1).otherwise(0)).reduce(_ + _)
@@ -950,9 +882,9 @@ object Dedup {
   def prefixFilterJoin(spark: SparkSession, dir: String): DataFrame = {
     val sh = shingled(spark, dir)
     // The prefix index is a standing family artifact like the signature
-    // tables: materialized once per (session, corpus) — the ranking join +
-    // per-doc sort is the build cost, probes pay only the bucket join.
-    val pref = materializedSig(spark, dir, "prefix") {
+    // tables: the ranking join + per-doc sort is the build cost, probes pay
+    // only the bucket join.
+    val pref = Substrates.persisted(spark, dir, "dedup/prefix") {
       val dfs = shingleBuckets(spark, dir).select(col("s64"), size(col("ids")).as("df"))
       sh.select(col("doc_id"), explode(col("sh")).as("s64"))
         .join(dfs, "s64")

@@ -74,16 +74,6 @@ object ExactSubstr {
     */
   private val L = 8
 
-  private val spanCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  def evictCaches(spark: SparkSession): Unit =
-    spanCache.synchronized {
-      spanCache.keys.filter(_._1 eq spark).foreach { k =>
-        spanCache.remove(k).foreach(_.unpersist(blocking = false))
-      }
-    }
-
   /** Distributed GROUP-START rank by the key column `key` (order-
     * preserving, 0-based, equal keys share their first global row index —
     * SQL `rank()` semantics): range-partition + per-partition sort, then
@@ -166,19 +156,17 @@ object ExactSubstr {
   }
 
   /** q190 — maximal cross-doc duplicated spans (any length ≥ L, exact
-    * boundaries) + the full-SA rank of each span's start suffix. Built once
-    * per (session, corpus) like the other derived substrates; the result
-    * table is primitive-typed, so `persist` is the right cache (the r10
-    * parquet rule is for complex-typed columns).
+    * boundaries) + the full-SA rank of each span's start suffix; a
+    * primitive-typed substrate, so persisted.
     */
   def exactSubstrSpans(spark: SparkSession, dir: String): DataFrame =
-    spanCache.synchronized { spanCache.getOrElseUpdate((spark, dir), {
+    Substrates.memo(spark, dir, "exactsubstr/spans") {
       val (df, checkpoints) = build(spark, dir)
       val res = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       res.count()  // force now so the bootstrap checkpoint can be freed
       checkpoints.foreach(_.unpersist(blocking = false))
       res
-    }) }
+    }(_.unpersist(blocking = false))
 
   private def build(spark: SparkSession, dir: String): (DataFrame, List[DataFrame]) = {
     val docs = TextAnalysis.tokenizedDocs(spark, dir)

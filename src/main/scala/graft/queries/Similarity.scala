@@ -28,22 +28,14 @@ object Similarity {
   /** vec_id, v (double), nrm = ||v|| — norm precomputed once per vector so
     * every scored pair costs a single dot product.
     *
-    * Materialized once per (session, corpus): the widened+normed vector
-    * table is the substrate of the whole ANN family (brute-force, LSH, IVF,
-    * PQ, k-means, eval) — a production index build parses and norms the
-    * embedding column once, not once per index variant. Materialized as
-    * PARQUET, not `persist`, for the same measured reason as the token
-    * table (TextAnalysis.tokenizedDocs): the in-memory cache row-decodes
-    * array columns, and consumers' executor CPU ballooned under persist
-    * (q117 +5.6 s exec_ms at sf0.1); the vectorized nested parquet reader
-    * is cheaper than the cache it replaced. Files released via
-    * `evictCaches` with the coarse-assignment table.
+    * The widened+normed vector table is the substrate of the whole ANN
+    * family (brute-force, LSH, IVF, PQ, k-means, eval) — a production index
+    * build parses and norms the embedding column once, not once per index
+    * variant. Parquet, not `persist`: under persist the consumers' executor
+    * CPU ballooned (q117 +5.6 s exec_ms at sf0.1).
     */
-  private val corpusCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, java.nio.file.Path)]
-
   private def corpus(spark: SparkSession, dir: String): DataFrame =
-    MaterializedTables.materialize(corpusCache, (spark, dir), spark, "graft_vecs") {
+    Substrates.parquet(spark, dir, "similarity/vecs") {
       embeddings(spark, dir)
         // One parquet row group → one input partition: redistribute before the
         // per-row vector math (bits, dot products) so it runs at full
@@ -154,66 +146,21 @@ object Similarity {
   private val wAssign =
     Window.partitionBy("vec_id").orderBy(col("csim").desc, col("cent_id"))
 
-  // The coarse assignment is the shared substrate of the whole IVF family
-  // (q59 search, q131 SemDeDup, q132 IVF-PQ): materialized once per
-  // (session, corpus) and kept persisted, the same convention as the dedup
-  // family's shingle index — a production pipeline quantizes the corpus
-  // once, not once per consumer. Parquet-materialized (the row carries the
-  // vector arrays); evictCaches releases it when the corpus pass is over.
-  private val assignCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, java.nio.file.Path)]
-
-  /** Drop the materialized coarse assignments belonging to `spark`
-    * (all corpora) — same lifecycle hook as `Dedup.evictCaches`.
-    */
-  def evictCaches(spark: SparkSession): Unit = {
-    assignCache.synchronized {
-      assignCache.keys.filter(_._1 eq spark).foreach { k =>
-        assignCache.remove(k).foreach { case (_, path) =>
-          MaterializedTables.delete(path)
-        }
-      }
-    }
-    corpusCache.synchronized {
-      corpusCache.keys.filter(_._1 eq spark).foreach { k =>
-        corpusCache.remove(k).foreach { case (_, path) =>
-          MaterializedTables.delete(path)
-        }
-      }
-    }
-    hnswCache.synchronized {
-      hnswCache.keys.filter(_._1 eq spark).foreach { k =>
-        hnswCache.remove(k).foreach(_.unpersist(blocking = false))
-      }
-    }
-    // Trained-kmeans entries are localCheckpoint-backed: dropping the map
-    // entry alone frees the RDD blocks only via GC + ContextCleaner, which
-    // is non-deterministic — unpersist the checkpointed RDD explicitly so
-    // Bench's evict-between-passes cannot leave stale blocks resident.
-    kmeansCache.synchronized {
-      kmeansCache.keys.filter(_._1 eq spark).foreach { k =>
-        kmeansCache.remove(k).foreach { case (df, _) =>
-          org.apache.spark.sql.GraftSqlBridge.unpersistCheckpointed(df)
-        }
-      }
-    }
-  }
-
-  /** Nearest-centroid assignment with all vector columns retained.
+  /** Nearest-centroid assignment with all vector columns retained: the
+    * shared substrate of the whole IVF family (q59 search, q131 SemDeDup,
+    * q132 IVF-PQ) — a production pipeline quantizes the corpus once, not
+    * once per consumer.
     * Spelled as a `max_by` aggregation, NOT a row_number window: partial
     * aggregation collapses the 16 candidate rows per vector map-side, so
     * the exchange carries one row per vector instead of 16 — at corpus
     * scale that is a 16× smaller shuffle for the same argmax (comparison
     * on (csim, −cent_id) reproduces the window's csim DESC, cent_id ASC
     * tie-break exactly; cent_id is unique per group, so the order is
-    * total and the pick deterministic). Synchronized build: TrieMap's
-    * by-name getOrElseUpdate may race two builders and leak the loser's
-    * persisted table (the Dedup.materializedSig rule).
+    * total and the pick deterministic). Parquet: the row carries two
+    * 64-dim arrays.
     */
   private[queries] def ivfAssignFull(spark: SparkSession, dir: String): DataFrame =
-    // Parquet like the other complex-typed substrates (the row carries two
-    // 64-dim arrays); see MaterializedTables for the measured rationale.
-    MaterializedTables.materialize(assignCache, (spark, dir), spark, "graft_assign") {
+    Substrates.parquet(spark, dir, "similarity/assign") {
       centroidSims(spark, dir)
         .groupBy(col("vec_id"))
         .agg(max_by(
@@ -354,10 +301,17 @@ object Similarity {
     * corpus-sized shuffle. Integers end-to-end (hit counts), so the oracle
     * hash is exact — no float tolerance games.
     */
-  def annRecall(spark: SparkSession, dir: String): DataFrame = {
-    val brute = cosineTopK(spark, dir).select(col("probe_id"), col("vec_id"))
-    val approx = annLsh(spark, dir).select(col("probe_id"), col("vec_id"))
-    val hits = brute.join(approx, Seq("probe_id", "vec_id"), "left_semi")
+  def annRecall(spark: SparkSession, dir: String): DataFrame =
+    recallAt5(cosineTopK(spark, dir), annLsh(spark, dir))
+
+  /** Per probe of the (probe_id, vec_id) top-5 `truth`: how many of its
+    * neighbors `approx` found (n_hit) and n_hit / 5 (recall) — the tail of
+    * every ANN recall evaluator.
+    */
+  private def recallAt5(truth: DataFrame, approx: DataFrame): DataFrame = {
+    val brute = truth.select(col("probe_id"), col("vec_id"))
+    val hits = brute
+      .join(approx.select(col("probe_id"), col("vec_id")), Seq("probe_id", "vec_id"), "left_semi")
       .groupBy("probe_id").agg(count(lit(1)).as("n_hit"))
     brute.select("probe_id").distinct()
       .join(hits, Seq("probe_id"), "left")
@@ -459,16 +413,7 @@ object Similarity {
       .withColumn("d", expr(
         "aggregate(zip_with(pv, v, (x, y) -> (x - y) * (x - y)), 0D, (a, s) -> a + s)"))
       .withColumn("rnk", row_number().over(w)).filter(col("rnk") <= 5)
-      .select("probe_id", "vec_id")
-    val adcTop = pqAdc(spark, dir).select("probe_id", "vec_id")
-    val hits = bruteTop.join(adcTop, Seq("probe_id", "vec_id"), "left_semi")
-      .groupBy("probe_id").agg(count(lit(1)).as("n_hit"))
-    bruteTop.select("probe_id").distinct()
-      .join(hits, Seq("probe_id"), "left")
-      .select(col("probe_id"),
-        coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-        round(coalesce(col("n_hit"), lit(0L)).cast("double") / 5.0, 2).as("recall"))
-      .orderBy("probe_id")
+    recallAt5(bruteTop, pqAdc(spark, dir))
   }
 
   /** SemDeDup's per-bucket population cap: any coarse cluster larger than
@@ -719,63 +664,62 @@ object Similarity {
     }: _*))
 
   // Trained Lloyd state — the final assignment (vec_id, v, cent_id, d)
-  // plus the converged centroid table — cached per (session, corpus) like
-  // the coarse assignment: training runs ONCE and its consumers share it
-  // (q146 reports on it; q156 searches with it — the train→index handoff).
-  private val kmeansCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, Array[Seq[Long]])]
-
+  // plus the converged centroid table: training runs ONCE and its consumers
+  // share it (q146 reports on it; q156 searches with it — the train→index
+  // handoff).
   private[queries] def kmeansTrained(
       spark: SparkSession, dir: String): (DataFrame, Array[Seq[Long]]) =
-    kmeansCache.synchronized {
-      kmeansCache.getOrElseUpdate((spark, dir), {
-        import spark.implicits._
-        val qv = embeddings(spark, dir)
-          .repartition(col("vec_id"))
-          .select(col("vec_id"),
-            transform(col("embedding"),
-              x => floor(x.cast("double") * lit(1e6)).cast("long")).as("v"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        var cents: Array[Seq[Long]] = qv
-          .withColumn("h", md5(col("vec_id").cast("string")))
-          .orderBy(col("h"), col("vec_id")).limit(kmeansK)
-          .select(col("v")).as[Seq[Long]].collect()
-        var assign: DataFrame = null
-        var converged = false
-        var r = 1
-        while (r <= kmeansMaxRounds && !converged) {
-          // Map-only assignment pass: no crossJoin row blow-up, no per-pass
-          // (vec_id, v) re-shuffle — see centroidArgmin.
-          assign = qv
-            .withColumn("m", centroidArgmin(cents))
-            .select(col("vec_id"), col("v"),
-              col("m.cent_id").as("cent_id"), col("m.d").as("d"))
-          if (r < kmeansMaxRounds) {
-            // Per-dimension floor-mean; clusters that lost every member keep
-            // their previous centroid (deterministic, mirrored in the oracle).
-            val upd = assign
-              .select(col("cent_id"), posexplode(col("v")).as(Seq("dim", "x")))
-              .groupBy(col("cent_id"), col("dim"))
-              .agg(floor(sum(col("x")).cast("double") / count(lit(1)))
-                .cast("long").as("cv"))
-              .as[(Int, Int, Long)].collect()
-              .groupBy(_._1).map { case (cid, rs) =>
-                cid -> rs.sortBy(_._2).map(_._3).toSeq }
-            val next = Array.tabulate(kmeansK)(i => upd.getOrElse(i, cents(i)))
-            // Stable centroids ⇒ the next pass would reproduce `assign`
-            // verbatim — stop here; the oracle's remaining unrolled passes
-            // are the identity on this state.
-            converged = next.sameElements(cents)
-            cents = next
-          }
-          r += 1
+    Substrates.memo(spark, dir, "similarity/kmeans") {
+      import spark.implicits._
+      val qv = embeddings(spark, dir)
+        .repartition(col("vec_id"))
+        .select(col("vec_id"),
+          transform(col("embedding"),
+            x => floor(x.cast("double") * lit(1e6)).cast("long")).as("v"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      var cents: Array[Seq[Long]] = qv
+        .withColumn("h", md5(col("vec_id").cast("string")))
+        .orderBy(col("h"), col("vec_id")).limit(kmeansK)
+        .select(col("v")).as[Seq[Long]].collect()
+      var assign: DataFrame = null
+      var converged = false
+      var r = 1
+      while (r <= kmeansMaxRounds && !converged) {
+        // Map-only assignment pass: no crossJoin row blow-up, no per-pass
+        // (vec_id, v) re-shuffle — see centroidArgmin.
+        assign = qv
+          .withColumn("m", centroidArgmin(cents))
+          .select(col("vec_id"), col("v"),
+            col("m.cent_id").as("cent_id"), col("m.d").as("d"))
+        if (r < kmeansMaxRounds) {
+          // Per-dimension floor-mean; clusters that lost every member keep
+          // their previous centroid (deterministic, mirrored in the oracle).
+          val upd = assign
+            .select(col("cent_id"), posexplode(col("v")).as(Seq("dim", "x")))
+            .groupBy(col("cent_id"), col("dim"))
+            .agg(floor(sum(col("x")).cast("double") / count(lit(1)))
+              .cast("long").as("cv"))
+            .as[(Int, Int, Long)].collect()
+            .groupBy(_._1).map { case (cid, rs) =>
+              cid -> rs.sortBy(_._2).map(_._3).toSeq }
+          val next = Array.tabulate(kmeansK)(i => upd.getOrElse(i, cents(i)))
+          // Stable centroids ⇒ the next pass would reproduce `assign`
+          // verbatim — stop here; the oracle's remaining unrolled passes
+          // are the identity on this state.
+          converged = next.sameElements(cents)
+          cents = next
         }
-        // localCheckpoint (eager) materializes the assignment and truncates
-        // its lineage off qv, so qv's storage can be released immediately.
-        val mat = assign.localCheckpoint()
-        qv.unpersist(blocking = false)
-        (mat, cents)
-      })
+        r += 1
+      }
+      // localCheckpoint (eager) materializes the assignment and truncates
+      // its lineage off qv, so qv's storage can be released immediately.
+      val mat = assign.localCheckpoint()
+      qv.unpersist(blocking = false)
+      (mat, cents)
+    } {
+      // Dropping the entry alone would free the checkpoint's blocks only via
+      // GC + ContextCleaner, at some later point: unpersist them explicitly.
+      case (mat, _) => org.apache.spark.sql.GraftSqlBridge.unpersistCheckpointed(mat)
     }
 
   def kmeansLloyd(spark: SparkSession, dir: String): DataFrame =
@@ -943,26 +887,21 @@ object Similarity {
         .when(col("h") % 8 === 0, 1).otherwise(0))
       .select("vec_id", "lvl")
 
-  private val hnswCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   /** (layer, src, dst) small-world edges: every node appears on layers
     * 0..lvl; per layer, candidate pairs come from shared coarse-centroid
     * buckets (each node's top-`hnswBuckets` IVF buckets — the same
     * assignment substrate as q59, so construction is bucket-joined, NEVER
     * all-pairs); each node keeps its `hnswM` nearest candidates by cosine
-    * and links are symmetrized (the paper's bidirectional insert). The
-    * graph is a per-(session, corpus) substrate like the shingle index;
-    * primitive-typed → persist.
+    * and links are symmetrized (the paper's bidirectional insert).
     */
   private[queries] def hnswEdges(spark: SparkSession, dir: String): DataFrame =
-    hnswCache.synchronized { hnswCache.getOrElseUpdate((spark, dir), {
+    Substrates.memo(spark, dir, "similarity/hnsw") {
       val edges = hnswEdgesCapped(spark, dir, hnswBucketCap)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       edges.count()  // fill once at build time — every consumer (stats
                      // agg, search collect, specs) then reads cached blocks
       edges
-    }) }
+    }(_.unpersist(blocking = false))
 
   /** Uncached build at an explicit bucket cap — the spec's handle for
     * driving the sub-bucket split path (the default cap is inactive at the
@@ -1114,18 +1053,8 @@ object Similarity {
   /** q193 — recall@5 of the graph index against brute force (the q108
     * evaluation pattern applied to the graph member of the ANN family).
     */
-  def hnswRecall(spark: SparkSession, dir: String): DataFrame = {
-    val brute = cosineTopK(spark, dir).select(col("probe_id"), col("vec_id"))
-    val approx = hnswSearch(spark, dir)
-    val hits = brute.join(approx, Seq("probe_id", "vec_id"), "left_semi")
-      .groupBy("probe_id").agg(count(lit(1)).as("n_hit"))
-    brute.select("probe_id").distinct()
-      .join(hits, Seq("probe_id"), "left")
-      .select(col("probe_id"),
-        coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-        round(coalesce(col("n_hit"), lit(0L)).cast("double") / 5.0, 2).as("recall"))
-      .orderBy("probe_id")
-  }
+  def hnswRecall(spark: SparkSession, dir: String): DataFrame =
+    recallAt5(cosineTopK(spark, dir), hnswSearch(spark, dir))
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q192_hnsw_stats"         -> hnswStats _,

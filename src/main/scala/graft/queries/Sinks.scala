@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.queries.MaterializedTables.deleteTree
+import graft.queries.Substrates.deleteTree
 import graft.tables.Tables._
 import graft.tables.Versioned
 
@@ -17,14 +17,6 @@ import graft.tables.Versioned
   * so sf0.001 warmup and sf0.1 timed runs never collide.
   */
 object Sinks {
-
-  /** Stable per-session cache key that does not RETAIN the session (a
-    * SparkSession-keyed static map would hold every session for the JVM's
-    * lifetime). Spark 4's concrete session exposes a UUID; fall back to
-    * identity hash for exotic wrappers.
-    */
-  private def sessionKey(spark: SparkSession): String =
-    org.apache.spark.sql.GraftSqlBridge.sessionUUID(spark)
 
   /** Per-corpus-dir discriminator for catalog / view / table / path names.
     * 32-bit String.hashCode alone can collide across two dirs, and a
@@ -410,19 +402,12 @@ object Sinks {
   }
 
   /** The substrate `name` of `dir`, staged by `stage` on its first use in a
-    * session and reused for the rest of it. Keyed by sessionUUID, not the
-    * SparkSession itself: the value is just a path, and holding the session
-    * in a static map would retain every session ever used for the JVM's
-    * lifetime (notebook servers, test JVMs).
+    * session and reused for the rest of it. Eviction only forgets the path:
+    * the staged table stays for later sessions to probe.
     */
-  private val sessionMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), String]
-
   private def perSession(spark: SparkSession, dir: String, name: String)(
       stage: => String): String =
-    sessionMemo.synchronized {
-      sessionMemo.getOrElseUpdate((sessionKey(spark), dir, name), stage)
-    }
+    Substrates.memo(spark, dir, s"sinks/$name")(stage)(_ => ())
 
   /** Order prices in integer cents: sums stay exact on both engines. */
   private def cents: Column = floor(col("o_totalprice") * 100 + 0.5)

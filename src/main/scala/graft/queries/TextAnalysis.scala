@@ -14,32 +14,22 @@ import graft.tables.Tables._
   */
 object TextAnalysis {
 
-  /** doc_id (+lang) with the lowercased non-empty token array.
-    * Repartitioned by doc_id first: the test corpus is one parquet row group
-    * → one input partition, which would pin all tokenization to one core
-    * (same rationale as Dedup.shingled).
+  /** The full document row with `toks`, its lowercased non-empty token
+    * array, appended. Repartitioned by doc_id first: the test corpus is one
+    * parquet row group → one input partition, which would pin all
+    * tokenization to one core (same rationale as Dedup.shingled).
     *
-    * Materialized once per (session, corpus) like Dedup's shingle index:
-    * the token table is the shared substrate of every tokenizing consumer
+    * The token table is the shared substrate of every tokenizing consumer
     * (TF-IDF, BM25, PMI, BPE, quality, percentiles, Pipeline's filters,
     * Corpus construction, Dedup's keeper) — a production pipeline
-    * tokenizes the corpus once, not once per metric.
-    */
-  private val tokCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, java.nio.file.Path)]
-
-  /** The full document row with `toks` appended, materialized ONCE per
-    * (session, corpus) as PARQUET — deliberately NOT `persist`: Spark's
-    * in-memory columnar cache decodes complex types row-by-row, and an A/B
-    * at sf0.1 measured the token family's executor CPU DOUBLING under
-    * `persist` (q145 1.6 → 21 s exec_ms, q110/q123 +10 s each) even while
-    * walls fell — local[32] parallelism hid a 2× cluster-CPU bill. The
-    * parquet round trip keeps the build-once property and gives every
-    * consumer a vectorized nested-column scan with real column pruning —
-    * the shape a production tokenized-corpus table has on disk anyway.
+    * tokenizes the corpus once, not once per metric. PARQUET, deliberately
+    * NOT `persist`: an A/B at sf0.1 measured the token family's executor
+    * CPU DOUBLING under `persist` (q145 1.6 → 21 s exec_ms, q110/q123
+    * +10 s each) even while walls fell — local[32] parallelism hid a 2×
+    * cluster-CPU bill.
     */
   private[queries] def tokenizedDocs(spark: SparkSession, dir: String): DataFrame =
-    MaterializedTables.materialize(tokCache, (spark, dir), spark, "graft_toks") {
+    Substrates.parquet(spark, dir, "text/toks") {
       documents(spark, dir).repartition(col("doc_id"))
         .withColumn("toks",
           expr("filter(split(lower(text), ' '), x -> x <> '')"))
@@ -47,17 +37,6 @@ object TextAnalysis {
 
   private def tokenized(spark: SparkSession, dir: String): DataFrame =
     tokenizedDocs(spark, dir).select(col("doc_id"), col("lang"), col("toks"))
-
-  /** Drop this session's materialized token tables (all corpora) AND their
-    * backing files — same lifecycle hook as `Dedup.evictCaches`. */
-  def evictCaches(spark: SparkSession): Unit =
-    tokCache.synchronized {
-      tokCache.keys.filter(_._1 eq spark).foreach { k =>
-        tokCache.remove(k).foreach { case (_, path) =>
-          MaterializedTables.delete(path)
-        }
-      }
-    }
 
   /** Per-document token statistics (counting + length profile). */
   def tokenStats(spark: SparkSession, dir: String): DataFrame =

@@ -34,7 +34,8 @@ object GraftSqlBridge {
     df.asInstanceOf[classic.Dataset[Row]].queryExecution.executedPlan
 
   /** Stable per-session identifier (`private[sql]` on the classic
-    * session) — cache keys that must NOT retain the session object.
+    * session) — cache keys that must NOT retain the session object. Every
+    * session this engine builds is classic; any other fails the cast.
     */
   def sessionUUID(spark: SparkSession): String =
     spark.asInstanceOf[classic.SparkSession].sessionUUID

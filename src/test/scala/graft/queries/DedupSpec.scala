@@ -133,7 +133,7 @@ class DedupSpec extends SparkSpec {
     // the cache (InMemoryRelation), not recompile the shingle pipeline. A
     // refactor that silently drops the reuse would double the family's cost
     // at corpus scale without failing any correctness test — this one fails.
-    Dedup.evictCaches(spark)
+    Substrates.evict(spark)
     Dedup.ngramJaccard(spark, sfDir).collect() // builds + persists the indexes
     // The shingle index itself is parquet-materialized (complex-typed
     // substrate — see TextAnalysis.tokenizedDocs): later family members
@@ -174,7 +174,7 @@ class DedupSpec extends SparkSpec {
     import scala.concurrent.ExecutionContext.Implicits.global
     val seqJac = Dedup.ngramJaccard(spark, sfDir).collect().toSeq
     val seqSim = Dedup.simhash(spark, sfDir).collect().toSeq
-    Dedup.evictCaches(spark)
+    Substrates.evict(spark)
     val fJac = Future(Dedup.ngramJaccard(spark, sfDir).collect().toSeq)
     val fSim = Future(Dedup.simhash(spark, sfDir).collect().toSeq)
     val fPr  = Future(Dedup.pagerank(spark, sfDir).collect().toSeq)
@@ -375,7 +375,7 @@ class DedupSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       assert(pf.map(p => (p._1, p._2)).toSet == ref, s"prefix join drift: ${pf.toSeq}")
       assert(pf.head._3 == 1.0)
-    } finally Dedup.evictCaches(spark)
+    } finally Substrates.evict(spark)
   }
 
   test("prefix-filter join equals the full-Jaccard pair set on the corpus") {

@@ -84,7 +84,7 @@ class ExactSubstrSpec extends SparkSpec {
       // and the sa_ranks agree with the brute suffix scan
       val docs = Seq(1L -> a.toVector, 2L -> b.toVector, 3L -> c.toVector)
       assert(spans == brute(docs), s"sa_rank drift: $spans vs ${brute(docs)}")
-    } finally { TextAnalysis.evictCaches(spark); ExactSubstr.evictCaches(spark) }
+    } finally Substrates.evict(spark)
   }
 
   test("spans and suffix-array ranks match a brute-force suffix scan on seeded random corpora") {
@@ -108,7 +108,7 @@ class ExactSubstrSpec extends SparkSpec {
       try {
         val expected = brute(planted.filter(_._2.nonEmpty))
         assert(run(dir) == expected, s"seed $seed mismatch")
-      } finally { TextAnalysis.evictCaches(spark); ExactSubstr.evictCaches(spark) }
+      } finally Substrates.evict(spark)
     }
   }
 
@@ -140,7 +140,7 @@ class ExactSubstrSpec extends SparkSpec {
         s"clean mismatch:\n got=$got\n exp=$expected")
       // the fully-duplicated twins really did vanish
       assert(got.exists { case (d, _, nr, nk, _) => d == 4L && nk == 0L && nr == 20L })
-    } finally { TextAnalysis.evictCaches(spark); ExactSubstr.evictCaches(spark) }
+    } finally Substrates.evict(spark)
   }
 
   test("identical docs: one span covering the whole doc, tied suffixes share group-start ranks") {
@@ -153,6 +153,6 @@ class ExactSubstrSpec extends SparkSpec {
       assert(spans.map(s => (s._1, s._2, s._3)) == Set((1L, 0, 20), (2L, 0, 20)))
       // identical suffixes ⇒ identical sa_rank for both docs' span starts
       assert(spans.map(_._4).size == 1)
-    } finally { TextAnalysis.evictCaches(spark); ExactSubstr.evictCaches(spark) }
+    } finally Substrates.evict(spark)
   }
 }

@@ -43,7 +43,7 @@ class RelationalSpec extends SparkSpec {
       // every consumer read — measured DOUBLING the suite's executor CPU
       // while local[32] walls hid it (BASELINE.md §persist-vs-parquet).
       // Complex-typed substrates must go through
-      // MaterializedTables.materialize (parquet); persist is for
+      // Substrates.parquet; persist is for
       // primitive-typed tables only.
       import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
       val complexCached = df.queryExecution.optimizedPlan.collect {
@@ -58,7 +58,7 @@ class RelationalSpec extends SparkSpec {
       }
       assert(complexCached.isEmpty,
         s"$name caches complex-typed columns in memory (row-decoded on " +
-          s"every read — use MaterializedTables): ${complexCached.flatten}")
+          s"every read — use Substrates.parquet): ${complexCached.flatten}")
     }
   }
 

@@ -81,7 +81,7 @@ class SimilaritySpec extends SparkSpec {
     // consume ONE persisted coarse assignment per (session, corpus). A
     // refactor that drops the reuse would recompute the corpus×16 cosine
     // pass per consumer without failing any correctness test — this fails.
-    Similarity.evictCaches(spark)
+    Substrates.evict(spark)
     Similarity.annIvf(spark, sfDir).collect() // builds + materializes the assignment
     val sd = Similarity.semanticDedup(spark, sfDir)
     assert(sd.queryExecution.executedPlan.toString.contains("graft_assign"),
@@ -104,7 +104,7 @@ class SimilaritySpec extends SparkSpec {
     // the in-memory cache row-decodes array columns, measured 2x executor
     // CPU), and both a brute-force ranker and an index-family member scan
     // that one table without re-deriving the norms.
-    Similarity.evictCaches(spark)
+    Substrates.evict(spark)
     Similarity.cosineTopK(spark, sfDir).collect() // builds + materializes
     val lsh = Similarity.annLsh(spark, sfDir)
     assert(lsh.queryExecution.executedPlan.toString.contains("graft_vecs"),
@@ -113,7 +113,7 @@ class SimilaritySpec extends SparkSpec {
       "LSH re-derives the vector table from the raw embedding column")
     lsh.collect()
     Similarity.cosineTopK(spark, sfDir).collect()
-    Similarity.evictCaches(spark)
+    Substrates.evict(spark)
   }
 
   test("IVF-PQ plan shape: no cartesian product; search joins are broadcast") {

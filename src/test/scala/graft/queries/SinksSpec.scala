@@ -1296,7 +1296,7 @@ class SinksSpec extends SparkSpec {
       "a valid substrate must not gain a version")
     assert(fileState(new java.io.File(restore)) == built,
       "a valid substrate's data files must not be rewritten")
-    MaterializedTables.deleteTree(restore)
+    Substrates.deleteTree(restore)
     assert(Sinks.restoreRollback(spark, dir).collect().toSeq == r1)
     assert(Versioned.latestVersion(spark, restore) == 3)
     assert(disjoint(fileState(new java.io.File(restore)), built),
@@ -1310,13 +1310,13 @@ class SinksSpec extends SparkSpec {
     assert(Sinks.mergeUpsert(spark.newSession(), dir).collect().toSeq == m1)
     assert(dataDirFiles(mergeVt, 1) == v1Files,
       "a valid v1 must be reused, in this session and in a new one")
-    MaterializedTables.deleteTree(mergeVt)
+    Substrates.deleteTree(mergeVt)
     assert(Sinks.mergeUpsert(spark.newSession(), dir).collect().toSeq == m1)
     assert(disjoint(dataDirFiles(mergeVt, 1), v1Files),
       "a new session must find the lost v1 and restage it")
 
-    Seq(restore, mergeVt, dir).foreach(MaterializedTables.deleteTree)
-    MaterializedTables.deleteTree(dir) // a missing tree is a no-op
+    Seq(restore, mergeVt, dir).foreach(Substrates.deleteTree)
+    Substrates.deleteTree(dir) // a missing tree is a no-op
     assert(!new java.io.File(dir).exists())
   }
 }

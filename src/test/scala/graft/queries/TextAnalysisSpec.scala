@@ -133,7 +133,7 @@ class TextAnalysisSpec extends SparkSpec {
     // cache row-decodes complex types — measured 2× executor CPU on the
     // family. Reuse therefore shows as a scan of the one materialized
     // table with NO re-tokenization in the consumer's plan.)
-    TextAnalysis.evictCaches(spark)
+    Substrates.evict(spark)
     TextAnalysis.tokenStats(spark, sfDir).collect() // builds + materializes
     def readsSubstrate(df: org.apache.spark.sql.DataFrame, who: String): Unit = {
       val plan = df.queryExecution.optimizedPlan.toString
@@ -160,6 +160,6 @@ class TextAnalysisSpec extends SparkSpec {
     val p2 = relLine(TextAnalysis.tokenStats(spark, sfDir))
     assert(p1.nonEmpty && p1 == p2,
       "re-running rebuilt a different substrate table")
-    TextAnalysis.evictCaches(spark)
+    Substrates.evict(spark)
   }
 }
