@@ -34,7 +34,7 @@ object StreamBench {
     // spark.sql.streaming.numRecentProgressUpdates (default 100) batches,
     // so shards > 100 with maxFilesPerTrigger=1 would silently undercount
     // and overstate rows/sec (r10 advice).
-    val inputRows = spark.read.parquet(landing).count()
+    val inputRows = graft.tables.Tables.parquet(spark).load(landing).count()
 
     def run(name: String, mft: Int = 1)
            (build: DataFrame => Dataset[_]): (String, Long, Double, Long) = {

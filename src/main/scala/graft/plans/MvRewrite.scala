@@ -46,7 +46,7 @@ object MvCatalog {
                cntName: String = "cnt", sumName: String = "sm"): Unit =
     mvs.put(normalize(basePath),
       MvDef(groupCol, sumCol, cntName, sumName,
-        GraftSqlBridge.analyzed(spark.read.parquet(mvPath))))
+        GraftSqlBridge.analyzed(graft.tables.Tables.parquet(spark).load(mvPath))))
 
   def clear(): Unit = mvs.clear()
 

@@ -218,7 +218,7 @@ object Pipeline {
         }
       val reused = readSidecar().filter { _ =>
         // footer-only count of the layout table: catches partial writes
-        try spark.read.parquet(out).count() == liCount
+        try parquet(spark).load(out).count() == liCount
         catch { case _: Exception => false }
       }
       val manifest = reused.getOrElse {
@@ -232,7 +232,7 @@ object Pipeline {
         // Per-bucket min/max of both dims — exactly the footer/manifest
         // stats Delta/Iceberg prune with; read off the WRITTEN layout so
         // the manifest can never drift from the files it describes.
-        val m = spark.read.parquet(out)
+        val m = parquet(spark).load(out)
           // partition-dir inference reads file_id back as int; the manifest
           // (and q89's oracle-matched schema) carries it as bigint
           .groupBy(col("file_id").cast("long").as("file_id"))
@@ -274,7 +274,7 @@ object Pipeline {
       .filter(r => r.getLong(3) >= bPkLo && r.getLong(2) <= bPkHi &&
                    r.getLong(5) >= bSkLo && r.getLong(4) <= bSkHi)
       .map(_.getLong(0)).sorted
-    spark.read.parquet(out)
+    parquet(spark).load(out)
       .filter(col("file_id").isin(keep: _*))
       .filter(col("l_partkey").between(bPkLo, bPkHi) &&
               col("l_suppkey").between(bSkLo, bSkHi))

@@ -42,7 +42,7 @@ object Sinks {
     orders(spark, dir)
       .withColumn("o_year", year(col("o_orderdate")))
       .write.mode("overwrite").partitionBy("o_year").parquet(out)
-    spark.read.parquet(out)
+    parquet(spark).load(out)
       .filter(col("o_year") === 1995)
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n_orders"), sum("o_custkey").as("sum_cust"))
@@ -186,10 +186,10 @@ object Sinks {
     val out = tmpOut(dir, "compacted")
     documents(spark, dir).repartition(64)
       .write.mode("overwrite").parquet(staged)
-    spark.read.parquet(staged)
+    parquet(spark).load(staged)
       .hint("rebalance")
       .write.mode("overwrite").parquet(out)
-    spark.read.parquet(out)
+    parquet(spark).load(out)
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("sum_chars"))
       .orderBy("lang")
@@ -276,7 +276,7 @@ object Sinks {
     val delta = o.filter(col("o_orderdate") >= cutoff)
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n"), sum("o_custkey").as("s"))
-    spark.read.parquet(out).unionByName(delta)
+    parquet(spark).load(out).unionByName(delta)
       .groupBy("o_orderpriority")
       .agg(sum("n").as("n_orders"), sum("s").as("sum_cust"))
       .orderBy("o_orderpriority")
@@ -328,7 +328,7 @@ object Sinks {
       .write.mode("overwrite").parquet(s"$out/b=1")
     o.select("o_orderkey", "o_totalprice", "o_orderpriority")
       .write.mode("overwrite").parquet(s"$out/b=2")
-    spark.read.option("mergeSchema", "true").parquet(out)
+    parquet(spark).option("mergeSchema", "true").load(out)
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n"), sum("o_custkey").as("sum_cust"),
            round(sum("o_totalprice"), 2).as("sum_price"))
@@ -1344,7 +1344,7 @@ object Sinks {
       .writeStream.format("parquet").option("path", out)
       .option("checkpointLocation", ckpt).start()
     try q.processAllAvailable() finally q.stop()
-    perYear(spark.read.parquet(out))
+    perYear(parquet(spark).load(out))
   }
 
   // q237's substrate: orders keyed by a STRING surrogate ('K' +
@@ -1765,32 +1765,33 @@ object Sinks {
     perYear(Versioned.readAt(spark, tbl, 3))
   }
 
-  // q219/q220's substrate: v1 publishes orders, then three RECORDING
+  // q219/q220/q225's substrate: v1 publishes orders, then three RECORDING
   // merges (update band v2, delete band v3, insert band v4) persist their
-  // per-row change images as c_* dirs.
-  private def ordersRecordedFeedTable(spark: SparkSession, dir: String): String = {
-    val tbl = tmpOut(dir, "rcf_vt")
-    val base = ordersCents(spark, dir, col("o_orderpriority"))
-    restage(tbl) {
-      Versioned.latestVersion(spark, tbl) == 4 &&
-        (2 to 4).forall(v => Versioned.changesDirOf(spark, tbl, v).isDefined) &&
-        Versioned.readAt(spark, tbl, 1).count() == base.count()
-    } {
-      Versioned.publish(spark, tbl, base, partCol = Some("o_year"))
-      val y95 = base.filter(col("o_year") === 1995)
-      val batches = Seq(
-        y95.filter(col("o_orderkey") % 100 === 11)
-          .withColumn("o_price_c", col("o_price_c") + 111).select(col("*"), op("U")),
-        y95.filter(col("o_orderkey") % 100 === 12).select(col("*"), op("D")),
-        y95.filter(col("o_orderkey") % 100 === 13)
-          .withColumn("o_orderkey", col("o_orderkey") + 600000000L)
-          .withColumn("o_orderpriority", lit("6-RCF"))
-          .withColumn("o_year", lit(1999)).select(col("*"), op("I")))
-      batches.foreach(b =>
-        Versioned.merge(spark, tbl, b, "o_orderkey", "o_year", recordChanges = true))
+  // per-row change images as c_* dirs. Its consumers only read it.
+  private def ordersRecordedFeedTable(spark: SparkSession, dir: String): String =
+    perSession(spark, dir, "rcf_vt") {
+      val tbl = tmpOut(dir, "rcf_vt")
+      val base = ordersCents(spark, dir, col("o_orderpriority"))
+      restage(tbl) {
+        Versioned.latestVersion(spark, tbl) == 4 &&
+          (2 to 4).forall(v => Versioned.changesDirOf(spark, tbl, v).isDefined) &&
+          Versioned.readAt(spark, tbl, 1).count() == base.count()
+      } {
+        Versioned.publish(spark, tbl, base, partCol = Some("o_year"))
+        val y95 = base.filter(col("o_year") === 1995)
+        val batches = Seq(
+          y95.filter(col("o_orderkey") % 100 === 11)
+            .withColumn("o_price_c", col("o_price_c") + 111).select(col("*"), op("U")),
+          y95.filter(col("o_orderkey") % 100 === 12).select(col("*"), op("D")),
+          y95.filter(col("o_orderkey") % 100 === 13)
+            .withColumn("o_orderkey", col("o_orderkey") + 600000000L)
+            .withColumn("o_orderpriority", lit("6-RCF"))
+            .withColumn("o_year", lit(1999)).select(col("*"), op("I")))
+        batches.foreach(b =>
+          Versioned.merge(spark, tbl, b, "o_orderkey", "o_year", recordChanges = true))
+      }
+      tbl
     }
-    tbl
-  }
 
   /** q219 — RECORDED change feed (`Versioned.recordedChanges`): each
     * recording merge persists its per-row change images (Delta CDF's

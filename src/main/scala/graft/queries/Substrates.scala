@@ -80,7 +80,7 @@ object Substrates {
         "graft_" + name.substring(name.lastIndexOf('/') + 1))
       live.add(path)
       build.write.mode("overwrite").parquet(path.toString)
-      (spark.read.parquet(path.toString), path)
+      (graft.tables.Tables.parquet(spark).load(path.toString), path)
     } { case (_, path) => live.remove(path); deleteTree(path.toString) }._1
 
   /** `build` persisted MEMORY_AND_DISK (lazily filled by its first action). */

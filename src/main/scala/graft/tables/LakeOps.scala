@@ -1158,7 +1158,7 @@ object Versioned {
       if (!fsys.exists(dd)) Seq.empty
       else {
         if (meta.constraints.nonEmpty)
-          validateConstraints(spark.read.parquet(dd.toString), meta.constraints)
+          validateConstraints(Tables.parquet(spark).load(dd.toString), meta.constraints)
         if (meta.statsKey.isDefined) fileStatsOf(spark, table, dd, meta)
         else listPartDirs(fsys, dd, partDepth(meta)).map(Entry(_, dataDirName))
       }
@@ -1206,7 +1206,7 @@ object Versioned {
       case None =>
     }
     require(fsys.exists(dd), s"staged dir $dd does not exist")
-    val df = spark.read.parquet(dd.toString) // partition col inferred from layout
+    val df = Tables.parquet(spark).load(dd.toString) // partition col inferred from layout
     var attempts = 0
     while (true) {
       val base = latestVersion(spark, tablePath)
@@ -1505,7 +1505,7 @@ object Versioned {
       // NULL keys are rejected below anyway; coalescing them into the
       // bloom as 0 can only ADD a false-positive bit, never lose one.
       bloomAgg(coalesce(col("_bk"), lit(0L))).as("bloom")) ++ stats2 ++ xAggs
-    val raw = spark.read.parquet(dd.toString)
+    val raw = Tables.parquet(spark).load(dd.toString)
     (stats2Col.toSeq ++ extraCols).foreach(c =>
       require(KeyEnc.supported(raw.schema(c).dataType),
         s"stats column $c must be integral, string, or date — " +
@@ -1606,6 +1606,9 @@ object Versioned {
       }
       if (rel.isEmpty) base else new Path(base, rel)
     }
+    def scan(dd: String, es: Seq[Entry]): DataFrame =
+      Tables.parquet(spark).option("basePath", new Path(table, dd).toString)
+        .load(es.map(pathOf(_).toString): _*)
     // Deletion vectors are scoped to their OWN WRITE: the subtraction
     // must never be a global anti-filter — after a DV delete of key k, a
     // later merge may legitimately re-insert k into a new file, which
@@ -1619,11 +1622,7 @@ object Versioned {
     // driver-side plan/footer rounds). DV-free entries keep the plain
     // bulk path.
     val (dvd, clean) = entries.partition(_.dv.isDefined)
-    val bulk = clean.groupBy(_.dataDir).toSeq.sortBy(_._1).map { case (dd, es) =>
-      val base = new Path(table, dd)
-      spark.read.option("basePath", base.toString)
-        .parquet(es.map(pathOf(_).toString): _*)
-    }
+    val bulk = clean.groupBy(_.dataDir).toSeq.sortBy(_._1).map { case (dd, es) => scan(dd, es) }
     val subtracted = if (dvd.isEmpty) Seq.empty else {
       val fsys = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
       import spark.implicits._
@@ -1635,9 +1634,7 @@ object Versioned {
           s"deletion vectors of $dd key on multiple columns: ${keyCols.mkString(",")}")
         val keyCol = keyCols.head
         val keys = loaded.flatMap(_._2).distinct
-        val df = spark.read
-          .option("basePath", new Path(table, dd).toString)
-          .parquet(es.map(pathOf(_).toString): _*)
+        val df = scan(dd, es)
         val keyed = col(keyCol).cast("long")
         if (keys.isEmpty) df
         else if (keys.length <= 64)
@@ -1664,7 +1661,7 @@ object Versioned {
     }
     val raw =
       if (entries.forall(_.partDir == "-"))
-        spark.read.parquet(entries.map(e => new Path(table, e.dataDir).toString): _*)
+        Tables.parquet(spark).load(entries.map(e => new Path(table, e.dataDir).toString): _*)
       else readEntries(spark, table, entries)
     asOf(raw, meta)
   }
@@ -3161,7 +3158,7 @@ object Versioned {
     val empty = readAt(spark, tablePath, toV).limit(0)
       .withColumn("_change", lit("")).withColumn("_version", lit(0))
     recorded.map { case (v, d) =>
-      val raw = spark.read.parquet(new Path(table, d).toString)
+      val raw = Tables.parquet(spark).load(new Path(table, d).toString)
       // align the data columns to toV's schema, preserving the _change tag
       val aligned = toSchema match {
         case Some(sch) =>

@@ -1,6 +1,7 @@
 package graft.tables
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetFileFormat
 import org.apache.spark.sql.functions._
 
 /** Parquet table loaders for the TPC-H-ish star schema + extension tables
@@ -9,8 +10,16 @@ import org.apache.spark.sql.functions._
   * IS the Spark parquet source so predicate pushdown / column pruning apply.
   */
 object Tables {
+  /** The engine's one parquet reader: `spark.read.parquet` without its
+    * one-task schema job, since [[GraftParquetFileFormat]] reads the
+    * footers on the driver. Options such as `basePath` and `mergeSchema`
+    * go on the returned reader; `load(paths: _*)` reads.
+    */
+  def parquet(s: SparkSession): DataFrameReader =
+    s.read.format(classOf[GraftParquetFileFormat].getName)
+
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark).load(s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

@@ -1315,7 +1315,24 @@ class SinksSpec extends SparkSpec {
     assert(disjoint(dataDirFiles(mergeVt, 1), v1Files),
       "a new session must find the lost v1 and restage it")
 
-    Seq(restore, mergeVt, dir).foreach(Substrates.deleteTree)
+    // q220's recorded-feed table: probed once per session (the probe's
+    // count jobs run inside ordersRecordedFeedTable)
+    val rcf = substrate("rcf_vt")
+    def probes(call: => Unit): Int =
+      jobsDuring(call).count(_.contains("ordersRecordedFeedTable"))
+    val f1 = Sinks.streamChangeFeed(spark, dir).collect().toSeq
+    val feedFiles = dataDirFiles(rcf, 1)
+    assert(probes(assert(Sinks.streamChangeFeed(spark, dir).collect().toSeq == f1)) == 0,
+      "a second call in the same session must not re-probe the feed table")
+    assert(probes(assert(Sinks.streamChangeFeed(spark.newSession(), dir).collect().toSeq == f1)) > 0,
+      "a new session must probe the feed table")
+    assert(dataDirFiles(rcf, 1) == feedFiles && Versioned.latestVersion(spark, rcf) == 4)
+    Substrates.deleteTree(rcf)
+    assert(Sinks.streamChangeFeed(spark.newSession(), dir).collect().toSeq == f1)
+    assert(disjoint(dataDirFiles(rcf, 1), feedFiles),
+      "a new session must find the lost feed table and restage it")
+
+    Seq(restore, mergeVt, rcf, dir).foreach(Substrates.deleteTree)
     Substrates.deleteTree(dir) // a missing tree is a no-op
     assert(!new java.io.File(dir).exists())
   }
