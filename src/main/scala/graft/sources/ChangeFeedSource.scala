@@ -1,16 +1,15 @@
 package graft.sources
 
 import graft.tables.Versioned
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.metric.CustomMetric
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Streaming SOURCE over a [[Versioned]] table's RECORDED change feed —
   * the Delta streaming-source analog that closes the CDC loop: q213-style
@@ -30,15 +29,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * Versions WITHOUT a recorded feed (plain publishes, non-recording
   * merges, restores, compactions) contribute no rows — the lenient
   * `recordedChanges(strict = false)` contract, documented there; row
-  * images carry `_change` ('insert'/'delete') and `_version`.
+  * images carry `_change` ('insert'/'delete') and `_version`. A version
+  * in the range whose manifest or recorded feed was vacuumed fails the
+  * read loudly, naming the version (the Delta CDF contract): skipping it
+  * would silently lose its changes.
   *
-  * The per-file readers are VECTORIZED ([[VersionedColumnarReader]] —
-  * ColumnarBatches straight from parquet pages, `_version` served as a
-  * constant vector); files with a column type outside the vectorized set
-  * fall back to the row-at-a-time parquet-hadoop example reader. Column
-  * pruning is pushed down: the reader materializes exactly the requested
-  * fields. Feed files a schema evolution predates simply lack the new
-  * field — the reader emits NULL, matching the store's backfill contract.
+  * The per-file reader is the store's one vectorized decoder
+  * ([[VersionedColumnarReader]] — ColumnarBatches straight from parquet
+  * pages, `_version` served as a constant vector like a partition
+  * value). Column pruning is pushed down: the reader materializes exactly
+  * the requested fields. Feed files a schema evolution predates simply
+  * lack the new field — the reader emits NULL, matching the store's
+  * backfill contract.
   *
   * Usage:
   * {{{
@@ -54,10 +56,10 @@ class ChangeFeedSource extends TableProvider {
     ChangeFeedSource.feedSchema(SparkSession.active, options.get("path"))
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: java.util.Map[String, String]): Table =
-    new ChangeFeedTable(properties.get("path"), schema)
+    new VersionRangeTable(properties.get("path"), schema, ChangeFeedSource)
 }
 
-object ChangeFeedSource {
+object ChangeFeedSource extends VersionRange {
   /** Feed schema = the table's LATEST committed schema + the feed tags.
     * Fixed at stream start (streaming requires a static schema); feed
     * files of older versions NULL-backfill the later-added columns.
@@ -74,91 +76,128 @@ object ChangeFeedSource {
       .add("_version", IntegerType, nullable = false)
   }
 
+  private[sources] val label = "graft_changefeed"
+
+  private[sources] def describe(path: String, startingVersion: Int, required: StructType): String =
+    s"GraftChangeFeed path=$path, ReadSchema=${required.fieldNames.mkString(",")}"
+
   /** Feed files predating a RENAME carry the column's former name:
     * stamp the read schema with the latest version's alias map so the
-    * per-file readers resolve it (same mechanism as the table scan).
+    * reader resolves it (same mechanism as the table scan).
     */
-  def withLatestAliases(tablePath: String, st: StructType): StructType = {
+  private[sources] override def readerSchema(tablePath: String,
+                                             required: StructType): StructType = {
     val spark = SparkSession.active
-    GroupRows.withAliases(st, Versioned.columnAliasesOf(spark, tablePath,
+    ColumnarRead.withAliases(required, Versioned.columnAliasesOf(spark, tablePath,
       Versioned.latestVersion(spark, tablePath)))
   }
 
-  /** The feed files of committed versions in (start, end]: one entry per
-    * parquet file, with the version that produced it. Driver metadata.
+  /** The feed files of committed versions in (start, end]: one partition
+    * per parquet file, with the version that produced it as `_version`.
+    * Driver metadata.
     */
-  def feedFiles(spark: SparkSession, tablePath: String,
-                start: Int, end: Int): Seq[(String, Int)] =
+  private[sources] def partitions(spark: SparkSession, tablePath: String,
+                                  start: Int, end: Int): Seq[VersionedPartition] =
     ((start + 1) to end).flatMap { v =>
+      // a vacuumed manifest would otherwise read as "no recorded feed"
+      Versioned.opOf(spark, tablePath, v)
       Versioned.changesDirOf(spark, tablePath, v).toSeq.flatMap { d =>
-        val dir = new org.apache.hadoop.fs.Path(tablePath, d)
+        val dir = new Path(tablePath, d)
         val fsys = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fsys.exists(dir)) Seq.empty
-        else fsys.listStatus(dir).toSeq
+        require(fsys.exists(dir), s"graft_changefeed: the recorded change feed of " +
+          s"version $v does not exist (or was vacuumed) at $tablePath")
+        fsys.listStatus(dir).toSeq
           .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-          .map(s => (s.getPath.toString, v)).sortBy(_._1)
+          .map(_.getPath.toString).sorted
+          .map(f => VersionedPartition(f, Array("_version"), Array(v.toString)))
       }
     }
 }
 
-final class ChangeFeedTable(path: String, schema0: StructType)
+/** What tells one version-range source ([[ChangeFeedSource]],
+  * [[TableTailSource]]) from another: its table name, its scan
+  * description, the schema its reader decodes and the function that turns
+  * the committed versions (start, end] into input partitions.
+  */
+private[sources] trait VersionRange {
+  private[sources] def label: String
+  private[sources] def describe(path: String, startingVersion: Int, required: StructType): String
+  private[sources] def partitions(spark: SparkSession, tablePath: String,
+                                  start: Int, end: Int): Seq[VersionedPartition]
+  private[sources] def readerSchema(tablePath: String, required: StructType): StructType =
+    required
+}
+
+/** A table whose batch reads and micro-batches serve committed version
+  * ranges of a [[Versioned]] table, as `source` plans them. Options:
+  * `startingVersion` (a number, default 0, or "latest" = only versions
+  * committed after the stream starts — the Delta contract) and
+  * `maxVersionsPerTrigger`.
+  */
+final class VersionRangeTable(path: String, schema0: StructType, source: VersionRange)
     extends Table with SupportsRead {
-  override def name(): String = s"graft_changefeed($path)"
+  override def name(): String = s"${source.label}($path)"
   override def schema(): StructType = schema0
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    // startingVersion: a number, or "latest" = only versions committed
-    // after the stream starts (the Delta startingVersion=latest contract).
     val starting = Option(options.get("startingVersion")) match {
-      case Some("latest") =>
-        Versioned.latestVersion(SparkSession.active, path)
+      case Some("latest") => Versioned.latestVersion(SparkSession.active, path)
       case Some(v) => v.toInt
       case None => 0
     }
-    new ChangeFeedScanBuilder(path, schema0, starting,
-      Option(options.get("maxVersionsPerTrigger")).map(_.toInt))
+    val maxVersions = Option(options.get("maxVersionsPerTrigger")).map(_.toInt)
+    new ScanBuilder with SupportsPushDownRequiredColumns {
+      private var required = schema0
+      override def pruneColumns(requiredSchema: StructType): Unit =
+        required = requiredSchema
+      override def build(): Scan =
+        new VersionRangeScan(path, required, starting, maxVersions, source)
+    }
   }
 }
-
-final class ChangeFeedScanBuilder(path: String, full: StructType,
-                                  startingVersion: Int, maxVersions: Option[Int])
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private var required: StructType = full
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-  override def build(): Scan =
-    new ChangeFeedScan(path, required, startingVersion, maxVersions)
-}
-
-final case class ChangeFeedPartition(file: String, version: Int) extends InputPartition
 
 /** Offset = highest committed version already delivered. */
 final case class VersionOffset(v: Int) extends Offset {
   override def json(): String = v.toString
 }
 
-/** Shared offset + admission-control mechanics for streaming sources
-  * whose offset is a committed VERSION number ([[ChangeFeedSource]],
-  * [[TableTailSource]]): `latestOffset` tracks the table's committed
-  * head, and `maxVersionsPerTrigger` caps each micro-batch at N
-  * versions — backlog catch-up after downtime proceeds in bounded
-  * batches instead of one giant one (the Delta maxFilesPerTrigger
-  * analog at version granularity). Offsets re-plan deterministically
-  * from the manifests, so delivery is exactly-once across restarts.
+/** The batch scan (versions after `startingVersion` up to the latest)
+  * and, as its own micro-batch stream, the streaming reader:
+  * `latestOffset` tracks the table's committed head, and
+  * `maxVersionsPerTrigger` caps each micro-batch at N versions — backlog
+  * catch-up after downtime proceeds in bounded batches instead of one
+  * giant one (the Delta maxFilesPerTrigger analog at version
+  * granularity). Offsets re-plan deterministically from the manifests,
+  * so delivery is exactly-once across restarts.
   */
-private[sources] trait VersionOffsetStream
-    extends MicroBatchStream
-    with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl {
-  import org.apache.spark.sql.connector.read.streaming.ReadLimit
-  protected def tablePath: String
-  protected def startingVersion: Int
-  protected def maxVersions: Option[Int]
+final class VersionRangeScan(path: String, required: StructType, startingVersion: Int,
+                             maxVersions: Option[Int], source: VersionRange)
+    extends Scan with Batch with MicroBatchStream with SupportsAdmissionControl {
+  override def readSchema(): StructType = required
+  override def toBatch: Batch = this
+  override def description(): String = source.describe(path, startingVersion, required)
+  override def supportedCustomMetrics(): Array[CustomMetric] = ColumnarRead.metrics
+
+  override def planInputPartitions(): Array[InputPartition] = {
+    val spark = SparkSession.active
+    source.partitions(spark, path, startingVersion, Versioned.latestVersion(spark, path))
+      .toArray
+  }
+
+  override def createReaderFactory(): PartitionReaderFactory =
+    new VersionedReaderFactory(source.readerSchema(path, required))
+
+  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = this
+
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
+    source.partitions(SparkSession.active, path,
+      start.asInstanceOf[VersionOffset].v, end.asInstanceOf[VersionOffset].v).toArray
 
   override def initialOffset(): Offset = VersionOffset(startingVersion)
   override def latestOffset(): Offset =
     VersionOffset(math.max(startingVersion,
-      Versioned.latestVersion(SparkSession.active, tablePath)))
+      Versioned.latestVersion(SparkSession.active, path)))
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[VersionOffset].v
     val latest = latestOffset().asInstanceOf[VersionOffset].v
@@ -169,101 +208,4 @@ private[sources] trait VersionOffsetStream
     VersionOffset(json.trim.toInt)
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
-}
-
-final class ChangeFeedScan(path: String, required: StructType,
-                           startingVersion: Int, maxVersions: Option[Int])
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"GraftChangeFeed path=$path, ReadSchema=${required.fieldNames.mkString(",")}"
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val spark = SparkSession.active
-    ChangeFeedSource
-      .feedFiles(spark, path, startingVersion, Versioned.latestVersion(spark, path))
-      .map { case (f, v) => ChangeFeedPartition(f, v): InputPartition }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new ChangeFeedReaderFactory(ChangeFeedSource.withLatestAliases(path, required))
-
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new ChangeFeedMicroBatchStream(path, required, startingVersion, maxVersions)
-}
-
-final class ChangeFeedMicroBatchStream(path: String, required: StructType,
-                                       protected val startingVersion: Int,
-                                       protected val maxVersions: Option[Int])
-    extends VersionOffsetStream {
-  protected def tablePath: String = path
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val (s, e) = (start.asInstanceOf[VersionOffset].v, end.asInstanceOf[VersionOffset].v)
-    ChangeFeedSource.feedFiles(SparkSession.active, path, s, e)
-      .map { case (f, v) => ChangeFeedPartition(f, v): InputPartition }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new ChangeFeedReaderFactory(ChangeFeedSource.withLatestAliases(path, required))
-}
-
-final class ChangeFeedReaderFactory(required: StructType)
-    extends PartitionReaderFactory {
-  // Ship the driver's session Hadoop conf to read tasks (same contract
-  // as the sink's writer factory and the versioned reader factory).
-  private val conf = new SerializableHadoopConf(
-    SparkSession.active.sparkContext.hadoopConfiguration)
-  // Vectorized by default (the same [[VersionedColumnarReader]] the batch
-  // connector rides): `_version` is a per-partition constant — exactly
-  // the constant-vector slot the partition column uses — and `_change`
-  // is a real column in the feed file. The row path below survives only
-  // as the unsupported-type fallback; the example Group reader costs
-  // ~µs per FIELD, the dominant CPU of every CDC consumer pre-r16.
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    required.fields.forall(f => ColumnarRead.supportedType(f.dataType))
-  override def createColumnarReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val p = partition.asInstanceOf[ChangeFeedPartition]
-    new VersionedColumnarReader(p.file, "_version", p.version.toString,
-      required, conf.value)
-  }
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[ChangeFeedPartition]
-    new ChangeFeedPartitionReader(p.file, p.version, required, conf.value)
-  }
-}
-
-/** Reads one feed parquet file via the public parquet-hadoop example API,
-  * projecting to `required` by field NAME (missing field → NULL, the
-  * schema-evolution backfill). Runs on executors — no Spark session, no
-  * driver state, just the file.
-  */
-final class ChangeFeedPartitionReader(file: String, version: Int, required: StructType,
-                                      conf: org.apache.hadoop.conf.Configuration =
-                                        new org.apache.hadoop.conf.Configuration())
-    extends PartitionReader[InternalRow] {
-  import org.apache.parquet.example.data.Group
-  import org.apache.parquet.hadoop.ParquetReader
-  import org.apache.parquet.hadoop.example.GroupReadSupport
-
-  private val reader: ParquetReader[Group] =
-    ParquetReader.builder(new GroupReadSupport(), new org.apache.hadoop.fs.Path(file))
-      .withConf(conf)
-      .build()
-  private var current: Group = _
-
-  override def next(): Boolean = {
-    current = reader.read()
-    current != null
-  }
-
-  private def fieldValue(g: Group, f: StructField): Any =
-    if (f.name == "_version") version else GroupRows.value(g, f)
-
-  override def get(): InternalRow =
-    new GenericInternalRow(required.fields.map(f => fieldValue(current, f)))
-
-  override def close(): Unit = reader.close()
 }

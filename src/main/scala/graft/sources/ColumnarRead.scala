@@ -6,6 +6,7 @@ import org.apache.parquet.column.page.PageReadStore
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.execution.vectorized.{ConstantColumnVector, OnHeapColumnVector}
 import org.apache.spark.sql.types._
@@ -21,29 +22,105 @@ import org.apache.spark.unsafe.types.UTF8String
   * Group decode); the columnar path hands Spark 4096-row batches that
   * whole-stage codegen consumes directly.
   *
-  * Scope mirrors [[GroupRows]]: flat schemas (the store writes flat
-  * tables — max repetition level 0), the store's primitive types, by-name
-  * projection with NULL backfill for pre-evolution files, and the
-  * partition column served as a constant vector from the directory name.
-  * Files carrying a deletion vector keep the row path (the DV subtraction
-  * is a per-row filter); [[VersionedReaderFactory]] gates per partition.
+  * It is the store's only data decoder: [[VersionedScan]], the change
+  * feed and the table tail all read through [[VersionedReaderFactory]].
+  * Scope: flat schemas (the store writes flat tables — max repetition
+  * level 0), the store's primitive types, by-name projection with NULL
+  * backfill for pre-evolution files, partition columns served as
+  * constant vectors from the directory names, and deletion vectors
+  * applied as a mask during the fill.
   */
 object ColumnarRead {
   val BatchRows = 4096
 
-  /** Types the vectorized path fills — the [[GroupRows.value]] set. */
+  /** Types the decoder fills — the store's primitive set. */
   def supportedType(dt: DataType): Boolean = dt match {
     case LongType | IntegerType | StringType | BooleanType |
          DoubleType | FloatType | ShortType | ByteType | DateType => true
     case _ => false
   }
 
-  /** Row groups actually DECODED process-wide — a test seam proving
-    * row-group skipping (specs reset, read, and compare against the
-    * file's total group count; local[k] runs tasks in this JVM).
+  /** Refuse a read of a column the decoder cannot fill — called when a
+    * scan builds its reader factory, so the read fails at planning,
+    * before any job starts.
     */
-  val decodedRowGroups = new java.util.concurrent.atomic.AtomicLong(0)
-  val skippedRowGroups = new java.util.concurrent.atomic.AtomicLong(0)
+  private[sources] def requireSupported(st: StructType): Unit =
+    st.fields.find(f => !supportedType(f.dataType)).foreach { f =>
+      throw new IllegalArgumentException(
+        s"graft versioned read: column ${f.name} is ${f.dataType.simpleString} — " +
+          "supported: long, int, short, byte, double, float, boolean, string, date")
+    }
+
+  /** Metadata key carrying a renamed column's FORMER on-file names
+    * (comma-joined, newest first) — set by the scan from the manifest's
+    * `#colmap` header, consulted per file by the reader.
+    */
+  val AliasesKey = "graft_aliases"
+
+  /** Stamp each mapped field of `st` with its alias metadata — the scan
+    * does this once at planning time from the manifest's `#colmap`.
+    */
+  def withAliases(st: StructType, m: Map[String, Seq[String]]): StructType =
+    if (m.isEmpty) st
+    else StructType(st.fields.map { f =>
+      m.get(f.name).filter(_.nonEmpty) match {
+        case Some(as) => f.copy(metadata = new MetadataBuilder()
+          .withMetadata(f.metadata).putString(AliasesKey, as.mkString(",")).build())
+        case None => f
+      }
+    })
+
+  /** `f`'s name as this file carries it: the logical name, or the first
+    * alias present (a rename's former name), or None (pre-evolution or
+    * post-drop file — NULL backfill).
+    */
+  def onFileName(hasField: String => Boolean, f: StructField): Option[String] =
+    if (hasField(f.name)) Some(f.name)
+    else if (!f.metadata.contains(AliasesKey)) None
+    else f.metadata.getString(AliasesKey).split(",").find(a => a.nonEmpty && hasField(a))
+
+  /** A constant vector of `f` holding a partition-directory STRING value
+    * (already unescaped; null = the Hive default partition, or a column
+    * the file predates).
+    */
+  private[sources] def constantVector(raw: String, f: StructField): ColumnVector = {
+    val v = new ConstantColumnVector(BatchRows, f.dataType)
+    if (raw == null) v.setNull()
+    else f.dataType match {
+      case LongType => v.setLong(raw.toLong)
+      case IntegerType => v.setInt(raw.toInt)
+      case StringType => v.setUtf8String(UTF8String.fromString(raw))
+      case BooleanType => v.setBoolean(raw.toBoolean)
+      case ShortType => v.setShort(raw.toShort)
+      case ByteType => v.setByte(raw.toByte)
+      case other => throw new UnsupportedOperationException(
+        s"graft group reader: unsupported partition-value type $other for ${f.name}")
+    }
+    v
+  }
+
+  /** The scan metrics the reader reports, summed over a scan's tasks and
+    * shown in its executed plan: row groups decoded, and row groups
+    * skipped on their footer statistics ([[RowGroupBounds]]).
+    */
+  private[sources] def metrics: Array[CustomMetric] =
+    Array(new DecodedRowGroups, new SkippedRowGroups)
+
+  private[sources] def taskMetric(n: String, v: Long): CustomTaskMetric =
+    new CustomTaskMetric {
+      override def name(): String = n
+      override def value(): Long = v
+    }
+}
+
+final class DecodedRowGroups extends CustomSumMetric {
+  override def name(): String = "decodedRowGroups"
+  override def description(): String = "row groups decoded"
+}
+
+final class SkippedRowGroups extends CustomSumMetric {
+  override def name(): String = "skippedRowGroups"
+  override def description(): String = "row groups skipped by footer stats"
 }
 
 /** The scan's pushed planning bounds, re-checked against EACH ROW
@@ -126,24 +203,18 @@ final case class RowGroupBounds(
   }
 }
 
-final class VersionedColumnarReader(file: String, constCols: Array[String],
-                                    constVals: Array[String], required: StructType,
-                                    conf: org.apache.hadoop.conf.Configuration =
-                                      new org.apache.hadoop.conf.Configuration(),
-                                    rgBounds: RowGroupBounds = RowGroupBounds(),
-                                    dvKeyCol: String = null,
-                                    dvKeys: Array[Long] = Array.empty)
+final class VersionedColumnarReader(p: VersionedPartition, required: StructType,
+                                    conf: org.apache.hadoop.conf.Configuration,
+                                    rgBounds: RowGroupBounds)
     extends PartitionReader[ColumnarBatch] {
 
-  /** Single-constant convenience (the change feed's `_version` slot). */
-  def this(file: String, constCol: String, constVal: String,
-           required: StructType, conf: org.apache.hadoop.conf.Configuration) =
-    this(file, Array(constCol), Array(constVal), required, conf, RowGroupBounds())
-
   private val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-    new org.apache.hadoop.fs.Path(file), conf))
+    new org.apache.hadoop.fs.Path(p.file), conf))
   private val fileSchema = reader.getFooter.getFileMetaData.getSchema
   private val createdBy = reader.getFooter.getFileMetaData.getCreatedBy
+  private def columnIndex(name: String): Option[Int] =
+    (0 until fileSchema.getColumns.size).find(i =>
+      fileSchema.getColumns.get(i).getPath()(0) == name)
 
   // DELETION-VECTOR mask (r17): a DV'd file no longer de-vectorizes the
   // whole scan — the deleted keys subtract DURING the columnar fill.
@@ -154,18 +225,16 @@ final class VersionedColumnarReader(file: String, constCols: Array[String],
   // into a slot the next kept row overwrites — no reliance on decoder
   // skip semantics. DV keys are integral by the store's contract.
   private val dvSet: java.util.HashSet[java.lang.Long] =
-    if (dvKeys.isEmpty) null
+    if (p.dvKeys.isEmpty) null
     else {
-      val s = new java.util.HashSet[java.lang.Long](dvKeys.length * 2)
-      dvKeys.foreach(k => s.add(k))
+      val s = new java.util.HashSet[java.lang.Long](p.dvKeys.length * 2)
+      p.dvKeys.foreach(k => s.add(k))
       s
     }
   private val dvKeyIdx: Int =
     if (dvSet == null) -1
-    else (0 until fileSchema.getColumns.size).find(i =>
-      fileSchema.getColumns.get(i).getPath()(0) == dvKeyCol).getOrElse(
-      throw new IllegalStateException(
-        s"DV key column $dvKeyCol absent from $file"))
+    else columnIndex(p.dvKeyCol).getOrElse(throw new IllegalStateException(
+      s"DV key column ${p.dvKeyCol} absent from ${p.file}"))
   private val dvKeyInt32: Boolean = dvSet != null && {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
     fileSchema.getColumns.get(dvKeyIdx).getPrimitiveType
@@ -176,31 +245,14 @@ final class VersionedColumnarReader(file: String, constCols: Array[String],
   // when the file carries it; None = constant or NULL backfill.
   private val fieldPlans: Array[Either[ColumnVector, Int]] =
     required.fields.map { f =>
-      val ci = constCols.indexOf(f.name)
-      if (ci >= 0) {
-        val v = new ConstantColumnVector(ColumnarRead.BatchRows, f.dataType)
-        GroupRows.constant(constVals(ci), f) match {
-          case null => v.setNull()
-          case l: Long => v.setLong(l)
-          case i: Int => v.setInt(i)
-          case s: UTF8String => v.setUtf8String(s)
-          case b: Boolean => v.setBoolean(b)
-          case s: Short => v.setShort(s)
-          case b: Byte => v.setByte(b)
-          case other => throw new IllegalStateException(s"constant $other")
-        }
-        Left(v)
-      } else GroupRows.onFileName(fileSchema.containsField, f) match {
-        case None =>
-          // pre-evolution (or post-drop) file: the column reads as NULL
-          val v = new ConstantColumnVector(ColumnarRead.BatchRows, f.dataType)
-          v.setNull()
-          Left(v)
+      val ci = p.constCols.indexOf(f.name)
+      if (ci >= 0) Left(ColumnarRead.constantVector(p.constVals(ci), f))
+      else ColumnarRead.onFileName(fileSchema.containsField, f) match {
+        // pre-evolution (or post-drop) file: the column reads as NULL
+        case None => Left(ColumnarRead.constantVector(null, f))
         case Some(name) => // logical name or a rename's former name
-          val idx = (0 until fileSchema.getColumns.size).find(i =>
-            fileSchema.getColumns.get(i).getPath()(0) == name).getOrElse(
-            throw new IllegalStateException(s"column $name not flat in $file"))
-          Right(idx)
+          Right(columnIndex(name).getOrElse(
+            throw new IllegalStateException(s"column $name not flat in ${p.file}")))
       }
     }
 
@@ -218,11 +270,10 @@ final class VersionedColumnarReader(file: String, constCols: Array[String],
     }
   private val batch = new ColumnarBatch(vectors)
 
-  // Per-field decode strategy resolved ONCE (the row reader's own
-  // convention) — no per-value DataType match in the hot loop. Resolved
-  // against the file's PHYSICAL primitive type where they can differ:
-  // a type-widened column (ALTER COLUMN TYPE) reads pre-widen files'
-  // narrow bytes and widens per value.
+  // Per-field decode strategy resolved ONCE per file — no per-value
+  // DataType match in the hot loop. Resolved against the file's PHYSICAL
+  // primitive type where they can differ: a type-widened column (ALTER
+  // COLUMN TYPE) reads pre-widen files' narrow bytes and widens per value.
   private val fillers: Array[(ColumnReader, OnHeapColumnVector, Int) => Unit] =
     fieldPlans.zip(required.fields).map {
       case (Left(_), _) => null // constant / NULL backfill: no page decode
@@ -266,6 +317,8 @@ final class VersionedColumnarReader(file: String, constCols: Array[String],
   // cursor without I/O beyond the already-loaded footer).
   private val blocks = reader.getRowGroups
   private var blockIdx = -1
+  private var decodedGroups = 0L
+  private var skippedGroups = 0L
 
   private def nextRowGroup(): Boolean = {
     while (blockIdx + 1 < blocks.size()) {
@@ -273,7 +326,7 @@ final class VersionedColumnarReader(file: String, constCols: Array[String],
       if (rgBounds.survives(blocks.get(blockIdx))) {
         pages = reader.readNextRowGroup()
         if (pages == null) return false
-        ColumnarRead.decodedRowGroups.incrementAndGet()
+        decodedGroups += 1
         val store = new ColumnReadStoreImpl(pages,
           new GroupRecordConverter(fileSchema).getRootConverter, fileSchema, createdBy)
         // the DV key gets ONE dedicated reader; a required key field
@@ -297,7 +350,7 @@ final class VersionedColumnarReader(file: String, constCols: Array[String],
         rowsLeftInGroup = pages.getRowCount
         return true
       } else {
-        ColumnarRead.skippedRowGroups.incrementAndGet()
+        skippedGroups += 1
         reader.skipNextRowGroup()
       }
     }
@@ -396,6 +449,9 @@ final class VersionedColumnarReader(file: String, constCols: Array[String],
   }
 
   override def get(): ColumnarBatch = batch
+  override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
+    ColumnarRead.taskMetric("decodedRowGroups", decodedGroups),
+    ColumnarRead.taskMetric("skippedRowGroups", skippedGroups))
   override def close(): Unit = {
     batch.close()
     reader.close()

@@ -1,11 +1,10 @@
 package graft.sources
 
 import graft.tables.Versioned
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -45,10 +44,10 @@ class TableTailSource extends TableProvider {
     TableTailSource.tableSchema(SparkSession.active, options.get("path"))
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: java.util.Map[String, String]): Table =
-    new TableTailTable(properties.get("path"), schema)
+    new VersionRangeTable(properties.get("path"), schema, TableTailSource)
 }
 
-object TableTailSource {
+object TableTailSource extends VersionRange {
   def tableSchema(spark: SparkSession, tablePath: String): StructType = {
     require(tablePath != null, "graft_tabletail: path option is required")
     val latest = Versioned.latestVersion(spark, tablePath)
@@ -59,15 +58,19 @@ object TableTailSource {
           "republish or merge once to record one"))
   }
 
+  private[sources] val label = "graft_tabletail"
+
+  private[sources] def describe(path: String, startingVersion: Int, required: StructType): String =
+    s"GraftTableTail path=$path from v$startingVersion, " +
+      s"ReadSchema=${required.fieldNames.mkString(",")}"
+
   /** Input partitions for the appended files of committed versions in
     * (start, end], gating each version's `#op`: appends stream; v1
     * snapshots stream when started from 0; anything that could mutate
     * or reorder already-delivered rows fails loudly.
     */
-  def appendPartitions(spark: SparkSession, tablePath: String,
-                       start: Int, end: Int): Seq[VersionedPartition] = {
-    val fsPath = new org.apache.hadoop.fs.Path(tablePath)
-    lazy val fsys = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private[sources] def partitions(spark: SparkSession, tablePath: String,
+                                  start: Int, end: Int): Seq[VersionedPartition] =
     ((start + 1) to end).flatMap { v =>
       val op = Versioned.opOf(spark, tablePath, v)
       val opBase = op.takeWhile(_ != '(')
@@ -79,100 +82,7 @@ object TableTailSource {
         require(e.dv.isEmpty,
           s"graft_tabletail: appended entry ${e.partDir}/${e.file.getOrElse("")} " +
             "carries a deletion vector — not an append")
-        val (constCols, constVals) =
-          if (e.partDir == "-") (Array.empty[String], Array.empty[String])
-          else {
-            val kvs = e.partDir.split('/').toSeq.map { seg =>
-              val cut = seg.indexOf('=')
-              val raw = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-                .unescapePathName(seg.substring(cut + 1))
-              (seg.substring(0, cut),
-               if (raw == org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-                 .DEFAULT_PARTITION_NAME) null else raw)
-            }
-            (kvs.map(_._1).toArray, kvs.map(_._2).toArray)
-          }
-        e.file match {
-          case Some(f) =>
-            Seq(VersionedPartition(
-              new org.apache.hadoop.fs.Path(fsPath,
-                s"${e.dataDir}/${e.partDir}/$f").toString, constCols, constVals))
-          case None =>
-            val dir = new org.apache.hadoop.fs.Path(fsPath,
-              if (e.partDir == "-") e.dataDir else s"${e.dataDir}/${e.partDir}")
-            fsys.listStatus(dir).toSeq
-              .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-              .sortBy(_.getPath.getName)
-              .map(s => VersionedPartition(s.getPath.toString, constCols, constVals))
-        }
+        VersionedPartition.of(spark, new Path(tablePath), e)
       }
     }
-  }
-}
-
-final class TableTailTable(path: String, schema0: StructType)
-    extends Table with SupportsRead {
-  override def name(): String = s"graft_tabletail($path)"
-  override def schema(): StructType = schema0
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val starting = Option(options.get("startingVersion")) match {
-      case Some("latest") => Versioned.latestVersion(SparkSession.active, path)
-      case Some(v) => v.toInt
-      case None => 0
-    }
-    new TableTailScanBuilder(path, schema0, starting,
-      Option(options.get("maxVersionsPerTrigger")).map(_.toInt))
-  }
-}
-
-final class TableTailScanBuilder(path: String, full: StructType,
-                                 startingVersion: Int, maxVersions: Option[Int])
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private var required: StructType = full
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-  override def build(): Scan =
-    new TableTailScan(path, full, required, startingVersion, maxVersions)
-}
-
-final class TableTailScan(path: String, full: StructType, required: StructType,
-                          startingVersion: Int, maxVersions: Option[Int])
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"GraftTableTail path=$path from v$startingVersion, " +
-      s"ReadSchema=${required.fieldNames.mkString(",")}"
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val spark = SparkSession.active
-    TableTailSource.appendPartitions(spark, path, startingVersion,
-      Versioned.latestVersion(spark, path))
-      .map(p => p: InputPartition).toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new VersionedReaderFactory(required, full, columnarOk = true) // appends never carry DVs (gated in appendPartitions)
-
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new TableTailMicroBatchStream(path, full, required, startingVersion, maxVersions)
-}
-
-final class TableTailMicroBatchStream(path: String, full: StructType,
-                                      required: StructType,
-                                      protected val startingVersion: Int,
-                                      protected val maxVersions: Option[Int])
-    extends VersionOffsetStream {
-  protected def tablePath: String = path
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val (s, e) = (start.asInstanceOf[VersionOffset].v, end.asInstanceOf[VersionOffset].v)
-    TableTailSource.appendPartitions(SparkSession.active, path, s, e)
-      .map(p => p: InputPartition).toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new VersionedReaderFactory(required, full, columnarOk = true) // appends never carry DVs (gated in appendPartitions)
 }

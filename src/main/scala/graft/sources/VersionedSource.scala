@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.tables.Versioned
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
@@ -9,6 +10,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.expressions.{Expressions, Literal, NamedReference}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
+import org.apache.spark.sql.connector.metric.CustomMetric
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, IsNotNull, IsNull, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
@@ -44,13 +46,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * Spark as residual, so row-level correctness never depends on the
   * stats (`pushedFilters` stays empty by design — prune aggressively,
   * claim nothing). Column pruning is pushed down to the per-file
-  * readers (vectorized [[VersionedColumnarReader]] when no deletion
-  * vector survives and every type is in the primitive set; the
-  * [[GroupRows]] row path otherwise); partition columns materialize as
-  * constant vectors from the directory names (never stored in the
-  * files, same as Spark's own layout). A schema-evolved version's
-  * pre-evolution files NULL-backfill by name, and renamed columns
-  * resolve through the `#colmap` alias metadata per file.
+  * vectorized [[VersionedColumnarReader]], which also subtracts deletion
+  * vectors; a column outside its primitive types is refused at planning.
+  * Partition columns materialize as constant vectors from the directory
+  * names (never stored in the files, same as Spark's own layout). A
+  * schema-evolved version's pre-evolution files NULL-backfill by name,
+  * and renamed columns resolve through the `#colmap` alias metadata per
+  * file.
   */
 class VersionedSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -322,6 +324,38 @@ final case class VersionedPartition(file: String,
                                     dvKeys: Array[Long] = Array.empty)
     extends InputPartition
 
+object VersionedPartition {
+  /** Every `col=value` level the (possibly nested) partition dir encodes. */
+  private[sources] def partValues(partDir: String): Seq[(String, String)] =
+    partDir.split('/').toSeq.map { seg =>
+      val cut = seg.indexOf('=')
+      val colName = seg.substring(0, cut)
+      val raw = ExternalCatalogUtils.unescapePathName(seg.substring(cut + 1))
+      (colName, if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null else raw)
+    }
+
+  /** The input partitions of one manifest entry of the table at `table`:
+    * its file, or each parquet file of a dir-granular entry (by name),
+    * all carrying the partition constants the entry's directory encodes.
+    */
+  private[sources] def of(spark: SparkSession, table: Path, e: Versioned.Entry,
+                          dvKeyCol: String = null,
+                          dvKeys: Array[Long] = Array.empty): Seq[VersionedPartition] = {
+    val kvs = if (e.partDir == "-") Seq.empty else partValues(e.partDir)
+    val (cols, vals) = (kvs.map(_._1).toArray, kvs.map(_._2).toArray)
+    e.file match {
+      case Some(f) => Seq(VersionedPartition(
+        new Path(table, s"${e.dataDir}/${e.partDir}/$f").toString, cols, vals, dvKeyCol, dvKeys))
+      case None =>
+        val dir = new Path(table, if (e.partDir == "-") e.dataDir else s"${e.dataDir}/${e.partDir}")
+        dir.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(dir).toSeq
+          .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+          .sortBy(_.getPath.getName)
+          .map(s => VersionedPartition(s.getPath.toString, cols, vals))
+    }
+  }
+}
+
 final class VersionedScan(path: String, version: Int, full: StructType,
                           required: StructType, statsKey: Option[String],
                           statsKey2: Option[String],
@@ -348,14 +382,6 @@ final class VersionedScan(path: String, version: Int, full: StructType,
       s"PruneBounds=${(longBounds.map { case (c, (l, h)) => s"$c in [$l,$h]" } ++ sb).mkString(";")}"
   }
 
-  // Every `col=value` level the (possibly nested) partition dir encodes.
-  private def partValues(partDir: String): Seq[(String, String)] =
-    partDir.split('/').toSeq.map { seg =>
-      val cut = seg.indexOf('=')
-      val colName = seg.substring(0, cut)
-      val raw = ExternalCatalogUtils.unescapePathName(seg.substring(cut + 1))
-      (colName, if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null else raw)
-    }
   // Partition-value pruning against the directory-encoded constants:
   // every level must pass its own bounds (multi-column layouts prune on
   // any combination of partition predicates). Directory values are EXACT
@@ -365,7 +391,7 @@ final class VersionedScan(path: String, version: Int, full: StructType,
   // satisfy IS NULL.
   private def partSurvives(partDir: String): Boolean = {
     if (partDir == "-") return true
-    partValues(partDir).forall { case (c, raw) =>
+    VersionedPartition.partValues(partDir).forall { case (c, raw) =>
       if (raw == null)
         !(longBounds.contains(c) || stringEq.contains(c) ||
           stringLo.contains(c) || stringHi.contains(c) || notNullCols(c))
@@ -596,53 +622,40 @@ final class VersionedScan(path: String, version: Int, full: StructType,
     }
   }
 
+  // Deletion vectors key on the stats key, which the store's contract
+  // (deleteKeys) makes integral: anything else is refused at planning.
+  private lazy val dvKeyCol: String = {
+    val k = statsKey.getOrElse(throw new IllegalStateException(
+      s"entry carries a deletion vector but v$version has no #statskey"))
+    if (!full.find(_.name == k).exists(f => graft.tables.KeyEnc.Integral.contains(f.dataType)))
+      throw new IllegalStateException(
+        s"graft_versioned: v$version of $path carries deletion vectors keyed on $k, " +
+          "which is not an integral column")
+    k
+  }
+
   override def planInputPartitions(): Array[InputPartition] = {
     val spark = SparkSession.active
-    val fsPath = new org.apache.hadoop.fs.Path(path)
-    val fsys = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val table = new Path(path)
     val planned = runtimeSurvivors
     // Row-level rewrites need to know EXACTLY which entries this scan
     // planned: the replacement commit displaces precisely that set.
     planListener.foreach(_(planned))
-    planned
-      .flatMap { e =>
-        val (constCols, constVals) =
-          if (e.partDir == "-") (Array.empty[String], Array.empty[String])
-          else {
-            val kvs = partValues(e.partDir)
-            (kvs.map(_._1).toArray, kvs.map(_._2).toArray)
-          }
-        // Deletion vector: resolve the deleted keys at planning time
-        // (metadata-sized) so the reader can subtract them row-by-row —
-        // the scan must never serve a deleted row.
-        val (dvCol, dvKeys) = e.dv match {
-          case Some(d) =>
-            (statsKey.getOrElse(throw new IllegalStateException(
-              s"entry carries a deletion vector but v$version has no #statskey")),
-             Versioned.dvKeysOf(spark, path, d))
-          case None => (null: String, Array.empty[Long])
-        }
-        e.file match {
-          case Some(f) =>
-            Seq(VersionedPartition(
-              new org.apache.hadoop.fs.Path(fsPath,
-                s"${e.dataDir}/${e.partDir}/$f").toString,
-              constCols, constVals, dvCol, dvKeys))
-          case None =>
-            val dir = new org.apache.hadoop.fs.Path(fsPath,
-              if (e.partDir == "-") e.dataDir else s"${e.dataDir}/${e.partDir}")
-            fsys.listStatus(dir).toSeq
-              .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-              .sortBy(_.getPath.getName)
-              .map(s => VersionedPartition(s.getPath.toString, constCols, constVals))
-        }
-      }
-      .map(p => p: InputPartition).toArray
+    // Deletion vector: resolve the deleted keys at planning time
+    // (metadata-sized) so the reader can subtract them — the scan must
+    // never serve a deleted row.
+    planned.flatMap(e => e.dv match {
+      case Some(d) =>
+        VersionedPartition.of(spark, table, e, dvKeyCol, Versioned.dvKeysOf(spark, path, d))
+      case None => VersionedPartition.of(spark, table, e)
+    }).toArray
   }
+
+  override def supportedCustomMetrics(): Array[CustomMetric] = ColumnarRead.metrics
 
   override def createReaderFactory(): PartitionReaderFactory = {
     // Rename mapping: stamp each mapped field with the former names its
-    // bytes carry in pre-rename files (metadata — both readers consult it
+    // bytes carry in pre-rename files (metadata — the reader consults it
     // per file; no signature rides along).
     val aliases = Versioned.columnAliasesOf(SparkSession.active, path, version)
     // The SAME pushed planning bounds recheck against EACH row group's
@@ -659,115 +672,32 @@ final class VersionedScan(path: String, version: Int, full: StructType,
         c -> stringEq.get(c).map(e => if (e < v) e else v).getOrElse(v) },
       isNull = nullCols, isNotNull = notNullCols,
       aliases = aliases)
-    // DV'd files stay vectorized (r17): the columnar reader applies the
-    // deletion-vector mask during its fill, so a single small DV no
-    // longer de-vectorizes the whole scan. Requires an integral stats
-    // key (the DV key contract); non-integral-keyed DV scans keep the
-    // row path. Runtime filters can only SHRINK the survivor set, so a
-    // static verdict stays valid at execution.
-    val dvColumnarOk = {
-      import org.apache.spark.sql.types._
-      statsKey.exists(k => full.fieldNames.contains(k) &&
-        Set[DataType](ByteType, ShortType, IntegerType, LongType)
-          .contains(full(k).dataType))
-    }
-    new VersionedReaderFactory(GroupRows.withAliases(required, aliases),
-      GroupRows.withAliases(full, aliases),
-      columnarOk = !survivors.exists(_.dv.isDefined) || dvColumnarOk,
-      rgBounds = rgBounds)
+    new VersionedReaderFactory(ColumnarRead.withAliases(required, aliases), rgBounds)
   }
 }
 
-final class VersionedReaderFactory(required: StructType, full: StructType,
-                                   columnarOk: Boolean = false,
+/** The one reader factory of the store's scans ([[VersionedScan]], the
+  * change feed and the table tail): every partition decodes through
+  * [[VersionedColumnarReader]]. Building it refuses a required column
+  * outside the decoder's types, so such a read fails at planning.
+  */
+final class VersionedReaderFactory(required: StructType,
                                    rgBounds: RowGroupBounds = RowGroupBounds())
     extends PartitionReaderFactory {
+  ColumnarRead.requireSupported(required)
   // The DRIVER's session Hadoop conf rides to the read tasks (the same
   // contract as the sink's writer factory): object-store credentials and
   // fs implementations apply where the file is actually opened.
   private val conf = new SerializableHadoopConf(
     SparkSession.active.sparkContext.hadoopConfiguration)
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[VersionedPartition]
-    new VersionedPartitionReader(p.file, p.constCols, p.constVals, required,
-      full, p.dvKeyCol, p.dvKeys, conf.value)
-  }
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
 
-  /** Vectorized path when the WHOLE SCAN qualifies (Spark requires a
-    * uniform answer across a scan's partitions): no planned file carries
-    * a deletion vector (the subtraction is a per-row filter) and every
-    * required type is in the store's primitive set — the common case of
-    * every catalog SQL read. 4096-row ColumnarBatches fill straight from
-    * parquet pages instead of per-row Group decode.
-    */
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    columnarOk && required.fields.forall(f =>
-      ColumnarRead.supportedType(f.dataType))
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("graft versioned read: columnar only")
 
   override def createColumnarReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val p = partition.asInstanceOf[VersionedPartition]
-    new VersionedColumnarReader(p.file, p.constCols, p.constVals, required,
-      conf.value, rgBounds, p.dvKeyCol, p.dvKeys)
-  }
-}
-
-final class VersionedPartitionReader(file: String, constCols: Array[String],
-                                     constVals: Array[String], required: StructType,
-                                     full: StructType, dvKeyCol: String,
-                                     dvKeys: Array[Long],
-                                     conf: org.apache.hadoop.conf.Configuration =
-                                       new org.apache.hadoop.conf.Configuration())
-    extends PartitionReader[InternalRow] {
-  import org.apache.parquet.example.data.Group
-  import org.apache.parquet.hadoop.ParquetReader
-  import org.apache.parquet.hadoop.example.GroupReadSupport
-
-  private val reader: ParquetReader[Group] =
-    ParquetReader.builder(new GroupReadSupport(), new org.apache.hadoop.fs.Path(file))
-      .withConf(conf)
-      .build()
-  private var current: Group = _
-  // Resolve per-field decode strategy ONCE per reader, not per row.
-  private val getters: Array[Group => Any] = required.fields.map { f =>
-    val ci = constCols.indexOf(f.name)
-    if (ci >= 0) {
-      val v = GroupRows.constant(constVals(ci), f)
-      (_: Group) => v
-    } else (g: Group) => GroupRows.value(g, f)
-  }
-  // Deletion-vector subtraction: the key is decoded from the FULL schema
-  // (it may be projected out of `required`), so a pruned scan still never
-  // serves a deleted row.
-  private val dvSet: java.util.HashSet[java.lang.Long] =
-    if (dvKeys.isEmpty) null
-    else {
-      val s = new java.util.HashSet[java.lang.Long](dvKeys.length * 2)
-      dvKeys.foreach(k => s.add(k))
-      s
-    }
-  private val dvGetter: Group => Long =
-    if (dvSet == null) null
-    else {
-      val f = full.fields(full.fieldIndex(dvKeyCol))
-      (g: Group) => GroupRows.value(g, f) match {
-        case l: java.lang.Long => l.longValue()
-        case i: java.lang.Integer => i.longValue()
-        case s: java.lang.Short => s.longValue()
-        case b: java.lang.Byte => b.longValue()
-        case other => throw new IllegalStateException(
-          s"deletion-vector key $dvKeyCol decoded as non-integral $other")
-      }
-    }
-
-  override def next(): Boolean = {
-    current = reader.read()
-    while (current != null && dvSet != null && dvSet.contains(dvGetter(current)))
-      current = reader.read()
-    current != null
-  }
-  override def get(): InternalRow =
-    new GenericInternalRow(getters.map(_(current)))
-  override def close(): Unit = reader.close()
+      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
+    new VersionedColumnarReader(partition.asInstanceOf[VersionedPartition],
+      required, conf.value, rgBounds)
 }

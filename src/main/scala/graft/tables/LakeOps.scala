@@ -2706,8 +2706,7 @@ object Versioned {
     * commit whose evolved `#schema` records the wider type, files are
     * never rewritten. Old files keep their narrow bytes; every read path
     * widens per file — the DSv2 readers consult each file's PHYSICAL
-    * parquet type ([[graft.sources.GroupRows.value]] /
-    * [[graft.sources.VersionedColumnarReader]]), and the Scala read path
+    * parquet type ([[graft.sources.VersionedColumnarReader]]), and the Scala read path
     * reads per data dir (one write job each, so types are uniform within
     * a dir) and lets union coercion + the schema alignment cast widen.
     * Narrowing is refused (it could truncate committed values); time

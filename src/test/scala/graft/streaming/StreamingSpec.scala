@@ -943,4 +943,32 @@ class StreamingSpec extends SparkSpec {
       assert(late.toArray.toSeq == Seq(5), s"only the post-start commit: $late")
     } finally q2.stop()
   }
+
+  test("change-feed source fails loudly on a vacuumed version instead of skipping its changes") {
+    import spark.implicits._
+    import graft.tables.Versioned
+    val tmp = java.nio.file.Files.createTempDirectory("cfvacuum").toString
+    val tbl = s"$tmp/table"
+    Versioned.publish(spark, tbl,
+      (1L to 3L).map(k => (k, k * 10, "a")).toDF("k", "v", "p"), partCol = Some("p"))
+    (1 to 3).foreach { i =>
+      Versioned.merge(spark, tbl,
+        Seq((i.toLong, i * 100L, "a", "U")).toDF("k", "v", "p", "_op"), "k", "p",
+        recordChanges = true) // v2, v3, v4 — one update (two images) each
+    }
+    def feedFrom(v: Int) = spark.read.format("graft.sources.ChangeFeedSource")
+      .option("startingVersion", v.toString).load(tbl)
+      .select("_version").as[Int].collect().toSeq.sorted
+    assert(feedFrom(0) == Seq(2, 2, 3, 3, 4, 4))
+    Versioned.vacuum(spark, tbl, keep = Set(4), retentionMs = 0)
+    // the first vacuumed version of the range is named, whether its
+    // manifest or only its recorded feed dir is gone
+    Seq(0 -> 1, 1 -> 2).foreach { case (from, first) =>
+      val err = intercept[IllegalArgumentException](feedFrom(from))
+      assert(err.getMessage.contains(s"version $first does not exist (or was vacuumed)"),
+        err.getMessage)
+    }
+    // a read that starts past the vacuumed versions still serves v4
+    assert(feedFrom(3) == Seq(4, 4))
+  }
 }

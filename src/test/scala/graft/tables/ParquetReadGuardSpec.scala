@@ -7,21 +7,29 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Engine code reads parquet through `Tables.parquet` only: a plain
   * `spark.read.parquet(...)`, with or without `.option(...)` calls in
   * between, would bring back Spark's one-task schema job on every call.
+  * Table data decodes through one reader, `VersionedColumnarReader`: the
+  * parquet-hadoop example `Group` reader serves only the manifest's
+  * checkpoint sidecar.
   */
 class ParquetReadGuardSpec extends AnyFunSuite {
   private val plainRead =
     """\.read\s*(?:\.options?\((?:[^()]|\([^()]*\))*\)\s*)*\.parquet\(""".r
 
-  test("src/main never calls .read.parquet( or .read.option(...).parquet(") {
+  /** (path, text) of every Scala source under src/main. */
+  private lazy val mainSources: Seq[(String, String)] = {
     def sources(f: File): Seq[File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(sources)
       else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
     val files = sources(new File("src/main/scala"))
     assert(files.size > 50, "run from the repository root")
-    val hits = files.flatMap { f =>
-      val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    files.map(f => (f.getPath,
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")))
+  }
+
+  test("src/main never calls .read.parquet( or .read.option(...).parquet(") {
+    val hits = mainSources.flatMap { case (path, text) =>
       plainRead.findAllMatchIn(text).map { m =>
-        s"${f.getPath}:${text.substring(0, m.start).count(_ == '\n') + 1}"
+        s"$path:${text.substring(0, m.start).count(_ == '\n') + 1}"
       }
     }
     assert(hits.isEmpty, s"read parquet through Tables.parquet instead: ${hits.mkString(", ")}")
@@ -29,5 +37,23 @@ class ParquetReadGuardSpec extends AnyFunSuite {
     assert(plainRead.findFirstIn("spark.read.parquet(p)").nonEmpty)
     assert(plainRead.findFirstIn("spark.read\n  .option(\"basePath\", new Path(t, d).toString)\n  .parquet(p)").nonEmpty)
     assert(plainRead.findFirstIn("spark.readStream.schema(s).parquet(p)").isEmpty)
+  }
+
+  test("src/main uses GroupReadSupport and ParquetReader.builder only in LakeOps' readEntriesFile") {
+    val groupRead = """GroupReadSupport|ParquetReader\.builder""".r
+    val defName = """def\s+(\w+)""".r
+    // each use, with the file and the def it sits in
+    val uses = mainSources.flatMap { case (path, text) =>
+      groupRead.findAllMatchIn(text).map { m =>
+        (new File(path).getName,
+          defName.findAllMatchIn(text.substring(0, m.start)).map(_.group(1)).toSeq.lastOption,
+          s"$path:${text.substring(0, m.start).count(_ == '\n') + 1}")
+      }
+    }
+    val (sidecar, stray) =
+      uses.partition(u => u._1 == "LakeOps.scala" && u._2.contains("readEntriesFile"))
+    assert(stray.isEmpty,
+      s"table data decodes through VersionedColumnarReader: ${stray.map(_._3).mkString(", ")}")
+    assert(sidecar.nonEmpty, "the checkpoint sidecar reader moved: update this guard")
   }
 }

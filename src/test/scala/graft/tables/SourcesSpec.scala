@@ -923,7 +923,8 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("row-group skipping: pushed bounds skip row groups inside a surviving file from footer stats alone") {
-    import graft.sources.ColumnarRead
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     val tmp = Files.createTempDirectory("vrg").toString
@@ -941,37 +942,67 @@ class SourcesSpec extends SparkSpec {
         fileStatsCols = Seq("s"))
       def src = spark.read.format("graft.sources.VersionedSource").load(tbl)
       assert(src.rdd.getNumPartitions == 1, "want exactly one planned file")
-      ColumnarRead.decodedRowGroups.set(0); ColumnarRead.skippedRowGroups.set(0)
+      // (rows, row groups decoded, row groups skipped) of one counting
+      // run, the counts read from that run's executed scan metrics
+      val aqe = new AdaptiveSparkPlanHelper {}
+      def countScan(df: org.apache.spark.sql.DataFrame): (Long, Long, Long) = {
+        val counted = df.groupBy().count()
+        val n = counted.collect().head.getLong(0)
+        val scan = aqe.collect(org.apache.spark.sql.GraftSqlBridge.executedPlan(counted)) {
+          case b: BatchScanExec => b
+        }.head
+        (n, scan.metrics("decodedRowGroups").value, scan.metrics("skippedRowGroups").value)
+      }
       // k >= 0 keeps this a DATA read (an unfiltered count would be
       // answered from the manifest and decode nothing)
-      assert(src.filter(col("k") >= 0).count() == 20000)
-      val totalGroups = ColumnarRead.decodedRowGroups.get
+      val (all, totalGroups, skippedNone) = countScan(src.filter(col("k") >= 0))
+      assert(all == 20000)
       assert(totalGroups >= 4, s"need several row groups, got $totalGroups")
-      assert(ColumnarRead.skippedRowGroups.get == 0)
+      assert(skippedNone == 0)
       // a key band covering ~1.5% of the file decodes a fraction of its
       // groups — the footer-stats tier below manifest file pruning
-      ColumnarRead.decodedRowGroups.set(0); ColumnarRead.skippedRowGroups.set(0)
-      assert(src.filter(col("k") >= 100 && col("k") <= 400).count() == 301)
-      assert(ColumnarRead.decodedRowGroups.get < totalGroups / 2,
-        s"row groups not skipped: ${ColumnarRead.decodedRowGroups.get} of $totalGroups")
-      assert(ColumnarRead.skippedRowGroups.get > 0)
+      val (band, bandDecoded, bandSkipped) =
+        countScan(src.filter(col("k") >= 100 && col("k") <= 400))
+      assert(band == 301)
+      assert(bandDecoded < totalGroups / 2,
+        s"row groups not skipped: $bandDecoded of $totalGroups")
+      assert(bandSkipped > 0)
       // string lower bound: only the non-null tail's groups decode
-      ColumnarRead.decodedRowGroups.set(0)
-      assert(src.filter(col("s") >= "Z").count() == 10000)
-      assert(ColumnarRead.decodedRowGroups.get < totalGroups,
+      val (tail, tailDecoded, _) = countScan(src.filter(col("s") >= "Z"))
+      assert(tail == 10000)
+      assert(tailDecoded < totalGroups,
         "string bound must skip the null-prefix groups")
       // IS NOT NULL: the all-null half's groups skip on numNulls alone
-      ColumnarRead.decodedRowGroups.set(0)
-      assert(src.filter(col("s").isNotNull).count() == 10000)
-      assert(ColumnarRead.decodedRowGroups.get < totalGroups)
+      val (valued, valuedDecoded, _) = countScan(src.filter(col("s").isNotNull))
+      assert(valued == 10000)
+      assert(valuedDecoded < totalGroups)
       // IS NULL: the all-valued half's groups skip
-      ColumnarRead.decodedRowGroups.set(0)
-      assert(src.filter(col("s").isNull).count() == 10000)
-      assert(ColumnarRead.decodedRowGroups.get < totalGroups)
+      val (nulls, nullsDecoded, _) = countScan(src.filter(col("s").isNull))
+      assert(nulls == 10000)
+      assert(nullsDecoded < totalGroups)
     } finally {
       if (oldBlock == null) hc.unset("parquet.block.size")
       else hc.set("parquet.block.size", oldBlock)
     }
+  }
+
+  test("versioned read: a column outside the decoder's types is refused at planning, naming it") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val tbl = Files.createTempDirectory("vdec").toString + "/table"
+    Versioned.publish(spark, tbl,
+      Seq((1L, "1.50"), (2L, "2.25"), (3L, null)).toDF("k", "d")
+        .select(col("k"), col("d").cast("decimal(10,2)").as("d")))
+    def src = spark.read.format("graft.sources.VersionedSource").load(tbl)
+    var err: IllegalArgumentException = null
+    val jobs = jobsDuring {
+      err = intercept[IllegalArgumentException](src.select("k", "d").collect())
+    }
+    assert(jobs.isEmpty, s"the refusal must come before any job: ${jobs.mkString("; ")}")
+    assert(err.getMessage.contains("column d is decimal(10,2)") &&
+      err.getMessage.contains("supported:"), err.getMessage)
+    // a projection without the column reads every row
+    assert(src.select("k").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
   }
 
   test("partition evolution: header-only spec change, mixed-layout reads, row-level DML while mixed, value-DML refusal, repartition normalizes") {
