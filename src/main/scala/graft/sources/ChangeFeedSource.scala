@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.tables.Versioned
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -99,13 +98,8 @@ object ChangeFeedSource extends VersionRange {
   private[sources] def partitions(spark: SparkSession, tablePath: String,
                                   start: Int, end: Int): Seq[VersionedPartition] =
     ((start + 1) to end).flatMap { v =>
-      // a vacuumed manifest would otherwise read as "no recorded feed"
-      Versioned.opOf(spark, tablePath, v)
-      Versioned.changesDirOf(spark, tablePath, v).toSeq.flatMap { d =>
-        val dir = new Path(tablePath, d)
+      Versioned.recordedFeedOf(spark, tablePath, v).toSeq.flatMap { dir =>
         val fsys = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        require(fsys.exists(dir), s"graft_changefeed: the recorded change feed of " +
-          s"version $v does not exist (or was vacuumed) at $tablePath")
         fsys.listStatus(dir).toSeq
           .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
           .map(_.getPath.toString).sorted

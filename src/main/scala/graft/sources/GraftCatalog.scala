@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchT
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.ScanBuilder
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, Write, WriteBuilder}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
@@ -30,9 +30,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * Identifier → path mapping is `warehouse/<namespace…>/<table>`; a
   * table EXISTS iff it has a committed version. CREATE commits an empty
-  * v1 recording schema, partition column and stats column; INSERT goes
-  * through the same staged-files + adopt commit as the streaming sink
-  * (executors write parquet, the driver commits ONE append version);
+  * v1 recording schema, partition column and stats columns; INSERT, CTAS
+  * and the SQL row-level statements write through [[StagedWrite]], the
+  * streaming sink's write (executors write parquet, the driver commits
+  * ONE version);
   * DELETE maps Spark's pushed filters onto [[Versioned.deleteWhere]]
   * (partition-scoped rewrite, NULL-safe SQL semantics); time travel
   * resolves VERSION AS OF to a pinned manifest and TIMESTAMP AS OF via
@@ -99,24 +100,30 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
                            partitions: Array[Transform],
                            properties: java.util.Map[String, String]): Table = {
     if (tableExists(ident)) throw new TableAlreadyExistsException(ident)
+    val l = layoutOf(partitions, properties)
+    Versioned.createEmpty(spark, pathOf(ident), schema, l.partCol, l.statsKey,
+      l.statsKey2, l.statsCols)
+    new VersionedCatalogTable(pathOf(ident), None)
+  }
+
+  /** The layout a CREATE declares: the identity partition columns as the
+    * `#partcol` comma list (directories nest a=1/b=x, exactly Spark's own
+    * layout) and the 'statskey', 'statskey2' and 'statscols' properties
+    * ('statscols': a comma list of extra stat dimensions recorded per file
+    * on every append, the Delta leading-columns convention).
+    */
+  private def layoutOf(partitions: Array[Transform],
+                       properties: java.util.Map[String, String]): TableLayout = {
     val partCols = partitions.toSeq.map {
       case t if t.name == "identity" && t.references().length == 1 =>
         t.references()(0).fieldNames().mkString(".")
       case other => throw new UnsupportedOperationException(
         s"GraftCatalog partitions by identity columns only, got $other")
     }
-    // Multi-column partitioning: the comma list lands in the #partcol
-    // header; directories nest a=1/b=x, exactly Spark's own layout.
-    Versioned.createEmpty(spark, pathOf(ident), schema,
-      partCol = if (partCols.isEmpty) None else Some(partCols.mkString(",")),
-      statsKey = Option(properties.get("statskey")),
-      statsKey2 = Option(properties.get("statskey2")),
-      // 'statscols': N extra stat dimensions recorded per file on every
-      // append (the Delta leading-columns convention) — comma list
-      statsCols = Option(properties.get("statscols"))
-        .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
-        .getOrElse(Seq.empty))
-    new VersionedCatalogTable(pathOf(ident), None)
+    TableLayout(if (partCols.isEmpty) None else Some(partCols.mkString(",")),
+      Option(properties.get("statskey")), Option(properties.get("statskey2")),
+      Option(properties.get("statscols"))
+        .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty)).getOrElse(Seq.empty))
   }
 
   /** SQL `ALTER TABLE ADD / RENAME / DROP COLUMN`: pure-metadata commits
@@ -189,22 +196,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
                            partitions: Array[Transform],
                            properties: java.util.Map[String, String]): StagedTable = {
     if (tableExists(ident)) throw new TableAlreadyExistsException(ident)
-    val partCols = partitions.toSeq.map {
-      case t if t.name == "identity" && t.references().length == 1 =>
-        t.references()(0).fieldNames().mkString(".")
-      case other => throw new UnsupportedOperationException(
-        s"GraftCatalog partitions by identity columns only, got $other")
-    }
-    require(partCols.nonEmpty,
-      "GraftCatalog CTAS needs PARTITIONED BY column(s) (the store's layout unit)")
-    // EVERY declared stats property lands in the CTAS commit — silently
-    // dropping one would create the table without its stat dimensions.
-    new StagedVersionedTable(pathOf(ident), schema, partCols.mkString(","),
-      Option(properties.get("statskey")),
-      Option(properties.get("statskey2")),
-      Option(properties.get("statscols"))
-        .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
-        .getOrElse(Seq.empty))
+    new StagedVersionedTable(pathOf(ident), schema, layoutOf(partitions, properties))
   }
   override def stageReplace(ident: Identifier, schema: StructType,
                             partitions: Array[Transform],
@@ -295,12 +287,22 @@ private[sources] object FilterColumns {
   }
 }
 
+/** The declared layout of a catalog CREATE (see `GraftCatalog.layoutOf`). */
+private[sources] final case class TableLayout(partCol: Option[String],
+                                              statsKey: Option[String],
+                                              statsKey2: Option[String],
+                                              statsCols: Seq[String])
+
 /** A catalog-resolved versioned table: reads plan through the same
-  * pruned [[VersionedScanBuilder]] as the path-based connector; INSERT
-  * stages parquet on executors and adopts one append version; DELETE
-  * maps pushed filters onto the store's partition-scoped rewrite. A
-  * time-travelled instance (`VERSION AS OF`) is read-only by
-  * construction — Spark resolves writes against the un-pinned table.
+  * pruned [[VersionedScanBuilder]] as the path-based connector. Every
+  * write is a [[StagedWrite]] (staging → promote → commit, orphan rule
+  * there): INSERT and `writeStream.toTable` adopt one APPEND version per
+  * batch or epoch, and SQL MERGE INTO / UPDATE / rewriting DELETE
+  * replace their scanned entries ([[VersionedRowLevelOperation]]). A
+  * DELETE that pushes down maps its filters onto the store's
+  * partition-scoped rewrite instead. A time-travelled instance
+  * (`VERSION AS OF`) is read-only by construction — Spark resolves
+  * writes against the un-pinned table.
   */
 final class VersionedCatalogTable(path: String, pinned: Option[Int])
     extends Table with SupportsRead with SupportsWrite with SupportsDelete
@@ -338,13 +340,8 @@ final class VersionedCatalogTable(path: String, pinned: Option[Int])
         s"$path records no partition column — writes need one (CREATE with PARTITIONED BY)"))
     val statsKey = Versioned.statsKeyOf(spark, path, latest)
     new WriteBuilder {
-      override def build(): Write = new Write {
-        override def toBatch =
-          new VersionedBatchWrite(path, info.schema(), partCol, statsKey).toBatch
-        override def toStreaming =
-          new VersionedSinkWrite(path, info.schema(), partCol, statsKey,
-            info.queryId()).toStreaming
-      }
+      override def build(): Write =
+        StagedWrite.append(path, info.schema(), partCol, statsKey, info.queryId())
     }
   }
 
@@ -381,76 +378,30 @@ final class VersionedCatalogTable(path: String, pinned: Option[Int])
   }
 }
 
-/** Batch INSERT INTO: the streaming sink's staged-files + adopt commit,
-  * epoch-less — executors write `col=value`-laid-out parquet under a
-  * per-write staging dir, the driver promotes exactly the files named
-  * in the task commit messages and commits ONE append version.
-  */
-final class VersionedBatchWrite(path: String, schema: StructType,
-                                partCol: String, statsKey: Option[String])
-    extends Write with BatchWrite {
-  private val writeId = java.util.UUID.randomUUID().toString.replace("-", "")
-  private def stagingRoot = new Path(path, s"_sink_stage/batch_$writeId")
-  // Fail unsupported types at plan time.
-  VersionedSinkWriter.messageTypeOf(schema, partCol)
-
-  override def toBatch: BatchWrite = this
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new VersionedBatchWriterFactory(stagingRoot.toString, schema, partCol,
-      new SerializableHadoopConf(SparkSession.active.sparkContext.hadoopConfiguration))
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val spark = SparkSession.active
-    val fsys = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val epochDir = new Path(stagingRoot, "0")
-    val files = messages.flatMap(_.asInstanceOf[VersionedSinkFiles].files)
-    if (files.nonEmpty) {
-      val dd = new Path(path,
-        s"d_${java.util.UUID.randomUUID().toString.replace("-", "")}")
-      files.foreach { case (partDir, name) =>
-        val to = new Path(dd, s"$partDir/$name")
-        fsys.mkdirs(to.getParent)
-        require(fsys.rename(new Path(epochDir, s"$partDir/$name"), to),
-          s"failed to promote staged file $partDir/$name")
-      }
-      Versioned.adoptStaged(spark, path, dd.getName, fileStatsKey = statsKey)
-    }
-    fsys.delete(stagingRoot, true)
-  }
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val spark = SparkSession.active
-    val fsys = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fsys.delete(stagingRoot, true)
-  }
-}
-
-final class VersionedBatchWriterFactory(stagingRoot: String, schema: StructType,
-                                        partCol: String,
-                                        conf: SerializableHadoopConf) extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[org.apache.spark.sql.catalyst.InternalRow] =
-    new VersionedSinkWriter(stagingRoot, schema, partCol, partitionId, taskId, 0L,
-      conf.value)
-}
-
 /** The table a CTAS stages into: nothing on disk is a committed table
-  * until the SELECT's write commits ONE CTAS manifest (declared headers +
-  * the staged files, `Versioned.createAsSelect`); `commitStagedChanges`
-  * has nothing left to do, and an abort deletes the owned directory.
+  * until the SELECT's [[StagedWrite]] commits ONE CTAS manifest, the
+  * declared headers plus the promoted files (`Versioned.createAsSelect`;
+  * a createEmpty-then-adoptStaged pair would leave a committed, visible,
+  * EMPTY table if the JVM died between the two commits).
+  * `commitStagedChanges` has nothing left to do, and an abort deletes the
+  * owned directory, leaving no trace.
   */
-final class StagedVersionedTable(path: String, schema0: StructType,
-                                 partCol: String, statsKey: Option[String],
-                                 statsKey2: Option[String] = None,
-                                 statsCols: Seq[String] = Seq.empty)
+final class StagedVersionedTable(path: String, schema0: StructType, layout: TableLayout)
     extends StagedTable with SupportsWrite {
+  private val partCol = layout.partCol.getOrElse(throw new IllegalArgumentException(
+    "GraftCatalog CTAS needs PARTITIONED BY column(s) (the store's layout unit)"))
   override def name(): String = s"graft_staged($path)"
   override def schema(): StructType = schema0
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_WRITE)
+  // EVERY declared stats property lands in the CTAS commit — silently
+  // dropping one would create the table without its stat dimensions.
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
       override def build(): Write =
-        new VersionedCtasWrite(path, info.schema(), partCol, statsKey,
-          statsKey2, statsCols)
+        new StagedWrite(path, info.schema(), partCol, info.queryId(), (spark, dd, _) =>
+          Versioned.createAsSelect(spark, path, info.schema(), dd, layout.partCol,
+            layout.statsKey, layout.statsKey2, layout.statsCols))
     }
   override def commitStagedChanges(): Unit = ()
   override def abortStagedChanges(): Unit = {
@@ -460,82 +411,16 @@ final class StagedVersionedTable(path: String, schema0: StructType,
   }
 }
 
-/** CTAS write: stage parquet on executors like any sink write, then
-  * commit the table into existence as ONE CTAS manifest — the declared
-  * partition/stats headers plus exactly the task-committed files.
-  */
-final class VersionedCtasWrite(path: String, schema: StructType,
-                               partCol: String, statsKey: Option[String],
-                               statsKey2: Option[String] = None,
-                               statsCols: Seq[String] = Seq.empty)
-    extends Write with BatchWrite {
-  private val writeId = java.util.UUID.randomUUID().toString.replace("-", "")
-  private def stagingRoot = new Path(path, s"_sink_stage/ctas_$writeId")
-  VersionedSinkWriter.messageTypeOf(schema, partCol)
-  Versioned.partColsOf(partCol).foreach { c =>
-    require(schema.fieldNames.contains(c),
-      s"CTAS partition column $c not in ${schema.fieldNames.mkString(",")}")
-    // Refuse unsupported partition types at PLAN time, before the SELECT
-    // runs — messageTypeOf excludes the partition columns, and
-    // createAsSelect's own check only fires in commit(), after the whole
-    // job executed.
-    require(Set[org.apache.spark.sql.types.DataType](
-        org.apache.spark.sql.types.StringType,
-        org.apache.spark.sql.types.LongType,
-        org.apache.spark.sql.types.IntegerType,
-        org.apache.spark.sql.types.BooleanType)
-        .contains(schema(c).dataType),
-      s"CTAS partition column $c: type ${schema(c).dataType} " +
-        "renders format-dependent directory names; use int/long/string/boolean")
-  }
-
-  override def toBatch: BatchWrite = this
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new VersionedBatchWriterFactory(stagingRoot.toString, schema, partCol,
-      new SerializableHadoopConf(SparkSession.active.sparkContext.hadoopConfiguration))
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val spark = SparkSession.active
-    val fsys = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val epochDir = new Path(stagingRoot, "0")
-    val files = messages.flatMap(_.asInstanceOf[VersionedSinkFiles].files)
-    // ONE manifest commit (op CTAS) adopting the promoted files with the
-    // declared headers: a createEmpty-then-adoptStaged pair would leave a
-    // committed, visible, EMPTY table if the JVM died between the two
-    // commits — the CTAS contract is all-or-nothing.
-    val dataDir = if (files.isEmpty) None else {
-      val dd = new Path(path,
-        s"d_${java.util.UUID.randomUUID().toString.replace("-", "")}")
-      files.foreach { case (partDir, name) =>
-        val to = new Path(dd, s"$partDir/$name")
-        fsys.mkdirs(to.getParent)
-        require(fsys.rename(new Path(epochDir, s"$partDir/$name"), to),
-          s"failed to promote staged file $partDir/$name")
-      }
-      Some(dd.getName)
-    }
-    Versioned.createAsSelect(spark, path, schema, dataDir,
-      partCol = Some(partCol), statsKey = statsKey,
-      statsKey2 = statsKey2, statsCols = statsCols)
-    fsys.delete(stagingRoot, true)
-  }
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val spark = SparkSession.active
-    val fsys = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fsys.delete(stagingRoot, true)
-  }
-}
-
 /** One SQL row-level statement (MERGE INTO / UPDATE / rewriting DELETE):
   * the scan half records the planned entry set and the version it was
-  * planned against; the write half replaces exactly that set.
+  * planned against; the write half, a [[StagedWrite]], commits
+  * base-minus-scanned plus the promoted dir (`Versioned.replaceEntries`),
+  * CAS-pinned to the scanned version.
   */
 final class VersionedRowLevelOperation(
     path: String,
     cmd: org.apache.spark.sql.connector.write.RowLevelOperation.Command)
     extends org.apache.spark.sql.connector.write.RowLevelOperation {
-  import graft.tables.Versioned
-
   @volatile private[sources] var scannedVersion: Int = -1
   @volatile private[sources] var scanned: Set[(String, String, Option[String])] = Set.empty
 
@@ -552,56 +437,16 @@ final class VersionedRowLevelOperation(
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    val spark = SparkSession.active
-    val partCol = Versioned.partColOf(spark, path, scannedVersion).getOrElse(
+    val partCol = Versioned.partColOf(SparkSession.active, path, scannedVersion).getOrElse(
       throw new IllegalArgumentException(
         s"$path records no partition column — row-level SQL needs one"))
     new WriteBuilder {
-      override def build(): Write = new VersionedReplaceDataWrite(
-        path, info.schema(), partCol, VersionedRowLevelOperation.this)
+      override def build(): Write =
+        new StagedWrite(path, info.schema(), partCol, info.queryId(), (spark, dd, _) => {
+          require(scannedVersion >= 1,
+            "row-level write committed before its scan planned — unsupported plan shape")
+          Versioned.replaceEntries(spark, path, scannedVersion, scanned, dd, cmd.toString)
+        })
     }
-  }
-}
-
-/** The replacement write of a row-level statement: stage the rewritten
-  * groups' rows like any sink write, then commit base-minus-scanned plus
-  * the staged dir, CAS-pinned to the scanned version.
-  */
-final class VersionedReplaceDataWrite(path: String, schema: StructType,
-                                      partCol: String,
-                                      op: VersionedRowLevelOperation)
-    extends Write with BatchWrite {
-  private val writeId = java.util.UUID.randomUUID().toString.replace("-", "")
-  private def stagingRoot = new Path(path, s"_sink_stage/rlo_$writeId")
-  VersionedSinkWriter.messageTypeOf(schema, partCol)
-
-  override def toBatch: BatchWrite = this
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new VersionedBatchWriterFactory(stagingRoot.toString, schema, partCol,
-      new SerializableHadoopConf(SparkSession.active.sparkContext.hadoopConfiguration))
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val spark = SparkSession.active
-    val fsys = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val epochDir = new Path(stagingRoot, "0")
-    val files = messages.flatMap(_.asInstanceOf[VersionedSinkFiles].files)
-    require(op.scannedVersion >= 1,
-      "row-level write committed before its scan planned — unsupported plan shape")
-    val dd = new Path(path,
-      s"d_${java.util.UUID.randomUUID().toString.replace("-", "")}")
-    files.foreach { case (partDir, name) =>
-      val to = new Path(dd, s"$partDir/$name")
-      fsys.mkdirs(to.getParent)
-      require(fsys.rename(new Path(epochDir, s"$partDir/$name"), to),
-        s"failed to promote staged file $partDir/$name")
-    }
-    try graft.tables.Versioned.replaceEntries(spark, path, op.scannedVersion,
-      op.scanned, dd.getName, op.command().toString)
-    finally fsys.delete(stagingRoot, true)
-  }
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val spark = SparkSession.active
-    val fsys = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fsys.delete(stagingRoot, true)
   }
 }

@@ -1,20 +1,19 @@
 package graft.sources
 
-import graft.tables.Versioned
-import org.apache.hadoop.fs.{FileSystem, Path}
+import graft.tables.{ConcurrentWriteException, Versioned}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.write.{LogicalWriteInfo, PhysicalWriteInfo, DataWriter, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** DataSourceV2 STREAMING SINK into a [[Versioned]] table — the standard
-  * `writeStream.format(...)` surface for continuous ingestion, replacing
-  * the hand-rolled foreachBatch recipe with the engine-native API:
+  * `writeStream.format(...)` surface for continuous ingestion:
   *
   * {{{
   *   df.writeStream.format("graft.sources.VersionedSink")
@@ -24,33 +23,17 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     .start(tablePath)                     // table must exist (v1 published)
   * }}}
   *
-  * Semantics (the public Delta streaming-sink design re-derived):
-  *  - each micro-batch epoch commits as ONE new table VERSION — an
-  *    append whose manifest splices the previous latest and adds exactly
-  *    the epoch's files;
-  *  - EXACTLY-ONCE across failures and restarts, twice over: the commit
-  *    adopts only the files named in the epoch's task commit MESSAGES
-  *    (a failed attempt's orphans are dropped with the staging dir), and
-  *    the version carries a `sink_<queryId>_<epochId>` idempotence tag —
-  *    a replayed epoch finds its tag committed and is a no-op;
-  *  - executors write parquet directly (parquet-hadoop Group writer, one
-  *    open file per partition VALUE per task — same `col=value` layout
-  *    as Spark's own partitioned writer, so every store read path, stats
-  *    scan and merge works on sink-written versions unchanged);
-  *  - readers are never blocked: until the manifest commit lands, the
-  *    staged files are invisible.
-  *
-  * Scale shape: the write itself is embarrassingly parallel (no shuffle
-  * — each task writes its partition values locally; pre-partition the
-  * stream by `partCol` upstream if small-files-per-epoch matter, then
-  * OPTIMIZE inside the store compacts what accumulates). The driver
-  * handles only file names and the manifest CAS.
-  *
-  * Scope: the DRIVER's session Hadoop configuration rides to executors
-  * via a serializable envelope (object-store credentials and fs
-  * implementations apply on the task side); supported column types are
-  * the store's partitionable scalars plus double — refused loudly at
-  * plan time, not mid-stream, for data and partition columns alike.
+  * Each micro-batch epoch is one [[StagedWrite]] commit: ONE new APPEND
+  * version holding exactly the epoch's files, tagged
+  * `sink_<queryId>_<epochId>`. That makes it EXACTLY-ONCE across failures
+  * and restarts: a failed task attempt's files are never adopted, and a
+  * replayed epoch finds its tag committed and is a no-op. Executors write
+  * the `col=value` layout of Spark's own partitioned writer, so every
+  * store read path, stats scan and merge works on sink-written versions
+  * unchanged; the driver handles only file names and the manifest CAS.
+  * The write is embarrassingly parallel (no shuffle): pre-partition the
+  * stream by `partCol` upstream if small files per epoch matter, and
+  * OPTIMIZE compacts what accumulates.
   */
 class VersionedSink extends TableProvider {
   override def supportsExternalMetadata(): Boolean = true
@@ -76,89 +59,118 @@ final class VersionedSinkTable(path: String, schema: StructType)
   override def schema(): StructType = schema
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.STREAMING_WRITE)
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
+    val partCol = info.options().get("partCol")
+    require(partCol != null, "VersionedSink needs a partCol option")
     new WriteBuilder {
-      override def build(): Write = new VersionedSinkWrite(
-        path, info.schema(), info.options(), info.queryId())
+      override def build(): Write = StagedWrite.append(path, info.schema(), partCol,
+        Option(info.options().get("fileStatsKey")), info.queryId())
     }
+  }
 }
 
-final class VersionedSinkWrite(path: String, schema: StructType,
-                               partCol: String,
-                               fileStatsKey: Option[String],
-                               queryId: String)
-    extends Write with StreamingWrite {
-
-  /** Path-route constructor: partCol/fileStatsKey from writer options
-    * (`writeStream.format(...).option("partCol", ...)`). The catalog
-    * route (`writeStream.toTable`) passes them from the table's own
-    * recorded headers instead.
-    */
-  def this(path: String, schema: StructType,
-           options: CaseInsensitiveStringMap, queryId: String) =
-    this(path, schema,
-      {
-        val p = options.get("partCol")
-        require(p != null, "VersionedSink needs a partCol option")
-        p
-      },
-      Option(options.get("fileStatsKey")), queryId)
-
-  graft.tables.Versioned.partColsOf(partCol).foreach { c =>
-    require(schema.fieldNames.contains(c),
-      s"VersionedSink needs partCol $c among ${schema.fieldNames.mkString(",")}")
-    // Fail unsupported types at PLAN time — the partition columns via
-    // the directory-encoding whitelist (messageTypeOf excludes them, so
-    // e.g. a double partCol would otherwise only fail per-row mid-stream).
-    require(Set[org.apache.spark.sql.types.DataType](
-        StringType, LongType, IntegerType, BooleanType)
-        .contains(schema(c).dataType),
-      s"VersionedSink partition column $c: type " +
-        s"${schema(c).dataType} renders format-dependent directory " +
-        "names; use int/long/string/boolean")
-  }
-  // ... and the data columns via the parquet message type.
+/** The one DSv2 write into a [[Versioned]] table. SQL INSERT and the
+  * streaming sink (`adoptStaged`), CTAS (`createAsSelect`) and the
+  * replacement half of a SQL row-level statement (`replaceEntries`)
+  * differ only in `commitFn`, the store call that turns the promoted
+  * files into a version. Each epoch (a batch write is epoch 0) runs
+  * staging → promote → commit:
+  *  - staging: tasks write `col=value`-laid-out parquet under
+  *    `<table>/_sink_stage/<stageId>/<epoch>/` and name their files in
+  *    their commit messages;
+  *  - promote: the driver renames exactly the named files into one fresh
+  *    data dir ([[Versioned.newDataDir]]), so a failed attempt's leftovers
+  *    are never adopted; an epoch without files promotes no dir (`None`);
+  *  - commit: `commitFn(spark, promoted, epoch)`. Readers never see the
+  *    files before its manifest lands.
+  *
+  * Orphan rule: when the promote or `commitFn` throws, the promoted dir
+  * is deleted unless the latest manifest references it; on a lost CAS the
+  * store has deleted it already. The stage dir goes on commit and abort
+  * alike. Column and partition types are refused at planning, naming the
+  * column, before any job starts.
+  */
+final class StagedWrite(path: String, schema: StructType, partCol: String,
+                        stageId: String,
+                        commitFn: (SparkSession, Option[String], Long) => Unit)
+    extends Write with BatchWrite with StreamingWrite {
+  Versioned.requirePartitionable(schema, partCol)
   VersionedSinkWriter.messageTypeOf(schema, partCol)
 
+  private val stagingRoot =
+    new Path(path, s"_sink_stage/${stageId.replaceAll("[^0-9a-zA-Z-]", "_")}")
+
+  override def toBatch: BatchWrite = this
   override def toStreaming: StreamingWrite = this
+  // BatchWrite and StreamingWrite both declare this default (true), so
+  // the class must pick one
+  override def useCommitCoordinator(): Boolean = true
 
-  private def stagingRoot = new Path(path,
-    s"_sink_stage/${queryId.replaceAll("[^0-9a-zA-Z-]", "_")}")
-  private def fs(spark: SparkSession): FileSystem =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
+  // The session's Hadoop conf rides to the executors (object-store
+  // credentials, fs implementations): a fresh Configuration() on the task
+  // side would silently drop them.
+  private def writerFactory = new VersionedSinkWriterFactory(stagingRoot.toString, schema,
+    partCol, new SerializableHadoopConf(SparkSession.active.sparkContext.hadoopConfiguration))
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
+    writerFactory
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    // The session's Hadoop conf rides to the executors (object-store
-    // credentials, fs implementations) — a fresh Configuration() on the
-    // task side would silently drop them.
-    new VersionedSinkWriterFactory(stagingRoot.toString, schema, partCol,
-      new SerializableHadoopConf(SparkSession.active.sparkContext.hadoopConfiguration))
+    writerFactory
+
+  override def commit(messages: Array[WriterCommitMessage]): Unit = commit(0L, messages)
+  override def abort(messages: Array[WriterCommitMessage]): Unit = abort(0L, messages)
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
-    val fsys = fs(spark)
-    val epochDir = new Path(stagingRoot, epochId.toString)
+    val fsys = stagingRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = messages.flatMap(_.asInstanceOf[VersionedSinkFiles].files)
-    if (files.nonEmpty) {
-      // Adopt ONLY the committing attempt's files: a failed prior
-      // attempt's leftovers stay in the staging dir and die with it.
-      val dd = new Path(path,
-        s"d_${java.util.UUID.randomUUID().toString.replace("-", "")}")
-      files.foreach { case (partDir, name) =>
+    val promoted =
+      if (files.isEmpty) None else Some(Versioned.newDataDir(fsys, new Path(path)))
+    try {
+      promoted.foreach(dd => files.foreach { case (partDir, name) =>
         val to = new Path(dd, s"$partDir/$name")
         fsys.mkdirs(to.getParent)
-        require(fsys.rename(new Path(epochDir, s"$partDir/$name"), to),
-          s"failed to promote staged file $partDir/$name for epoch $epochId")
-      }
-      Versioned.adoptStaged(spark, path, dd.getName,
-        tag = Some(s"sink_${queryId}_$epochId"), fileStatsKey = fileStatsKey)
-    }
-    fsys.delete(epochDir, true)
+        require(fsys.rename(new Path(stagingRoot, s"$epochId/$partDir/$name"), to),
+          s"failed to promote staged file $partDir/$name of epoch $epochId")
+      })
+      commitFn(spark, promoted.map(_.getName), epochId)
+    } catch {
+      case e: Throwable =>
+        // a lost CAS has deleted the promoted dir already
+        if (!e.isInstanceOf[ConcurrentWriteException])
+          promoted.filterNot(dd => referenced(spark, dd.getName)).foreach(fsys.delete(_, true))
+        throw e
+    } finally fsys.delete(stagingRoot, true)
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
-    fs(spark).delete(new Path(stagingRoot, epochId.toString), true)
+    stagingRoot.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(stagingRoot, true)
+  }
+
+  /** Whether the latest version serves from data dir `name` (an unreadable
+    * manifest counts as yes: a dir is only deleted when provably unused).
+    */
+  private def referenced(spark: SparkSession, name: String): Boolean =
+    scala.util.Try {
+      val v = Versioned.latestVersion(spark, path)
+      v >= 1 && Versioned.dataDirsOf(spark, path, v).contains(name)
+    }.getOrElse(true)
+}
+
+object StagedWrite {
+  /** An APPEND of each epoch's promoted dir (`Versioned.adoptStaged`):
+    * SQL INSERT as a batch, a stream's epochs tagged
+    * `sink_<queryId>_<epoch>`. The stage dir is named by the query id, so
+    * a restarted stream's first commit also clears a crashed run's files.
+    */
+  def append(path: String, schema: StructType, partCol: String,
+             statsKey: Option[String], queryId: String): Write = new Write {
+    private def adopting(tag: Long => Option[String]) =
+      new StagedWrite(path, schema, partCol, queryId, (spark, dd, epoch) =>
+        dd.foreach(Versioned.adoptStaged(spark, path, _, tag = tag(epoch),
+          fileStatsKey = statsKey)))
+    override def toBatch: BatchWrite = adopting(_ => None)
+    override def toStreaming: StreamingWrite = adopting(e => Some(s"sink_${queryId}_$e"))
   }
 }
 
@@ -182,10 +194,13 @@ final class SerializableHadoopConf(@transient var value: org.apache.hadoop.conf.
   }
 }
 
+/** Task-side writers of a [[StagedWrite]], batch (epoch 0) and streaming. */
 final class VersionedSinkWriterFactory(stagingRoot: String, schema: StructType,
                                        partCol: String,
                                        conf: SerializableHadoopConf)
-    extends StreamingDataWriterFactory {
+    extends DataWriterFactory with StreamingDataWriterFactory {
+  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
+    createWriter(partitionId, taskId, 0L)
   override def createWriter(partitionId: Int, taskId: Long,
                             epochId: Long): DataWriter[InternalRow] =
     new VersionedSinkWriter(stagingRoot, schema, partCol,
@@ -277,6 +292,8 @@ final class VersionedSinkWriter(stagingRoot: String, schema: StructType,
           case LongType => String.valueOf(row.getLong(i))
           case IntegerType => String.valueOf(row.getInt(i))
           case BooleanType => String.valueOf(row.getBoolean(i))
+          case ShortType => String.valueOf(row.getShort(i))
+          case ByteType => String.valueOf(row.getByte(i))
           case other => throw new IllegalArgumentException(
             s"partition column $c: unsupported type $other")
         }

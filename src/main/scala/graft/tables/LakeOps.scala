@@ -268,6 +268,20 @@ object Versioned {
     Set(ByteType, ShortType, IntegerType, LongType, StringType, BooleanType)
   }
 
+  /** Refuse a partition spec with a column `schema` lacks or whose type is
+    * outside [[partitionableTypes]], naming the column: the one check
+    * every partitioned writer runs before any job starts.
+    */
+  private[graft] def requirePartitionable(schema: org.apache.spark.sql.types.StructType,
+                                          partCol: String): Unit =
+    partColsOf(partCol).foreach { c =>
+      require(schema.fieldNames.contains(c),
+        s"partition column $c not in ${schema.fieldNames.mkString(",")}")
+      require(partitionableTypes.contains(schema(c).dataType),
+        s"partition column $c: type ${schema(c).dataType} renders format-dependent " +
+          "directory names; use byte/short/int/long/string/boolean")
+    }
+
   private def fs(spark: SparkSession, tablePath: String): (FileSystem, Path) = {
     val p = new Path(tablePath)
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
@@ -985,7 +999,10 @@ object Versioned {
         java.nio.file.StandardOpenOption.WRITE)
     } else fsys.create(mf, /* overwrite = */ false)
 
-  private def newDataDir(fsys: FileSystem, table: Path): Path = {
+  /** A fresh, not yet existing `d_<uuid>` data dir of `table` — the one
+    * minter of data-dir names (vacuum's sweep matches them).
+    */
+  private[graft] def newDataDir(fsys: FileSystem, table: Path): Path = {
     fsys.mkdirs(table)
     new Path(table, s"d_${java.util.UUID.randomUUID().toString.replace("-", "")}")
   }
@@ -1027,13 +1044,9 @@ object Versioned {
     val dd = newDataDir(fsys, table)
     val entries = partCol match {
       case Some(pc) =>
-        val cols = partColsOf(pc)
-        cols.foreach(c => require(partitionableTypes.contains(df.schema(c).dataType),
-          s"partition column $c: type ${df.schema(c).dataType} renders " +
-            "format-dependent directory names; use int/long/string/boolean"))
-        df.write.mode(SaveMode.ErrorIfExists).partitionBy(cols: _*).parquet(dd.toString)
-        if (fileStatsKey.isDefined) fileStatsOf(spark, table, dd, meta)
-        else listPartDirs(fsys, dd, cols.length).map(Entry(_, dd.getName))
+        requirePartitionable(df.schema, pc)
+        df.write.mode(SaveMode.ErrorIfExists).partitionBy(partColsOf(pc): _*).parquet(dd.toString)
+        freshEntries(spark, table, dd, meta)
       case None =>
         require(fileStatsKey.isEmpty, "fileStatsKey requires partCol")
         df.write.mode(SaveMode.ErrorIfExists).parquet(dd.toString)
@@ -1047,7 +1060,7 @@ object Versioned {
     publish(spark, tablePath, df)
 
   /** CREATE TABLE: commit an EMPTY v1 that records schema, partition
-    * column and (optionally) the stats column — the DDL half of the SQL
+    * column and (optionally) the stats columns — the DDL half of the SQL
     * catalog's CREATE-then-INSERT flow. Reads of the empty version serve
     * zero rows in the recorded schema; the first append establishes the
     * file layout under the declared headers.
@@ -1057,31 +1070,9 @@ object Versioned {
                   partCol: Option[String] = None,
                   statsKey: Option[String] = None,
                   statsKey2: Option[String] = None,
-                  statsCols: Seq[String] = Seq.empty): Int = {
-    val (fsys, table) = fs(spark, tablePath)
-    require(latestVersion(spark, tablePath) == 0,
-      s"$tablePath already has versions")
-    partCol.toSeq.flatMap(partColsOf).foreach { c =>
-      require(schema.fieldNames.contains(c),
-        s"partition column $c not in ${schema.fieldNames.mkString(",")}")
-      require(partitionableTypes.contains(schema(c).dataType),
-        s"partition column $c: type ${schema(c).dataType} renders " +
-          "format-dependent directory names; use int/long/string/boolean")
-    }
-    statsKey.foreach(c => require(schema.fieldNames.contains(c),
-      s"stats column $c not in ${schema.fieldNames.mkString(",")}"))
-    require(statsKey2.isEmpty || statsKey.isDefined, "statsKey2 requires statsKey")
-    require(statsCols.isEmpty || statsKey.isDefined, "statsCols requires statsKey")
-    (statsKey2.toSeq ++ statsCols).foreach { c =>
-      require(schema.fieldNames.contains(c),
-        s"stats column $c not in ${schema.fieldNames.mkString(",")}")
-      require(KeyEnc.supported(schema(c).dataType),
-        s"stats column $c must be integral, string, or date")
-    }
-    commit(fsys, table, spark, Seq.empty, Some(0), Seq.empty,
-      TableMeta(schema = Some(schema), statsKey = statsKey, statsKey2 = statsKey2,
-        statsCols = statsCols, partCol = partCol), "CREATE")
-  }
+                  statsCols: Seq[String] = Seq.empty): Int =
+    createFirst(spark, tablePath, schema, None, partCol, statsKey, statsKey2, statsCols,
+      "CREATE")
 
   /** CTAS: CREATE + first data as ONE manifest commit (`op = CTAS`) —
     * the staged dir's adopted files and the declared schema/partition/
@@ -1098,17 +1089,22 @@ object Versioned {
                      partCol: Option[String] = None,
                      statsKey: Option[String] = None,
                      statsKey2: Option[String] = None,
-                     statsCols: Seq[String] = Seq.empty): Int = {
+                     statsCols: Seq[String] = Seq.empty): Int =
+    createFirst(spark, tablePath, schema, dataDirName, partCol, statsKey, statsKey2,
+      statsCols, "CTAS")
+
+  /** The v1 of a new table: the declared headers, checked here once for
+    * CREATE and CTAS alike, plus the entries of `dataDirName` if given.
+    */
+  private def createFirst(spark: SparkSession, tablePath: String,
+                          schema: org.apache.spark.sql.types.StructType,
+                          dataDirName: Option[String], partCol: Option[String],
+                          statsKey: Option[String], statsKey2: Option[String],
+                          statsCols: Seq[String], op: String): Int = {
     val (fsys, table) = fs(spark, tablePath)
     require(latestVersion(spark, tablePath) == 0,
       s"$tablePath already has versions")
-    partCol.toSeq.flatMap(partColsOf).foreach { c =>
-      require(schema.fieldNames.contains(c),
-        s"partition column $c not in ${schema.fieldNames.mkString(",")}")
-      require(partitionableTypes.contains(schema(c).dataType),
-        s"partition column $c: type ${schema(c).dataType} renders " +
-          "format-dependent directory names; use int/long/string/boolean")
-    }
+    partCol.foreach(requirePartitionable(schema, _))
     statsKey.foreach(c => require(schema.fieldNames.contains(c),
       s"stats column $c not in ${schema.fieldNames.mkString(",")}"))
     require(statsKey.isEmpty || partCol.nonEmpty, "statsKey requires partCol")
@@ -1122,20 +1118,12 @@ object Versioned {
     }
     val meta = TableMeta(schema = Some(schema), statsKey = statsKey,
       statsKey2 = statsKey2, statsCols = statsCols, partCol = partCol)
-    val entries = dataDirName match {
-      case None => Seq.empty
-      case Some(n) =>
-        val dd = new Path(table, n)
-        require(fsys.exists(dd), s"staged dir $dd does not exist")
-        (statsKey, partCol) match {
-          case (Some(_), _) => fileStatsOf(spark, table, dd, meta)
-          case (None, Some(pc)) =>
-            listPartDirs(fsys, dd, partColsOf(pc).length).map(Entry(_, n))
-          case _ => Seq(Entry("-", n))
-        }
+    val dd = dataDirName.map(new Path(table, _))
+    val entries = dd.toSeq.flatMap { d =>
+      require(fsys.exists(d), s"staged dir $d does not exist")
+      if (partCol.isEmpty) Seq(Entry("-", d.getName)) else freshEntries(spark, table, d, meta)
     }
-    commit(fsys, table, spark, entries, Some(0),
-      dataDirName.map(n => new Path(table, n)).toSeq, meta, "CTAS")
+    commit(fsys, table, spark, entries, Some(0), dd.toSeq, meta, op)
   }
 
   /** REPLACE a scanned entry set with freshly staged files — the commit
@@ -1149,23 +1137,19 @@ object Versioned {
   private[graft] def replaceEntries(spark: SparkSession, tablePath: String,
                                     baseV: Int,
                                     drop: Set[(String, String, Option[String])],
-                                    dataDirName: String, op: String): Int = {
+                                    dataDirName: Option[String], op: String): Int = {
     val (fsys, table) = fs(spark, tablePath)
     val baseEntries = readManifest(fsys, table, baseV)
-    val dd = new Path(table, dataDirName)
+    val dd = dataDirName.map(new Path(table, _))
     val meta = metaOf(fsys, table, baseV)
-    val fresh =
-      if (!fsys.exists(dd)) Seq.empty
-      else {
-        if (meta.constraints.nonEmpty)
-          validateConstraints(Tables.parquet(spark).load(dd.toString), meta.constraints)
-        if (meta.statsKey.isDefined) fileStatsOf(spark, table, dd, meta)
-        else listPartDirs(fsys, dd, partDepth(meta)).map(Entry(_, dataDirName))
-      }
+    val fresh = dd.toSeq.flatMap { d =>
+      if (meta.constraints.nonEmpty)
+        validateConstraints(Tables.parquet(spark).load(d.toString), meta.constraints)
+      freshEntries(spark, table, d, meta)
+    }
     val entries = baseEntries
       .filterNot(e => drop.contains((e.partDir, e.dataDir, e.file))) ++ fresh
-    commit(fsys, table, spark, entries, Some(baseV),
-      if (fsys.exists(dd)) Seq(dd) else Seq.empty, meta, op)
+    commit(fsys, table, spark, entries, Some(baseV), dd.toSeq, meta, op)
   }
 
   /** The table's partition column: the `#partcol` header (recorded by
@@ -1241,9 +1225,7 @@ object Versioned {
       // staged files in the same scan, so 2-D/N-dim skipping never
       // degrades on ingest.
       val meta = bm.copy(schema = bm.schema.orElse(Some(df.schema)), statsKey = effKey)
-      val fresh =
-        if (effKey.isDefined) fileStatsOf(spark, table, dd, meta)
-        else listPartDirs(fsys, dd, partDepth(bm)).map(Entry(_, dataDirName))
+      val fresh = freshEntries(spark, table, dd, meta)
       val baseEntries = if (base == 0) Seq.empty else readManifest(fsys, table, base)
       validateConstraints(df, bm.constraints)
       try {
@@ -1346,13 +1328,7 @@ object Versioned {
     val baseSchema = recordedSchema(bm, base, tablePath)
     val newCols = partColsOf(newPartCol)
     require(newCols.nonEmpty, "evolvePartitioning: empty partition spec")
-    newCols.foreach { c =>
-      require(baseSchema.fieldNames.contains(c),
-        s"partition column $c not in ${baseSchema.fieldNames.mkString(",")}")
-      require(partitionableTypes.contains(baseSchema(c).dataType),
-        s"partition column $c: type ${baseSchema(c).dataType} renders " +
-          "format-dependent directory names; use int/long/string/boolean")
-    }
+    requirePartitionable(baseSchema, newPartCol)
     val oldCols = bm.partCol.toSeq.flatMap(partColsOf)
     require(newCols != oldCols,
       s"table is already partitioned by (${newCols.mkString(",")})")
@@ -1406,10 +1382,7 @@ object Versioned {
         dumpPlan("repartition_rewrite", shaped)
         shaped.write.mode(SaveMode.ErrorIfExists)
           .partitionBy(cols: _*).parquet(dd.toString)
-        val es =
-          if (bm.statsKey.isDefined) fileStatsOf(spark, table, dd, bm)
-          else listPartDirs(fsys, dd, cols.length).map(Entry(_, dd.getName))
-        (Seq(dd), es)
+        (Seq(dd), freshEntries(spark, table, dd, bm))
       }
     commit(fsys, table, spark, keep ++ fresh, expectedLatest.orElse(Some(base)), dirs,
       bm, "REPARTITION")
@@ -1761,7 +1734,7 @@ object Versioned {
     *     body ([[rewriteWhere]]) or a maintenance repack.
     *  4. Splice ([[rewriteCommit]]): the rows land in a FRESH `d_*` dir;
     *     the written partitions must stay inside the scope; the new files'
-    *     entries ([[rewrittenEntries]]) replace the scope's base entries
+    *     entries ([[freshEntries]]) replace the scope's base entries
     *     and every other base entry carries over unchanged. No committed
     *     file is ever touched, so readers of every version are unaffected,
     *     and work is ∝ the scope, never ∝ the table. A recorded change
@@ -1845,7 +1818,7 @@ object Versioned {
       s"${rw.what} wrote partitions outside the touched set: " +
         s"${(written.toSet -- allowed).mkString(",")} — partition-value " +
         "rendering drifted from Spark's writer"))
-    val fresh = rewrittenEntries(spark, base.table, dd, written, rw.meta)
+    val fresh = freshEntries(spark, base.table, dd, rw.meta, Some(written))
     val feedDir = rw.feed.map { case (pre, post) =>
       writeChangeFeed(base.fsys, base.table, pre, post) }
     commitRebasing(spark, base, rw, fresh, Seq(dd) ++ feedDir, feedDir.map(_.getName))
@@ -1948,14 +1921,19 @@ object Versioned {
     if (baseEntries.nonEmpty && baseEntries.forall(_.file.isDefined)) bm
     else bm.copy(statsKey = None, statsKey2 = None, statsCols = Seq.empty)
 
-  /** Manifest entries for a rewrite's fresh data dir `dd`, whose leaf
-    * partition dirs are `written`: per file when `meta` records file
-    * stats, else per partition dir.
+  /** Manifest entries for a freshly written data dir `dd`: one per file,
+    * carrying every stats dimension `meta` records (one stats scan), when
+    * `meta` records a stats key and `dd` holds data; else one per leaf
+    * partition dir. `written` is `dd`'s leaf dirs when the caller has
+    * listed them; otherwise they are listed at `meta`'s partition depth.
     */
-  private def rewrittenEntries(spark: SparkSession, table: Path, dd: Path,
-                               written: Seq[String], meta: TableMeta): Seq[Entry] =
-    if (meta.statsKey.isDefined && written.nonEmpty) fileStatsOf(spark, table, dd, meta)
-    else written.map(Entry(_, dd.getName))
+  private def freshEntries(spark: SparkSession, table: Path, dd: Path, meta: TableMeta,
+                           written: Option[Seq[String]] = None): Seq[Entry] = {
+    val dirs = written.getOrElse(listPartDirs(
+      dd.getFileSystem(spark.sparkContext.hadoopConfiguration), dd, partDepth(meta)))
+    if (meta.statsKey.isDefined && dirs.nonEmpty) fileStatsOf(spark, table, dd, meta)
+    else dirs.map(Entry(_, dd.getName))
+  }
 
   /** Persist a rewrite's change images (delete pre-images + insert
     * post-images) to a fresh `c_*` dir — batch-sized, flat parquet.
@@ -2169,8 +2147,7 @@ object Versioned {
     val base = baseOf(spark, tablePath, fromVersion, expectedLatest, "merge")
     val target = readAt(spark, tablePath, base.v)
     val partCols = partColsOf(partCol)
-    partCols.foreach(c => require(partitionableTypes.contains(target.schema(c).dataType),
-      s"partition column $c has a non-path-stable type"))
+    requirePartitionable(target.schema, partCol)
     val b = new MergeBatch(spark, source, target, keyCol, extraCols = partCols,
       ops = Seq("U", "D", "I", "K"), notMatchedBySource, "merge")
 
@@ -2765,6 +2742,22 @@ object Versioned {
     metaOf(fsys, table, v).op
   }
 
+  /** Version `v`'s recorded change-feed dir, if its commit recorded one.
+    * A vacuumed manifest or feed dir fails loudly, naming `v`: read as
+    * "no recorded feed", it would silently lose `v`'s changes.
+    */
+  private[graft] def recordedFeedOf(spark: SparkSession, tablePath: String,
+                                    v: Int): Option[Path] = {
+    val (fsys, table) = fs(spark, tablePath)
+    opOf(spark, tablePath, v)
+    metaOf(fsys, table, v).changesDir.map { d =>
+      val dir = new Path(table, d)
+      require(fsys.exists(dir), s"the recorded change feed of version $v " +
+        s"does not exist (or was vacuumed) at $table")
+      dir
+    }
+  }
+
   /** The entries version `v` ADDED relative to `v - 1` (serialized-form
     * set difference — exact, since parse↔serialize is byte-stable): for
     * an APPEND commit this is precisely the appended files. Planning
@@ -2816,7 +2809,9 @@ object Versioned {
 
   /** Fail loudly if any row of `df` violates a constraint (NULL passes —
     * SQL CHECK semantics). One filter + limit(1) job per constraint,
-    * evaluated BEFORE any file is written so a refusal leaves no orphans.
+    * evaluated before the commit so a refusal leaves no orphans: the
+    * store's own writers check before they write a file, and a staged
+    * write ([[graft.sources.StagedWrite]]) deletes its promoted dir.
     */
   private def validateConstraints(df: DataFrame, cs: Seq[(String, String)]): Unit =
     cs.foreach { case (n, e) =>
@@ -3138,7 +3133,8 @@ object Versioned {
     * recorded feed — a non-recording commit in the middle means the feed
     * is incomplete, and silently skipping it would read as data loss.
     * Pass `strict = false` to consume only the recorded commits (the
-    * streaming source's behavior, documented there).
+    * streaming source's behavior, documented there). Either way a
+    * vacuumed version in the range fails loudly ([[recordedFeedOf]]).
     */
   def recordedChanges(spark: SparkSession, tablePath: String,
                       fromV: Int, toV: Int,
@@ -3146,7 +3142,7 @@ object Versioned {
     val (fsys, table) = fs(spark, tablePath)
     val toSchema = metaOf(fsys, table, toV).schema
     val range = (fromV + 1) to toV
-    val recorded = range.flatMap(v => metaOf(fsys, table, v).changesDir.map((v, _)))
+    val recorded = range.flatMap(v => recordedFeedOf(spark, tablePath, v).map((v, _)))
     if (strict) {
       val missing = range.toSet -- recorded.map(_._1).toSet
       require(missing.isEmpty,
@@ -3157,7 +3153,7 @@ object Versioned {
     val empty = readAt(spark, tablePath, toV).limit(0)
       .withColumn("_change", lit("")).withColumn("_version", lit(0))
     recorded.map { case (v, d) =>
-      val raw = Tables.parquet(spark).load(new Path(table, d).toString)
+      val raw = Tables.parquet(spark).load(d.toString)
       // align the data columns to toV's schema, preserving the _change tag
       val aligned = toSchema match {
         case Some(sch) =>

@@ -209,7 +209,7 @@ class LakeOpsModelSpec extends SparkSpec {
     // (operation, run it -> new version, expected meta from the base's)
     val ops: Seq[(String, () => Int, TableMeta => TableMeta)] = Seq(
       ("replaceEntries", () => Versioned.replaceEntries(spark, tbl,
-          Versioned.latestVersion(spark, tbl), Set.empty, staged, "REPLACE"),
+          Versioned.latestVersion(spark, tbl), Set.empty, Some(staged), "REPLACE"),
         m => m),
       ("addColumns", () => Versioned.addColumns(spark, tbl,
           Seq(StructField("n", LongType))),

@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * between, would bring back Spark's one-task schema job on every call.
   * Table data decodes through one reader, `VersionedColumnarReader`: the
   * parquet-hadoop example `Group` reader serves only the manifest's
-  * checkpoint sidecar.
+  * checkpoint sidecar. Data-dir names are minted in one place,
+  * `Versioned.newDataDir`, whose `d_*` format vacuum's sweep relies on.
   */
 class ParquetReadGuardSpec extends AnyFunSuite {
   private val plainRead =
@@ -55,5 +56,28 @@ class ParquetReadGuardSpec extends AnyFunSuite {
     assert(stray.isEmpty,
       s"table data decodes through VersionedColumnarReader: ${stray.map(_._3).mkString(", ")}")
     assert(sidecar.nonEmpty, "the checkpoint sidecar reader moved: update this guard")
+  }
+
+  test("src/main interpolates a d_ data-dir name only in LakeOps' newDataDir") {
+    // `d_$x` / `d_${...}` after a non-identifier character: "d_tail$par"
+    // (a fixed stage name) and "graft_cfeed_${...}" are not data-dir names
+    val minted = """(?<![\w$])d_\$""".r
+    val defName = """def\s+(\w+)""".r
+    val uses = mainSources.flatMap { case (path, text) =>
+      minted.findAllMatchIn(text).map { m =>
+        (new File(path).getName,
+          defName.findAllMatchIn(text.substring(0, m.start)).map(_.group(1)).toSeq.lastOption,
+          s"$path:${text.substring(0, m.start).count(_ == '\n') + 1}")
+      }
+    }
+    val (minter, stray) =
+      uses.partition(u => u._1 == "LakeOps.scala" && u._2.contains("newDataDir"))
+    assert(stray.isEmpty,
+      s"mint data dirs through Versioned.newDataDir: ${stray.map(_._3).mkString(", ")}")
+    assert(minter.size == 1, "newDataDir moved or changed: update this guard")
+    assert(minted.findFirstIn("new Path(t, s\"d_${uuid}\")").nonEmpty)
+    assert(minted.findFirstIn("s\"$dst/d_$name\"").nonEmpty)
+    assert(minted.findFirstIn("val dd = s\"d_tail$par\"").isEmpty)
+    assert(minted.findFirstIn("s\"graft_cfeed_${dirTag(dir)}\"").isEmpty)
   }
 }
