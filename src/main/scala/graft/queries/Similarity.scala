@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.functions.{CentroidAggregator, TopKAggregator, VectorOps}
+import graft.functions.{CentroidAggregator, VectorOps}
 import graft.tables.Tables._
 
 /** Similarity-search pillar over `embeddings` (ArrayType(FloatType), dim 64):
@@ -47,8 +47,8 @@ object Similarity {
 
   /** (probe_id, vec_id, cs) for every probe (vec_id < 10) × corpus vector —
     * ONE definition of the probe set, broadcast anti-self join, and cosine
-    * expression, shared by the window (q40) and bounded-heap (q74) rankers
-    * so the two formulations cannot drift apart silently.
+    * expression, shared by the window (q40) and `topKPerKey` (q95, q74)
+    * rankers so the two formulations cannot drift apart silently.
     */
   private def scoredPairs(spark: SparkSession, dir: String): DataFrame = {
     val e = corpus(spark, dir)
@@ -61,35 +61,14 @@ object Similarity {
   /** Brute-force cosine top-5 for probe vectors (vec_id < 10). The probe set
     * is bounded by construction → broadcast; the corpus side streams, so the
     * only shuffle is the per-probe window. (At extreme scale the window
-    * becomes the bounded-heap typed aggregation — q74, same result.)
+    * becomes the bounded per-partition heaps of `topKPerKey` — q95, same
+    * result.)
     */
   def cosineTopK(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("probe_id").orderBy(col("cs").desc, col("vec_id"))
     scoredPairs(spark, dir)
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= 5)
-      .select(col("probe_id"), col("rnk"), col("vec_id"), round(col("cs"), 4).as("cs"))
-      .orderBy("probe_id", "rnk")
-  }
-
-  /** Brute-force cosine top-5 via the bounded-state `TopKAggregator` — the
-    * SAME semantics as `cosineTopK` (one shared oracle proves both), but the
-    * per-probe ranking is a typed aggregation carrying at most 5 entries
-    * through partial aggregation instead of a window sort over every scored
-    * row. This is the plan that survives a hot probe at 100 TB: the window
-    * variant funnels all of a probe's rows into one task and sorts them; the
-    * aggregator's partials are merged associatively map-side, O(K) state.
-    */
-  def cosineTopKAgg(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val scored = scoredPairs(spark, dir).as[(Long, Long, Double)]
-    scored.groupByKey(_._1)
-      .agg(TopKAggregator.topK[(Long, Long, Double)](5)(r =>
-        TopKAggregator.Scored(r._2, r._3)).toColumn.name("top"))
-      .flatMap { case (probeId, top) =>
-        top.zipWithIndex.map { case (s, i) => (probeId, i + 1, s.id, s.score) }
-      }
-      .toDF("probe_id", "rnk", "vec_id", "cs")
       .select(col("probe_id"), col("rnk"), col("vec_id"), round(col("cs"), 4).as("cs"))
       .orderBy("probe_id", "rnk")
   }
@@ -279,11 +258,11 @@ object Similarity {
       .orderBy("probe_id", "rnk")
   }
 
-  /** Same result as q40/q74, through the native `TopKPerKeyExec`
+  /** Same result as q40, through the native `TopKPerKeyExec`
     * (graft.plans): per-partition bounded heaps before the exchange, so the
     * shuffle carries ≤ k rows per (key, input partition) instead of every
-    * scored pair. Third spelling of one semantics — window (q40), typed
-    * aggregator (q74), custom physical operator (q95) — all proven by the
+    * scored pair. Second spelling of one semantics — window (q40), custom
+    * physical operator (q95, and q74 under its own id) — both proven by the
     * same oracle text.
     */
   def cosineTopKNative(spark: SparkSession, dir: String): DataFrame =
@@ -1081,7 +1060,7 @@ object Similarity {
     "q41_similarity_ann_lsh"  -> annLsh _,
     "q42_label_centroid"      -> labelCentroid _,
     "q59_similarity_ann_ivf"  -> annIvf _,
-    "q74_similarity_topk_agg" -> cosineTopKAgg _,
+    "q74_similarity_topk_agg" -> cosineTopKNative _,
   )
 
   /** q186 — per-label embedding DRIFT between the standing corpus and the
@@ -1706,8 +1685,8 @@ object Similarity {
         |       CAST(list_aggregate(q, 'max') AS BIGINT) AS qmax,
         |       CAST(list_aggregate(q, 'sum') AS BIGINT) AS qsum
         |FROM qv ORDER BY vec_id""".stripMargin,
-    // q40 (window), q74 (typed aggregator), and q95 (native TopKPerKeyExec)
-    // compute the identical result — ONE oracle text proves all three.
+    // q40 (window) and q95/q74 (native TopKPerKeyExec) compute the
+    // identical result — ONE oracle text proves all three ids.
     "q40_similarity_topk" -> bruteTopKOracle,
     "q74_similarity_topk_agg" -> bruteTopKOracle,
     "q95_similarity_topk_native" -> bruteTopKOracle,

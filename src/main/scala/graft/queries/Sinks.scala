@@ -476,8 +476,8 @@ object Sinks {
     }
 
   /** q210 — MERGE INTO / row-level upsert (`Versioned.merge`): the single
-    * most common warehouse write op, as a partition-scoped, ATOMICALLY
-    * PUBLISHED table operation. The target is orders partitioned by year
+    * most common warehouse write op, as a scoped, ATOMICALLY PUBLISHED
+    * table operation. The target is orders partitioned by year
     * (integer cents for exact sums), staged once as v1 of a versioned
     * table; each invocation merges one deterministic CDC batch AGAINST v1
     * and publishes the result as a new immutable version — no pre-merge
@@ -487,10 +487,12 @@ object Sinks {
     * bump), matched-UPDATE that MOVES its row across partitions
     * (1995→1996), matched-DELETE, not-matched-INSERT (lands in a new 1999
     * partition), plus the two ignore rules (unmatched U, matched I) proven
-    * by noise rows. Only partitions containing matched/inserted rows are
-    * written to the new version's data dir; every other partition's entry
-    * is spliced from v1's manifest — the property that makes MERGE
-    * affordable on a 100 TB table. The trailing vacuum retires the
+    * by noise rows. The base is partition-granular, so merge's discovery
+    * scan finds the partitions holding a matched U/D key; only their
+    * entries are rewritten, moved and inserted rows land as new entries
+    * (1996 and 1999 are not copied), and every other entry is spliced
+    * from v1's manifest — the property that makes MERGE affordable on a
+    * 100 TB table. The trailing vacuum retires the
     * previous invocation's merged version while keeping the pinned v1
     * base. The oracle replays the clause rules relationally on the source
     * table, so the hash match proves the merge changed exactly the
@@ -559,10 +561,10 @@ object Sinks {
     (es.map(_._4).min, es.map(_._5).max)
   }
 
-  /** q212 — FILE-scoped MERGE (`Versioned.mergeByFiles`): the q208
-    * manifest idea applied to the merge scope. The target is published
-    * file-granular (range-layout on the key, per-file key min/max in the
-    * manifest), and the CDC batch touches three NARROW key bands at the
+  /** q212 — stats-scoped MERGE (`Versioned.merge` on a file-granular
+    * base): the q208 manifest idea applied to the merge scope. The target
+    * is published file-granular (range-layout on the key, per-file key
+    * min/max in the manifest, so merge scopes by stats), and the CDC batch touches three NARROW key bands at the
     * bottom of 1995's key space — so only the files whose stats cover
     * those bands are rewritten; the rest of 1995, like every other year,
     * is spliced from v1's manifest unchanged (SinksSpec pins the exact
@@ -598,7 +600,7 @@ object Sinks {
     val noiseU = band(y95, 3)
       .withColumn("o_orderkey", col("o_orderkey") + 200000000L).select(col("*"), op("U"))
     val noiseI = band(y95, 3).select(col("*"), op("I"))
-    val v = Versioned.mergeByFiles(spark, tbl,
+    val v = Versioned.merge(spark, tbl,
       updates.unionByName(deletes).unionByName(inserts)
         .unionByName(noiseU).unionByName(noiseI),
       "o_orderkey", "o_year", fromVersion = Some(1))
@@ -631,14 +633,14 @@ object Sinks {
     val l0 = Versioned.latestVersion(spark, tbl)
     val batchA = band(15).withColumn("o_price_c", col("o_price_c") + 70000)
       .select(col("*"), op("U"))
-    Versioned.mergeByFiles(spark, tbl, batchA, "o_orderkey", "o_year",
+    Versioned.merge(spark, tbl, batchA, "o_orderkey", "o_year",
       fromVersion = Some(1), expectedLatest = Some(l0))
     val batchB = band(43).withColumn("o_price_c", col("o_price_c") + 5000)
       .select(col("*"), op("U"))
       .unionByName(band(44).select(col("*"), op("D")))
     // Same base, same expected version as A: the CAS loss is guaranteed,
     // the rebase resolves it.
-    val vB = Versioned.mergeByFiles(spark, tbl, batchB, "o_orderkey", "o_year",
+    val vB = Versioned.merge(spark, tbl, batchB, "o_orderkey", "o_year",
       fromVersion = Some(1), expectedLatest = Some(l0), rebaseRetries = 2)
     // No per-invocation vacuum: the demonstration is the rebase, and each
     // run adds two small dirs (bands of one partition) — q210/q212 cover
@@ -649,7 +651,7 @@ object Sinks {
   /** q227 — SHALLOW CLONE (`Versioned.cloneTable`): the clone's v1 is one
     * metadata commit whose entries reference the source's data files IN
     * PLACE — cloning a 100 TB table copies nothing (SinksSpec pins the
-    * clone dir holds only `_manifests` before the merge). A file-scoped
+    * clone dir holds only `_manifests` before the merge). A stats-scoped
     * merge then evolves the CLONE: its two touched files are rewritten
     * into clone-LOCAL dirs while every untouched entry keeps pointing at
     * still-shared source files, and the source table is byte-identical
@@ -671,7 +673,7 @@ object Sinks {
     val batch = band(20).withColumn("o_price_c", col("o_price_c") + 333)
       .select(col("*"), op("U"))
       .unionByName(band(21).select(col("*"), op("D")))
-    val v = Versioned.mergeByFiles(spark, dst, batch, "o_orderkey", "o_year")
+    val v = Versioned.merge(spark, dst, batch, "o_orderkey", "o_year")
     perYear(Versioned.readAt(spark, dst, v))
   }
 
@@ -1371,8 +1373,8 @@ object Sinks {
       tbl
     }
 
-  /** q237 — FILE-scoped MERGE on a STRING key (`Versioned.mergeByFiles`
-    * over [[graft.tables.Versioned]]'s ordered-surrogate stats): the q212
+  /** q237 — stats-scoped MERGE on a STRING key (`Versioned.merge` over
+    * [[graft.tables.Versioned]]'s ordered-surrogate stats): the q212
     * property — rewrite only the files whose stats cover a batch key —
     * without the integral-key restriction. Per-file [kmin, kmax] carry
     * the string's truncated big-endian prefix encoding (the
@@ -1403,7 +1405,7 @@ object Sinks {
       .withColumn("o_skey", concat(lit("Z"), col("o_skey")))
       .withColumn("o_year", lit(1999)).select(col("*"), op("I"))
     val noiseI = band(y95, 13).select(col("*"), op("I"))
-    val v = Versioned.mergeByFiles(spark, tbl,
+    val v = Versioned.merge(spark, tbl,
       updates.unionByName(deletes).unionByName(inserts).unionByName(noiseI),
       "o_skey", "o_year", fromVersion = Some(1))
     Versioned.vacuum(spark, tbl, keep = Set(1, v))
@@ -1551,7 +1553,7 @@ object Sinks {
 
   /** q216 — OPTIMIZE inside the versioned store (`Versioned.compactFiles`):
     * a file-granular table accumulates small files from three successive
-    * file-scoped merges into one hot partition; compaction collapses that
+    * stats-scoped merges into one hot partition; compaction collapses that
     * partition to ONE file in a new version with every other entry
     * spliced and all prior versions readable. The output aggregates the
     * compacted version per year — the oracle replays the three merges
@@ -1582,7 +1584,7 @@ object Sinks {
         val b = y95.filter(col("o_orderkey") >= cut(i) && col("o_orderkey") < cut(i + 1))
           .withColumn("o_price_c", col("o_price_c") + 1000 * (i + 1))
           .select(col("*"), op("U"))
-        Versioned.mergeByFiles(spark, tbl, b, "o_orderkey", "o_year")
+        Versioned.merge(spark, tbl, b, "o_orderkey", "o_year")
       }
       Versioned.compactFiles(spark, tbl, "o_year=1995", "o_orderkey", "o_year")
     }
@@ -1885,7 +1887,7 @@ object Sinks {
     * exactly-once, replay-idempotent publishing: three CDC batches (an
     * update band, a delete band, an insert band over disjoint key ranges)
     * arrive as a real file STREAM (`maxFilesPerTrigger = 1`) and
-    * `foreachBatch` applies each through `Versioned.mergeByFiles` with a
+    * `foreachBatch` applies each through `Versioned.merge` with a
     * CONTENT-ADDRESSED idempotence tag (the batch's min key) — the Delta
     * txn-id pattern: a redelivered batch (crash replay, warm/timed bench
     * passes, repeated Verify runs) finds its tag already committed and is
@@ -1968,7 +1970,7 @@ object Sinks {
         // empty batch) — half the per-epoch driver jobs
         val m = b.agg(min("o_orderkey")).head()
         if (!m.isNullAt(0)) {
-          Versioned.mergeByFiles(spark, tbl, b, "o_orderkey", "o_year",
+          Versioned.merge(spark, tbl, b, "o_orderkey", "o_year",
             tag = Some("band_" + m.getLong(0)))
           ()
         }

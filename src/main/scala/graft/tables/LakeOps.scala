@@ -167,8 +167,8 @@ private[graft] object KeyEnc {
   }
 }
 
-/** Versioned lakehouse store over plain parquet — snapshots, partition-
-  * scoped MERGE, time travel, and vacuum, built only on the public Spark
+/** Versioned lakehouse store over plain parquet — snapshots, scoped
+  * MERGE, time travel, and vacuum, built only on the public Spark
   * surface plus the Hadoop FileSystem API (no table-format dependency).
   *
   * Layout (everything under `tablePath`):
@@ -226,7 +226,7 @@ private[graft] object KeyEnc {
   *    removed. The number CAS alone does not protect the BASE a writer's
   *    entries were derived from — two writers that both read v1 could
   *    commit v2 and v3 with v3 silently discarding v2's changes — so
-  *    [[merge]]/[[mergeByFiles]]/[[compactFiles]] additionally pin
+  *    [[merge]]/[[compactFiles]] additionally pin
   *    `expectedLatest` to the base version they actually read whenever
   *    the caller did not explicitly branch (`fromVersion`): the second
   *    writer's commit then fails loudly instead of losing the first's
@@ -239,10 +239,11 @@ private[graft] object KeyEnc {
   *    raises instead of reporting a commit that the table never serves.
   *    An optional `#tag` manifest line gives streaming writers replay
   *    idempotence (the Delta txn-id pattern);
-  *  - a MERGE writes only the touched partitions into a NEW data dir and
-  *    splices the untouched partitions' entries from the base manifest —
-  *    an emptied partition simply has no entry in the new manifest, which
-  *    kills the escaped-directory-deletion class of bugs entirely;
+  *  - a MERGE rewrites only the rows of the entries it replaces, plus its
+  *    moved and inserted rows, into a NEW data dir and splices every other
+  *    entry from the base manifest — an emptied partition simply has no
+  *    entry in the new manifest, which kills the escaped-directory-deletion
+  *    class of bugs entirely;
   *  - `vacuum` deletes manifests outside the retained set and any data
   *    dir no retained manifest references — never a dir a kept version
   *    still shares, and never a claim or an unreferenced dir younger
@@ -341,9 +342,9 @@ object Versioned {
   @volatile private[graft] var preCommitHookForTests: Option[() => Unit] = None
 
   /** One manifest entry. Partition-granular entries name a partition dir;
-    * file-granular entries (from `publish(fileStatsKey = …)` and
-    * [[mergeByFiles]]) additionally name one parquet file inside it plus
-    * the file's min/max of the merge key — the footer-stats surrogate a
+    * file-granular entries (from `publish(fileStatsKey = …)` and every
+    * rewrite of such a base) additionally name one parquet file inside it
+    * plus the file's min/max of the merge key — the footer-stats surrogate a
     * file-skipping MERGE prunes with — and (since r14) the file's row
     * count, which drives [[optimizeTable]]'s bin packing, plus (r15) the
     * file's byte size, which serves `estimateStatistics` from metadata
@@ -1013,7 +1014,7 @@ object Versioned {
     * With `fileStatsKey` (requires `partCol`) the manifest carries one
     * entry per FILE with that column's ordered min/max surrogate
     * ([[KeyEnc]]: integral, string, or date) — the base layout
-    * [[mergeByFiles]] prunes against. `fileStatsKey2` records a SECOND
+    * a stats-scoped [[merge]] prunes against. `fileStatsKey2` records a SECOND
     * column's per-file bounds in the same stats scan — integral, string,
     * or date, encoded by the same [[KeyEnc]] surrogate (the
     * Delta/Iceberg leading-columns convention): the DSv2 reader then
@@ -1368,9 +1369,7 @@ object Versioned {
     val (dirs, fresh) =
       if (rewriteEs.isEmpty) (Seq.empty[Path], Seq.empty[Entry])
       else {
-        // Subset read with readAt's full treatment (per-entry layout
-        // decode, column mapping, schema alignment).
-        val df = asOf(readEntries(spark, table, rewriteEs), bm)
+        val df = readAs(spark, table, bm, rewriteEs)
         // cluster inside each cell by the stats key so the fresh per-file
         // bounds come out range-tight, the layout every skipping tier rides
         val shaped = bm.statsKey match {
@@ -1621,23 +1620,30 @@ object Versioned {
 
   def readAt(spark: SparkSession, tablePath: String, version: Int): DataFrame = {
     val (fsys, table) = fs(spark, tablePath)
-    val entries = readManifest(fsys, table, version)
-    val meta = metaOf(fsys, table, version)
-    if (entries.isEmpty) {
-      // A freshly CREATEd (or fully emptied) version: serve its recorded
-      // schema with zero rows — the SQL catalog's CREATE-then-INSERT flow.
-      val schema = meta.schema.getOrElse(
-        throw new IllegalArgumentException(
-          s"version $version of $table is empty and records no schema"))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
-    val raw =
-      if (entries.forall(_.partDir == "-"))
-        Tables.parquet(spark).load(entries.map(e => new Path(table, e.dataDir).toString): _*)
-      else readEntries(spark, table, entries)
-    asOf(raw, meta)
+    readAs(spark, table, metaOf(fsys, table, version), readManifest(fsys, table, version))
   }
+
+  /** Entries `es` read as the version whose metadata is `meta` serves
+    * them ([[asOf]]: its column mapping, then its schema). [[readAt]]
+    * reads a whole version this way, and every read of a SUBSET of a
+    * version's entries — a rewrite's scope, a lookup's hits, a change
+    * feed's side, a pre-image — reads it this way too: a subset may land
+    * entirely on files written before a rename or an added column and
+    * must still serve the version's columns. No entry: the recorded
+    * schema with zero rows (a freshly CREATEd or fully emptied version —
+    * the SQL catalog's CREATE-then-INSERT flow — or an empty subset).
+    */
+  private def readAs(spark: SparkSession, table: Path, meta: TableMeta,
+                     es: Seq[Entry]): DataFrame =
+    if (es.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], meta.schema.getOrElse(
+        throw new IllegalArgumentException(
+          s"$table: an empty version or entry subset serves its recorded schema, " +
+            "and this version records none")))
+    else asOf(
+      if (es.forall(_.partDir == "-"))
+        Tables.parquet(spark).load(es.map(e => new Path(table, e.dataDir).toString): _*)
+      else readEntries(spark, table, es), meta)
 
   /** Resolve mapped logical columns against whatever names the scanned
     * files actually carried: `coalesce(logical?, former1?, former2?)`
@@ -1715,37 +1721,40 @@ object Versioned {
   }
 
   /** ONE REWRITE PIPELINE serves every row-level rewrite of the store:
-    * [[merge]], [[mergeByFiles]], [[deleteWhere]], [[updateWhere]],
-    * [[compactFiles]] and [[optimizeTable]]. A public entry point decides
-    * only its SCOPE; every stage after it is shared.
+    * [[merge]], [[deleteWhere]], [[updateWhere]], [[compactFiles]] and
+    * [[optimizeTable]]. A public entry point decides only its SCOPE;
+    * every stage after it is shared.
     *
-    *  1. Scope ([[Scope]]): which base entries the rewrite replaces, and
-    *     which partition dirs it may write. A PARTITION scope (merge,
-    *     deleteWhere, updateWhere; [[partitionScope]]) replaces every
-    *     entry of the touched partition dirs. A FILE scope (mergeByFiles,
-    *     compactFiles, optimizeTable) replaces, by identity, exactly the
-    *     entries its manifest stats select: key range and bloom, or bin
-    *     packing.
-    *  2. Discovery: touched partitions come from one scan of the target,
-    *     key-probed for a merge and predicate-filtered for predicate DML;
-    *     victim files come from manifest metadata alone.
-    *  3. Rewrite: one DataFrame holding the new content of the whole
-    *     scope — the merge batch front ([[MergeBatch]]), the predicate
-    *     body ([[rewriteWhere]]) or a maintenance repack.
-    *  4. Splice ([[rewriteCommit]]): the rows land in a FRESH `d_*` dir;
-    *     the written partitions must stay inside the scope; the new files'
-    *     entries ([[freshEntries]]) replace the scope's base entries
-    *     and every other base entry carries over unchanged. No committed
-    *     file is ever touched, so readers of every version are unaffected,
-    *     and work is ∝ the scope, never ∝ the table. A recorded change
-    *     feed lands in a `c_*` dir.
-    *  5. Commit/rebase ([[commitRebasing]]): one manifest CAS pinned to
-    *     the base ([[Base]]); a file scope may re-validate a lost CAS and
+    *  1. Scope ([[Scope]]): the base entries the rewrite replaces, by
+    *     identity — an entry is replaced iff it may hold a row the
+    *     rewrite changes. "May hold" has two sources of evidence:
+    *     - STATS: on a file-granular base whose `#statskey` is the merge
+    *       key, an entry's key range and bloom ([[coversAnyKey]]) decide
+    *       with no scan;
+    *     - DISCOVERY: otherwise one scan of the target collects the
+    *       partition values of the rows that change (key-probed for a
+    *       merge, predicate-filtered for predicate DML), and every entry
+    *       of those partitions is replaced ([[partitionEntries]]).
+    *     Maintenance (compactFiles, optimizeTable) names its victims from
+    *     manifest metadata alone ([[victimScope]]).
+    *  2. Rewrite: one DataFrame holding the new content of the replaced
+    *     entries, which it reads through [[readAs]] and nothing else —
+    *     the merge batch front ([[MergeBatch]]), the predicate body
+    *     ([[rewriteWhere]]) or a maintenance repack. Moved and inserted
+    *     rows land wherever their partition values say; they never pull
+    *     another entry into the scope.
+    *  3. Splice ([[rewriteCommit]]): the rows land in a FRESH `d_*` dir;
+    *     the new files' entries ([[freshEntries]]) replace the scope's
+    *     base entries and every other base entry carries over unchanged.
+    *     No committed file is ever touched, so readers of every version
+    *     are unaffected, and work is ∝ the scope, never ∝ the table. A
+    *     recorded change feed lands in a `c_*` dir.
+    *  4. Commit/rebase ([[commitRebasing]]): one manifest CAS pinned to
+    *     the base ([[Base]]); a stats scope may re-validate a lost CAS and
     *     splice its already-written output onto a winner that left the
     *     scope's `readSet` entries and its batch key `probes` alone.
     */
-  private final case class Scope(replaces: Entry => Boolean, dirs: Option[Set[String]],
-                                 readSet: Set[Entry] = Set.empty,
+  private final case class Scope(replaced: Seq[Entry], readSet: Set[Entry],
                                  probes: Array[(Long, Long)] = Array.empty)
 
   /** The table and version a rewrite reads, and the latest version its
@@ -1768,6 +1777,13 @@ object Versioned {
       expectedLatest.orElse(if (fromVersion.isEmpty) Some(v) else None))
   }
 
+  /** Entries `es` of `base` read as the base serves them ([[readAs]]);
+    * `target`, the base's full read, when they are all of its entries.
+    */
+  private def readScope(spark: SparkSession, base: Base, target: DataFrame,
+                        es: Seq[Entry]): DataFrame =
+    if (es == base.entries) target else readAs(spark, base.table, base.meta, es)
+
   /** A scoped rewrite: the entry point `what` (for messages), the
     * manifest `op`, the `rows` holding the new content of the whole scope
     * (written partitioned by `partCols`), the header block the commit
@@ -1779,31 +1795,27 @@ object Versioned {
                                    feed: Option[(DataFrame, DataFrame)] = None,
                                    tag: Option[String] = None, retries: Int = 0)
 
-  /** PARTITION scope over the touched partition value tuples `vals`, and
-    * the literal predicate selecting their rows (planning-time partition
-    * pruning). Tuples dedupe by RENDERED dir name — the `String.valueOf`
-    * rendering Spark's writer uses, so int-vs-long boxing across target
-    * and source rows collapses — keeping one representative per dir.
+  /** The base entries of the partitions discovery found: `vals`, the
+    * discovered rows' partition value tuples, rendered to the `col=value`
+    * dir names Spark's writer produces (`String.valueOf`, so int-vs-long
+    * boxing collapses). Each tuple was read from some entry, so a
+    * rendering that names no entry means it drifted from the writer's:
+    * that fails loudly instead of splicing the row's entry unchanged.
     */
-  private def partitionScope(partCols: Seq[String], vals: Seq[Seq[Any]]): (Scope, Column) = {
-    val byDir = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Any]]
-    vals.foreach(vs => byDir.getOrElseUpdate(partDirName(partCols, vs), vs))
-    val dirs = byDir.keySet.toSet
-    val pruning =
-      if (byDir.isEmpty) lit(false)
-      else byDir.values.map(vs =>
-        partCols.zip(vs).map { case (c, v) => col(c) === lit(v) }.reduce(_ && _))
-        .reduce(_ || _)
-    (Scope(e => dirs(e.partDir), Some(dirs)), pruning)
+  private def partitionEntries(base: Base, partCols: Seq[String], vals: Iterable[Seq[Any]],
+                               what: String): Seq[Entry] = {
+    val dirs = vals.iterator.map(partDirName(partCols, _)).toSet
+    val lost = dirs -- base.entries.map(_.partDir)
+    if (lost.nonEmpty) throw new IllegalStateException(
+      s"$what: discovered partitions ${lost.mkString(",")} name no entry of v${base.v} of " +
+        s"${base.table} — partition-value rendering drifted from Spark's writer")
+    base.entries.filter(e => dirs(e.partDir))
   }
 
   /** FILE scope of a content-preserving maintenance rewrite: `victims`,
     * replaced by identity; their rows stay in their own partitions.
     */
-  private def victimScope(victims: Seq[Entry]): Scope = {
-    val vs = victims.toSet
-    Scope(vs, Some(vs.map(_.partDir)), readSet = vs)
-  }
+  private def victimScope(victims: Seq[Entry]): Scope = Scope(victims, victims.toSet)
 
   /** The partition columns of `partCols` as `_tp0`, `_tp1`, … */
   private def partValues(partCols: Seq[String]): Seq[Column] =
@@ -1813,12 +1825,8 @@ object Versioned {
   private def rewriteCommit(spark: SparkSession, base: Base, rw: Rewrite): Int = {
     val dd = newDataDir(base.fsys, base.table)
     rw.rows.write.mode(SaveMode.ErrorIfExists).partitionBy(rw.partCols: _*).parquet(dd.toString)
-    val written = listPartDirs(base.fsys, dd, rw.partCols.length)
-    rw.scope.dirs.foreach(allowed => require(written.toSet.subsetOf(allowed),
-      s"${rw.what} wrote partitions outside the touched set: " +
-        s"${(written.toSet -- allowed).mkString(",")} — partition-value " +
-        "rendering drifted from Spark's writer"))
-    val fresh = freshEntries(spark, base.table, dd, rw.meta, Some(written))
+    val fresh = freshEntries(spark, base.table, dd, rw.meta,
+      Some(listPartDirs(base.fsys, dd, rw.partCols.length)))
     val feedDir = rw.feed.map { case (pre, post) =>
       writeChangeFeed(base.fsys, base.table, pre, post) }
     commitRebasing(spark, base, rw, fresh, Seq(dd) ++ feedDir, feedDir.map(_.getName))
@@ -1842,8 +1850,9 @@ object Versioned {
                              fresh: Seq[Entry], orphans: Seq[Path],
                              changesDir: Option[String]): Int = {
     val (fsys, table) = (base.fsys, base.table)
+    val replaced = rw.scope.replaced.toSet
     def commitOnto(onto: Seq[Entry], expect: Option[Int], orphanDirs: Seq[Path]): Int =
-      commit(fsys, table, spark, onto.filterNot(rw.scope.replaces) ++ fresh, expect,
+      commit(fsys, table, spark, onto.filterNot(replaced) ++ fresh, expect,
         orphanDirs, rw.meta, rw.op, rw.tag, changesDir)
     if (rw.retries <= 0 || base.expect.isEmpty)
       return commitOnto(base.entries, base.expect, orphans)
@@ -1910,14 +1919,14 @@ object Versioned {
     else None
   }
 
-  /** `bm` as a partition-scoped rewrite of `baseEntries` records it: a
-    * file-granular base keeps its granularity — rewritten partitions get
+  /** `bm` as a merge or predicate-DML rewrite of `baseEntries` records
+    * it: a file-granular base keeps its granularity — rewritten rows get
     * fresh per-file stats on EVERY recorded dimension in the one stats
     * scan, so compaction, optimize and 2-D / N-D stats-pruned reads keep
     * working after the rewrite — while a base with partition-granular
     * entries (or none) drops the stats headers.
     */
-  private def partitionRewriteMeta(bm: TableMeta, baseEntries: Seq[Entry]): TableMeta =
+  private def rewriteMeta(bm: TableMeta, baseEntries: Seq[Entry]): TableMeta =
     if (baseEntries.nonEmpty && baseEntries.forall(_.file.isDefined)) bm
     else bm.copy(statsKey = None, statsKey2 = None, statsCols = Seq.empty)
 
@@ -1946,16 +1955,6 @@ object Versioned {
       .unionByName(postImages.withColumn("_change", lit("insert")))
       .write.mode(SaveMode.ErrorIfExists).parquet(cd.toString)
     cd
-  }
-
-  /** Subset read of `es` in `meta`'s recorded schema: a subset may land
-    * entirely on files written before a schema-evolving merge, and must
-    * still carry the added columns.
-    */
-  private def readAligned(spark: SparkSession, table: Path, meta: TableMeta,
-                          es: Seq[Entry]): DataFrame = {
-    val df = readEntries(spark, table, es)
-    meta.schema.map(alignTo(df, _)).getOrElse(df)
   }
 
   /** `df` with `assignments` (column → new-value expression, evaluated
@@ -1993,7 +1992,7 @@ object Versioned {
         extends NotMatchedBySource
   }
 
-  /** Stage 3 of both MERGE scopes: the CDC `source` batch against
+  /** Stage 2 of [[merge]]: the CDC `source` batch against
     * `target`. Construction validates the batch — an `_op` column, no
     * dropped target column, the target's key type — and collects it ONCE
     * on the driver ([[collectBatch]]): every decision derivable from the
@@ -2007,14 +2006,13 @@ object Versioned {
     * refused: a narrower source usually means a wiring bug, not intent.
     */
   private final class MergeBatch(spark: SparkSession, source: DataFrame, target: DataFrame,
-                                 keyCol: String, extraCols: Seq[String], ops: Seq[String],
-                                 nms: Option[NotMatchedBySource], what: String) {
+                                 keyCol: String, nms: Option[NotMatchedBySource]) {
     require(source.columns.contains("_op"),
-      s"$what: source must carry an _op column, got ${source.columns.mkString(",")}")
+      s"merge: source must carry an _op column, got ${source.columns.mkString(",")}")
     private val dataCols = source.columns.toSeq.filter(_ != "_op")
     private val missing = target.columns.filterNot(dataCols.contains)
     require(missing.isEmpty,
-      s"$what: source is missing target columns ${missing.mkString(",")} — " +
+      s"merge: source is missing target columns ${missing.mkString(",")} — " +
         "columns may be ADDED, never dropped")
     val keyDt: org.apache.spark.sql.types.DataType = target.schema(keyCol).dataType
     // Driver-side key sets compare collected values with Java equals after
@@ -2024,13 +2022,13 @@ object Versioned {
     private val sourceKeyDt = source.schema(keyCol).dataType
     require(sourceKeyDt == keyDt ||
         (KeyEnc.Integral.contains(sourceKeyDt) && KeyEnc.Integral.contains(keyDt)),
-      s"$what: source key $keyCol is ${sourceKeyDt.simpleString} but the target's is " +
+      s"merge: source key $keyCol is ${sourceKeyDt.simpleString} but the target's is " +
         s"${keyDt.simpleString} — cast the source key to the target's type")
     val nmsUpdate: Option[Map[String, Column]] =
       nms.collect { case NotMatchedBySource.Update(as) => as }
-    nmsUpdate.foreach(requireAssignable(target, _, s"$what notMatchedBySource"))
-    /** The winning (key, _op, extraCols…) rows, and the source filtered to them. */
-    val (batchRows, src) = collectBatch(spark, source, keyCol, extraCols, ops)
+    nmsUpdate.foreach(requireAssignable(target, _, "merge notMatchedBySource"))
+    /** The winning (key, _op) rows, and the source filtered to them. */
+    val (batchRows, src) = collectBatch(spark, source, keyCol)
     private val keyed = src.select((col(keyCol).as("_sk") +: col("_op").as("_sop") +:
       dataCols.map(c => col(c).as(s"_s_$c"))): _*)
 
@@ -2055,7 +2053,7 @@ object Versioned {
       // Matched I and K (membership only) rows always survive; a
       // source-less row survives unless NOT MATCHED BY SOURCE deletes it
       // (an Update rewrites it in the select below).
-      val noise = sop.isin(ops.filter(o => o == "I" || o == "K"): _*)
+      val noise = sop.isin("I", "K")
       val keep =
         if (nms.contains(NotMatchedBySource.Delete)) noise else sop.isNull || noise
       def prior(c: String): Column =
@@ -2076,7 +2074,7 @@ object Versioned {
       lazy val changed =
         joined.fold(inserts)(_.filter(changedRow).select(images: _*).unionByName(inserts))
       if (constraints.nonEmpty) validateConstraints(changed, constraints)
-      dumpPlan(s"${what.toLowerCase}_rewrite", rows)
+      dumpPlan("merge_rewrite", rows)
       val feed =
         if (!recordChanges) None
         else {
@@ -2092,7 +2090,7 @@ object Versioned {
 
   /** MERGE `source` INTO the table, against base version `fromVersion`
     * (default: latest), publishing the result as a new version — the
-    * PARTITION-scoped merge of the rewrite pipeline.
+    * store's one MERGE, on every layout.
     *
     * `source` carries the table's columns plus `_op` ('U' update / 'D'
     * delete / 'I' insert / 'K' keep), keyed by a column of the target's
@@ -2103,13 +2101,39 @@ object Versioned {
     * — silently picking one image is how upserts corrupt tables. 'K'
     * rewrites nothing: it only asserts the key's MEMBERSHIP in the
     * source, so a full-sync merge (`notMatchedBySource`) can cover its
-    * unchanged keys without rewriting their partitions.
+    * unchanged keys without rewriting their entries.
     *
-    * Scale shape: only partitions containing a matched or inserted row
-    * are rewritten; every other partition's entry is spliced from the base
-    * manifest unchanged. The only driver collects are partition METADATA
-    * bounded by the CDC batch. An update may MOVE its row across
-    * partitions; an emptied partition just has no manifest entry.
+    * Scope (the rewrite pipeline's stage 1): a base entry is replaced iff
+    * it may hold a row the batch changes — a matched U/D key or, under
+    * NOT MATCHED BY SOURCE, a source-less row; every other entry is
+    * spliced from the base manifest unchanged. The evidence comes from
+    * the base itself:
+    *  - STATS — a file-granular base whose `#statskey` is `keyCol` (the
+    *    q208 manifest idea applied to the merge scope, as Delta/Iceberg
+    *    rewrite only AFFECTED FILES): the files whose key range and bloom
+    *    can hold a U/D key, with no scan ([[coversAnyKey]]; [[KeyEnc]]
+    *    makes integral, string and date keys probe alike). A hot
+    *    partition's rewrite costs O(files holding the keys).
+    *  - DISCOVERY — any other base: ONE scan of the target, key-probed by
+    *    a PUSHED In filter for driver-sized batches (row-group skipping
+    *    reaches the scan) or a broadcast join beyond [[IsinMaxKeys]],
+    *    collects (key, partition values) of the matched rows; every entry
+    *    of a partition holding a matched U/D key is replaced.
+    * Matched I keys (noise, not inserts) come from the same discovery
+    * scan, on a stats base run only over the files whose stats cannot
+    * rule an I key out — a U/D-only batch there runs no scan at all.
+    * Moved updates and inserts land as NEW entries in the fresh data dir;
+    * an emptied partition just has no manifest entry. The only driver
+    * collects are the batch and the discovery's matched keys.
+    *
+    * `notMatchedBySource` adds the SQL standard's third clause — WHEN NOT
+    * MATCHED BY SOURCE THEN DELETE/UPDATE — applied to target rows whose
+    * key appears nowhere in the source (full-sync/mirror merges). Stats
+    * cannot prove a file free of source-less rows, so the clause always
+    * discovers: one aggregate over the whole target (inherent: source
+    * absence is undecidable without seeing every row) returns, per
+    * partition, its matched keys and whether it holds a source-less row;
+    * a source covering every key rewrites nothing extra.
     *
     * Concurrency: when `fromVersion` is None (merge against latest),
     * `expectedLatest` defaults to the base actually read, so a concurrent
@@ -2117,7 +2141,13 @@ object Versioned {
     * instead of this commit silently discarding that writer's version.
     * Passing `fromVersion` opts into deliberate branching from an old
     * base (no default pin — the caller owns reconciliation). A `tag`
-    * already committed is an idempotent replay: its version returns.
+    * already committed is an idempotent replay: its version returns — the
+    * exactly-once contract a streaming CDC writer needs when a
+    * micro-batch is redelivered. On a stats scope `rebaseRetries` > 0 lets
+    * a lost CAS rebase ([[commitRebasing]]) with the entries read as its
+    * read set and the batch keys as its probes; a discovery scope read
+    * every entry and its base's entries carry no key stats to prove a
+    * concurrent delta disjoint, so any concurrent commit fails it.
     *
     * `recordChanges = true` additionally persists the merge's per-row
     * change images (Delta CDF's _change_data convention: an update is a
@@ -2126,14 +2156,6 @@ object Versioned {
     * change-feed source serve without ever diffing versions. Cost: one
     * extra batch-sized write job; a failed commit removes the dir with
     * the data-dir orphan.
-    *
-    * `notMatchedBySource` adds the SQL standard's third clause — WHEN NOT
-    * MATCHED BY SOURCE THEN DELETE/UPDATE — applied to target rows whose
-    * key appears nowhere in the source (full-sync/mirror merges). Its
-    * discovery is one anti-join scan of the target (inherent: source
-    * absence is undecidable without seeing every row), but the REWRITE
-    * stays scoped to partitions actually holding unmatched rows — a
-    * source covering every key rewrites nothing extra.
     */
   def merge(spark: SparkSession, tablePath: String, source: DataFrame,
             keyCol: String, partCol: String,
@@ -2141,92 +2163,70 @@ object Versioned {
             expectedLatest: Option[Int] = None,
             tag: Option[String] = None,
             recordChanges: Boolean = false,
-            notMatchedBySource: Option[NotMatchedBySource] = None): Int = {
+            notMatchedBySource: Option[NotMatchedBySource] = None,
+            rebaseRetries: Int = 0): Int = {
     val replayed = tag.flatMap(taggedVersion(spark, tablePath, _))
     if (replayed.isDefined) return replayed.get
     val base = baseOf(spark, tablePath, fromVersion, expectedLatest, "merge")
     val target = readAt(spark, tablePath, base.v)
     val partCols = partColsOf(partCol)
     requirePartitionable(target.schema, partCol)
-    val b = new MergeBatch(spark, source, target, keyCol, extraCols = partCols,
-      ops = Seq("U", "D", "I", "K"), notMatchedBySource, "merge")
-
-    // Touched-partition discovery: ONE scan of the target — its only
-    // inherent cost ("which of my rows carry a batch key", plus, under
-    // NOT MATCHED BY SOURCE, "which partitions hold source-less rows") —
-    // key-probed by a PUSHED In filter for driver-sized batches (row-
-    // group skipping reaches the scan) or a broadcast join beyond
-    // [[IsinMaxKeys]]. Where updated rows land, where inserts land, and
-    // which matched keys carry U/D are pure batch-metadata math on the
-    // driver.
+    val b = new MergeBatch(spark, source, target, keyCol, notMatchedBySource)
+    // Scope evidence: the base's own key stats when every entry records
+    // them on keyCol; stats cannot prove a file free of source-less rows,
+    // so NOT MATCHED BY SOURCE always discovers.
+    val byStats = notMatchedBySource.isEmpty && base.entries.nonEmpty &&
+      base.entries.forall(_.file.isDefined) && base.meta.statsKey.contains(keyCol)
+    // Probes sorted by range surrogate: O(|files| log |keys|) per probe set.
+    def probesOf(keys: Seq[Any]) = keys.map(KeyEnc.probeOf).toArray.sortBy(_._1)
+    def mayHold(keys: Seq[Any]): Seq[Entry] = {
+      val ps = probesOf(keys)
+      base.entries.filter(coversAnyKey(_, ps))
+    }
     val batchKeys = b.batchRows.map(_.get(0)).toSeq.distinct
+    val udKeys = b.keysOf("U") ++ b.keysOf("D")
+    val scanned = if (byStats) mayHold(b.keysOf("I")) else base.entries
     val nPart = partCols.length
-    // (matched keys, per-partition matched key sets, partitions holding
-    // source-less rows [NMS only])
-    val (matchedKeys, matchedByPart, nmsFromVals) =
-      if (notMatchedBySource.isEmpty) {
-        val probe = target.select((col(keyCol).as("_mk") +: partValues(partCols)): _*)
-        val disc = filterByKeys(spark, probe, col("_mk"), b.keyDt, batchKeys, keep = true)
+    // Discovery: per partition value tuple, the matched keys it holds;
+    // under NOT MATCHED BY SOURCE also the tuples holding source-less rows.
+    val (matchedByPart, sourceLess): (Seq[(Seq[Any], Set[Any])], Seq[Seq[Any]]) =
+      if (scanned.isEmpty) (Seq.empty, Seq.empty)
+      else if (notMatchedBySource.isEmpty) {
+        val probe = readScope(spark, base, target, scanned)
+          .select((col(keyCol).as("_mk") +: partValues(partCols)): _*)
+        val disc = filterByKeys(spark, probe, col("_mk"), b.keyDt,
+          if (byStats) b.keysOf("I") else batchKeys, keep = true)
         dumpPlan("merge_discovery", disc)
-        val rows = disc.collect()
-        val byPart = rows.groupBy(r => (1 to nPart).map(r.get): Seq[Any]).toSeq
-          .map { case (pv, rs) => (pv, rs.map(r => normKey(r.get(0))).toSet) }
-        (byPart.iterator.flatMap(_._2).toSet, byPart, Seq.empty[Seq[Any]])
+        (disc.collect().groupBy(r => (1 to nPart).map(r.get): Seq[Any]).toSeq
+          .map { case (pv, rs) => (pv, rs.map(r => normKey(r.get(0))).toSet) }, Seq.empty)
       } else {
-        // The clause's inherent full pass ("absent from the source" is
-        // undecidable without looking at every row) doubles as the match
-        // probe: one aggregate returns, per partition, the row count, the
-        // matched count and the matched keys (bounded by the batch).
+        // The clause's inherent full pass doubles as the match probe: one
+        // aggregate returns, per partition, the row count, the matched
+        // count and the matched keys (bounded by the batch).
         val (df0, mk) = withMatchedKey(spark, target, col(keyCol), b.keyDt, batchKeys)
         val disc = df0.groupBy(partValues(partCols): _*)
-          .agg(count(lit(1)).as("_n"), count(mk).as("_nm"),
-            collect_set(mk).as("_mks"))
+          .agg(count(lit(1)).as("_n"), count(mk).as("_nm"), collect_set(mk).as("_mks"))
         dumpPlan("merge_discovery", disc)
-        val rows = disc.collect()
-        val byPart = rows.toSeq
-          .map(r => ((0 until nPart).map(r.get): Seq[Any],
-            r.getSeq[Any](nPart + 2).map(normKey).toSet))
-          .filter(_._2.nonEmpty)
-        val unmatchedParts = rows.toSeq
-          .filter(r => r.getLong(nPart) > r.getLong(nPart + 1))
-          .map(r => (0 until nPart).map(r.get): Seq[Any])
-        (byPart.iterator.flatMap(_._2).toSet, byPart, unmatchedParts)
+        val rows = disc.collect().toSeq
+        def vals(r: Row): Seq[Any] = (0 until nPart).map(r.get)
+        (rows.map(r => (vals(r), r.getSeq[Any](nPart + 2).map(normKey).toSet)),
+          rows.filter(r => r.getLong(nPart) > r.getLong(nPart + 1)).map(vals))
       }
-    val udKeys: Set[Any] = (b.keysOf("U") ++ b.keysOf("D")).map(normKey).toSet
-    val matchedPartsVals: Seq[Seq[Any]] =
-      matchedByPart.collect { case (pv, ks) if ks.exists(udKeys) => pv }
-    def srcParts(r: Row): Seq[Any] = (2 until 2 + nPart).map(r.get)
-    // Landing/insert partitions dedupe by VALUE TUPLE before any string
-    // rendering: a mirror-sync batch is table-sized, its distinct
-    // partitions are not — per-row partDirName rendering showed up in
-    // driver stack samples.
-    def distinctVals(it: Iterator[Seq[Any]]): Seq[Seq[Any]] = {
-      val seen = scala.collection.mutable.LinkedHashSet.empty[Seq[Any]]
-      it.foreach(seen += _)
-      seen.toSeq
-    }
-    def rowsOf(op: String, isMatched: Boolean): Iterator[Row] = b.batchRows.iterator
-      .filter(r => r.getString(1) == op && matchedKeys(normKey(r.get(0))) == isMatched)
-    val landingVals = distinctVals(rowsOf("U", isMatched = true).map(srcParts))
-    val insertVals = distinctVals(rowsOf("I", isMatched = false).map(srcParts))
-    // NMS Update may MOVE source-less rows: only assignments to a
-    // partition column can — then (and only then) the landing partitions
-    // need one more pass evaluating the assignments on the unmatched rows.
-    val nmsLandingVals: Seq[Seq[Any]] = b.nmsUpdate match {
-      case Some(as) if partCols.exists(as.contains) =>
-        val unmatched = filterByKeys(spark, target, col(keyCol), b.keyDt,
-          batchKeys, keep = false)
-        assign(unmatched, as).select(partValues(partCols): _*)
-          .distinct().collect().toSeq.map(r => (0 until nPart).map(r.get))
-      case _ => Seq.empty
-    }
-    val (scope, pruning) = partitionScope(partCols,
-      matchedPartsVals ++ landingVals ++ insertVals ++ nmsFromVals ++ nmsLandingVals)
-    val (rows, feed) = b.rewrite(Some(target.filter(pruning)), matchedKeys,
-      base.meta.constraints, recordChanges)
+    val replaced =
+      if (byStats) mayHold(udKeys)
+      else {
+        val ud = udKeys.map(normKey).toSet
+        partitionEntries(base, partCols,
+          matchedByPart.collect { case (pv, ks) if ks.exists(ud) => pv } ++ sourceLess, "merge")
+      }
+    val (rows, feed) = b.rewrite(
+      if (replaced.isEmpty) None else Some(readScope(spark, base, target, replaced)),
+      matchedByPart.iterator.flatMap(_._2).toSet, base.meta.constraints, recordChanges)
     rewriteCommit(spark, base, Rewrite("merge", "MERGE", rows, partCols,
-      partitionRewriteMeta(base.meta, base.entries).copy(schema = Some(rows.schema)),
-      scope, feed, tag))
+      rewriteMeta(base.meta, base.entries).copy(schema = Some(rows.schema)),
+      Scope(replaced, (replaced ++ scanned).toSet,
+        if (byStats) probesOf(batchKeys) else Array.empty),
+      feed, tag, if (byStats) rebaseRetries else 0))
   }
 
   /** DELETE WHERE: remove every row where `predicate` IS TRUE (NULL keeps
@@ -2257,15 +2257,15 @@ object Versioned {
     rewriteWhere(spark, tablePath, predicate, Some(assignments), partCol, fromVersion,
       expectedLatest, recordChanges, "updateWhere", "UPDATE")
 
-  /** Predicate DML, a partition scope: rows where `predicate` IS TRUE get
-    * `assignments` applied; a delete (None) keeps no image of them.
+  /** Predicate DML, a discovery scope: rows where `predicate` IS TRUE
+    * get `assignments` applied; a delete (None) keeps no image of them.
     * Discovery is one filtered scan whose predicate Catalyst pushes down
     * (a predicate on the partition column prunes the discovery itself),
-    * collecting the partition VALUES the matching rows leave and — for an
-    * update, whose assignment may move rows — land in: metadata-sized.
-    * Those partitions are rewritten, everything else splices, an emptied
-    * partition vanishes. Nothing matching (and no feed to record) commits
-    * nothing and returns the base.
+    * collecting the partition VALUES of the matching rows:
+    * metadata-sized. Those partitions' entries are rewritten, rows an
+    * update moves land as new entries, everything else splices, an
+    * emptied partition vanishes. Nothing matching (and no feed to record)
+    * commits nothing and returns the base.
     */
   private def rewriteWhere(spark: SparkSession, tablePath: String, predicate: Column,
                            assignments: Option[Map[String, Column]], partCol: String,
@@ -2277,22 +2277,19 @@ object Versioned {
     def applied(df: DataFrame): Option[DataFrame] = assignments.map(assign(df, _))
     val isMatch = coalesce(predicate, lit(false)) // NULL predicate = keep
     val partCols = partColsOf(partCol)
-    val matching = target.filter(isMatch)
-    val left = matching.select(partValues(partCols): _*)
-    val touched = applied(matching)
-      .fold(left)(u => left.union(u.select(partValues(partCols): _*)))
-      .distinct().collect()
+    val touched = target.filter(isMatch).select(partValues(partCols): _*).distinct().collect()
     if (touched.isEmpty && !recordChanges) return base.v
-    val (scope, pruning) =
-      partitionScope(partCols, touched.toSeq.map(r => partCols.indices.map(r.get)))
-    val scoped = target.filter(pruning)
+    val replaced = partitionEntries(base, partCols,
+      touched.toSeq.map(r => partCols.indices.map(r.get)), what)
+    val scoped = readScope(spark, base, target, replaced)
     val updated = applied(scoped.filter(isMatch))
     val rows = updated.fold(scoped.filter(!isMatch))(scoped.filter(!isMatch).unionByName(_))
     dumpPlan(s"${what.toLowerCase}_rewrite", rows)
     // a delete adds no rows: constraints cannot be violated, only carried
     updated.foreach(validateConstraints(_, base.meta.constraints))
     rewriteCommit(spark, base, Rewrite(what, op, rows, partCols,
-      partitionRewriteMeta(base.meta, base.entries).copy(schema = Some(target.schema)), scope,
+      rewriteMeta(base.meta, base.entries).copy(schema = Some(target.schema)),
+      Scope(replaced, base.entries.toSet),
       if (recordChanges) Some((scoped.filter(isMatch), updated.getOrElse(rows.limit(0))))
       else None))
   }
@@ -2315,7 +2312,7 @@ object Versioned {
     * before the delete still serves the rows, and vacuum retires sidecar
     * dirs with the manifests that reference them. The key list is
     * metadata-sized by contract — a large delete wants [[deleteWhere]] /
-    * [[mergeByFiles]], which rewrite.
+    * [[merge]], which rewrite.
     */
   def deleteKeys(spark: SparkSession, tablePath: String, keys: Seq[Long],
                  expectedLatest: Option[Int] = None,
@@ -2337,7 +2334,7 @@ object Versioned {
     bm.schema.foreach { s =>
       require(KeyEnc.Integral.contains(s(keyCol).dataType),
         s"deleteKeys takes Long keys; $keyCol is ${s(keyCol).dataType} — " +
-          "use deleteWhere/mergeByFiles for non-integral keys")
+          "use deleteWhere/merge for non-integral keys")
     }
     // Only files that can HOLD a deleted key need a sidecar (range +
     // bloom probe); a key beyond every file is a no-op by construction.
@@ -2350,7 +2347,7 @@ object Versioned {
     val feedDir =
       if (!recordChanges) None
       else {
-        val pre = readEntries(spark, table, victims).filter(
+        val pre = readAs(spark, table, bm, victims).filter(
           col(keyCol).cast("long").isin(sorted.map(java.lang.Long.valueOf): _*))
         Some(writeChangeFeed(fsys, table, pre, pre.limit(0)))
       }
@@ -2372,91 +2369,8 @@ object Versioned {
       changesDir = feedDir.map(_.getName))
   }
 
-  /** File-scoped MERGE — the q208 manifest idea applied to the merge
-    * scope (Delta/Iceberg rewrite only AFFECTED FILES, not partitions):
-    * against a file-granular base version, only the files whose
-    * [kmin, kmax] range can contain a batch key are rewritten; every
-    * other file's entry — including other files of the SAME partition —
-    * is spliced unchanged, so a hot partition's rewrite cost is
-    * O(files containing the keys), not O(partition).
-    *
-    * Scoping (all on manifest METADATA plus the bounded CDC batch):
-    *  - U/D keys select the REWRITE set: files whose range covers one;
-    *  - I keys additionally select a CHECK set (read for the
-    *    matched-insert-ignored rule, but spliced unchanged — membership
-    *    needs their rows, not their rewrite);
-    *  - a key outside every file's range cannot exist in the table, so
-    *    unmatched-U/D fall out for free and such inserts skip the join
-    *    entirely. Updated rows that change partition and inserts land as
-    *    NEW files in the fresh data dir. Same batch contract, duplicate-key
-    *    precedence (D > U > I), tag replay and CAS commit as [[merge]];
-    *    `rebaseRetries` > 0 lets a lost CAS rebase ([[commitRebasing]]).
-    */
-  def mergeByFiles(spark: SparkSession, tablePath: String, source: DataFrame,
-                   keyCol: String, partCol: String,
-                   fromVersion: Option[Int] = None,
-                   expectedLatest: Option[Int] = None,
-                   tag: Option[String] = None,
-                   recordChanges: Boolean = false,
-                   rebaseRetries: Int = 0): Int = {
-    // Idempotent replay: a batch whose tag already committed is a no-op —
-    // the exactly-once contract a streaming CDC writer needs when a
-    // micro-batch is redelivered after a crash or task retry.
-    val replayed = tag.flatMap(taggedVersion(spark, tablePath, _))
-    if (replayed.isDefined) return replayed.get
-    val base = baseOf(spark, tablePath, fromVersion, expectedLatest, "mergeByFiles")
-    requireFileStats(base, keyCol, "mergeByFiles")
-    val target = readAligned(spark, base.table, base.meta, base.entries)
-    require(KeyEnc.supported(target.schema(keyCol).dataType),
-      s"mergeByFiles prunes on ordered key stats; $keyCol is " +
-        s"${target.schema(keyCol).dataType} — use an integral, string, or date column")
-    val b = new MergeBatch(spark, source, target, keyCol, extraCols = Seq.empty,
-      ops = Seq("U", "D", "I"), nms = None, "mergeByFiles")
-
-    // Keys encode to (range surrogate, bloom key) probe pairs ([[KeyEnc]])
-    // so the same manifest pruning covers integral, string, and date keys;
-    // membership is still decided by real key equality. Range probe
-    // against SORTED keys: O(|files| log |keys|) instead of the naive
-    // O(|files|·|keys|) scan — at Delta-checkpoint manifest sizes (10^5
-    // files × 10^4 batch keys) the difference is 10^9 comparisons vs 10^6,
-    // keeping the driver-side planning metadata-cheap. Entries that carry
-    // a key Bloom filter additionally drop files whose range covers a
-    // batch key the file provably does not contain (sparse key spaces) —
-    // sound, because blooms have no false negatives.
-    def probes(ops: String*) = ops.flatMap(b.keysOf).map(KeyEnc.probeOf).toArray.sortBy(_._1)
-    val udKeys = probes("U", "D")
-    val iKeys = probes("I")
-    val rewriteSet = base.entries.filter(coversAnyKey(_, udKeys))
-    val rewriteKeys = rewriteSet.toSet
-    val checkSet = base.entries.filterNot(rewriteKeys).filter(coversAnyKey(_, iKeys))
-
-    // Matched-I membership: ONE scan of the files whose stats cover an I
-    // key, with the key probe PUSHED into the scan (row-group skipping
-    // prunes it further), collected as driver metadata — so the rewrite
-    // reads exactly the rewrite set, and inserts are a driver-side filter
-    // of the batch.
-    val iKeyVals = b.keysOf("I")
-    val matchedIKeys: Set[Any] =
-      if (iKeyVals.isEmpty || (rewriteSet.isEmpty && checkSet.isEmpty)) Set.empty
-      else {
-        val aff = readAligned(spark, base.table, base.meta, rewriteSet ++ checkSet)
-          .select(col(keyCol))
-        val m = filterByKeys(spark, aff, col(keyCol), b.keyDt, iKeyVals, keep = true)
-        dumpPlan("mergebyfiles_imembership", m)
-        m.collect().iterator.map(r => normKey(r.get(0))).toSet
-      }
-    val (rows, feed) = b.rewrite(
-      if (rewriteSet.isEmpty) None
-      else Some(readAligned(spark, base.table, base.meta, rewriteSet)),
-      matchedIKeys, base.meta.constraints, recordChanges)
-    rewriteCommit(spark, base, Rewrite("mergeByFiles", "MERGE_FILES", rows,
-      partColsOf(partCol), base.meta.copy(schema = Some(rows.schema)),
-      Scope(rewriteKeys, None, rewriteKeys ++ checkSet, (udKeys ++ iKeys).sortBy(_._1)),
-      feed, tag, rebaseRetries))
-  }
-
-  /** A file scope splices every entry it does not replace with the stats
-    * it recorded, and prunes on them: the base must be file-granular with
+  /** A maintenance rewrite splices every entry it does not replace with
+    * the stats it recorded, and packs on them: the base must be file-granular with
     * its stats on `keyCol` — range pruning on another column's stats could
     * skip a file that holds a key, and the new files' stats would mix two
     * columns under one `#statskey`.
@@ -2822,7 +2736,7 @@ object Versioned {
     }
 
   /** Range + bloom probe of an entry against a sorted key set — the
-    * runtime-filter variant of the pruning [[mergeByFiles]] uses. Entries
+    * runtime-filter variant of a stats-scoped [[merge]]'s pruning. Entries
     * without stats conservatively survive.
     */
   private[graft] def viewMayContainKeys(e: Entry, sorted: Array[Long]): Boolean =
@@ -2975,10 +2889,9 @@ object Versioned {
     else (df.join(broadcast(keysDf(spark, dt, keys)), keyExpr === col("_gqk"),
       "left_outer"), col("_gqk"))
 
-  /** ONE driver pass over the bounded CDC batch: collect (key, _op, the
-    * listed extra columns), validate — allowed ops, NULL keys, duplicate
-    * (key, op) rows (no silent image-picking) — and resolve per-key op
-    * precedence D > U > I > K. The batch is driver metadata by the merge
+  /** ONE driver pass over the bounded CDC batch: collect (key, _op),
+    * validate — allowed ops, NULL keys, duplicate (key, op) rows (no
+    * silent image-picking) — and resolve per-key op precedence D > U > I > K. The batch is driver metadata by the merge
     * contract — every caller already broadcasts it whole into the rewrite
     * join — so every decision derivable from the batch alone is made here,
     * once, with no job or per-key window (an Exchange re-planned under
@@ -2986,12 +2899,10 @@ object Versioned {
     * collected metadata, source filtered to winners — the source itself
     * when no key carries two ops, the common case).
     */
-  private def collectBatch(spark: SparkSession, source: DataFrame,
-                           keyCol: String, extraCols: Seq[String],
-                           allowedOps: Seq[String])
+  private def collectBatch(spark: SparkSession, source: DataFrame, keyCol: String)
       : (Array[Row], DataFrame) = {
-    val all = source.select((col(keyCol) +: col("_op") +:
-      extraCols.map(col(_))): _*).collect()
+    val allowedOps = Seq("U", "D", "I", "K")
+    val all = source.select(col(keyCol), col("_op")).collect()
     // Single pass: validate, detect duplicate (key, op), and track per-key
     // op bitmasks (D=1,U=2,I=4,K=8 — precedence = lowest set bit wins in
     // D>U>I>K order). Table-sized mirror batches make per-row allocation
@@ -3048,13 +2959,13 @@ object Versioned {
     * union-aggregate — shuffle ∝ total digests; each version scanned once.
     */
   def diff(spark: SparkSession, tablePath: String, fromV: Int, toV: Int): (Long, Long) = {
-    // Across a schema evolution both versions are compared in toV's shape
-    // (the Delta CDF convention): a row whose only difference is the
-    // NULL-backfilled added column is NOT a change.
-    val toSchema = schemaOf(spark, tablePath, toV)
+    // Both versions are read as toV serves them (the Delta CDF
+    // convention): a row whose only difference is the NULL-backfilled
+    // added column, or a column's name before a rename, is NOT a change.
+    val (fsys, table) = fs(spark, tablePath)
+    val toMeta = metaOf(fsys, table, toV)
     def digests(v: Int): DataFrame = {
-      val raw = readAt(spark, tablePath, v)
-      val df = toSchema.map(alignTo(raw, _)).getOrElse(raw)
+      val df = readAs(spark, table, toMeta, readManifest(fsys, table, v))
       df.select(md5(concat_ws("\u0001",
         df.columns.sorted.map(c =>
           coalesce(col(c).cast("string"), lit("\u0000"))): _*)).as("d"))
@@ -3097,22 +3008,19 @@ object Versioned {
     val eFrom = readManifest(fsys, table, fromV)
     val eTo = readManifest(fsys, table, toV)
     val common = eFrom.toSet.intersect(eTo.toSet)
-    val onlyTo = eTo.filterNot(common)
-    val onlyFrom = eFrom.filterNot(common)
-    val empty = readAt(spark, tablePath, toV).limit(0)
-    // Rows are presented in toV's schema (the Delta CDF convention): a
+    // Both sides are read as toV serves them (the Delta CDF convention):
+    // toV's column mapping resolves a renamed column on either side, and a
     // from-side row read through an added column NULL-backfills, so a
-    // schema-evolving merge's unchanged-but-rewritten rows still cancel.
-    val toSchema = metaOf(fsys, table, toV).schema
+    // rewrite's unchanged-but-rewritten rows still cancel.
+    val toMeta = metaOf(fsys, table, toV)
     def side(entries: Seq[Entry]): DataFrame = {
-      val raw = if (entries.isEmpty) empty else readEntries(spark, table, entries)
-      val df = toSchema.map(alignTo(raw, _)).getOrElse(raw)
+      val df = readAs(spark, table, toMeta, entries)
       df.withColumn("_d", md5(concat_ws("\u0001",
         df.columns.sorted.map(c =>
           coalesce(col(c).cast("string"), lit("\u0000"))): _*)))
     }
-    val a = side(onlyTo)
-    val b = side(onlyFrom)
+    val a = side(eTo.filterNot(common))
+    val b = side(eFrom.filterNot(common))
     a.join(b.select("_d"), Seq("_d"), "left_anti").drop("_d")
       .withColumn("_change", lit("insert"))
       .unionByName(
@@ -3271,22 +3179,12 @@ object Versioned {
     val meta = metaOf(fsys, table, v)
     val keyCol = meta.statsKey.getOrElse(
       throw new IllegalArgumentException(s"v$v of $tablePath carries no #statskey"))
-    val schemaLine = meta.schema
-    schemaLine.foreach { s =>
+    meta.schema.foreach { s =>
       require(KeyEnc.Integral.contains(s(keyCol).dataType),
         s"lookupKeys takes Long keys; $keyCol is ${s(keyCol).dataType}")
     }
     val sorted = keys.distinct.sorted.toArray
-    val hits = entries.filter(coversAnyKey(_, sorted.map(k => (k, k))))
-    if (hits.isEmpty) {
-      schemaLine match {
-        case Some(s) =>
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-        case None =>
-          readEntries(spark, table, entries.take(1)).filter(lit(false))
-      }
-    } else readAligned(spark, table, meta, hits)
+    readAs(spark, table, meta, entries.filter(coversAnyKey(_, sorted.map(k => (k, k)))))
       .filter(col(keyCol).isin(sorted.map(java.lang.Long.valueOf): _*))
   }
 
@@ -3316,7 +3214,7 @@ object Versioned {
     // rebases (disjoint, rebaseRetries > 0) or fails this rerunnable
     // maintenance loudly — never erases the competitor.
     rewriteCommit(spark, base, Rewrite("compactFiles", "COMPACT",
-      readAligned(spark, base.table, base.meta, victims).coalesce(1), partColsOf(partCol),
+      readAs(spark, base.table, base.meta, victims).coalesce(1), partColsOf(partCol),
       base.meta, victimScope(victims), retries = rebaseRetries))
   }
 
@@ -3335,7 +3233,7 @@ object Versioned {
     * bin, and the dynamic-partition writer emits at most one file per
     * (partition, bin) — per-partition output file count ≤ bin count,
     * with key-contiguous bins (packing follows kmin order) so the
-    * range-pruning property of [[mergeByFiles]] survives compaction.
+    * range-pruning property of a stats-scoped [[merge]] survives compaction.
     * Content is identical by construction; every prior version stays
     * readable; the commit pins the base (concurrent merge wins, the
     * rerunnable maintenance loses) unless `rebaseRetries` > 0 lets it
@@ -3386,7 +3284,7 @@ object Versioned {
     // range sampling ever fuses two bins into a task they are ADJACENT in
     // key order, so the merged file's bounds stay contiguous.
     val rows = victims.zipWithIndex.map { case ((_, _, es), ord) =>
-      readAligned(spark, base.table, base.meta, es).withColumn("_bin", lit(ord))
+      readAs(spark, base.table, base.meta, es).withColumn("_bin", lit(ord))
     }.reduce(_.unionByName(_))
       .repartitionByRange(victims.size, col("_bin"))
       .drop("_bin")

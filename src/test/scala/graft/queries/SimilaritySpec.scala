@@ -8,6 +8,13 @@ import org.apache.spark.sql.functions._
   */
 class SimilaritySpec extends SparkSpec {
 
+  test("q74 and q95 (topKPerKey) equal q40 (window rank) row for row") {
+    val viaWindow = Similarity.cosineTopK(spark, sfDir).collect().toSeq
+    Seq("q74_similarity_topk_agg", "q95_similarity_topk_native").foreach { id =>
+      assert(Similarity.all(id)(spark, sfDir).collect().toSeq == viaWindow, id)
+    }
+  }
+
   test("PQ coding: every centroid block codes to itself at distance zero") {
     // vec_id < 16 ARE the codebook (q59/q116 convention) — nearest
     // sub-centroid of a centroid's own block must be itself, exactly.

@@ -327,7 +327,7 @@ class SinksSpec extends SparkSpec {
     // U key 3 → only the [3,4] file must be rewritten; I key 100 is beyond
     // every range (insert with zero file reads); matched-I key 7 → the
     // [7,8] file is READ for the membership check but must be SPLICED.
-    val v2 = Versioned.mergeByFiles(spark, tbl, Seq(
+    val v2 = Versioned.merge(spark, tbl, Seq(
       (3L, 31L, "a", "U"), (100L, 1000L, "b", "I"), (7L, 70L, "a", "I"))
       .toDF("k", "v", "p", "_op"), "k", "p")
     val f2 = Versioned.fileEntriesOf(spark, tbl, 2)
@@ -541,7 +541,7 @@ class SinksSpec extends SparkSpec {
     assert(Versioned.readAt(spark, tbl, v3).columns.toSeq == Seq("k", "v", "p"))
   }
 
-  test("mergeByFiles schema evolution: rewrite and check subsets read through the evolved schema") {
+  test("merge schema evolution on a stats base: rewrite and check subsets read through the evolved schema") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     val tbl = freshTable("sevolf")
@@ -550,7 +550,7 @@ class SinksSpec extends SparkSpec {
         .repartitionByRange(4, col("k")),
       partCol = Some("p"), fileStatsKey = Some("k"))
     // evolving file-scoped merge: only the file covering k=3 is rewritten
-    val v2 = Versioned.mergeByFiles(spark, tbl,
+    val v2 = Versioned.merge(spark, tbl,
       Seq((3L, 31L, "a", Some("u3"), "U")).toDF("k", "v", "p", "note", "_op"),
       "k", "p")
     val got = Versioned.readAt(spark, tbl, v2)
@@ -561,7 +561,7 @@ class SinksSpec extends SparkSpec {
     // a SECOND merge whose rewrite subset lands entirely on pre-evolution
     // files (k=7's file was never rewritten) must still see the evolved
     // schema — the aligned-subset read, not the raw file union
-    val v3 = Versioned.mergeByFiles(spark, tbl,
+    val v3 = Versioned.merge(spark, tbl,
       Seq((7L, 71L, "a", Some("u7"), "U")).toDF("k", "v", "p", "note", "_op"),
       "k", "p")
     val got3 = Versioned.readAt(spark, tbl, v3)
@@ -969,10 +969,10 @@ class SinksSpec extends SparkSpec {
     // A lands first (rewrites [1,2]); B computed from the same base v1
     // with the same expected version rewrites [7,8] — CAS loses, the
     // re-validation proves A's delta disjoint, B splices onto A's manifest.
-    val vA = Versioned.mergeByFiles(spark, tbl,
+    val vA = Versioned.merge(spark, tbl,
       Seq((1L, 11L, "a", "U")).toDF("k", "v", "p", "_op"), "k", "p")
     assert(vA == 2)
-    val vB = Versioned.mergeByFiles(spark, tbl,
+    val vB = Versioned.merge(spark, tbl,
       Seq((7L, 71L, "a", "U")).toDF("k", "v", "p", "_op"), "k", "p",
       fromVersion = Some(1), expectedLatest = Some(1), rebaseRetries = 1)
     assert(vB == 3, "the rebase must land on top of the winner")
@@ -983,7 +983,7 @@ class SinksSpec extends SparkSpec {
     // READ-SET overlap: C (from v1) rewrites the file A already replaced —
     // no retry count may force that through.
     val e1 = intercept[ConcurrentWriteException] {
-      Versioned.mergeByFiles(spark, tbl,
+      Versioned.merge(spark, tbl,
         Seq((2L, 22L, "a", "U")).toDF("k", "v", "p", "_op"), "k", "p",
         fromVersion = Some(1), expectedLatest = Some(1), rebaseRetries = 5)
     }
@@ -993,7 +993,7 @@ class SinksSpec extends SparkSpec {
     // file still held v=10); the winner's delta CONTAINS key 1, so the
     // matched-insert classification cannot be trusted — loud conflict.
     val e2 = intercept[ConcurrentWriteException] {
-      Versioned.mergeByFiles(spark, tbl,
+      Versioned.merge(spark, tbl,
         Seq((1L, 999L, "a", "I")).toDF("k", "v", "p", "_op"), "k", "p",
         fromVersion = Some(1), expectedLatest = Some(1), rebaseRetries = 5)
     }
@@ -1020,7 +1020,7 @@ class SinksSpec extends SparkSpec {
       scala.concurrent.ExecutionContext.fromExecutor(pool)
     val done = scala.concurrent.Future.traverse(bands) { b =>
       scala.concurrent.Future {
-        Versioned.mergeByFiles(spark, tbl,
+        Versioned.merge(spark, tbl,
           Seq((b, b * 1000, "a", "U")).toDF("k", "v", "p", "_op"), "k", "p",
           fromVersion = Some(1), expectedLatest = Some(1), rebaseRetries = 8)
       }
@@ -1050,9 +1050,9 @@ class SinksSpec extends SparkSpec {
     // return the competitor's version, not conflict and not double-apply.
     Versioned.preCommitHookForTests = Some(() => {
       Versioned.preCommitHookForTests = None // fire once, no recursion
-      Versioned.mergeByFiles(spark, tbl, batch, "k", "p", tag = Some("b1"))
+      Versioned.merge(spark, tbl, batch, "k", "p", tag = Some("b1"))
     })
-    val v = try Versioned.mergeByFiles(spark, tbl, batch, "k", "p",
+    val v = try Versioned.merge(spark, tbl, batch, "k", "p",
       tag = Some("b1"), rebaseRetries = 1)
     finally Versioned.preCommitHookForTests = None
     assert(v == 2 && Versioned.latestVersion(spark, tbl) == 2,
@@ -1080,12 +1080,12 @@ class SinksSpec extends SparkSpec {
       "a shallow clone must not copy a single data file")
     assert(Versioned.readAt(spark, dst, 1).as[(Long, Long, String)].collect().toSet ==
       (1L to 8L).map(k => (k, k * 10, "a")).toSet)
-    // metadata carried over: constraints enforce, stats column enables mergeByFiles
+    // metadata carried over: constraints enforce, the stats column scopes merge by file
     intercept[graft.tables.ConstraintViolationException] {
-      Versioned.mergeByFiles(spark, dst,
+      Versioned.merge(spark, dst,
         Seq((3L, -5L, "a", "U")).toDF("k", "v", "p", "_op"), "k", "p")
     }
-    val v2 = Versioned.mergeByFiles(spark, dst,
+    val v2 = Versioned.merge(spark, dst,
       Seq((3L, 31L, "a", "U"), (100L, 1000L, "b", "I"))
         .toDF("k", "v", "p", "_op"), "k", "p")
     assert(v2 == 2)
@@ -1133,10 +1133,10 @@ class SinksSpec extends SparkSpec {
     // lookupKeys: exact rows for mixed present/absent probes
     assert(Versioned.lookupKeys(spark, tbl, Seq(7L, 8L))
       .as[(Long, Long, String)].collect().toSet == Set((8L, 40L, "a")))
-    // mergeByFiles pruning: an unmatched-U on an in-range absent key
+    // stats-scoped merge pruning: an unmatched-U on an in-range absent key
     // rewrites NOTHING (without the bloom it would rewrite the covering
     // file with identical content)
-    val v2 = Versioned.mergeByFiles(spark, tbl,
+    val v2 = Versioned.merge(spark, tbl,
       Seq((7L, 77L, "a", "U")).toDF("k", "v", "p", "_op"), "k", "p")
     assert(Versioned.fileEntriesOf(spark, tbl, v2).toSet ==
       Versioned.fileEntriesOf(spark, tbl, 1).toSet,
@@ -1208,14 +1208,14 @@ class SinksSpec extends SparkSpec {
           (8L, 80L, "a")))
     // a rewrite MATERIALIZES the DV: update key 8 rewrites [7,8]; 7 stays
     // gone and the fresh entry carries no sidecar
-    val v4 = Versioned.mergeByFiles(spark, tbl,
+    val v4 = Versioned.merge(spark, tbl,
       Seq((8L, 88L, "a", "U")).toDF("k", "v", "p", "_op"), "k", "p")
     assert(Versioned.readAt(spark, tbl, v4).as[(Long, Long, String)].collect().toSet ==
       Set((1L, 10L, "a"), (2L, 20L, "a"), (5L, 50L, "a"), (6L, 60L, "a"),
           (8L, 88L, "a")))
     // a DV-deleted key is really gone: re-INSERT must land (the membership
     // check reads through the sidecar)
-    val v5 = Versioned.mergeByFiles(spark, tbl,
+    val v5 = Versioned.merge(spark, tbl,
       Seq((3L, 333L, "a", "I")).toDF("k", "v", "p", "_op"), "k", "p")
     assert(Versioned.readAt(spark, tbl, v5).as[(Long, Long, String)].collect().toSet
       .contains((3L, 333L, "a")))

@@ -4,15 +4,19 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions.{col, lit}
 
 /** Model-based randomized test of the versioned store: a fixed-seed
-  * sequence of publish/merge/mergeByFiles/deleteWhere/updateWhere/
-  * restore/compactFiles/optimizeTable/vacuum ops runs against BOTH the
-  * store and an in-memory model (`Map[key -> (value, partition)]` plus a
-  * per-version snapshot history), asserting full-content equality after
-  * EVERY op — the composed-operation coverage no single-op spec gives:
-  * merges over restored states, optimize over merge debris, time travel
-  * across the whole history, DML after layout rewrites.
+  * sequence of publish/merge/deleteWhere/updateWhere/restore/compactFiles/
+  * optimizeTable/vacuum/renameColumn ops and a NOT MATCHED BY SOURCE
+  * merge runs against BOTH the store and an in-memory model
+  * (`Map[key -> (value, partition)]` plus a per-version snapshot history
+  * and value-column name), asserting full-content equality after EVERY
+  * op — the composed-operation coverage no single-op spec gives: merges
+  * over restored states, optimize over merge debris, rewrites over
+  * renamed columns, time travel across the whole history, DML after
+  * layout rewrites. The walk runs once on a file-granular table (merge
+  * scopes by stats) and once on a partition-granular one (merge scopes
+  * by discovery; compactFiles and optimizeTable need stats and skip).
   *
-  * The seed is fixed, so a failure replays deterministically; ops that
+  * The seeds are fixed, so a failure replays deterministically; ops that
   * cannot apply in a state (restore with one version, optimize with
   * nothing to gain) degrade to no-ops exactly like the store's. Every
   * manifest the walk writes must also re-serialize byte for byte from its
@@ -25,11 +29,6 @@ import org.apache.spark.sql.functions.{col, lit}
 class LakeOpsModelSpec extends SparkSpec {
 
   private type Model = Map[Long, (Long, String)]
-
-  private def toDf(m: Model) = {
-    import spark.implicits._
-    m.toSeq.map { case (k, (v, p)) => (k, v, p) }.toDF("k", "v", "p")
-  }
 
   /** Every committed manifest under `tbl` re-serializes from its parsed
     * header block byte for byte (the `#rm` entry removals and a sidecar
@@ -47,31 +46,37 @@ class LakeOpsModelSpec extends SparkSpec {
           s"header block of $f does not round-trip")
       }
 
-  private def storeState(tbl: String, ver: Int): Model = {
+  /** The 30-op walk from `seed` on a table whose merge key carries file
+    * stats (`fileGranular`) or that is partitioned with no stats.
+    */
+  private def walk(seed: Long, fileGranular: Boolean): Unit = {
     import spark.implicits._
-    Versioned.readAt(spark, tbl, ver).as[(Long, Long, String)]
-      .collect().map { case (k, v, p) => k -> (v, p) }.toMap
-  }
-
-  test("30 random composed ops keep the store equal to the model at every step, and all retained history time-travels") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(20260815L)
+    val rnd = new scala.util.Random(seed)
     val parts = Vector("a", "b", "c")
     val tbl = new java.io.File(sys.props("java.io.tmpdir"),
       s"graft_model_${System.nanoTime()}").getPath
 
     var model: Model =
       (1L to 30L).map(k => k -> (k * 10, parts(rnd.nextInt(3)))).toMap
+    // the value column's name; renameColumn changes it
+    var vc = "v"
+    var renames = 0
+    def toDf(m: Model) = m.toSeq.map { case (k, (v, p)) => (k, v, p) }.toDF("k", vc, "p")
     var ver = Versioned.publish(spark, tbl, toDf(model), partCol = Some("p"),
-      fileStatsKey = Some("k"))
-    var history = Map(ver -> model)
-    var nextKey = 100L
+      fileStatsKey = if (fileGranular) Some("k") else None)
+    var history = Map(ver -> (model, vc))
+
+    def storeState(v: Int, name: String): Model =
+      Versioned.readAt(spark, tbl, v).select(col("k"), col(name), col("p"))
+        .as[(Long, Long, String)].collect().map { case (k, x, p) => k -> (x, p) }.toMap
+
+    def commitOp(v: Int): Unit = { ver = v; history += ver -> ((model, vc)) }
 
     def checkAll(opName: String): Unit = {
-      assert(storeState(tbl, ver) == model, s"after $opName at v$ver")
+      assert(storeState(ver, vc) == model, s"after $opName at v$ver")
       // every retained version still serves its snapshot
-      history.foreach { case (v, m) =>
-        assert(storeState(tbl, v) == m, s"$opName broke time travel to v$v")
+      history.foreach { case (v, (m, name)) =>
+        assert(storeState(v, name) == m, s"$opName broke time travel to v$v")
       }
     }
 
@@ -79,9 +84,8 @@ class LakeOpsModelSpec extends SparkSpec {
     // predecessor snapshot into its own — deletes remove exact pre-images,
     // inserts add exact post-images, nothing else.
     def checkFeed(opName: String, prev: Model): Unit = {
-      import spark.implicits._
       val feed = Versioned.recordedChanges(spark, tbl, ver - 1, ver)
-        .select("k", "v", "p", "_change")
+        .select(col("k"), col(vc), col("p"), col("_change"))
         .as[(Long, Long, String, String)].collect()
       val replayed = feed.foldLeft(prev) {
         case (m, (k, fv, fp, "delete")) =>
@@ -98,10 +102,10 @@ class LakeOpsModelSpec extends SparkSpec {
         s"$opName feed replay diverged: images do not transform v${ver - 1} into v$ver")
     }
 
+    var nextKey = 100L
     (1 to 30).foreach { step =>
-      val op = rnd.nextInt(8)
-      op match {
-        case 0 | 1 => // key-based merge (file-scoped on even steps)
+      rnd.nextInt(10) match {
+        case 0 | 1 => // key-based merge
           val existing = model.keys.toVector.sorted
           val us = rnd.shuffle(existing).take(rnd.nextInt(4))
             .map(k => (k, model(k)._1 + 1, parts(rnd.nextInt(3)), "U"))
@@ -113,78 +117,114 @@ class LakeOpsModelSpec extends SparkSpec {
           val batch = (us ++ ds ++ is).toVector
           if (batch.nonEmpty) {
             val prev = model
-            val src = batch.toDF("k", "v", "p", "_op")
-            ver = if (op == 0)
-              Versioned.merge(spark, tbl, src, "k", "p", recordChanges = true)
-            else Versioned.mergeByFiles(spark, tbl, src, "k", "p", recordChanges = true)
+            val v2 = Versioned.merge(spark, tbl, batch.toDF("k", vc, "p", "_op"), "k", "p",
+              recordChanges = true)
             us.foreach { case (k, v, p, _) => model += k -> (v, p) }
             ds.foreach { case (k, _, _, _) => model -= k }
             is.foreach { case (k, v, p, _) => model += k -> (v, p) }
-            history += ver -> model
-            checkAll(s"merge(op=$op, batch=${batch.size})")
-            checkFeed(s"merge(op=$op)", prev)
+            commitOp(v2)
+            checkAll(s"merge(batch=${batch.size})")
+            checkFeed("merge", prev)
           }
         case 2 => // predicate delete
           val r = rnd.nextInt(7)
           val prev = model
-          val v2 = Versioned.deleteWhere(spark, tbl, col("v") % 7 === r, "p",
+          val v2 = Versioned.deleteWhere(spark, tbl, col(vc) % 7 === r, "p",
             recordChanges = true)
           model = model.filterNot { case (_, (v, _)) => v % 7 == r }
           val changed = v2 != ver
-          if (changed) { ver = v2; history += ver -> model }
+          if (changed) commitOp(v2)
           checkAll(s"deleteWhere(%7==$r)")
           if (changed) checkFeed(s"deleteWhere(%7==$r)", prev)
         case 3 => // predicate update (may move partitions)
           val r = rnd.nextInt(5)
           val dst = parts(rnd.nextInt(3))
           val prev = model
-          val v2 = Versioned.updateWhere(spark, tbl, col("v") % 5 === r,
-            Map("v" -> (col("v") + 100L), "p" -> lit(dst)), "p",
+          val v2 = Versioned.updateWhere(spark, tbl, col(vc) % 5 === r,
+            Map(vc -> (col(vc) + 100L), "p" -> lit(dst)), "p",
             recordChanges = true)
           model = model.map { case (k, (v, p)) =>
             if (v % 5 == r) k -> (v + 100, dst) else k -> (v, p)
           }
           val changed = v2 != ver
-          if (changed) { ver = v2; history += ver -> model }
+          if (changed) commitOp(v2)
           checkAll(s"updateWhere(%5==$r -> $dst)")
           if (changed) checkFeed(s"updateWhere(%5==$r)", prev)
         case 4 => // restore to a random retained version
           val target = history.keys.toVector.sorted.apply(
             rnd.nextInt(history.size))
-          ver = Versioned.restore(spark, tbl, target)
-          model = history(target)
-          history += ver -> model
+          val restored = Versioned.restore(spark, tbl, target)
+          model = history(target)._1
+          vc = history(target)._2
+          commitOp(restored)
           checkAll(s"restore($target)")
-        case 5 => // whole-table optimize: content no-op, new version if gain
+        case 5 if fileGranular => // whole-table optimize: content no-op, new version if gain
           val v2 = Versioned.optimizeTable(spark, tbl, "k", "p",
             targetRows = 1 + rnd.nextInt(20))
-          if (v2 != ver) { ver = v2; history += ver -> model }
+          if (v2 != ver) commitOp(v2)
           checkAll("optimizeTable")
-        case 6 => // compact one existing partition: content no-op
+        case 6 if fileGranular => // compact one existing partition: content no-op
           val present = model.values.map(_._2).toSet
           if (present.nonEmpty) {
             val p = present.toVector.sorted.apply(rnd.nextInt(present.size))
-            ver = Versioned.compactFiles(spark, tbl, s"p=$p", "k", "p")
-            history += ver -> model
+            commitOp(Versioned.compactFiles(spark, tbl, s"p=$p", "k", "p"))
             checkAll(s"compactFiles(p=$p)")
           }
+        case 5 | 6 => // partition-granular: maintenance needs file stats
         case 7 => // retention: keep the newest 4 retained versions
           val keep = history.keys.toVector.sorted.takeRight(4).toSet + ver
           Versioned.vacuum(spark, tbl, keep, retentionMs = 0)
           history = history.view.filterKeys(keep).toMap
           checkAll(s"vacuum(keep=${keep.toVector.sorted.mkString(",")})")
+        case 8 => // rename the value column to a fresh name (header only)
+          renames += 1
+          val fresh = s"v_r$renames"
+          val v2 = Versioned.renameColumn(spark, tbl, vc, fresh)
+          vc = fresh
+          commitOp(v2)
+          checkAll(s"renameColumn(-> $fresh)")
+        case 9 => // full-sync merge: keys absent from the source are deleted or flagged
+          val existing = model.keys.toVector.sorted
+          val kept = rnd.shuffle(existing).take(existing.size * 3 / 4)
+          val bump = kept.take(1).toSet
+          val batch = kept.map(k => (k, model(k)._1 + (if (bump(k)) 7 else 0), model(k)._2,
+            if (bump(k)) "U" else "K"))
+          val delete = rnd.nextBoolean()
+          val prev = model
+          val v2 = Versioned.merge(spark, tbl, batch.toDF("k", vc, "p", "_op"), "k", "p",
+            recordChanges = true,
+            notMatchedBySource = Some(
+              if (delete) Versioned.NotMatchedBySource.Delete
+              else Versioned.NotMatchedBySource.Update(Map(vc -> (col(vc) + 1000L)))))
+          model = model.flatMap { case (k, (v, p)) =>
+            if (bump(k)) Some(k -> (v + 7, p))
+            else if (kept.contains(k)) Some(k -> (v, p))
+            else if (delete) None
+            else Some(k -> (v + 1000, p))
+          }
+          commitOp(v2)
+          checkAll(s"merge(notMatchedBySource, delete=$delete)")
+          checkFeed("merge(notMatchedBySource)", prev)
       }
       if (model.isEmpty) { // refill so later ops stay meaningful
         nextKey += 1
         val k = nextKey
         model += k -> (k * 10, "a")
-        ver = Versioned.merge(spark, tbl,
-          Seq((k, k * 10, "a", "I")).toDF("k", "v", "p", "_op"), "k", "p")
-        history += ver -> model
+        commitOp(Versioned.merge(spark, tbl,
+          Seq((k, k * 10, "a", "I")).toDF("k", vc, "p", "_op"), "k", "p"))
       }
       assertHeadersRoundTrip(tbl)
     }
     assert(history.size >= 2, "the walk should retain a multi-version history")
+    assert(renames > 0, "the walk should rename the value column at least once")
+  }
+
+  test("30 random composed ops keep the store equal to the model at every step, and all retained history time-travels") {
+    walk(20260815L, fileGranular = true)
+  }
+
+  test("the 30-op model walk also holds on a partition-granular table, where merge scopes by discovery") {
+    walk(20261019L, fileGranular = false)
   }
 
   test("header-only commits inherit their base's TableMeta except the fields they state") {

@@ -193,7 +193,7 @@ class LakeSqlSpec extends SparkSpec {
     val before = Versioned.fileEntriesOf(spark, tbl, 1)
     assert(before.size >= 6, s"want several files, got ${before.size}")
     // one-key update + one out-of-range insert ('z...' sorts above all)
-    val v2 = Versioned.mergeByFiles(spark, tbl,
+    val v2 = Versioned.merge(spark, tbl,
       Seq(("k010", 999L, "0", "U"), ("zzz", 1000L, "1", "I"))
         .toDF("sk", "v", "p", "_op"), "sk", "p")
     val after = Versioned.fileEntriesOf(spark, tbl, v2)
@@ -221,7 +221,7 @@ class LakeSqlSpec extends SparkSpec {
     Versioned.publish(spark, dtbl, days.toDF("d", "v", "p")
         .repartitionByRange(4, col("p"), col("d")),
       partCol = Some("p"), fileStatsKey = Some("d"))
-    val dv2 = Versioned.mergeByFiles(spark, dtbl,
+    val dv2 = Versioned.merge(spark, dtbl,
       Seq((java.sql.Date.valueOf("2024-01-05"), 555L, "0", "U"))
         .toDF("d", "v", "p", "_op"), "d", "p")
     val dgot = Versioned.readAt(spark, dtbl, dv2)
@@ -288,7 +288,7 @@ class LakeSqlSpec extends SparkSpec {
     // optimize (partition 1 collapsed to a single file above and splices)
     Versioned.preCommitHookForTests = Some(() => {
       Versioned.preCommitHookForTests = None
-      Versioned.mergeByFiles(spark, tbl,
+      Versioned.merge(spark, tbl,
         Seq((8L, 888L, "0", "U")).toDF("k", "v", "p", "_op"), "k", "p")
     })
     try {
@@ -308,7 +308,7 @@ class LakeSqlSpec extends SparkSpec {
     Versioned.publish(spark, tbl, base.toDF("k", "v", "p")
         .repartitionByRange(8, col("p"), col("k")),
       partCol = Some("p"), fileStatsKey = Some("k"))
-    def update(k: Long, v: Long, p: String): Unit = Versioned.mergeByFiles(spark, tbl,
+    def update(k: Long, v: Long, p: String): Unit = Versioned.merge(spark, tbl,
       Seq((k, v, p, "U")).toDF("k", "v", "p", "_op"), "k", "p")
     def state(v: Int) = Versioned.readAt(spark, tbl, v).as[(Long, Long, String)]
       .collect().map(t => t._1 -> t._2).toMap

@@ -577,7 +577,7 @@ class SourcesSpec extends SparkSpec {
     // blooms recorded, so the store's file-scoped DML keeps working
     assert(Versioned.fileEntriesOf(spark, tbl, 5).nonEmpty)
     assert(Versioned.bloomCoverage(spark, tbl, 5) == 1.0)
-    val v6 = Versioned.mergeByFiles(spark, tbl,
+    val v6 = Versioned.merge(spark, tbl,
       Seq((7L, 77L, "a", "U")).toDF("k", "v", "p", "_op"), "k", "p")
     assert(Versioned.readAt(spark, tbl, v6).as[(Long, Long, String)]
       .collect().toSet.contains((7L, 77L, "a")))
@@ -655,7 +655,7 @@ class SourcesSpec extends SparkSpec {
       .map(_.getString(1)).toSeq.takeRight(3) == Seq("DELETE", "UPDATE", "MERGE"))
     // the SAME table keeps working through the Scala API (one manifest
     // lineage): a file-scoped merge lands as the next version
-    val v = Versioned.mergeByFiles(spark, s"$wh/ns1/t",
+    val v = Versioned.merge(spark, s"$wh/ns1/t",
       Seq((1L, 11L, "a", "U")).toDF("k", "v", "p", "_op"), "k", "p")
     assert(spark.sql("SELECT * FROM gcat_t.ns1.t").as[(Long, Long, String)]
       .collect().toSet == Set((1L, 11L, "a"), (5L, 50L, "c")))
@@ -807,9 +807,8 @@ class SourcesSpec extends SparkSpec {
       "exactly the source-less rows must be flagged")
     assert(Versioned.read(spark, t2).count() == rows.length)
     // 4) the UPDATE variant ASSIGNING THE PARTITION COLUMN: unmatched
-    //    rows MOVE — both the partitions they leave and the partition
-    //    they land in must be in the rewrite scope (the assignment-
-    //    landing pass only runs in this case)
+    //    rows MOVE — the partitions they leave are in the rewrite scope,
+    //    and they land as new entries in the assigned partition
     val t3 = s"$tmp/table3"
     Versioned.publish(spark, t3, rows.toDF("k", "v", "y"),
       partCol = Some("y"), fileStatsKey = Some("k"))
@@ -829,8 +828,8 @@ class SourcesSpec extends SparkSpec {
       notMatchedBySource = Some(Versioned.NotMatchedBySource.Update(
         Map("v" -> lit("oops"))))))
     assert(err.getMessage.contains("preserve column types"), err.getMessage)
-    val err2 = intercept[IllegalArgumentException](Versioned.mergeByFiles(
-      spark, tbl, keepHalf, "k", "y"))
+    val err2 = intercept[IllegalArgumentException](Versioned.merge(
+      spark, tbl, keepHalf.withColumn("_op", lit("X")), "k", "y"))
     assert(err2.getMessage.contains("allowed"), err2.getMessage)
   }
 
@@ -871,7 +870,7 @@ class SourcesSpec extends SparkSpec {
     val str = s"$tmp/str"
     Versioned.publish(spark, str, Seq(("1", 10L, "a"), ("2", 20L, "a")).toDF("k", "v", "p"),
       partCol = Some("p"), fileStatsKey = Some("k"))
-    val e2 = intercept[IllegalArgumentException](Versioned.mergeByFiles(spark, str,
+    val e2 = intercept[IllegalArgumentException](Versioned.merge(spark, str,
       Seq((1, 11L, "a", "U")).toDF("k", "v", "p", "_op"), "k", "p"))
     assert(e2.getMessage.contains("int") && e2.getMessage.contains("string"), e2.getMessage)
     // integral widths compare by value: an int source key updates a long key
@@ -880,7 +879,7 @@ class SourcesSpec extends SparkSpec {
       partCol = Some("p"), fileStatsKey = Some("k"))
     val intSrc = Seq((1, 11L, "a", "U")).toDF("k", "v", "p", "_op")
     Versioned.merge(spark, lng, intSrc, "k", "p")
-    Versioned.mergeByFiles(spark, lng, intSrc.withColumn("v", col("v") + 1), "k", "p")
+    Versioned.merge(spark, lng, intSrc.withColumn("v", col("v") + 1), "k", "p")
     assert(Versioned.read(spark, lng).as[(Long, Long, String)].collect().toSeq ==
       Seq((1L, 12L, "a")))
   }
