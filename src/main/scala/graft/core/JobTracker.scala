@@ -1,9 +1,7 @@
 package graft.core
 
-import java.util.concurrent.atomic.AtomicReference
 import scala.concurrent.{Await, Future, ExecutionContext}
 import scala.concurrent.duration.Duration
-import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 
 /** Job lifecycle + progress introspection — the one place we faithfully mirror
@@ -31,99 +29,43 @@ object JobTracker {
 
   /** Opaque handle ≡ reference `JobHandle` (`MapReduceFramework.h:6`):
     * async start, poll `getJobState`, idempotent `waitForJob`, `close`.
+    * Its progress is the [[Meter]] scope of the action's job group, which is
+    * released when the action returns (or fails) with the state frozen at
+    * REDUCE 100, so a handle that is never closed holds nothing.
     */
-  final class JobHandle[T] private[JobTracker] (
-      spark: SparkSession,
-      listener: Listener,
-      future: Future[T]) {
+  final class JobHandle[T] private[JobTracker] (scope: Meter.Scope, future: Future[T]) {
 
-    def getJobState: JobState = listener.state.get()
+    def getJobState: JobState =
+      if (scope.isOpen) phase(scope.stages) else JobState(REDUCE, 100f)
 
     /** Blocks until the job finishes; idempotent like the reference's
       * first-waiter-joins contract (`MapReduceFramework.cpp:355-381`).
       */
     def waitForJob(): T = Await.result(future, Duration.Inf)
 
-    /** ≡ `closeJobHandle` (`MapReduceFramework.cpp:404-414`): wait + release.
-      * The listener is released even when the job failed — user-code errors
-      * (reference Y3: the C++ framework exits the process; we surface them
-      * as the wait's exception) must not leak a SparkListener per failure.
+    /** ≡ `closeJobHandle` (`MapReduceFramework.cpp:404-414`): a wait, since
+      * the action released the scope already. User-code errors (reference
+      * Y3: the C++ framework exits the process) surface as its exception.
       */
-    def close(): T =
-      try waitForJob()
-      finally spark.sparkContext.removeSparkListener(listener)
+    def close(): T = waitForJob()
   }
 
-  private final class Listener(group: String) extends SparkListener {
-    val state = new AtomicReference[JobState](JobState(UNDEFINED, 0f))
-    // stageId -> (isResultStage, totalTasks, completedTasks, startedTasks)
-    private val stages = scala.collection.concurrent.TrieMap
-      .empty[Int, (Boolean, Int, Int, Int)]
-    private val myStages = scala.collection.concurrent.TrieMap.empty[Int, Boolean]
-    @volatile private var done = false
-
-    override def onJobStart(e: SparkListenerJobStart): Unit = {
-      if (e.properties != null &&
-          group == e.properties.getProperty("spark.jobGroup.id")) {
-        // last stage in the job's DAG is the result stage (shuffle-readers
-        // downstream of every map stage) → REDUCE; all others → MAP.
-        val resultId = e.stageInfos.map(_.stageId).max
-        e.stageInfos.foreach { si =>
-          myStages.put(si.stageId, si.stageId == resultId)
-        }
-      }
+  private def phase(stages: Seq[Meter.StageProgress]): JobState = {
+    val (reduceStages, mapStages) = stages.partition(_.result)
+    def pct(ss: Seq[Meter.StageProgress], f: Meter.StageProgress => Int): Float = {
+      val total = ss.map(_.total).sum
+      val n = ss.map(f).sum
+      if (total <= 0) 0f else math.min(100f, n.toFloat / total * 100f)
     }
-
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-      myStages.get(e.stageId).foreach { isResult =>
-        stages.updateWith(e.stageId) {
-          case Some((r, t, c, s)) => Some((r, t, c + 1, s))
-          case None               => Some((isResult, 0, 1, 0))
-        }
-        refresh()
-      }
-
-    override def onTaskStart(e: SparkListenerTaskStart): Unit =
-      myStages.get(e.stageId).foreach { isResult =>
-        stages.updateWith(e.stageId) {
-          case Some((r, t, c, s)) => Some((r, t, c, s + 1))
-          case None               => Some((isResult, 0, 0, 1))
-        }
-        refresh()
-      }
-
-    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-      myStages.get(e.stageInfo.stageId).foreach { isResult =>
-        stages.updateWith(e.stageInfo.stageId) {
-          case Some((r, _, c, s)) => Some((r, e.stageInfo.numTasks, c, s))
-          case None               => Some((isResult, e.stageInfo.numTasks, 0, 0))
-        }
-        refresh()
-      }
-
-    def markDone(): Unit = { done = true; refresh() }
-
-    private def refresh(): Unit = {
-      val snap = stages.readOnlySnapshot().values.toSeq
-      val (reduceStages, mapStages) = snap.partition(_._1)
-      def pct(ss: Seq[(Boolean, Int, Int, Int)], f: ((Boolean, Int, Int, Int)) => Int): Float = {
-        val total = ss.map(_._2).sum
-        val n = ss.map(f).sum
-        if (total <= 0) 0f else math.min(100f, n.toFloat / total * 100f)
-      }
-      val next =
-        if (done) JobState(REDUCE, 100f)
-        else if (reduceStages.exists(_._3 > 0))
-          JobState(REDUCE, pct(reduceStages, _._3))
-        else if (mapStages.nonEmpty && pct(mapStages, _._3) >= 100f)
-          // Within-shuffle progress ≙ the reference's pairs-grouped counter
-          // (`MapReduceFramework.cpp:192,205`): a reduce task's shuffle fetch
-          // begins at task start, so started/total approximates grouping %.
-          JobState(SHUFFLE, pct(reduceStages, _._4))
-        else if (mapStages.nonEmpty) JobState(MAP, pct(mapStages, _._3))
-        else JobState(UNDEFINED, 0f)
-      state.set(next)
-    }
+    if (reduceStages.exists(_.completed > 0))
+      JobState(REDUCE, pct(reduceStages, _.completed))
+    else if (mapStages.nonEmpty && pct(mapStages, _.completed) >= 100f)
+      // Within-shuffle progress ≙ the reference's pairs-grouped counter
+      // (`MapReduceFramework.cpp:192,205`): a reduce task's shuffle fetch
+      // begins at task start, so started/total approximates grouping %.
+      JobState(SHUFFLE, pct(reduceStages, _.started))
+    else if (mapStages.nonEmpty) JobState(MAP, pct(mapStages, _.completed))
+    else JobState(UNDEFINED, 0f)
   }
 
   /** ≡ `startMapReduceJob` (`MapReduceFramework.cpp:322-353`): kick off the
@@ -131,18 +73,18 @@ object JobTracker {
     */
   def start[T](spark: SparkSession, desc: String = "graft-job")(
       action: => T): JobHandle[T] = {
+    val sc = spark.sparkContext
     val group = s"graft-${java.util.UUID.randomUUID()}"
-    val listener = new Listener(group)
-    spark.sparkContext.addSparkListener(listener)
+    val scope = Meter.group(sc, group)
     implicit val ec: ExecutionContext = ExecutionContext.global
     val fut = Future {
-      spark.sparkContext.setJobGroup(group, desc, interruptOnCancel = true)
+      sc.setJobGroup(group, desc, interruptOnCancel = true)
       try action
       finally {
-        spark.sparkContext.clearJobGroup()
-        listener.markDone()
+        sc.clearJobGroup()
+        scope.release()
       }
     }
-    new JobHandle(spark, listener, fut)
+    new JobHandle(scope, fut)
   }
 }

@@ -3048,7 +3048,9 @@ object Versioned {
                       fromV: Int, toV: Int,
                       strict: Boolean = true): DataFrame = {
     val (fsys, table) = fs(spark, tablePath)
-    val toSchema = metaOf(fsys, table, toV).schema
+    // toV's column map and schema, keeping each image's _change tag
+    val toMeta = metaOf(fsys, table, toV)
+    val tagged = toMeta.copy(schema = toMeta.schema.map(_.add("_change", "string")))
     val range = (fromV + 1) to toV
     val recorded = range.flatMap(v => recordedFeedOf(spark, tablePath, v).map((v, _)))
     if (strict) {
@@ -3061,18 +3063,7 @@ object Versioned {
     val empty = readAt(spark, tablePath, toV).limit(0)
       .withColumn("_change", lit("")).withColumn("_version", lit(0))
     recorded.map { case (v, d) =>
-      val raw = Tables.parquet(spark).load(d.toString)
-      // align the data columns to toV's schema, preserving the _change tag
-      val aligned = toSchema match {
-        case Some(sch) =>
-          val have = raw.columns.toSet
-          val withAll = sch.fields.filterNot(f => have.contains(f.name))
-            .foldLeft(raw)((df, f) => df.withColumn(f.name, lit(null).cast(f.dataType)))
-          withAll.select(sch.fields.map(f =>
-            col(f.name).cast(f.dataType).as(f.name)) :+ col("_change"): _*)
-        case None => raw
-      }
-      aligned.withColumn("_version", lit(v))
+      asOf(Tables.parquet(spark).load(d.toString), tagged).withColumn("_version", lit(v))
     }.reduceOption(_.unionByName(_)).getOrElse(empty)
   }
 

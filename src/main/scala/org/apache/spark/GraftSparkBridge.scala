@@ -1,11 +1,14 @@
 package org.apache.spark
 
-/** Bridge into `private[spark]` SparkContext internals for the profiler:
-  * listener events are delivered asynchronously, so per-query metric
-  * attribution needs an explicit bus drain between queries — without it a
-  * query's trailing task-end events would be credited to the next query.
+/** Bridge into `private[spark]` SparkContext internals for the meter:
+  * listener events are delivered asynchronously, so per-scope metric
+  * attribution needs an explicit bus drain before a scope is read — without
+  * it a query's trailing task-end events would be missed. `listenerCount`
+  * lets a test see that metering registers no listener per call.
   */
 object GraftSparkBridge {
   def drainListenerBus(sc: SparkContext, timeoutMs: Long = 30000): Unit =
     sc.listenerBus.waitUntilEmpty(timeoutMs)
+
+  def listenerCount(sc: SparkContext): Int = sc.listenerBus.listeners.size
 }

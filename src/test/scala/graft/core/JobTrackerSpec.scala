@@ -2,6 +2,7 @@ package graft.core
 
 import graft.SparkSpec
 import graft.core.JobTracker._
+import org.apache.spark.GraftSparkBridge
 
 /** Progress/lifecycle contract (SURVEY.md §5.2 property d + reference
   * `Sample Client/SampleClient.cpp:83-99` poll loop): async start, stage
@@ -72,11 +73,49 @@ class JobTrackerSpec extends SparkSpec {
     assert(causes(err).exists(_.getMessage != null)
       && causes(err).exists(c => String.valueOf(c.getMessage).contains("user reduce blew up")),
       s"unexpected failure chain: ${causes(err).map(_.toString)}")
-    // close released the listener even though the job failed: the session
-    // keeps working and a fresh job tracks from a clean state.
+    // the failed action released its meter scope: the session keeps
+    // working and a fresh job tracks from a clean state.
     val ok = JobTracker.start(spark) {
       ds.groupByKey(_._1).mapGroups((k, it) => (k, it.size)).collect().length
     }
     assert(ok.close() == 10)
+  }
+
+  test("a change-feed stream inside the action: progress never drops and ends at REDUCE 100") {
+    import graft.tables.Versioned
+    val tbl = java.nio.file.Files.createTempDirectory("jtfeed").toString + "/table"
+    Versioned.publish(spark, tbl,
+      Seq((1L, 10L, "a"), (2L, 20L, "a"), (3L, 30L, "b")).toDF("k", "v", "p"), partCol = Some("p"))
+    Versioned.merge(spark, tbl, Seq((2L, 21L, "a", "U"), (4L, 40L, "b", "I"))
+      .toDF("k", "v", "p", "_op"), "k", "p", recordChanges = true)
+    // q220's shape: stream the recorded feed into a memory sink, then aggregate it
+    val handle = JobTracker.start(spark) {
+      val q = spark.readStream.format("graft.sources.ChangeFeedSource").load(tbl)
+        .writeStream.format("memory").queryName("jt_cfeed").outputMode("append").start()
+      try q.processAllAvailable() finally q.stop()
+      spark.table("jt_cfeed").groupBy("_version", "_change").count().collect().length
+    }
+    val rank = Map[Stage, Int](UNDEFINED -> 0, MAP -> 1, SHUFFLE -> 2, REDUCE -> 3)
+    var last = handle.getJobState
+    val drops = scala.collection.mutable.ArrayBuffer.empty[(JobState, JobState)]
+    val deadline = System.nanoTime() + 120L * 1000000000L
+    while (last != JobState(REDUCE, 100f) && System.nanoTime() < deadline) {
+      Thread.sleep(10)
+      val s = handle.getJobState
+      if (rank(s.stage) < rank(last.stage) ||
+          (s.stage == last.stage && s.percentage < last.percentage)) drops += ((last, s))
+      last = s
+    }
+    assert(last == JobState(REDUCE, 100f))
+    assert(drops.isEmpty, s"progress dropped: $drops")
+    assert(handle.waitForJob() == 2) // (v2, delete) and (v2, insert)
+  }
+
+  test("handles that are waited on and never closed register no listener") {
+    val sc = spark.sparkContext
+    JobTracker.start(spark)(spark.range(0, 10).count()).waitForJob()
+    val before = GraftSparkBridge.listenerCount(sc)
+    (1 to 20).foreach(_ => JobTracker.start(spark)(spark.range(0, 10).count()).waitForJob())
+    assert(GraftSparkBridge.listenerCount(sc) == before)
   }
 }

@@ -11,6 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * parquet-hadoop example `Group` reader serves only the manifest's
   * checkpoint sidecar. Data-dir names are minted in one place,
   * `Versioned.newDataDir`, whose `d_*` format vacuum's sweep relies on.
+  * Jobs are metered by one SparkListener, `graft.core.Meter`'s.
   */
 class ParquetReadGuardSpec extends AnyFunSuite {
   private val plainRead =
@@ -79,5 +80,15 @@ class ParquetReadGuardSpec extends AnyFunSuite {
     assert(minted.findFirstIn("s\"$dst/d_$name\"").nonEmpty)
     assert(minted.findFirstIn("val dd = s\"d_tail$par\"").isEmpty)
     assert(minted.findFirstIn("s\"graft_cfeed_${dirTag(dir)}\"").isEmpty)
+  }
+
+  test("src/main registers a SparkListener only in core/Meter.scala") {
+    val hits = mainSources.flatMap { case (path, text) =>
+      "addSparkListener".r.findAllMatchIn(text).map(m =>
+        (path, s"$path:${text.substring(0, m.start).count(_ == '\n') + 1}"))
+    }
+    val (meter, stray) = hits.partition(_._1.endsWith("graft/core/Meter.scala"))
+    assert(stray.isEmpty, s"meter jobs through graft.core.Meter: ${stray.map(_._2).mkString(", ")}")
+    assert(meter.size == 1, "Meter installs one listener per SparkContext: update this guard")
   }
 }

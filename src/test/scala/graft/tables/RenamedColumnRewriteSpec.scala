@@ -81,4 +81,23 @@ class RenamedColumnRewriteSpec extends SparkSpec {
     // a header-only rename changes no row
     assert(Versioned.diff(spark, deleted, vd - 1, vd) == ((0L, 0L)))
   }
+
+  test("recorded change images written before a rename read the renamed column") {
+    import spark.implicits._
+    val tbl = Files.createTempDirectory("vrename").toString + "/table"
+    Versioned.publish(spark, tbl, rows.toDF("k", "v", "w", "p"), partCol = Some("p"))
+    val vm = Versioned.merge(spark, tbl,
+      Seq((1L, 11L, 101L, "a", "U")).toDF("k", "v", "w", "p", "_op"), "k", "p",
+      recordChanges = true)
+    val vr = Versioned.renameColumn(spark, tbl, "w", "w2")
+    val images = Set((1L, 11L, 101L, "a", "insert", vm), (1L, 10L, 100L, "a", "delete", vm))
+    val recorded = Versioned.recordedChanges(spark, tbl, vm - 1, vr, strict = false)
+      .select("k", "v", "w2", "p", "_change", "_version")
+      .as[(Long, Long, Long, String, String, Int)].collect().toSet
+    assert(recorded == images, recorded)
+    val fed = spark.read.format("graft.sources.ChangeFeedSource").load(tbl)
+      .select("k", "v", "w2", "p", "_change", "_version")
+      .as[(Long, Long, Long, String, String, Int)].collect().toSet
+    assert(fed == images, fed)
+  }
 }
