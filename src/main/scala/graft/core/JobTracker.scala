@@ -12,9 +12,12 @@ import org.apache.spark.sql.SparkSession
   * Mapping (SURVEY.md §7 M1.2): Spark stages don't map 1:1 onto
   * MAP/SHUFFLE/REDUCE, so shuffle-map-stage tasks report as MAP, result-stage
   * tasks as REDUCE, and the transition between them as SHUFFLE. Percentage is
-  * completed/total tasks of the current phase — monotone within a phase, like
-  * the reference's packed-atomic counter (whose +2 overshoot quirk and
-  * mid-sort "MAP 100%" reading we deliberately do not replicate, SURVEY.md §2.1).
+  * completed/total tasks of the current phase. A handle never reports below
+  * the last state it reported, ordered by phase and then percentage, like the
+  * reference's packed-atomic counter: AQE submits stages as it goes, so a
+  * later map stage would otherwise pull the map percentage back. (The
+  * counter's +2 overshoot quirk and mid-sort "MAP 100%" reading we
+  * deliberately do not replicate, SURVEY.md §2.1.)
   */
 object JobTracker {
 
@@ -34,9 +37,13 @@ object JobTracker {
     * REDUCE 100, so a handle that is never closed holds nothing.
     */
   final class JobHandle[T] private[JobTracker] (scope: Meter.Scope, future: Future[T]) {
+    private var last = JobState(UNDEFINED, 0f)
 
-    def getJobState: JobState =
-      if (scope.isOpen) phase(scope.stages) else JobState(REDUCE, 100f)
+    def getJobState: JobState = synchronized {
+      val now = if (scope.isOpen) phase(scope.stages) else JobState(REDUCE, 100f)
+      if (progressOrder.gt(now, last)) last = now
+      last
+    }
 
     /** Blocks until the job finishes; idempotent like the reference's
       * first-waiter-joins contract (`MapReduceFramework.cpp:355-381`).
@@ -49,6 +56,9 @@ object JobTracker {
       */
     def close(): T = waitForJob()
   }
+
+  private val progressOrder: Ordering[JobState] = Ordering.by(s =>
+    (Seq(UNDEFINED, MAP, SHUFFLE, REDUCE).indexOf(s.stage), s.percentage))
 
   private def phase(stages: Seq[Meter.StageProgress]): JobState = {
     val (reduceStages, mapStages) = stages.partition(_.result)

@@ -40,8 +40,10 @@ object Meter {
   final case class Tasks(runMs: Long = 0, cpuNs: Long = 0, gcMs: Long = 0,
                          shuffleRead: Long = 0, shuffleWrite: Long = 0, spill: Long = 0)
 
-  /** One submitted stage: whether it is its job's result stage (the last
-    * in its DAG), its task count, and how many tasks started and ended.
+  /** One submitted stage: whether it is a result stage (it writes no
+    * shuffle; under AQE each shuffle map stage runs as a job of its own, so
+    * "its job's last stage" would not tell), its task count, and how many
+    * tasks started and ended.
     */
   final case class StageProgress(result: Boolean, total: Int = 0,
                                  started: Int = 0, completed: Int = 0)
@@ -68,8 +70,7 @@ object Meter {
 
     private[Meter] def jobStarted(j: SparkListenerJobStart, site: String, stack: String): Unit = {
       jobMap += j.jobId -> Job(j.jobId, site, stack, j.time)
-      val resultId = j.stageIds.max
-      stageJob ++= j.stageIds.map(s => s -> (j.jobId, s == resultId))
+      stageJob ++= j.stageInfos.map(s => s.stageId -> ((j.jobId, !GraftSparkBridge.writesShuffle(s))))
     }
 
     private[Meter] def jobEnded(j: SparkListenerJobEnd): Unit =

@@ -106,9 +106,9 @@ object Substrates {
         .forEach(f => java.nio.file.Files.deleteIfExists(f))
       finally files.close()
     }
-    // The committed-manifest memo keys on (path, length, mtime); a
-    // republish under the same paths could false-positive on coarse-mtime
-    // filesystems — invalidate the subtree's verdicts with the tree.
-    graft.tables.Versioned.invalidateCommittedMemo(path)
+    // The manifest memo keys on (path, length, mtime); a republish under
+    // the same paths could hit it on coarse-mtime filesystems — drop the
+    // subtree's observations with the tree.
+    graft.tables.Versioned.invalidateManifestMemo(path)
   }
 }

@@ -1,6 +1,6 @@
 package graft.tables
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.expressions.Window
@@ -406,8 +406,8 @@ object Versioned {
   }
 
   /** Table metadata of one committed version: its manifest's leading `#`
-    * header block, parsed once (and memoized per manifest observation by
-    * [[metaOf]]). The `TABLE` fields — schema, stats dimensions, partition
+    * header block, parsed once per manifest observation (the manifest
+    * memo, see [[observe]]). The `TABLE` fields — schema, stats dimensions, partition
     * spec, constraints, column mapping — describe the table and carry into
     * later versions: a commit starts from its base version's meta and
     * states only what it changes. The `COMMIT` fields — `tag`, `changesDir`,
@@ -555,99 +555,58 @@ object Versioned {
     buf.toList
   }
 
-  /** Entries of version `v`, resolving `#base` delta chains: a delta
-    * manifest holds its base version, `#rm` removal lines (the removed
-    * entry's exact serialized form — parse↔serialize is byte-stable, so
-    * identity by string is exact) and added entries; resolution is
-    * base-minus-removed-plus-added, recursively, ≤ [[MaxChainDepth]]
-    * reads by the checkpoint rule.
-    */
-  private def readManifest(fsys: FileSystem, table: Path, v: Int): Seq[Entry] = {
-    val p = manifestPath(table, v)
-    obsKey(fsys, p) match {
-      case Some(key) =>
-        val hit = entriesMemo.get(key)
-        if (hit != null) hit
-        else {
-          val res = readManifestUncached(fsys, table, v)
-          if (entriesMemo.size > EntriesMemoMax ||
-              entriesMemoCount.get > EntriesMemoMaxEntries) {
-            entriesMemo.clear(); entriesMemoCount.set(0)
-          }
-          if (entriesMemo.put(key, res) == null)
-            entriesMemoCount.addAndGet(res.size.toLong)
-          res
-        }
-      // missing file: fall through for the canonical "does not exist (or
-      // was vacuumed)" error from manifestBody
-      case None => readManifestUncached(fsys, table, v)
-    }
-  }
+  /** Entries of committed version `v` ([[manifestAt]], one stat). */
+  private def readManifest(fsys: FileSystem, table: Path, v: Int): Seq[Entry] =
+    entriesOf(fsys, table, manifestAt(fsys, table, v))
 
-  private def readManifestUncached(fsys: FileSystem, table: Path, v: Int): Seq[Entry] = {
-    val body = manifestBody(fsys, table, v)
-    val meta = TableMeta.parse(body.takeWhile(_.startsWith("#")))
-    val textOwn = body.filterNot(_.startsWith("#")).map(parseEntry)
-    // Parquet-checkpoint manifests hold their entries in a sidecar
-    // (`#entriesfile` header) — the text body is headers only.
-    val own = meta.entriesFile match {
-      case Some(n) => readEntriesFile(fsys, new Path(manifestDir(table), n)) ++ textOwn
-      case None => textOwn
+  /** Entries of `m`, resolved once per observation and kept on it:
+    * `#base` delta chains resolve base-minus-removed-plus-added — a delta
+    * manifest holds its base version, `#rm` removal lines (the removed
+    * entry's exact serialized form; parse↔serialize is byte-stable, so
+    * identity by string is exact) and its added entries — recursively,
+    * ≤ [[MaxChainDepth]] reads by the checkpoint rule.
+    */
+  private def entriesOf(fsys: FileSystem, table: Path, m: Manifest): Seq[Entry] = {
+    if (m.resolved == null) {
+      val body = manifestBody(fsys, table, m.v)
+      val textOwn = body.filterNot(_.startsWith("#")).map(parseEntry)
+      // Parquet-checkpoint manifests hold their entries in a sidecar
+      // (`#entriesfile` header) — the text body is headers only.
+      val own = m.meta.entriesFile match {
+        case Some(n) => readEntriesFile(fsys, new Path(manifestDir(table), n)) ++ textOwn
+        case None => textOwn
+      }
+      m.resolved = m.meta.base match {
+        case None => own
+        case Some((bv, _)) =>
+          val removed = body.filter(_.startsWith("#rm\t"))
+            .map(_.substring("#rm\t".length)).toSet
+          readManifest(fsys, table, bv).filterNot(e => removed(e.serialized)) ++ own
+      }
+      weigh(m.resolved.size)
     }
-    meta.base match {
-      case None => own
-      case Some((bv, _)) =>
-        val removed = body.filter(_.startsWith("#rm\t"))
-          .map(_.substring("#rm\t".length)).toSet
-        readManifest(fsys, table, bv)
-          .filterNot(e => removed(e.serialized)) ++ own
-    }
+    m.resolved
   }
 
   /** Raw committed manifest lines of `v` minus the terminator. */
   private def manifestBody(fsys: FileSystem, table: Path, v: Int): Seq[String] = {
-    val p = manifestPath(table, v)
-    require(fsys.exists(p), s"version $v does not exist (or was vacuumed) at $table")
-    val in = fsys.open(p)
-    val text = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](8192)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      new String(buf.toByteArray, "UTF-8")
-    } finally in.close()
+    val in = try Some(fsys.open(manifestPath(table, v)))
+      catch { case _: java.io.FileNotFoundException => None }
+    require(in.isDefined, s"version $v does not exist (or was vacuumed) at $table")
+    val text = try new String(in.get.readAllBytes(), "UTF-8") finally in.get.close()
     val lines = text.split("\n", -1).toSeq.map(_.stripSuffix("\r")).filter(_.nonEmpty)
     require(lines.lastOption.contains(Terminator),
       s"version $v at $table is not committed (writer crashed mid-publish?)")
     lines.dropRight(1)
   }
 
-  /** The parsed header block of version `v` ([[TableMeta]]), memoized on
-    * the manifest's (path, length, mtime) observation; the empty meta when
-    * the manifest does not exist (version 0, vacuumed). Headers precede
-    * entries and the read stops at the first non-`#` line, so manifests of
-    * any size cost a few reads — and a repeat costs one stat.
+  /** The parsed header block of version `v` ([[TableMeta]]); the empty
+    * meta when the manifest does not exist (version 0, vacuumed). One stat,
+    * then the memo; an uncommitted claim's header is re-read each time.
     */
-  private def metaOf(fsys: FileSystem, table: Path, v: Int): TableMeta = {
-    val p = manifestPath(table, v)
-    obsKey(fsys, p) match {
-      case None => TableMeta()
-      case Some(key) =>
-        val hit = metaMemo.get(key)
-        if (hit != null) hit
-        else {
-          val in = fsys.open(p)
-          val m = try {
-            val br = new java.io.BufferedReader(new java.io.InputStreamReader(in, "UTF-8"))
-            TableMeta.parse(Iterator.continually(br.readLine())
-              .takeWhile(l => l != null && l.startsWith("#")).toList)
-          } finally in.close()
-          if (metaMemo.size > MetaMemoMax) metaMemo.clear()
-          metaMemo.put(key, m)
-          m
-        }
-    }
-  }
+  private def metaOf(fsys: FileSystem, table: Path, v: Int): TableMeta =
+    try observe(fsys, v, fsys.getFileStatus(manifestPath(table, v))).meta
+    catch { case _: java.io.FileNotFoundException => TableMeta() }
 
   private[graft] def metaOf(spark: SparkSession, tablePath: String, v: Int): TableMeta = {
     val (fsys, table) = fs(spark, tablePath)
@@ -714,124 +673,121 @@ object Versioned {
     meta.schema.getOrElse(throw new IllegalArgumentException(
       s"v$v of $tablePath records no schema — republish once to record one"))
 
+  // THE MANIFEST MEMO. A manifest is never rewritten in place (the
+  // exclusive create is the commit; vacuum only unlinks), so what one
+  // OBSERVATION of it says — its exact (path, length, mtime) — can be kept
+  // process-wide: the committed verdict (the `#commit` tail), the parsed
+  // header block and, once asked for, the resolved entry list. A
+  // deleted-and-recreated path presents a new observation and misses.
+  // Observations come from the one listing of `_manifests/` (every version
+  // walk) or from one stat of a bare version (metaOf, readManifest), so a
+  // memo hit costs no further filesystem call. Only committed observations
+  // are kept: an in-flight claim is committed moments later, so it is
+  // re-read until then. One bound, on weight — one per manifest plus its
+  // resolved entries, since a delta chain keeps every base version's full
+  // list — clears the memo wholesale once crossed; weight counted for an
+  // observation an invalidation already dropped only clears it earlier.
+  private final class Manifest(val v: Int, val mtime: Long, val meta: TableMeta,
+                               val committed: Boolean) {
+    @volatile var resolved: Seq[Entry] = _
+  }
+
+  private val memo = new java.util.concurrent.ConcurrentHashMap[String, Manifest]()
+  private val MemoMaxWeight = 2000000L
+  private val memoWeight = new java.util.concurrent.atomic.AtomicLong(0)
+
+  private def weigh(n: Long): Unit =
+    if (memoWeight.addAndGet(n) > MemoMaxWeight) { memo.clear(); memoWeight.set(0) }
+
+  /** Version `v`'s manifest as `st` observed it: the memo's, else one read
+    * of the file for its header block and its `#commit` tail.
+    */
+  private def observe(fsys: FileSystem, v: Int, st: FileStatus): Manifest = {
+    val key = s"${st.getPath}#${st.getLen}#${st.getModificationTime}"
+    val hit = memo.get(key)
+    if (hit != null) return hit
+    val m = if (st.getLen == 0) new Manifest(v, st.getModificationTime, TableMeta(), false)
+    else {
+      val in = fsys.open(st.getPath)
+      val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      new Manifest(v, st.getModificationTime,
+        TableMeta.parse(text.linesIterator.takeWhile(_.startsWith("#")).toList),
+        text.endsWith(Terminator + "\n"))
+    }
+    if (m.committed && memo.putIfAbsent(key, m) == null) weigh(1)
+    m
+  }
+
+  /** The one listing of `_manifests/`: each numbered manifest's status in
+    * version order, and the other files there (checkpoint sidecars). A
+    * missing dir is an empty table.
+    */
+  private final case class Listing(versions: IndexedSeq[(Int, FileStatus)],
+                                   others: Seq[FileStatus])
+
+  private def listing(fsys: FileSystem, table: Path): Listing = {
+    val all = try fsys.listStatus(manifestDir(table)).toSeq
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    val (numbered, others) = all.map(st =>
+      (st.getPath.getName.stripSuffix(".txt").toIntOption, st)).partition(_._1.isDefined)
+    Listing(numbered.map { case (v, st) => (v.get, st) }.sortBy(_._1).toIndexedSeq,
+      others.map(_._2))
+  }
+
+  /** The committed manifests of `ls`, newest first, observed lazily: a
+    * walk that stops early reads no older manifest.
+    */
+  private def committedDown(fsys: FileSystem, ls: Listing): Iterator[Manifest] =
+    ls.versions.reverseIterator.map { case (v, st) => observe(fsys, v, st) }.filter(_.committed)
+
+  /** The latest committed manifest, or version 0's: an empty header and no
+    * entries to read.
+    */
+  private def head(fsys: FileSystem, ls: Listing): Manifest =
+    committedDown(fsys, ls).nextOption().getOrElse(new Manifest(0, 0L, TableMeta(), false))
+
+  private def latestOf(fsys: FileSystem, table: Path): Manifest = head(fsys, listing(fsys, table))
+
+  /** Version `v`'s manifest status; a missing manifest fails, saying so. */
+  private def statusOf(fsys: FileSystem, table: Path, v: Int): FileStatus = {
+    val st = try Some(fsys.getFileStatus(manifestPath(table, v)))
+      catch { case _: java.io.FileNotFoundException => None }
+    require(st.isDefined, s"version $v does not exist (or was vacuumed) at $table")
+    st.get
+  }
+
+  /** Committed version `v`'s manifest, from one stat. */
+  private def manifestAt(fsys: FileSystem, table: Path, v: Int): Manifest = {
+    val m = observe(fsys, v, statusOf(fsys, table, v))
+    require(m.committed, s"version $v at $table is not committed (writer crashed mid-publish?)")
+    m
+  }
+
   /** The committed version carrying idempotence tag `tag`, if any — the
-    * Delta txn-id lookup: a replayed writer asks before re-applying.
+    * Delta txn-id lookup: a replayed writer asks before re-applying. The
+    * highest such version answers, and a replayed batch's tag is almost
+    * always among the newest commits, so the walk down is short.
     */
   def taggedVersion(spark: SparkSession, tablePath: String, tag: String): Option[Int] = {
     val (fsys, table) = fs(spark, tablePath)
-    val md = manifestDir(table)
-    if (!fsys.exists(md)) return None
-    // Descending walk with early exit: the semantics are "the HIGHEST
-    // committed version carrying the tag", so the first hit from the top
-    // is the answer — a replayed batch's tag is almost always among the
-    // newest commits, turning the former every-version header probe
-    // (O(versions) stat+memo lookups per idempotence check, and streaming
-    // replays check per micro-batch) into a short suffix walk.
-    fsys.listStatus(md).toSeq
-      .flatMap(_.getPath.getName.stripSuffix(".txt").toIntOption)
-      .sorted(Ordering[Int].reverse)
-      .find(v => isCommitted(fsys, table, v) && metaOf(fsys, table, v).tag.contains(tag))
+    committedDown(fsys, listing(fsys, table)).find(_.meta.tag.contains(tag)).map(_.v)
   }
 
-  // Committed-manifest memo: a committed manifest's BYTES are immutable
-  // (only vacuum unlinks it), so a positive verdict can be cached
-  // process-wide keyed on the exact (path, length, mtime) observation —
-  // a deleted-and-recreated path (substrate rebuilds, vacuum + regrow)
-  // presents a different length/mtime and misses. latestVersion() is on
-  // every operation's path and otherwise re-opens each manifest tail,
-  // O(versions) seeks per call. Bounded; negatives are never cached (an
-  // in-flight claim becomes committed moments later).
-  private val committedMemo =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]())
-
-  // Manifest OBSERVATION memos, same immutability argument: a manifest is
-  // never rewritten in place (exclusive create; vacuum only unlinks), so
-  // any parsed form may be cached keyed on the exact (path, length, mtime)
-  // observation — a deleted-and-recreated path presents a new observation
-  // and misses. metaMemo holds the parsed header block (DML lifecycles
-  // read 6+ headers per commit; taggedVersion walks every version's tag);
-  // entriesMemo holds the RESOLVED entry list of a version (a
-  // delta-chain resolution used to cost ≤ MaxChainDepth file reads per
-  // call, on every readAt/merge/commit planning pass). Both are cleared
-  // wholesale on overflow and by invalidateCommittedMemo, alongside the
-  // committed memo, on deleteTree-and-rebuild paths.
-  private val MetaMemoMax = 65536
-  private val EntriesMemoMax = 4096
-  private val metaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, TableMeta]()
-  private val entriesMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Entry]]()
-  // Bound entriesMemo by TOTAL cached entry count, not map size: a
-  // delta-chain resolution caches every base version's fully
-  // materialized list (no structural sharing), so 4096 versions of a
-  // large checkpointed table would otherwise hold O(versions × entries)
-  // driver heap between overflow clears (r17 review advice). The counter
-  // may over-estimate after selective invalidation — that only clears
-  // earlier, never later.
-  private val EntriesMemoMaxEntries = 2000000L
-  private val entriesMemoCount = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** (path, length, mtime) observation key of `p`, None when missing. */
-  private def obsKey(fsys: FileSystem, p: Path): Option[String] =
-    try {
-      val st = fsys.getFileStatus(p)
-      Some(s"$p#${st.getLen}#${st.getModificationTime}")
-    } catch { case _: java.io.FileNotFoundException => None }
-
-  /** Drop memoized committed verdicts for manifests under `tablePath`.
-    * The memo key is (path, length, mtime); a deleteTree + republish that
-    * recreates the same manifest paths can — on filesystems with coarse
-    * mtime granularity — present an equal-length IN-FLIGHT claim that
-    * false-positives as committed. Since r17 the parsed entry list is
-    * memoized on the same observation key, so such a collision would not
-    * merely be transient: a stale entriesMemo hit could silently serve
-    * the previous incarnation's entries. Every deleteTree-and-rebuild
-    * path therefore calls this to drop ALL three memos (committed,
-    * meta, entries) for the table before recreating it.
+  /** Drop the memo's observations of manifests under `tablePath`. Every
+    * deleteTree-and-rebuild path calls this before recreating the table: on
+    * a filesystem with coarse mtimes a recreated manifest can present the
+    * previous incarnation's (path, length, mtime) and be served its header
+    * and entries.
     */
-  private[graft] def invalidateCommittedMemo(tablePath: String): Unit = {
+  private[graft] def invalidateManifestMemo(tablePath: String): Unit =
     // contains, not startsWith: memoized paths carry the FileSystem
     // scheme ("file:/tmp/...") while callers pass the raw local path.
-    val it = committedMemo.iterator()
-    while (it.hasNext) if (it.next().contains(tablePath)) it.remove()
-    val hit = metaMemo.keySet.iterator()
-    while (hit.hasNext) if (hit.next().contains(tablePath)) hit.remove()
-    val eit = entriesMemo.keySet.iterator()
-    while (eit.hasNext) if (eit.next().contains(tablePath)) eit.remove()
-  }
-
-  private def isCommitted(fsys: FileSystem, table: Path, v: Int): Boolean = {
-    val p = manifestPath(table, v)
-    if (!fsys.exists(p)) return false
-    val st = try fsys.getFileStatus(p) catch { case _: java.io.IOException => return false }
-    val len = st.getLen
-    if (len < Terminator.length + 1) return false
-    val memoKey = s"$p#$len#${st.getModificationTime}"
-    if (committedMemo.contains(memoKey)) return true
-    val in = fsys.open(p)
-    val ok = try {
-      val tail = new Array[Byte](Terminator.length + 1)
-      in.seek(len - tail.length)
-      in.readFully(tail)
-      new String(tail, "UTF-8") == Terminator + "\n"
-    } finally in.close()
-    if (ok) {
-      if (committedMemo.size > 65536) committedMemo.clear()
-      committedMemo.add(memoKey)
-    }
-    ok
-  }
+    memo.keySet.removeIf(_.contains(tablePath))
 
   /** Highest committed version, 0 if the table is empty/nonexistent. */
   def latestVersion(spark: SparkSession, tablePath: String): Int = {
     val (fsys, table) = fs(spark, tablePath)
-    val md = manifestDir(table)
-    if (!fsys.exists(md)) return 0
-    fsys.listStatus(md).toSeq
-      .flatMap(s => s.getPath.getName.stripSuffix(".txt").toIntOption)
-      .filter(isCommitted(fsys, table, _))
-      .sorted.lastOption.getOrElse(0)
+    latestOf(fsys, table).v
   }
 
   /** The data dirs version `v` serves from (spec/vacuum introspection). */
@@ -862,9 +818,9 @@ object Versioned {
     preCommitHookForTests.foreach(_.apply())
     tag.foreach(t => require(!t.contains('\n') && !t.contains('\t'),
       s"idempotence tag must be single-line, tab-free: $t"))
-    fsys.mkdirs(manifestDir(table))
-    val latest = latestVersion(spark, table.toString)
-    val latestMeta = metaOf(fsys, table, latest)
+    val ls = listing(fsys, table)
+    val top = head(fsys, ls)
+    val (latest, latestMeta) = (top.v, top.meta)
     val withMapping =
       if (ownsColumnMapping) meta
       else meta.copy(colMap = latestMeta.colMap, droppedCols = latestMeta.droppedCols)
@@ -877,10 +833,12 @@ object Versioned {
     }
     val next = latest + 1
     val mf = manifestPath(table, next)
-    // Reclaim a crashed writer's stale claim (uncommitted + old mtime).
-    if (fsys.exists(mf) && !isCommitted(fsys, table, next) &&
-        System.currentTimeMillis() - fsys.getFileStatus(mf).getModificationTime > StaleClaimMs)
-      fsys.delete(mf, false)
+    // Reclaim a crashed writer's stale claim: a listed `next` is above the
+    // latest committed version, so it is an uncommitted claim; old = stale.
+    ls.versions.find(_._1 == next).foreach { case (_, st) =>
+      if (System.currentTimeMillis() - st.getModificationTime > StaleClaimMs)
+        fsys.delete(mf, false)
+    }
     val out = try exclusiveCreate(fsys, mf) catch {
       case _: java.io.IOException =>
         abort(s"version $next at $table already claimed by a concurrent writer")
@@ -899,7 +857,7 @@ object Versioned {
         if (prevDepth + 1 > MaxChainDepth) full
         else {
           try {
-            val prev = readManifest(fsys, table, latest)
+            val prev = entriesOf(fsys, table, top)
             val prevSer = prev.map(_.serialized)
             val newSet = entries.map(_.serialized).toSet
             val prevSet = prevSer.toSet
@@ -960,15 +918,8 @@ object Versioned {
     // manifest is OURS before reporting the commit; detecting the loss here
     // turns a silent lost commit into a loud ConcurrentWriteException.
     val onDisk = try {
-      if (fsys.getFileStatus(mf).getLen != body.length) None
-      else {
-        val in = fsys.open(mf)
-        try {
-          val got = new Array[Byte](body.length)
-          in.readFully(got)
-          Some(got)
-        } finally in.close()
-      }
+      val in = fsys.open(mf)
+      try Some(in.readAllBytes()) finally in.close()
     } catch { case _: java.io.IOException => None }
     if (!onDisk.exists(java.util.Arrays.equals(_, body))) {
       // The claim now belongs to the OTHER writer (do not touch it), but
@@ -1038,7 +989,7 @@ object Versioned {
     // Recording the partition column (CREATE already does) keeps partColOf
     // off the directory-name fallback and lets adoptStaged exempt it from
     // the staged-type check (its type is directory-inferred there).
-    val meta = metaOf(fsys, table, latestVersion(spark, tablePath)).copy(
+    val meta = latestOf(fsys, table).meta.copy(
       schema = Some(df.schema), statsKey = fileStatsKey, statsKey2 = fileStatsKey2,
       statsCols = fileStatsCols, partCol = partCol)
     validateConstraints(df, meta.constraints)
@@ -1194,8 +1145,9 @@ object Versioned {
     val df = Tables.parquet(spark).load(dd.toString) // partition col inferred from layout
     var attempts = 0
     while (true) {
-      val base = latestVersion(spark, tablePath)
-      val bm = metaOf(fsys, table, base)
+      val top = latestOf(fsys, table)
+      val base = top.v
+      val bm = top.meta
       bm.schema.foreach { s =>
         require(df.columns.toSet == s.fieldNames.toSet,
           s"staged columns ${df.columns.mkString(",")} do not match the " +
@@ -1227,7 +1179,7 @@ object Versioned {
       // degrades on ingest.
       val meta = bm.copy(schema = bm.schema.orElse(Some(df.schema)), statsKey = effKey)
       val fresh = freshEntries(spark, table, dd, meta)
-      val baseEntries = if (base == 0) Seq.empty else readManifest(fsys, table, base)
+      val baseEntries = if (base == 0) Seq.empty else entriesOf(fsys, table, top)
       validateConstraints(df, bm.constraints)
       try {
         return commit(fsys, table, spark, baseEntries ++ fresh, Some(base),
@@ -1323,9 +1275,10 @@ object Versioned {
                          newPartCol: String,
                          expectedLatest: Option[Int] = None): Int = {
     val (fsys, table) = fs(spark, tablePath)
-    val base = latestVersion(spark, tablePath)
+    val top = latestOf(fsys, table)
+    val base = top.v
     require(base >= 1, s"$tablePath has no committed version")
-    val bm = metaOf(fsys, table, base)
+    val bm = top.meta
     val baseSchema = recordedSchema(bm, base, tablePath)
     val newCols = partColsOf(newPartCol)
     require(newCols.nonEmpty, "evolvePartitioning: empty partition spec")
@@ -1333,7 +1286,7 @@ object Versioned {
     val oldCols = bm.partCol.toSeq.flatMap(partColsOf)
     require(newCols != oldCols,
       s"table is already partitioned by (${newCols.mkString(",")})")
-    commit(fsys, table, spark, readManifest(fsys, table, base),
+    commit(fsys, table, spark, entriesOf(fsys, table, top),
       expectedLatest.orElse(Some(base)), Seq.empty, bm.copy(partCol = Some(newPartCol)),
       s"EVOLVE_PARTITIONING(${oldCols.mkString(",")}->${newCols.mkString(",")})")
   }
@@ -1346,13 +1299,14 @@ object Versioned {
   def repartitionTable(spark: SparkSession, tablePath: String,
                        expectedLatest: Option[Int] = None): Int = {
     val (fsys, table) = fs(spark, tablePath)
-    val base = latestVersion(spark, tablePath)
+    val top = latestOf(fsys, table)
+    val base = top.v
     require(base >= 1, s"$tablePath has no committed version")
-    val bm = metaOf(fsys, table, base)
+    val bm = top.meta
     val cols = partColsOf(bm.partCol.getOrElse(
       throw new IllegalArgumentException(
         s"$tablePath records no partition column — nothing to repartition to")))
-    val baseEntries = readManifest(fsys, table, base)
+    val baseEntries = entriesOf(fsys, table, top)
     // Files ALREADY in the current spec at full recorded stats
     // granularity splice unchanged (§6: a normalization owes work only
     // to pre-evolution files — post-evolution ingests already conform;
@@ -1620,8 +1574,11 @@ object Versioned {
 
   def readAt(spark: SparkSession, tablePath: String, version: Int): DataFrame = {
     val (fsys, table) = fs(spark, tablePath)
-    readAs(spark, table, metaOf(fsys, table, version), readManifest(fsys, table, version))
+    readOf(spark, fsys, table, manifestAt(fsys, table, version))
   }
+
+  private def readOf(spark: SparkSession, fsys: FileSystem, table: Path, m: Manifest): DataFrame =
+    readAs(spark, table, m.meta, entriesOf(fsys, table, m))
 
   /** Entries `es` read as the version whose metadata is `meta` serves
     * them ([[asOf]]: its column mapping, then its schema). [[readAt]]
@@ -1661,8 +1618,10 @@ object Versioned {
       }
     }
 
-  def read(spark: SparkSession, tablePath: String): DataFrame =
-    readAt(spark, tablePath, latestVersion(spark, tablePath))
+  def read(spark: SparkSession, tablePath: String): DataFrame = {
+    val (fsys, table) = fs(spark, tablePath)
+    readOf(spark, fsys, table, latestOf(fsys, table))
+  }
 
   /** The version that was latest AS OF `timestampMs` — commit time is the
     * manifest file's mtime, the same clock Delta's TIMESTAMP AS OF uses
@@ -1671,17 +1630,13 @@ object Versioned {
     */
   def versionAsOf(spark: SparkSession, tablePath: String, timestampMs: Long): Int = {
     val (fsys, table) = fs(spark, tablePath)
-    val md = manifestDir(table)
-    require(fsys.exists(md), s"$tablePath has no versions")
-    val vs = fsys.listStatus(md).toSeq
-      .flatMap(_.getPath.getName.stripSuffix(".txt").toIntOption)
-      .filter(isCommitted(fsys, table, _))
-      .filter(v => fsys.getFileStatus(manifestPath(table, v)).getModificationTime
-        <= timestampMs)
-    require(vs.nonEmpty,
+    val ls = listing(fsys, table)
+    require(ls.versions.nonEmpty, s"$tablePath has no versions")
+    val v = committedDown(fsys, ls).find(_.mtime <= timestampMs)
+    require(v.nonEmpty,
       s"no committed version of $tablePath at or before $timestampMs " +
         "(earlier versions may have been vacuumed)")
-    vs.max
+    v.get.v
   }
 
   /** TIMESTAMP AS OF read: the snapshot that was current at `timestampMs`. */
@@ -1697,25 +1652,13 @@ object Versioned {
   def history(spark: SparkSession, tablePath: String): DataFrame = {
     import spark.implicits._
     val (fsys, table) = fs(spark, tablePath)
-    val md = manifestDir(table)
-    val rows =
-      if (!fsys.exists(md)) Seq.empty
-      else fsys.listStatus(md).toSeq
-        .flatMap(_.getPath.getName.stripSuffix(".txt").toIntOption)
-        .filter(isCommitted(fsys, table, _)).sorted
-        .map { v =>
-          val entries = readManifest(fsys, table, v)
-          val meta = metaOf(fsys, table, v)
-          val nrows = if (entries.nonEmpty && entries.forall(_.nrows.isDefined))
-            Some(entries.map(_.nrows.get).sum) else None
-          (v, meta.op,
-            fsys.getFileStatus(manifestPath(table, v)).getModificationTime,
-            entries.size.toLong,
-            nrows,
-            meta.schema.map(_.fields.length),
-            meta.tag,
-            meta.changesDir.isDefined)
-        }
+    val rows = committedDown(fsys, listing(fsys, table)).toSeq.reverse.map { m =>
+      val entries = entriesOf(fsys, table, m)
+      val nrows = if (entries.nonEmpty && entries.forall(_.nrows.isDefined))
+        Some(entries.map(_.nrows.get).sum) else None
+      (m.v, m.meta.op, m.mtime, entries.size.toLong, nrows,
+        m.meta.schema.map(_.fields.length), m.meta.tag, m.meta.changesDir.isDefined)
+    }
     rows.toDF("version", "op", "commit_ms", "n_entries", "n_rows", "n_cols",
       "tag", "has_change_feed")
   }
@@ -1769,12 +1712,11 @@ object Versioned {
   private def baseOf(spark: SparkSession, tablePath: String, fromVersion: Option[Int],
                      expectedLatest: Option[Int], what: String): Base = {
     val (fsys, table) = fs(spark, tablePath)
-    val v = fromVersion.getOrElse(latestVersion(spark, tablePath))
-    val entries = readManifest(fsys, table, v)
-    val meta = metaOf(fsys, table, v)
-    requireUniformLayout(table, meta, entries, what)
-    Base(fsys, table, v, entries, meta,
-      expectedLatest.orElse(if (fromVersion.isEmpty) Some(v) else None))
+    val m = fromVersion.fold(latestOf(fsys, table))(manifestAt(fsys, table, _))
+    val entries = entriesOf(fsys, table, m)
+    requireUniformLayout(table, m.meta, entries, what)
+    Base(fsys, table, m.v, entries, m.meta,
+      expectedLatest.orElse(if (fromVersion.isEmpty) Some(m.v) else None))
   }
 
   /** Entries `es` of `base` read as the base serves them ([[readAs]]);
@@ -1879,9 +1821,9 @@ object Versioned {
               return applied
             case None =>
           }
-          val newV = latestVersion(spark, table.toString)
-          val newEntries = readManifest(fsys, table, newV)
-          rebaseConflict(base.meta, metaOf(fsys, table, newV)).foreach(why =>
+          val top = latestOf(fsys, table)
+          val (newV, newEntries) = (top.v, entriesOf(fsys, table, top))
+          rebaseConflict(base.meta, top.meta).foreach(why =>
             giveUp(s"$why at v$newV of $table — cannot rebase"))
           val delta = (newEntries.toSet -- onto) ++ (onto.toSet -- newEntries)
           delta.find(rw.scope.readSet).foreach(d => giveUp(
@@ -2318,11 +2260,12 @@ object Versioned {
                  expectedLatest: Option[Int] = None,
                  recordChanges: Boolean = false): Int = {
     val (fsys, table) = fs(spark, tablePath)
-    val base = latestVersion(spark, tablePath)
-    val baseEntries = readManifest(fsys, table, base)
+    val top = latestOf(fsys, table)
+    val base = top.v
+    val baseEntries = entriesOf(fsys, table, top)
     require(baseEntries.forall(_.file.isDefined),
       "deleteKeys needs a file-granular table (publish with fileStatsKey)")
-    val bm = metaOf(fsys, table, base)
+    val bm = top.meta
     val keyCol = bm.statsKey.getOrElse(
       throw new IllegalArgumentException(
         s"v$base of $tablePath carries no #statskey — deletion vectors key on it"))
@@ -2487,9 +2430,10 @@ object Versioned {
       !n.exists(c => c == '\t' || c == '\n' || c == ','),
       s"column name must be tab/newline/comma-free: $n"))
     val (fsys, table) = fs(spark, tablePath)
-    val base = latestVersion(spark, tablePath)
+    val top = latestOf(fsys, table)
+    val base = top.v
     require(base >= 1, s"$tablePath has no committed version")
-    val bm = metaOf(fsys, table, base)
+    val bm = top.meta
     val baseSchema = recordedSchema(bm, base, tablePath)
     require(baseSchema.fieldNames.contains(oldName),
       s"no such column $oldName in ${baseSchema.fieldNames.mkString(",")}")
@@ -2507,7 +2451,7 @@ object Versioned {
     // every entry's positional xstats bounds stay valid — they are bounds
     // over values, not names); unlike the first-class stats keys this is
     // not load-bearing for merges, so refusing would be needless friction.
-    commit(fsys, table, spark, readManifest(fsys, table, base),
+    commit(fsys, table, spark, entriesOf(fsys, table, top),
       expectedLatest.orElse(Some(base)), Seq.empty,
       bm.copy(schema = Some(evolved),
         statsCols = bm.statsCols.map(c => if (c == oldName) newName else c),
@@ -2525,9 +2469,10 @@ object Versioned {
   def dropColumn(spark: SparkSession, tablePath: String, name: String,
                  expectedLatest: Option[Int] = None): Int = {
     val (fsys, table) = fs(spark, tablePath)
-    val base = latestVersion(spark, tablePath)
+    val top = latestOf(fsys, table)
+    val base = top.v
     require(base >= 1, s"$tablePath has no committed version")
-    val bm = metaOf(fsys, table, base)
+    val bm = top.meta
     val baseSchema = recordedSchema(bm, base, tablePath)
     require(baseSchema.fieldNames.contains(name),
       s"no such column $name in ${baseSchema.fieldNames.mkString(",")}")
@@ -2541,7 +2486,7 @@ object Versioned {
     // stats scan would look the dropped column up), and leaving the slot
     // would misalign the surviving dimensions' positional bounds.
     val dimIdx = bm.statsCols.indexOf(name)
-    val entries = readManifest(fsys, table, base).map { e =>
+    val entries = entriesOf(fsys, table, top).map { e =>
       if (dimIdx < 0) e
       else e.copy(xstats = e.xstats.flatMap { x =>
         val slots = x.split(",", -1).toSeq
@@ -2570,9 +2515,10 @@ object Versioned {
                  expectedLatest: Option[Int] = None): Int = {
     require(fields.nonEmpty, "addColumns: no fields given")
     val (fsys, table) = fs(spark, tablePath)
-    val base = latestVersion(spark, tablePath)
+    val top = latestOf(fsys, table)
+    val base = top.v
     require(base >= 1, s"$tablePath has no committed version")
-    val bm = metaOf(fsys, table, base)
+    val bm = top.meta
     val baseSchema = recordedSchema(bm, base, tablePath)
     val unusable = bm.droppedCols ++ bm.colMap.values.flatten
     fields.foreach { f =>
@@ -2587,7 +2533,7 @@ object Versioned {
           "pick a fresh name")
     }
     val evolved = org.apache.spark.sql.types.StructType(baseSchema.fields ++ fields)
-    commit(fsys, table, spark, readManifest(fsys, table, base),
+    commit(fsys, table, spark, entriesOf(fsys, table, top),
       expectedLatest.orElse(Some(base)), Seq.empty, bm.copy(schema = Some(evolved)),
       s"ADD_COLUMN(${fields.map(_.name).mkString(",")})")
   }
@@ -2610,9 +2556,10 @@ object Versioned {
                       expectedLatest: Option[Int] = None): Int = {
     import org.apache.spark.sql.types._
     val (fsys, table) = fs(spark, tablePath)
-    val base = latestVersion(spark, tablePath)
+    val top = latestOf(fsys, table)
+    val base = top.v
     require(base >= 1, s"$tablePath has no committed version")
-    val bm = metaOf(fsys, table, base)
+    val bm = top.meta
     val baseSchema = recordedSchema(bm, base, tablePath)
     require(baseSchema.fieldNames.contains(name),
       s"no such column $name in ${baseSchema.fieldNames.mkString(",")}")
@@ -2637,7 +2584,7 @@ object Versioned {
         s"cannot alter $name: it is a partition column"))
     val evolved = StructType(baseSchema.fields.map(f =>
       if (f.name == name) f.copy(dataType = newType) else f))
-    commit(fsys, table, spark, readManifest(fsys, table, base),
+    commit(fsys, table, spark, entriesOf(fsys, table, top),
       expectedLatest.orElse(Some(base)), Seq.empty, bm.copy(schema = Some(evolved)),
       s"WIDEN_COLUMN($name:${oldType.simpleString}->${newType.simpleString})")
   }
@@ -2651,9 +2598,7 @@ object Versioned {
     val (fsys, table) = fs(spark, tablePath)
     // A missing manifest must say so (a lagging tail stream probing a
     // vacuumed version should hear "vacuumed", not a default op).
-    require(fsys.exists(manifestPath(table, v)),
-      s"version $v does not exist (or was vacuumed) at $table")
-    metaOf(fsys, table, v).op
+    observe(fsys, v, statusOf(fsys, table, v)).meta.op
   }
 
   /** Version `v`'s recorded change-feed dir, if its commit recorded one.
@@ -2700,11 +2645,12 @@ object Versioned {
     require(!name.contains('\t') && !name.contains('\n') && !sqlExpr.contains('\n'),
       "constraint name must be tab/newline-free and the expression single-line")
     val (fsys, table) = fs(spark, tablePath)
-    val base = latestVersion(spark, tablePath)
-    val bm = metaOf(fsys, table, base)
+    val top = latestOf(fsys, table)
+    val base = top.v
+    val bm = top.meta
     require(!bm.constraints.exists(_._1 == name), s"constraint $name already exists")
     validateConstraints(readAt(spark, tablePath, base), Seq((name, sqlExpr)))
-    commit(fsys, table, spark, readManifest(fsys, table, base),
+    commit(fsys, table, spark, entriesOf(fsys, table, top),
       expectedLatest.orElse(Some(base)), Seq.empty,
       bm.copy(constraints = bm.constraints :+ ((name, sqlExpr))), "ADD_CONSTRAINT")
   }
@@ -2713,10 +2659,11 @@ object Versioned {
   def dropConstraint(spark: SparkSession, tablePath: String, name: String,
                      expectedLatest: Option[Int] = None): Int = {
     val (fsys, table) = fs(spark, tablePath)
-    val base = latestVersion(spark, tablePath)
-    val bm = metaOf(fsys, table, base)
+    val top = latestOf(fsys, table)
+    val base = top.v
+    val bm = top.meta
     require(bm.constraints.exists(_._1 == name), s"no constraint named $name")
-    commit(fsys, table, spark, readManifest(fsys, table, base),
+    commit(fsys, table, spark, entriesOf(fsys, table, top),
       expectedLatest.orElse(Some(base)), Seq.empty,
       bm.copy(constraints = bm.constraints.filterNot(_._1 == name)), "DROP_CONSTRAINT")
   }
@@ -3086,7 +3033,7 @@ object Versioned {
     val vm = metaOf(fsys, table, v)
     commit(fsys, table, spark, entries, expectedLatest, Seq.empty,
       vm.copy(droppedCols = vm.droppedCols ++
-        metaOf(fsys, table, latestVersion(spark, tablePath)).droppedCols),
+        latestOf(fsys, table).meta.droppedCols),
       s"RESTORE($v)", ownsColumnMapping = true)
   }
 
@@ -3139,8 +3086,8 @@ object Versioned {
                                  keys: Seq[Long], version: Option[Int] = None,
                                  useBloom: Boolean = true): Seq[String] = {
     val (fsys, table) = fs(spark, tablePath)
-    val v = version.getOrElse(latestVersion(spark, tablePath))
-    val entries = readManifest(fsys, table, v)
+    val entries = entriesOf(fsys, table,
+      version.fold(latestOf(fsys, table))(manifestAt(fsys, table, _)))
     require(entries.forall(_.file.isDefined),
       "lookupKeys needs a file-granular table (publish with fileStatsKey)")
     val sorted = keys.distinct.sorted.toArray
@@ -3163,11 +3110,10 @@ object Versioned {
   def lookupKeys(spark: SparkSession, tablePath: String, keys: Seq[Long],
                  version: Option[Int] = None): DataFrame = {
     val (fsys, table) = fs(spark, tablePath)
-    val v = version.getOrElse(latestVersion(spark, tablePath))
-    val entries = readManifest(fsys, table, v)
+    val m = version.fold(latestOf(fsys, table))(manifestAt(fsys, table, _))
+    val (v, entries, meta) = (m.v, entriesOf(fsys, table, m), m.meta)
     require(entries.forall(_.file.isDefined),
       "lookupKeys needs a file-granular table (publish with fileStatsKey)")
-    val meta = metaOf(fsys, table, v)
     val keyCol = meta.statsKey.getOrElse(
       throw new IllegalArgumentException(s"v$v of $tablePath carries no #statskey"))
     meta.schema.foreach { s =>
@@ -3339,8 +3285,9 @@ object Versioned {
                      expectedLatest: Option[Int] = None): Int = {
     require(filesPerPart > 0, s"filesPerPart must be positive: $filesPerPart")
     val (fsys, table) = fs(spark, tablePath)
-    val base = latestVersion(spark, tablePath)
-    val bm = metaOf(fsys, table, base)
+    val top = latestOf(fsys, table)
+    val base = top.v
+    val bm = top.meta
     require(bm.statsKey.forall(_ == keyCol),
       s"base v$base carries file stats on ${bm.statsKey.getOrElse("<none>")}, not $keyCol")
     val df = {
@@ -3397,14 +3344,12 @@ object Versioned {
   def vacuum(spark: SparkSession, tablePath: String, keep: Set[Int],
              retentionMs: Long = DefaultRetentionMs): Unit = {
     val (fsys, table) = fs(spark, tablePath)
-    val md = manifestDir(table)
-    if (!fsys.exists(md)) return
+    val ls = listing(fsys, table)
+    if (ls.versions.isEmpty) return
     val now = System.currentTimeMillis()
-    def aged(p: Path): Boolean =
-      now - fsys.getFileStatus(p).getModificationTime > retentionMs
-    val versions = fsys.listStatus(md).toSeq
-      .flatMap(_.getPath.getName.stripSuffix(".txt").toIntOption)
-    val (kept, dropped) = versions.partition(keep)
+    val status = ls.versions.toMap
+    def observed(v: Int): Manifest = observe(fsys, v, status(v))
+    val (kept, dropped) = ls.versions.map(_._1).partition(keep)
     // Protected from deletion while inside the retention window:
     //  - an UNCOMMITTED claim (an in-flight writer: it will either
     //    finalize or be reclaimed once stale; its data dir is protected
@@ -3415,15 +3360,15 @@ object Versioned {
     //    deleted eagerly.
     val maxKeep = if (keep.isEmpty) Int.MinValue else keep.max
     val protectedV = dropped.filter(v =>
-      !aged(manifestPath(table, v)) &&
-        (!isCommitted(fsys, table, v) || v > maxKeep))
-    val liveVs = (kept ++ protectedV).filter(isCommitted(fsys, table, _))
+      now - status(v).getModificationTime <= retentionMs &&
+        (!observed(v).committed || v > maxKeep))
+    val liveVs = (kept ++ protectedV).map(observed).filter(_.committed)
     val liveDirs = liveVs
-      .flatMap(v => readManifest(fsys, table, v).flatMap(e =>
+      .flatMap(m => entriesOf(fsys, table, m).flatMap(e =>
         // a deletion-vector sidecar dir is live while any kept manifest's
         // entry points into it
         e.dataDir +: e.dv.map(_.split('/').head).toSeq)).toSet ++
-      liveVs.flatMap(v => metaOf(fsys, table, v).changesDir).toSet
+      liveVs.flatMap(_.meta.changesDir).toSet
     // A tail stream's appended-set for kept version v diffs against
     // v-1's manifest (appendedEntriesOf), so each kept version's
     // PREDECESSOR manifest survives too — manifest text only, its
@@ -3432,30 +3377,28 @@ object Versioned {
     // whenever that version's manifest happens to be a full checkpoint
     // (no #base chain would have retained v-1), even though every
     // version the stream still needs is inside the kept window.
-    val predKeep: Set[Int] = liveVs.collect { case v if v > 1 => v - 1 }.toSet
-      .filter(v => fsys.exists(manifestPath(table, v)))
+    val predKeep: Set[Int] = liveVs.collect { case m if m.v > 1 => m.v - 1 }.toSet
+      .filter(status.contains)
     // A kept version's DELTA manifest resolves through its #base chain:
     // every manifest on a live chain must survive the sweep (the Delta
     // log-retention analog) or the kept version becomes unreadable — the
     // same applies to retained predecessors, which must stay PARSEABLE.
     // A chain-retained manifest may outlive its data dirs — reading it
     // then fails at data time, like Delta time travel past data retention.
-    val chainKeep: Set[Int] = (liveVs.toSet ++ predKeep).flatMap { v0 =>
-      Iterator.iterate(Option(v0))(_.flatMap(v =>
-        metaOf(fsys, table, v).base.map(_._1)))
+    val chainKeep: Set[Int] = (liveVs.map(_.v).toSet ++ predKeep).flatMap { v0 =>
+      Iterator.iterate(Option(v0))(_.filter(status.contains)
+        .flatMap(observed(_).meta.base.map(_._1)))
         .takeWhile(_.isDefined).take(MaxChainDepth + 2).flatten
     }
-    dropped.filterNot(protectedV.contains).filterNot(chainKeep)
-      .foreach(v => fsys.delete(manifestPath(table, v), false))
+    val deleted = dropped.filterNot(protectedV.contains).filterNot(chainKeep).toSet
+    deleted.foreach(v => fsys.delete(manifestPath(table, v), false))
     // Checkpoint sidecars die with their manifests; a crashed claim's
     // orphan sidecar ages out like any claim (retention window).
-    fsys.listStatus(md).toSeq.filter(_.isFile).foreach { st =>
+    ls.others.filter(_.isFile).foreach { st =>
       val n = st.getPath.getName
       if (n.endsWith(".entries.parquet")) {
-        val ownerAlive = n.takeWhile(_ != '-').toIntOption.exists { x =>
-          fsys.exists(manifestPath(table, x)) &&
-            metaOf(fsys, table, x).entriesFile.contains(n)
-        }
+        val ownerAlive = n.takeWhile(_ != '-').toIntOption.exists(x =>
+          status.contains(x) && !deleted(x) && observed(x).meta.entriesFile.contains(n))
         if (!ownerAlive && now - st.getModificationTime > retentionMs)
           fsys.delete(st.getPath, false)
       }

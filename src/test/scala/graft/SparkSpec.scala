@@ -30,8 +30,9 @@ object SparkSpec {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      // same no-chmod-fork local FS as the runtime entry points
-      .config("spark.hadoop.fs.file.impl", "graft.sources.FastLocalFileSystem")
+      // the runtime entry points' no-chmod-fork local FS, plus driver-call
+      // counting for the store's FS budgets (StoreCallBudgetSpec)
+      .config("spark.hadoop.fs.file.impl", "graft.tables.CountingFileSystem")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     graft.functions.GraftFunctions.register(s)

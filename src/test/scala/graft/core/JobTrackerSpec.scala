@@ -111,6 +111,30 @@ class JobTrackerSpec extends SparkSpec {
     assert(handle.waitForJob() == 2) // (v2, delete) and (v2, insert)
   }
 
+  test("under AQE a shuffling action reports MAP, then SHUFFLE, then REDUCE 100, never dropping") {
+    assert(spark.conf.get("spark.sql.adaptive.enabled").toBoolean)
+    val ds = spark.range(0L, 2000000L, 1L, 8).map(i => (i % 1000, i))
+    val handle = JobTracker.start(spark) {
+      ds.groupByKey(_._1).mapGroups((k, it) => (k, it.size)).collect().length
+    }
+    val seen = scala.collection.mutable.ArrayBuffer(handle.getJobState)
+    val deadline = System.nanoTime() + 120L * 1000000000L
+    while (seen.last != JobState(REDUCE, 100f) && System.nanoTime() < deadline) {
+      Thread.sleep(2)
+      seen += handle.getJobState
+    }
+    assert(handle.waitForJob() == 1000)
+    val rank = Map[Stage, Int](UNDEFINED -> 0, MAP -> 1, SHUFFLE -> 2, REDUCE -> 3)
+    val drops = seen.zip(seen.drop(1)).filter { case (a, b) =>
+      rank(b.stage) < rank(a.stage) || (b.stage == a.stage && b.percentage < a.percentage)
+    }
+    assert(drops.isEmpty, s"progress dropped: $drops")
+    val phases = seen.map(_.stage).filter(_ != UNDEFINED)
+      .foldLeft(Vector.empty[Stage])((ps, s) => if (ps.lastOption.contains(s)) ps else ps :+ s)
+    assert(phases == Seq(MAP, SHUFFLE, REDUCE), s"phases seen: $phases")
+    assert(seen.last == JobState(REDUCE, 100f))
+  }
+
   test("handles that are waited on and never closed register no listener") {
     val sc = spark.sparkContext
     JobTracker.start(spark)(spark.range(0, 10).count()).waitForJob()

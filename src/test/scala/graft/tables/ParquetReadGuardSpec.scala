@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * parquet-hadoop example `Group` reader serves only the manifest's
   * checkpoint sidecar. Data-dir names are minted in one place,
   * `Versioned.newDataDir`, whose `d_*` format vacuum's sweep relies on.
-  * Jobs are metered by one SparkListener, `graft.core.Meter`'s.
+  * Jobs are metered by one SparkListener, `graft.core.Meter`'s. Versions
+  * resolve from one listing of `_manifests/`, `Versioned.listing`.
   */
 class ParquetReadGuardSpec extends AnyFunSuite {
   private val plainRead =
@@ -90,5 +91,29 @@ class ParquetReadGuardSpec extends AnyFunSuite {
     val (meter, stray) = hits.partition(_._1.endsWith("graft/core/Meter.scala"))
     assert(stray.isEmpty, s"meter jobs through graft.core.Meter: ${stray.map(_._2).mkString(", ")}")
     assert(meter.size == 1, "Meter installs one listener per SparkContext: update this guard")
+  }
+
+  test("src/main lists _manifests/ in one function, Versioned's listing") {
+    // listStatus of manifestDir(...), directly or through a val the
+    // enclosing member def binds to it (a local def may sit in between)
+    val call = """listStatus\(\s*(?:manifestDir\(|(\w+)\s*\))""".r
+    val defName = """(?m)^  (?:[\w\[\]]+ )*def\s+(\w+)""".r
+    val walks = mainSources.flatMap { case (path, text) =>
+      call.findAllMatchIn(text).flatMap { m =>
+        val before = text.substring(0, m.start)
+        val d = defName.findAllMatchIn(before).toSeq.lastOption
+        val body = d.fold(before)(x => before.substring(x.start))
+        if (m.group(1) != null && !body.contains(s"val ${m.group(1)} = manifestDir(")) None
+        else Some((new File(path).getName, d.map(_.group(1)),
+          s"${d.fold("?")(_.group(1))} at $path:${before.count(_ == '\n') + 1}"))
+      }
+    }
+    val (listing, stray) = walks.partition(w => w._1 == "LakeOps.scala" && w._2.contains("listing"))
+    assert(stray.isEmpty,
+      s"resolve versions through Versioned's listing: ${stray.map(_._3).mkString(", ")}")
+    assert(listing.size == 1, "the listing moved: update this guard")
+    assert(call.findFirstIn("fsys.listStatus(manifestDir(table))").nonEmpty)
+    assert(call.findFirstIn("fsys.listStatus(md).toSeq").nonEmpty)
+    assert(call.findFirstIn("fsys.listStatus(p).toSeq.filter(_.isDirectory)").nonEmpty)
   }
 }
