@@ -538,7 +538,7 @@ object Sinks {
           Versioned.fileEntriesOf(spark, tbl, 1).nonEmpty &&
           // q223 reads v1 through the DSv2 connector, which needs the
           // recorded schema — a pre-r14 on-disk table restages once
-          Versioned.schemaOf(spark, tbl, 1).isDefined && {
+          Versioned.snapshot(spark, tbl, 1).meta.schema.isDefined && {
             val v1 = Versioned.readAt(spark, tbl, 1)
             v1.columns.toSet == base.columns.toSet && v1.count() == base.count()
           }
@@ -689,7 +689,7 @@ object Sinks {
         year(col("o_orderdate")).as("o_year"))
       restage(tbl) {
         Versioned.latestVersion(spark, tbl) >= 1 &&
-          Versioned.statsKeyOf(spark, tbl, 1).contains("o_key") &&
+          Versioned.snapshot(spark, tbl, 1).meta.statsKey.contains("o_key") &&
           Versioned.bloomCoverage(spark, tbl, 1) == 1.0 &&
           Versioned.readAt(spark, tbl, 1).count() == base.count()
       } {
@@ -801,7 +801,7 @@ object Sinks {
       val base = ordersCents(spark, dir)
       restage(tbl) {
         Versioned.latestVersion(spark, tbl) >= 2 &&
-          Versioned.statsKey2Of(spark, tbl, 2).contains("o_custkey") &&
+          Versioned.snapshot(spark, tbl, 2).meta.statsKey2.contains("o_custkey") &&
           Versioned.readAt(spark, tbl, 2).count() == base.count()
       } {
         Versioned.publish(spark, tbl,
@@ -977,9 +977,10 @@ object Sinks {
     // readability (the phase-2 time-travel read) is probed via its schema
     // line.
     restage() {
-      Versioned.latestVersion(spark, path) == 5 &&
-        (2 to 5).map(Versioned.opOf(spark, path, _)) == expectOps.drop(1) &&
-        Versioned.schemaOf(spark, path, 4).nonEmpty &&
+      Versioned.latestVersion(spark, path) == 5 && {
+        val vs = (2 to 5).map(Versioned.snapshot(spark, path, _))
+        vs.map(_.meta.op) == expectOps.drop(1) && vs(2).meta.schema.nonEmpty
+      } &&
         // the DELETE must have actually emptied 1996 at v4 (manifest
         // metadata only) — also invalidates pre-r16 substrates whose
         // delete targeted a year outside the fixture's 1995-2001 span
@@ -1041,8 +1042,8 @@ object Sinks {
     val path = s"$wh/sqlns/orders_addcol"
     restage() {
       Versioned.latestVersion(spark, path) == 4 &&
-        Versioned.opOf(spark, path, 3).startsWith("ADD_COLUMN") &&
-        Versioned.schemaOf(spark, path, 4).exists(_.fieldNames.contains("o_flag"))
+        Versioned.snapshot(spark, path, 3).meta.op.startsWith("ADD_COLUMN") &&
+        Versioned.snapshot(spark, path, 4).meta.schema.exists(_.fieldNames.contains("o_flag"))
     } {
       spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.sqlns")
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
@@ -1094,10 +1095,11 @@ object Sinks {
     val path = s"$wh/sqlns/orders_colmap"
     restage() {
       Versioned.latestVersion(spark, path) == 5 &&
-        Versioned.opOf(spark, path, 3) == "RENAME_COLUMN(o_price_c->o_cents)" &&
-        Versioned.opOf(spark, path, 5) == "DROP_COLUMN(o_status)" &&
-        Versioned.schemaOf(spark, path, 5).exists(s =>
-          s.fieldNames.contains("o_cents") && !s.fieldNames.contains("o_status"))
+        Versioned.snapshot(spark, path, 3).meta.op == "RENAME_COLUMN(o_price_c->o_cents)" && {
+          val v5 = Versioned.snapshot(spark, path, 5).meta
+          v5.op == "DROP_COLUMN(o_status)" && v5.schema.exists(s =>
+            s.fieldNames.contains("o_cents") && !s.fieldNames.contains("o_status"))
+        }
     } {
       spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.sqlns")
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
@@ -1245,7 +1247,7 @@ object Sinks {
         col("o_orderpriority").as("o_prio"))
       restage() {
         Versioned.latestVersion(spark, path) == 2 &&
-          Versioned.statsColsOf(spark, path, 2) == Seq("o_odate", "o_prio") &&
+          Versioned.snapshot(spark, path, 2).meta.statsCols == Seq("o_odate", "o_prio") &&
           Versioned.readAt(spark, path, 2).count() == base.count()
       } {
         spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.sqlns")
@@ -1361,7 +1363,7 @@ object Sinks {
         col("o_custkey"), priceC, year(col("o_orderdate")).as("o_year"))
       restage(tbl) {
         Versioned.latestVersion(spark, tbl) >= 1 &&
-          Versioned.statsKeyOf(spark, tbl, 1).contains("o_skey") && {
+          Versioned.snapshot(spark, tbl, 1).meta.statsKey.contains("o_skey") && {
             val v1 = Versioned.readAt(spark, tbl, 1)
             v1.columns.toSet == base.columns.toSet && v1.count() == base.count()
           }
@@ -1428,9 +1430,10 @@ object Sinks {
         to_date(col("o_orderdate")).as("o_orderdate"),
         col("o_orderpriority"), priceC, year(col("o_orderdate")).as("o_year"))
       restage(tbl) {
-        Versioned.latestVersion(spark, tbl) >= 1 &&
-          Versioned.statsKeyOf(spark, tbl, 1).contains("o_orderdate") &&
-          Versioned.statsKey2Of(spark, tbl, 1).contains("o_orderpriority") &&
+        Versioned.latestVersion(spark, tbl) >= 1 && {
+          val v1 = Versioned.snapshot(spark, tbl, 1).meta
+          v1.statsKey.contains("o_orderdate") && v1.statsKey2.contains("o_orderpriority")
+        } &&
           Versioned.readAt(spark, tbl, 1).count() == base.count()
       } {
         Versioned.publish(spark, tbl,
@@ -1753,7 +1756,7 @@ object Sinks {
     val base = ordersCents(spark, dir)
     restage(tbl) {
       Versioned.latestVersion(spark, tbl) == 3 &&
-        Versioned.constraintsOf(spark, tbl, 3)
+        Versioned.snapshot(spark, tbl, 3).meta.constraints
           .exists(_._1 == "price_nonneg") &&
         Versioned.readAt(spark, tbl, 1).count() == base.count()
     } {
@@ -1776,7 +1779,7 @@ object Sinks {
       val base = ordersCents(spark, dir, col("o_orderpriority"))
       restage(tbl) {
         Versioned.latestVersion(spark, tbl) == 4 &&
-          (2 to 4).forall(v => Versioned.changesDirOf(spark, tbl, v).isDefined) &&
+          (2 to 4).forall(v => Versioned.snapshot(spark, tbl, v).meta.changesDir.isDefined) &&
           Versioned.readAt(spark, tbl, 1).count() == base.count()
       } {
         Versioned.publish(spark, tbl, base, partCol = Some("o_year"))
@@ -2081,7 +2084,7 @@ object Sinks {
         col("o_orderpriority").as("o_prio"))
       restage() {
         Versioned.latestVersion(spark, path) == 2 &&
-          Versioned.statsColsOf(spark, path, 2) == Seq("o_ship") &&
+          Versioned.snapshot(spark, path, 2).meta.statsCols == Seq("o_ship") &&
           Versioned.readAt(spark, path, 2).count() == base.count()
       } {
         spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.sqlns")

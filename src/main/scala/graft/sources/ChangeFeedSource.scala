@@ -63,17 +63,10 @@ object ChangeFeedSource extends VersionRange {
     * Fixed at stream start (streaming requires a static schema); feed
     * files of older versions NULL-backfill the later-added columns.
     */
-  def feedSchema(spark: SparkSession, tablePath: String): StructType = {
-    require(tablePath != null, "graft_changefeed: path option is required")
-    val latest = Versioned.latestVersion(spark, tablePath)
-    require(latest >= 1, s"graft_changefeed: $tablePath has no committed version")
-    val sch = Versioned.schemaOf(spark, tablePath, latest).getOrElse(
-      throw new IllegalArgumentException(
-        s"graft_changefeed: $tablePath v$latest has no recorded schema " +
-          "(published pre-r14?) — republish or merge once to record one"))
-    sch.add("_change", StringType, nullable = false)
+  def feedSchema(spark: SparkSession, tablePath: String): StructType =
+    Versioned.committedSnapshot(spark, tablePath).schema
+      .add("_change", StringType, nullable = false)
       .add("_version", IntegerType, nullable = false)
-  }
 
   private[sources] val label = "graft_changefeed"
 
@@ -85,11 +78,9 @@ object ChangeFeedSource extends VersionRange {
     * reader resolves it (same mechanism as the table scan).
     */
   private[sources] override def readerSchema(tablePath: String,
-                                             required: StructType): StructType = {
-    val spark = SparkSession.active
-    ColumnarRead.withAliases(required, Versioned.columnAliasesOf(spark, tablePath,
-      Versioned.latestVersion(spark, tablePath)))
-  }
+                                             required: StructType): StructType =
+    ColumnarRead.withAliases(required,
+      Versioned.snapshot(SparkSession.active, tablePath).meta.colMap)
 
   /** The feed files of committed versions in (start, end]: one partition
     * per parquet file, with the version that produced it as `_version`.

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.expressions.{Literal, NamedReference}
+import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, Write, WriteBuilder}
 import org.apache.spark.sql.functions.{col, lit}
@@ -68,23 +70,30 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   private def pathOf(ns: Seq[String]): String =
     (warehouse +: ns.map(sane)).mkString("/")
 
-  override def tableExists(ident: Identifier): Boolean =
-    try Versioned.latestVersion(spark, pathOf(ident)) >= 1
-    catch { case _: Exception => false }
+  /** The latest snapshot of `ident`'s table, if it has a committed version. */
+  private def committed(ident: Identifier): Option[Versioned.Snapshot] =
+    try Some(Versioned.snapshot(spark, pathOf(ident))).filter(_.version >= 1)
+    catch { case _: Exception => None }
 
-  override def loadTable(ident: Identifier): Table = {
-    if (!tableExists(ident)) throw new NoSuchTableException(ident)
-    new VersionedCatalogTable(pathOf(ident), None)
-  }
-  override def loadTable(ident: Identifier, version: String): Table = {
-    if (!tableExists(ident)) throw new NoSuchTableException(ident)
-    new VersionedCatalogTable(pathOf(ident), Some(version.toInt))
-  }
-  override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
-    if (!tableExists(ident)) throw new NoSuchTableException(ident)
+  override def tableExists(ident: Identifier): Boolean = committed(ident).isDefined
+
+  override def loadTable(ident: Identifier): Table = new VersionedCatalogTable(
+    committed(ident).getOrElse(throw new NoSuchTableException(ident)), pinned = false)
+  override def loadTable(ident: Identifier, version: String): Table =
+    loadPinned(ident)(_ => version.toInt)
+  override def loadTable(ident: Identifier, timestampMicros: Long): Table =
+    loadPinned(ident)(Versioned.versionAsOf(spark, _, timestampMicros / 1000L))
+
+  /** `ident`'s table at the version `at` names for its path: one stat of
+    * that version's manifest; a failure on a missing table is NoSuchTable.
+    */
+  private def loadPinned(ident: Identifier)(at: String => Int): Table = {
     val p = pathOf(ident)
-    new VersionedCatalogTable(p,
-      Some(Versioned.versionAsOf(spark, p, timestampMicros / 1000L)))
+    try new VersionedCatalogTable(Versioned.snapshot(spark, p, at(p)), pinned = true)
+    catch {
+      case _: IllegalArgumentException if !tableExists(ident) =>
+        throw new NoSuchTableException(ident)
+    }
   }
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
@@ -103,7 +112,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val l = layoutOf(partitions, properties)
     Versioned.createEmpty(spark, pathOf(ident), schema, l.partCol, l.statsKey,
       l.statsKey2, l.statsCols)
-    new VersionedCatalogTable(pathOf(ident), None)
+    loadTable(ident)
   }
 
   /** The layout a CREATE declares: the identity partition columns as the
@@ -175,7 +184,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           s"commit — ${mixed.length} heterogeneous changes in one statement " +
           "are not supported; issue separate statements")
     }
-    new VersionedCatalogTable(path, None)
+    loadTable(ident)
   }
 
   // ---- stored procedures (`CALL <cat>.<ns>.<proc>(...)`) ----
@@ -303,26 +312,31 @@ private[sources] final case class TableLayout(partCol: Option[String],
   * partition-scoped rewrite instead. A time-travelled instance
   * (`VERSION AS OF`) is read-only by construction — Spark resolves
   * writes against the un-pinned table.
+  *
+  * `loaded` is the snapshot the catalog loaded the table at; it answers
+  * the schema. Every scan, write and delete builder takes its own
+  * snapshot of the latest version, so a kept DataFrame executed again
+  * after a commit reads the new version; a pinned table's builders plan
+  * on `loaded` itself.
   */
-final class VersionedCatalogTable(path: String, pinned: Option[Int])
+final class VersionedCatalogTable(loaded: Versioned.Snapshot, pinned: Boolean)
     extends Table with SupportsRead with SupportsWrite with SupportsDelete
     with SupportsRowLevelOperations {
   private def spark = SparkSession.active
-  private def resolvedV: Int =
-    pinned.getOrElse(Versioned.latestVersion(spark, path))
+  private def path = loaded.path
+  private def snapshot(): Versioned.Snapshot =
+    if (pinned) loaded else Versioned.snapshot(spark, path)
 
   override def name(): String =
-    s"graft_versioned($path${pinned.map("@v" + _).getOrElse("")})"
-  override def schema(): StructType =
-    VersionedSource.schemaFor(spark, path, resolvedV)
+    s"graft_versioned($path${if (pinned) "@v" + loaded.version else ""})"
+  override def schema(): StructType = loaded.schema
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
       TableCapability.STREAMING_WRITE)
 
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder = {
-    val v = resolvedV
-    new VersionedScanBuilder(path, v, VersionedSource.schemaFor(spark, path, v),
-      Versioned.statsKeyOf(spark, path, v), Versioned.statsKey2Of(spark, path, v))
+    val s = snapshot()
+    new VersionedScanBuilder(s, s.schema)
   }
 
   /** Batch INSERT and streaming `writeStream.toTable` share one builder:
@@ -333,15 +347,14 @@ final class VersionedCatalogTable(path: String, pinned: Option[Int])
     * same exactly-once contract as [[VersionedSink]].
     */
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    require(pinned.isEmpty, "cannot write to a time-travelled table")
-    val latest = Versioned.latestVersion(spark, path)
-    val partCol = Versioned.partColOf(spark, path, latest).getOrElse(
+    require(!pinned, "cannot write to a time-travelled table")
+    val s = snapshot()
+    val partCol = s.partCol.getOrElse(
       throw new IllegalArgumentException(
         s"$path records no partition column — writes need one (CREATE with PARTITIONED BY)"))
-    val statsKey = Versioned.statsKeyOf(spark, path, latest)
     new WriteBuilder {
       override def build(): Write =
-        StagedWrite.append(path, info.schema(), partCol, statsKey, info.queryId())
+        StagedWrite.append(path, info.schema(), partCol, s.meta.statsKey, info.queryId())
     }
   }
 
@@ -357,22 +370,41 @@ final class VersionedCatalogTable(path: String, pinned: Option[Int])
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder = {
-    require(pinned.isEmpty, "cannot modify a time-travelled table")
+    require(!pinned, "cannot modify a time-travelled table")
     () => new VersionedRowLevelOperation(path, info.command())
   }
 
+  // Spark's bridge from a metadata-only DELETE's V2 predicates to filters
+  // drops what it cannot translate (`k * 2 = 14 OR v = 90` arrives as
+  // `v = 90`): accept only predicates of columns, literals and filter
+  // operators, and leave the rest to the row-level rewrite DELETE.
+  private def filterShaped(p: Predicate): Boolean = {
+    val (refs, rest) = p.children().toSeq.partition(_.isInstanceOf[NamedReference])
+    p.name() match {
+      case "AND" | "OR" | "NOT" =>
+        p.children().forall { case c: Predicate => filterShaped(c); case _ => false }
+      case "ALWAYS_TRUE" | "ALWAYS_FALSE" => true
+      case "=" | "<=>" | "<" | "<=" | ">" | ">=" | "IN" | "IS_NULL" | "IS_NOT_NULL" |
+           "STARTS_WITH" | "ENDS_WITH" | "CONTAINS" =>
+        refs.size == 1 && rest.forall(_.isInstanceOf[Literal[_]])
+      case _ => false
+    }
+  }
+  override def canDeleteWhere(predicates: Array[Predicate]): Boolean =
+    predicates.forall(filterShaped) && super.canDeleteWhere(predicates)
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    pinned.isEmpty && filters.forall(FilterColumns.toColumn(_).isDefined) &&
-      Versioned.partColOf(spark, path, resolvedV).isDefined &&
+    !pinned && filters.forall(FilterColumns.toColumn(_).isDefined) && {
+      val s = snapshot()
       // mid-partition-evolution: the value-scoped delete would splice
       // wrongly — declining routes Spark to the row-level rewrite
       // DELETE, which splices by entry identity and is evolution-safe
-      Versioned.hasUniformLayout(spark, path, resolvedV)
+      s.partCol.isDefined && s.uniformLayout
+    }
   override def deleteWhere(filters: Array[Filter]): Unit = {
-    require(pinned.isEmpty, "cannot delete from a time-travelled table")
+    require(!pinned, "cannot delete from a time-travelled table")
     val predicate = filters.flatMap(FilterColumns.toColumn)
       .reduceOption(_ && _).getOrElse(lit(true))
-    val partCol = Versioned.partColOf(spark, path, resolvedV).getOrElse(
+    val partCol = snapshot().partCol.getOrElse(
       throw new IllegalArgumentException(s"$path records no partition column"))
     Versioned.deleteWhere(spark, path, predicate, partCol)
   }
@@ -412,41 +444,37 @@ final class StagedVersionedTable(path: String, schema0: StructType, layout: Tabl
 }
 
 /** One SQL row-level statement (MERGE INTO / UPDATE / rewriting DELETE):
-  * the scan half records the planned entry set and the version it was
-  * planned against; the write half, a [[StagedWrite]], commits
-  * base-minus-scanned plus the promoted dir (`Versioned.replaceEntries`),
-  * CAS-pinned to the scanned version.
+  * the scan half takes the statement's snapshot and records the entry set
+  * it planned; the write half, a [[StagedWrite]], commits that snapshot
+  * minus the scanned entries plus the promoted dir
+  * (`Versioned.replaceEntries`), CAS-pinned to the scanned version.
   */
 final class VersionedRowLevelOperation(
     path: String,
     cmd: org.apache.spark.sql.connector.write.RowLevelOperation.Command)
     extends org.apache.spark.sql.connector.write.RowLevelOperation {
-  @volatile private[sources] var scannedVersion: Int = -1
-  @volatile private[sources] var scanned: Set[(String, String, Option[String])] = Set.empty
+  @volatile private var base: Option[Versioned.Snapshot] = None
+  @volatile private var scanned: Set[(String, String, Option[String])] = Set.empty
 
   override def command(): org.apache.spark.sql.connector.write.RowLevelOperation.Command = cmd
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val spark = SparkSession.active
-    val v = Versioned.latestVersion(spark, path)
-    scannedVersion = v
-    new VersionedScanBuilder(path, v, VersionedSource.schemaFor(spark, path, v),
-      Versioned.statsKeyOf(spark, path, v), Versioned.statsKey2Of(spark, path, v),
-      planListener = Some(es =>
-        scanned = es.map(e => (e.partDir, e.dataDir, e.file)).toSet))
+    val s = Versioned.snapshot(SparkSession.active, path)
+    base = Some(s)
+    new VersionedScanBuilder(s, s.schema, planListener = Some(es =>
+      scanned = es.map(e => (e.partDir, e.dataDir, e.file)).toSet))
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    val partCol = Versioned.partColOf(SparkSession.active, path, scannedVersion).getOrElse(
+    val s = base.filter(_.version >= 1).getOrElse(throw new IllegalStateException(
+      "row-level write planned before its scan — unsupported plan shape"))
+    val partCol = s.partCol.getOrElse(
       throw new IllegalArgumentException(
         s"$path records no partition column — row-level SQL needs one"))
     new WriteBuilder {
       override def build(): Write =
-        new StagedWrite(path, info.schema(), partCol, info.queryId(), (spark, dd, _) => {
-          require(scannedVersion >= 1,
-            "row-level write committed before its scan planned — unsupported plan shape")
-          Versioned.replaceEntries(spark, path, scannedVersion, scanned, dd, cmd.toString)
-        })
+        new StagedWrite(path, info.schema(), partCol, info.queryId(), (spark, dd, _) =>
+          Versioned.replaceEntries(spark, s, scanned, dd, cmd.toString))
     }
   }
 }

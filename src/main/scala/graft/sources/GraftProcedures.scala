@@ -66,6 +66,13 @@ private[sources] object GraftProcedures {
 
   private[sources] def in(name: String, dt: DataType): ProcedureParameter =
     ProcedureParameter.in(name, dt).build()
+
+  /** (stats key, partition column) a file-stats rewrite `what` needs of `s`. */
+  private[sources] def layoutOf(s: Versioned.Snapshot, what: String): (String, String) =
+    (s.meta.statsKey.getOrElse(throw new IllegalArgumentException(
+      s"${s.path} records no #statskey — $what needs file stats")),
+     s.partCol.getOrElse(throw new IllegalArgumentException(
+      s"${s.path} records no partition column")))
 }
 
 /** Base: a single class is both the unbound and bound form (binding has
@@ -93,11 +100,7 @@ final class OptimizeProc(resolve: String => String) extends GraftProc(resolve) {
     GraftProcedures.in("target_rows", LongType))
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
     val path = pathOf(input.getUTF8String(0).toString)
-    val latest = Versioned.latestVersion(spark, path)
-    val key = Versioned.statsKeyOf(spark, path, latest).getOrElse(
-      throw new IllegalArgumentException(s"$path records no #statskey — optimize needs file stats"))
-    val part = Versioned.partColOf(spark, path, latest).getOrElse(
-      throw new IllegalArgumentException(s"$path records no partition column"))
+    val (key, part) = GraftProcedures.layoutOf(Versioned.snapshot(spark, path), "optimize")
     val v = Versioned.optimizeTable(spark, path, key, part, input.getLong(1))
     GraftProcedures.one(StructType(Seq(StructField("version", IntegerType))), v)
   }
@@ -115,11 +118,7 @@ final class ZOrderProc(resolve: String => String) extends GraftProc(resolve) {
     GraftProcedures.in("files_per_part", IntegerType))
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
     val path = pathOf(input.getUTF8String(0).toString)
-    val latest = Versioned.latestVersion(spark, path)
-    val key = Versioned.statsKeyOf(spark, path, latest).getOrElse(
-      throw new IllegalArgumentException(s"$path records no #statskey — zorder needs file stats"))
-    val part = Versioned.partColOf(spark, path, latest).getOrElse(
-      throw new IllegalArgumentException(s"$path records no partition column"))
+    val (key, part) = GraftProcedures.layoutOf(Versioned.snapshot(spark, path), "zorder")
     val v = Versioned.optimizeZOrder(spark, path, key, part,
       input.getUTF8String(1).toString, input.getInt(2))
     GraftProcedures.one(StructType(Seq(StructField("version", IntegerType))), v)

@@ -48,15 +48,8 @@ class TableTailSource extends TableProvider {
 }
 
 object TableTailSource extends VersionRange {
-  def tableSchema(spark: SparkSession, tablePath: String): StructType = {
-    require(tablePath != null, "graft_tabletail: path option is required")
-    val latest = Versioned.latestVersion(spark, tablePath)
-    require(latest >= 1, s"graft_tabletail: $tablePath has no committed version")
-    Versioned.schemaOf(spark, tablePath, latest).getOrElse(
-      throw new IllegalArgumentException(
-        s"graft_tabletail: $tablePath v$latest has no recorded schema — " +
-          "republish or merge once to record one"))
-  }
+  def tableSchema(spark: SparkSession, tablePath: String): StructType =
+    Versioned.committedSnapshot(spark, tablePath).schema
 
   private[sources] val label = "graft_tabletail"
 
@@ -70,19 +63,27 @@ object TableTailSource extends VersionRange {
     * or reorder already-delivered rows fails loudly.
     */
   private[sources] def partitions(spark: SparkSession, tablePath: String,
-                                  start: Int, end: Int): Seq[VersionedPartition] =
+                                  start: Int, end: Int): Seq[VersionedPartition] = {
+    // Each version's snapshot is the next one's predecessor, so every
+    // version in the range is stat'ed once.
+    var prev = Option.empty[Versioned.Snapshot]
     ((start + 1) to end).flatMap { v =>
-      val op = Versioned.opOf(spark, tablePath, v)
+      val s = Versioned.snapshot(spark, tablePath, v)
+      val op = s.meta.op
       val opBase = op.takeWhile(_ != '(')
       require(opBase == "APPEND" ||
           (v == 1 && (opBase == "PUBLISH" || opBase == "CREATE" || opBase == "CLONE")),
         s"graft_tabletail: v$v of $tablePath is a $op commit — a table tail " +
           "serves appends only; use ChangeFeedSource for CDC consumers")
-      Versioned.appendedEntriesOf(spark, tablePath, v).flatMap { e =>
+      val pred = if (v <= 1) None
+        else prev.orElse(Some(Versioned.snapshot(spark, tablePath, v - 1)))
+      prev = Some(s)
+      Versioned.appendedEntries(pred, s).flatMap { e =>
         require(e.dv.isEmpty,
           s"graft_tabletail: appended entry ${e.partDir}/${e.file.getOrElse("")} " +
             "carries a deletion vector — not an append")
         VersionedPartition.of(spark, new Path(tablePath), e)
       }
     }
+  }
 }

@@ -37,17 +37,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   */
 class VersionedSink extends TableProvider {
   override def supportsExternalMetadata(): Boolean = true
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val path = options.get("path")
-    require(path != null, "VersionedSink needs a table path")
-    val spark = SparkSession.active
-    val v = Versioned.latestVersion(spark, path)
-    require(v >= 1,
-      s"VersionedSink appends to an existing table — publish v1 of $path first")
-    Versioned.schemaOf(spark, path, v).getOrElse(
-      throw new IllegalArgumentException(
-        s"v$v of $path records no schema — republish with a current writer"))
-  }
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    Versioned.committedSnapshot(SparkSession.active, options.get("path")).schema
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: java.util.Map[String, String]): Table =
     new VersionedSinkTable(properties.get("path"), schema)
@@ -126,12 +117,14 @@ final class StagedWrite(path: String, schema: StructType, partCol: String,
     val promoted =
       if (files.isEmpty) None else Some(Versioned.newDataDir(fsys, new Path(path)))
     try {
-      promoted.foreach(dd => files.foreach { case (partDir, name) =>
-        val to = new Path(dd, s"$partDir/$name")
-        fsys.mkdirs(to.getParent)
-        require(fsys.rename(new Path(stagingRoot, s"$epochId/$partDir/$name"), to),
-          s"failed to promote staged file $partDir/$name of epoch $epochId")
-      })
+      promoted.foreach { dd =>
+        files.map(_._1).distinct.foreach(partDir => fsys.mkdirs(new Path(dd, partDir)))
+        files.foreach { case (partDir, name) =>
+          require(fsys.rename(new Path(stagingRoot, s"$epochId/$partDir/$name"),
+            new Path(dd, s"$partDir/$name")),
+            s"failed to promote staged file $partDir/$name of epoch $epochId")
+        }
+      }
       commitFn(spark, promoted.map(_.getName), epochId)
     } catch {
       case e: Throwable =>
@@ -151,10 +144,8 @@ final class StagedWrite(path: String, schema: StructType, partCol: String,
     * manifest counts as yes: a dir is only deleted when provably unused).
     */
   private def referenced(spark: SparkSession, name: String): Boolean =
-    scala.util.Try {
-      val v = Versioned.latestVersion(spark, path)
-      v >= 1 && Versioned.dataDirsOf(spark, path, v).contains(name)
-    }.getOrElse(true)
+    scala.util.Try(Versioned.snapshot(spark, path).entries.exists(_.dataDir == name))
+      .getOrElse(true)
 }
 
 object StagedWrite {

@@ -56,8 +56,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   */
 class VersionedSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    VersionedSource.schemaFor(SparkSession.active, options.get("path"),
-      VersionedSource.resolveVersion(SparkSession.active, options))
+    VersionedSource.snapshot(SparkSession.active, options).schema
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: java.util.Map[String, String]): Table =
     new VersionedTable(properties.get("path"), schema,
@@ -65,25 +64,26 @@ class VersionedSource extends TableProvider {
 }
 
 object VersionedSource {
-  def resolveVersion(spark: SparkSession, options: CaseInsensitiveStringMap): Int = {
+  /** The snapshot a read with `options` plans on: `versionAsOf`,
+    * `timestampAsOf` or, by default, the latest version.
+    */
+  def snapshot(spark: SparkSession, options: CaseInsensitiveStringMap): Versioned.Snapshot = {
     val path = options.get("path")
     require(path != null, "graft_versioned: path option is required")
     (Option(options.get("versionAsOf")), Option(options.get("timestampAsOf"))) match {
-      case (Some(v), None) => v.toInt
-      case (None, Some(ts)) => Versioned.versionAsOf(spark, path, ts.toLong)
-      case (None, None) => Versioned.latestVersion(spark, path)
+      case (Some(v), None) => Versioned.snapshot(spark, path, v.toInt)
+      case (None, Some(ts)) =>
+        Versioned.snapshot(spark, path, Versioned.versionAsOf(spark, path, ts.toLong))
+      case (None, None) => Versioned.snapshot(spark, path)
       case _ => throw new IllegalArgumentException(
         "graft_versioned: versionAsOf and timestampAsOf are mutually exclusive")
     }
   }
-
-  def schemaFor(spark: SparkSession, path: String, v: Int): StructType =
-    Versioned.schemaOf(spark, path, v).getOrElse(
-      throw new IllegalArgumentException(
-        s"graft_versioned: $path v$v has no recorded schema (published " +
-          "pre-r14?) — republish or merge once to record one"))
 }
 
+/** A path read: each scan plans on its own snapshot, in the schema the
+  * read was analyzed with (`schema0`).
+  */
 final class VersionedTable(path: String, schema0: StructType,
                            options: CaseInsensitiveStringMap)
     extends Table with SupportsRead {
@@ -91,20 +91,12 @@ final class VersionedTable(path: String, schema0: StructType,
   override def schema(): StructType = schema0
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder = {
-    val spark = SparkSession.active
-    val version = VersionedSource.resolveVersion(spark, options)
-    new VersionedScanBuilder(path, version, schema0,
-      Versioned.statsKeyOf(spark, path, version),
-      Versioned.statsKey2Of(spark, path, version),
-      Versioned.statsColsOf(spark, path, version))
-  }
+  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
+    new VersionedScanBuilder(VersionedSource.snapshot(SparkSession.active, options), schema0)
 }
 
-final class VersionedScanBuilder(path: String, version: Int, full: StructType,
-                                 statsKey: Option[String],
-                                 statsKey2: Option[String],
-                                 statsCols: Seq[String] = Seq.empty,
+/** The scan of one [[Versioned.Snapshot]], in schema `full`. */
+final class VersionedScanBuilder(snap: Versioned.Snapshot, full: StructType,
                                  planListener: Option[Seq[Versioned.Entry] => Unit] = None)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters
@@ -196,15 +188,11 @@ final class VersionedScanBuilder(path: String, version: Int, full: StructType,
   private var sawFilters = false
   private var pushedMeta: Option[Seq[(Any, org.apache.spark.sql.types.DataType)]] = None
 
-  private lazy val metaEntries = Versioned.entriesOf(SparkSession.active, path, version)
-
   private def manifestCount: Option[Long] = {
     if (sawFilters) return None
-    val es = metaEntries
+    val es = snap.entries
     if (es.isEmpty) Some(0L)
-    else if (es.forall(_.file.isDefined))
-      Versioned.fileRowCounts(SparkSession.active, path, version,
-        es.map(e => (e.partDir, e.file.get)).toSet)
+    else if (es.forall(_.file.isDefined)) Versioned.liveRows(snap, es)
     else None
   }
 
@@ -214,10 +202,10 @@ final class VersionedScanBuilder(path: String, version: Int, full: StructType,
   private def manifestKeyExtrema: Option[(Any, Any, org.apache.spark.sql.types.DataType)] = {
     import org.apache.spark.sql.types._
     if (sawFilters) return None
-    val k = statsKey.getOrElse(return None)
+    val k = snap.meta.statsKey.getOrElse(return None)
     if (!full.fieldNames.contains(k)) return None
     val dt = full(k).dataType
-    val es = metaEntries
+    val es = snap.entries
     if (es.isEmpty) return None // empty table: MIN/MAX are NULL — let the data path answer
     if (!es.forall(e => e.file.isDefined && e.kmin.isDefined && e.kmax.isDefined &&
         e.dv.isEmpty)) return None
@@ -243,7 +231,7 @@ final class VersionedScanBuilder(path: String, version: Int, full: StructType,
     def keyRef(e: org.apache.spark.sql.connector.expressions.Expression): Boolean =
       e match {
         case nr: NamedReference =>
-          statsKey.contains(nr.fieldNames().mkString("."))
+          snap.meta.statsKey.contains(nr.fieldNames().mkString("."))
         case _ => false
       }
     val answers = agg.aggregateExpressions.toSeq.map {
@@ -270,10 +258,9 @@ final class VersionedScanBuilder(path: String, version: Int, full: StructType,
   }
 
   override def build(): Scan = pushedMeta match {
-    case Some(answers) => new ManifestAggScan(path, version, answers)
+    case Some(answers) => new ManifestAggScan(snap.path, snap.version, answers)
     case None =>
-      new VersionedScan(path, version, full, required, statsKey, statsKey2,
-        statsCols, longBounds, stringEq, stringLo, stringHi,
+      new VersionedScan(snap, full, required, longBounds, stringEq, stringLo, stringHi,
         nullCols, notNullCols, planListener)
   }
 }
@@ -356,19 +343,24 @@ object VersionedPartition {
   }
 }
 
-final class VersionedScan(path: String, version: Int, full: StructType,
-                          required: StructType, statsKey: Option[String],
-                          statsKey2: Option[String],
-                          statsCols: Seq[String] = Seq.empty,
-                          longBounds: Map[String, (Long, Long)] = Map.empty,
-                          stringEq: Map[String, String] = Map.empty,
-                          stringLo: Map[String, String] = Map.empty,
-                          stringHi: Map[String, String] = Map.empty,
-                          nullCols: Set[String] = Set.empty,
-                          notNullCols: Set[String] = Set.empty,
-                          planListener: Option[Seq[Versioned.Entry] => Unit] = None)
+/** A planned read of `snap`. With a `planListener` it is the scan of a
+  * SQL row-level statement, which replaces every entry it plans, so it
+  * must return every row of them: it skips no row group.
+  */
+final class VersionedScan(snap: Versioned.Snapshot, full: StructType,
+                          required: StructType,
+                          longBounds: Map[String, (Long, Long)],
+                          stringEq: Map[String, String],
+                          stringLo: Map[String, String],
+                          stringHi: Map[String, String],
+                          nullCols: Set[String],
+                          notNullCols: Set[String],
+                          planListener: Option[Seq[Versioned.Entry] => Unit])
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeV2Filtering {
+  private val (path, version) = (snap.path, snap.version)
+  private val (statsKey, statsKey2, statsCols) =
+    (snap.meta.statsKey, snap.meta.statsKey2, snap.meta.statsCols)
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String = {
@@ -503,9 +495,8 @@ final class VersionedScan(path: String, version: Int, full: StructType,
   // Entries left after the STATIC prunings; runtime filters (dynamic
   // partition pruning, row-level-operation group filtering) subtract
   // further below, before any file opens.
-  private lazy val survivors = Versioned
-    .entriesOf(SparkSession.active, path, version)
-    .filter(e => partSurvives(e.partDir) && fileSurvives(e))
+  private lazy val survivors =
+    snap.entries.filter(e => partSurvives(e.partDir) && fileSurvives(e))
 
   /** Runtime (dynamic) filtering — what turns a SQL MERGE INTO from a
     * whole-table rewrite into a file-scoped one: Spark's row-level-
@@ -521,8 +512,7 @@ final class VersionedScan(path: String, version: Int, full: StructType,
   // attribute (see filterAttributes), and on a multi-column layout the
   // leading column is the coarsest, highest-value cut.
   private lazy val partColName: Option[String] =
-    Versioned.partColOf(SparkSession.active, path, version)
-      .flatMap(spec => Versioned.partColsOf(spec).headOption)
+    snap.partCol.flatMap(spec => Versioned.partColsOf(spec).headOption)
   @volatile private var runtimeKeys: Option[Array[Long]] = None
   // String-keyed tables: runtime IN values as (range-surrogate, bloom
   // hash) probes in the manifest's KeyEnc domain.
@@ -609,10 +599,7 @@ final class VersionedScan(path: String, version: Int, full: StructType,
             if (e.partDir == "-") e.dataDir else s"${e.dataDir}/${e.partDir}")).getLength
       }
     }
-    val rows =
-      if (!fileGranular) None
-      else Versioned.fileRowCounts(spark, path, version,
-        survivors.map(e => (e.partDir, e.file.get)).toSet)
+    val rows = if (fileGranular) Versioned.liveRows(snap, survivors) else None
     val b = bytes
     new Statistics {
       override def sizeInBytes(): java.util.OptionalLong =
@@ -646,7 +633,7 @@ final class VersionedScan(path: String, version: Int, full: StructType,
     // never serve a deleted row.
     planned.flatMap(e => e.dv match {
       case Some(d) =>
-        VersionedPartition.of(spark, table, e, dvKeyCol, Versioned.dvKeysOf(spark, path, d))
+        VersionedPartition.of(spark, table, e, dvKeyCol, Versioned.dvKeysOf(snap, d))
       case None => VersionedPartition.of(spark, table, e)
     }).toArray
   }
@@ -657,14 +644,15 @@ final class VersionedScan(path: String, version: Int, full: StructType,
     // Rename mapping: stamp each mapped field with the former names its
     // bytes carry in pre-rename files (metadata — the reader consults it
     // per file; no signature rides along).
-    val aliases = Versioned.columnAliasesOf(SparkSession.active, path, version)
+    val aliases = snap.meta.colMap
     // The SAME pushed planning bounds recheck against EACH row group's
     // parquet footer stats inside the vectorized reader — the skipping
     // tier below manifest file pruning. Scan-level maps are already in
     // the raw column domain (epoch days for dates, raw strings), which
     // is the domain parquet statistics live in. Point equality folds
     // into a closed [v, v] range.
-    val rgBounds = RowGroupBounds(
+    val rgBounds = if (planListener.isDefined) RowGroupBounds(aliases = aliases)
+    else RowGroupBounds(
       longBounds = longBounds,
       strLo = stringEq ++ stringLo.map { case (c, v) =>
         c -> stringEq.get(c).map(e => if (e > v) e else v).getOrElse(v) },

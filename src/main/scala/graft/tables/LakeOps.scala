@@ -568,7 +568,8 @@ object Versioned {
     */
   private def entriesOf(fsys: FileSystem, table: Path, m: Manifest): Seq[Entry] = {
     if (m.resolved == null) {
-      val body = manifestBody(fsys, table, m.v)
+      val kept = m.body
+      val body = if (kept != null) kept else manifestBody(fsys, table, m.v)
       val textOwn = body.filterNot(_.startsWith("#")).map(parseEntry)
       // Parquet-checkpoint manifests hold their entries in a sidecar
       // (`#entriesfile` header) — the text body is headers only.
@@ -583,10 +584,14 @@ object Versioned {
             .map(_.substring("#rm\t".length)).toSet
           readManifest(fsys, table, bv).filterNot(e => removed(e.serialized)) ++ own
       }
+      m.body = null
       weigh(m.resolved.size)
     }
     m.resolved
   }
+
+  private def bodyLines(text: String): Seq[String] =
+    text.split("\n", -1).toSeq.map(_.stripSuffix("\r")).filter(_.nonEmpty)
 
   /** Raw committed manifest lines of `v` minus the terminator. */
   private def manifestBody(fsys: FileSystem, table: Path, v: Int): Seq[String] = {
@@ -594,43 +599,11 @@ object Versioned {
       catch { case _: java.io.FileNotFoundException => None }
     require(in.isDefined, s"version $v does not exist (or was vacuumed) at $table")
     val text = try new String(in.get.readAllBytes(), "UTF-8") finally in.get.close()
-    val lines = text.split("\n", -1).toSeq.map(_.stripSuffix("\r")).filter(_.nonEmpty)
+    val lines = bodyLines(text)
     require(lines.lastOption.contains(Terminator),
       s"version $v at $table is not committed (writer crashed mid-publish?)")
     lines.dropRight(1)
   }
-
-  /** The parsed header block of version `v` ([[TableMeta]]); the empty
-    * meta when the manifest does not exist (version 0, vacuumed). One stat,
-    * then the memo; an uncommitted claim's header is re-read each time.
-    */
-  private def metaOf(fsys: FileSystem, table: Path, v: Int): TableMeta =
-    try observe(fsys, v, fsys.getFileStatus(manifestPath(table, v))).meta
-    catch { case _: java.io.FileNotFoundException => TableMeta() }
-
-  private[graft] def metaOf(spark: SparkSession, tablePath: String, v: Int): TableMeta = {
-    val (fsys, table) = fs(spark, tablePath)
-    metaOf(fsys, table, v)
-  }
-
-  /** Spec introspection: (base version, depth) of a committed version's
-    * manifest, None when it is a full checkpoint.
-    */
-  def manifestChainOf(spark: SparkSession, tablePath: String, v: Int)
-      : Option[(Int, Int)] = metaOf(spark, tablePath, v).base
-
-  /** The logical schema version `v` was committed with (`#schema\t<json>`
-    * manifest line). Absent on pre-r14 manifests — readers then serve
-    * whatever the files carry, which is uniform on a never-evolved table.
-    */
-  def schemaOf(spark: SparkSession, tablePath: String, v: Int)
-      : Option[org.apache.spark.sql.types.StructType] = metaOf(spark, tablePath, v).schema
-
-  /** The recorded change-feed dir version `v` committed with, if its merge
-    * passed `recordChanges = true` (`#changes\t<dir>` manifest line).
-    */
-  def changesDirOf(spark: SparkSession, tablePath: String, v: Int): Option[String] =
-    metaOf(spark, tablePath, v).changesDir
 
   /** Present `df` in `schema`'s shape: columns the files predate become
     * NULL (the add-column-with-NULL-backfill contract), order follows the
@@ -665,14 +638,6 @@ object Versioned {
     meta.schema.map(alignTo(mapped, _)).getOrElse(mapped)
   }
 
-  /** The schema `meta` (version `v`) records — which ALTER-style,
-    * header-only operations must evolve, so they refuse without one.
-    */
-  private def recordedSchema(meta: TableMeta, v: Int, tablePath: String)
-      : org.apache.spark.sql.types.StructType =
-    meta.schema.getOrElse(throw new IllegalArgumentException(
-      s"v$v of $tablePath records no schema — republish once to record one"))
-
   // THE MANIFEST MEMO. A manifest is never rewritten in place (the
   // exclusive create is the commit; vacuum only unlinks), so what one
   // OBSERVATION of it says — its exact (path, length, mtime) — can be kept
@@ -680,15 +645,20 @@ object Versioned {
   // header block and, once asked for, the resolved entry list. A
   // deleted-and-recreated path presents a new observation and misses.
   // Observations come from the one listing of `_manifests/` (every version
-  // walk) or from one stat of a bare version (metaOf, readManifest), so a
+  // walk) or from one stat of a bare version (a pinned snapshot), so a
   // memo hit costs no further filesystem call. Only committed observations
   // are kept: an in-flight claim is committed moments later, so it is
-  // re-read until then. One bound, on weight — one per manifest plus its
+  // re-read until then. A read of a committed manifest whose entries are
+  // asked for next (`keep`: a walk's newest, a pinned version) also keeps
+  // its lines until its entries are resolved from them, then drops them;
+  // a walk further down reads headers only and keeps none.
+  // One bound, on weight — one per manifest plus its kept lines and its
   // resolved entries, since a delta chain keeps every base version's full
   // list — clears the memo wholesale once crossed; weight counted for an
   // observation an invalidation already dropped only clears it earlier.
   private final class Manifest(val v: Int, val mtime: Long, val meta: TableMeta,
                                val committed: Boolean) {
+    @volatile var body: Seq[String] = _
     @volatile var resolved: Seq[Entry] = _
   }
 
@@ -700,9 +670,10 @@ object Versioned {
     if (memoWeight.addAndGet(n) > MemoMaxWeight) { memo.clear(); memoWeight.set(0) }
 
   /** Version `v`'s manifest as `st` observed it: the memo's, else one read
-    * of the file for its header block and its `#commit` tail.
+    * of the file for its header block and its `#commit` tail, keeping its
+    * lines iff `keep`.
     */
-  private def observe(fsys: FileSystem, v: Int, st: FileStatus): Manifest = {
+  private def observe(fsys: FileSystem, v: Int, st: FileStatus, keep: Boolean): Manifest = {
     val key = s"${st.getPath}#${st.getLen}#${st.getModificationTime}"
     val hit = memo.get(key)
     if (hit != null) return hit
@@ -710,11 +681,16 @@ object Versioned {
     else {
       val in = fsys.open(st.getPath)
       val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      new Manifest(v, st.getModificationTime,
+      val m = new Manifest(v, st.getModificationTime,
         TableMeta.parse(text.linesIterator.takeWhile(_.startsWith("#")).toList),
         text.endsWith(Terminator + "\n"))
+      if (m.committed && keep) m.body = bodyLines(text).dropRight(1)
+      m
     }
-    if (m.committed && memo.putIfAbsent(key, m) == null) weigh(1)
+    if (m.committed) {
+      val weight = 1 + (if (m.body == null) 0 else m.body.size)
+      if (memo.putIfAbsent(key, m) == null) weigh(weight)
+    }
     m
   }
 
@@ -735,10 +711,17 @@ object Versioned {
   }
 
   /** The committed manifests of `ls`, newest first, observed lazily: a
-    * walk that stops early reads no older manifest.
+    * walk that stops early reads no older manifest. Only the newest keeps
+    * its lines: an operation resolves its entries next.
     */
-  private def committedDown(fsys: FileSystem, ls: Listing): Iterator[Manifest] =
-    ls.versions.reverseIterator.map { case (v, st) => observe(fsys, v, st) }.filter(_.committed)
+  private def committedDown(fsys: FileSystem, ls: Listing): Iterator[Manifest] = {
+    var newest = true
+    ls.versions.reverseIterator.map { case (v, st) =>
+      val m = observe(fsys, v, st, keep = newest)
+      newest &&= !m.committed
+      m
+    }.filter(_.committed)
+  }
 
   /** The latest committed manifest, or version 0's: an empty header and no
     * entries to read.
@@ -758,9 +741,84 @@ object Versioned {
 
   /** Committed version `v`'s manifest, from one stat. */
   private def manifestAt(fsys: FileSystem, table: Path, v: Int): Manifest = {
-    val m = observe(fsys, v, statusOf(fsys, table, v))
+    val m = observe(fsys, v, statusOf(fsys, table, v), keep = true)
     require(m.committed, s"version $v at $table is not committed (writer crashed mid-publish?)")
     m
+  }
+
+  /** One read of a table: the version an operation plans, reads and
+    * commits against, its [[TableMeta]] and its resolved entries (read
+    * from the memo when first asked for), plus the answers derived from
+    * them. A snapshot is PER OPERATION: each entry point — a DSv2 scan,
+    * write or delete builder, a stream's schema, a CALL procedure, a
+    * Sinks probe — takes exactly one and passes it down, and none is kept
+    * across entry points. So a kept DataFrame executed again after a
+    * commit plans on a new snapshot and reads the new version, while a
+    * pinned read (`VERSION AS OF`, `versionAsOf`) stays at its version.
+    * One statement spans entry points: a metadata-only SQL DELETE, which
+    * Spark first asks (`canDeleteWhere`) and then runs (`deleteWhere`);
+    * each takes its own snapshot, and the delete resolves its base again,
+    * as every operation of this object does.
+    */
+  final class Snapshot private[Versioned] (val path: String,
+                                           private[graft] val fsys: FileSystem,
+                                           private[graft] val table: Path,
+                                           m: Manifest) {
+    def version: Int = m.v
+    private[graft] def meta: TableMeta = m.meta
+    private[graft] lazy val entries: Seq[Entry] =
+      if (m.v == 0) Seq.empty else entriesOf(fsys, table, m)
+
+    /** The schema the version records; a version without one (written
+      * before schemas were recorded) cannot be planned or evolved.
+      */
+    def schema: org.apache.spark.sql.types.StructType = meta.schema.getOrElse(
+      throw new IllegalArgumentException(
+        s"v$version of $path records no schema — republish or merge once to record one"))
+
+    /** The partition column spec: the `#partcol` header (recorded by
+      * CREATE) or, absent one, the first partitioned entry's directory
+      * levels. None for unpartitioned snapshots.
+      */
+    def partCol: Option[String] = meta.partCol.orElse(entries
+      .collectFirst { case e if e.partDir != "-" => entryLayout(e.partDir).mkString(",") })
+
+    /** True iff every entry is laid out by the CURRENT partition spec —
+      * the table is NOT mid-partition-evolution. Partition-VALUE-scoped
+      * DML demands this (its touched-set splice keys on the header's dir
+      * names); entry-identity-scoped SQL row-level DML does not and stays
+      * available while mixed.
+      */
+    def uniformLayout: Boolean = {
+      val layout = currentLayout(meta, entries)
+      entries.forall(e => e.partDir == "-" || entryLayout(e.partDir) == layout)
+    }
+  }
+
+  /** The latest committed version of `tablePath` (one listing, then the
+    * memo); an empty or missing table is version 0 with an empty meta.
+    */
+  def snapshot(spark: SparkSession, tablePath: String): Snapshot = {
+    val (fsys, table) = fs(spark, tablePath)
+    new Snapshot(tablePath, fsys, table, latestOf(fsys, table))
+  }
+
+  /** The latest snapshot of `tablePath`, which must have a committed
+    * version.
+    */
+  def committedSnapshot(spark: SparkSession, tablePath: String): Snapshot = {
+    require(tablePath != null, "a table path is required")
+    val s = snapshot(spark, tablePath)
+    require(s.version >= 1, s"$tablePath has no committed version")
+    s
+  }
+
+  /** Committed version `v` of `tablePath` (one stat, then the memo); a
+    * missing, vacuumed or uncommitted `v` fails, naming it.
+    */
+  def snapshot(spark: SparkSession, tablePath: String, v: Int): Snapshot = {
+    val (fsys, table) = fs(spark, tablePath)
+    new Snapshot(tablePath, fsys, table, manifestAt(fsys, table, v))
   }
 
   /** The committed version carrying idempotence tag `tag`, if any — the
@@ -785,16 +843,22 @@ object Versioned {
     memo.keySet.removeIf(_.contains(tablePath))
 
   /** Highest committed version, 0 if the table is empty/nonexistent. */
-  def latestVersion(spark: SparkSession, tablePath: String): Int = {
-    val (fsys, table) = fs(spark, tablePath)
-    latestOf(fsys, table).v
+  def latestVersion(spark: SparkSession, tablePath: String): Int =
+    snapshot(spark, tablePath).version
+
+  /** The entries snapshot `s` ADDED relative to its predecessor `prev`
+    * (none for v1): the set difference of their serialized forms — exact,
+    * since parse↔serialize is byte-stable. For an APPEND commit these are
+    * precisely the appended files (the table tail's planning metadata).
+    */
+  private[graft] def appendedEntries(prev: Option[Snapshot], s: Snapshot): Seq[Entry] = {
+    val before = prev.fold(Set.empty[String])(_.entries.map(_.serialized).toSet)
+    s.entries.filterNot(e => before(e.serialized))
   }
 
   /** The data dirs version `v` serves from (spec/vacuum introspection). */
-  def dataDirsOf(spark: SparkSession, tablePath: String, v: Int): Seq[String] = {
-    val (fsys, table) = fs(spark, tablePath)
-    readManifest(fsys, table, v).map(_.dataDir).distinct
-  }
+  def dataDirsOf(spark: SparkSession, tablePath: String, v: Int): Seq[String] =
+    snapshot(spark, tablePath, v).entries.map(_.dataDir).distinct
 
   /** Commit `entries` as the next version, with table metadata `meta`
     * (the base version's, plus what the operation changes) and the
@@ -986,7 +1050,7 @@ object Versioned {
       "fileStatsCols requires fileStatsKey")
     // Constraints (and the column mapping — see commit) carry over from
     // the latest version; a publish restates every other table header.
-    // Recording the partition column (CREATE already does) keeps partColOf
+    // Recording the partition column (CREATE already does) keeps partCol
     // off the directory-name fallback and lets adoptStaged exempt it from
     // the staged-type check (its type is directory-inferred there).
     val meta = latestOf(fsys, table).meta.copy(
@@ -1086,32 +1150,19 @@ object Versioned {
     * a concurrent commit between scan and replace conflicts loudly
     * instead of silently resurrecting rows the winner changed.
     */
-  private[graft] def replaceEntries(spark: SparkSession, tablePath: String,
-                                    baseV: Int,
+  private[graft] def replaceEntries(spark: SparkSession, base: Snapshot,
                                     drop: Set[(String, String, Option[String])],
                                     dataDirName: Option[String], op: String): Int = {
-    val (fsys, table) = fs(spark, tablePath)
-    val baseEntries = readManifest(fsys, table, baseV)
-    val dd = dataDirName.map(new Path(table, _))
-    val meta = metaOf(fsys, table, baseV)
+    val dd = dataDirName.map(new Path(base.table, _))
+    val meta = base.meta
     val fresh = dd.toSeq.flatMap { d =>
       if (meta.constraints.nonEmpty)
         validateConstraints(Tables.parquet(spark).load(d.toString), meta.constraints)
-      freshEntries(spark, table, d, meta)
+      freshEntries(spark, base.table, d, meta)
     }
-    val entries = baseEntries
+    val entries = base.entries
       .filterNot(e => drop.contains((e.partDir, e.dataDir, e.file))) ++ fresh
-    commit(fsys, table, spark, entries, Some(baseV), dd.toSeq, meta, op)
-  }
-
-  /** The table's partition column: the `#partcol` header (recorded by
-    * CREATE) or, absent one, derived from the first partitioned entry's
-    * directory name. None for unpartitioned snapshots.
-    */
-  def partColOf(spark: SparkSession, tablePath: String, v: Int): Option[String] = {
-    val (fsys, table) = fs(spark, tablePath)
-    metaOf(fsys, table, v).partCol.orElse(readManifest(fsys, table, v)
-      .collectFirst { case e if e.partDir != "-" => entryLayout(e.partDir).mkString(",") })
+    commit(base.fsys, base.table, spark, entries, Some(base.version), dd.toSeq, meta, op)
   }
 
   /** Directory levels of `meta`'s partition spec (1 when none is recorded). */
@@ -1213,22 +1264,9 @@ object Versioned {
     if (partDir == "-") Seq.empty
     else partDir.split('/').toSeq.map(_.takeWhile(_ != '='))
 
-  /** True iff every entry of `v` is laid out by the CURRENT `#partcol`
-    * header — i.e. the table is NOT mid-partition-evolution. Partition-
-    * VALUE-scoped DML demands this (its touched-set splice keys on the
-    * header's dir names); entry-identity-scoped SQL row-level DML does
-    * not and stays available while mixed.
-    */
-  def hasUniformLayout(spark: SparkSession, tablePath: String, v: Int): Boolean = {
-    val (fsys, table) = fs(spark, tablePath)
-    val entries = readManifest(fsys, table, v)
-    val layout = currentLayout(metaOf(fsys, table, v), entries)
-    entries.forall(e => e.partDir == "-" || entryLayout(e.partDir) == layout)
-  }
-
   /** The partition layout new writes use: the `#partcol` spec, or — on
     * pre-header tables — the first partitioned entry's (exactly
-    * partColOf's fallback; only a real evolution, which always writes the
+    * [[Snapshot.partCol]]'s fallback; only a real evolution, which always writes the
     * header, can mix layouts).
     */
   private def currentLayout(meta: TableMeta, entries: Seq[Entry]): Seq[String] =
@@ -1274,20 +1312,16 @@ object Versioned {
   def evolvePartitioning(spark: SparkSession, tablePath: String,
                          newPartCol: String,
                          expectedLatest: Option[Int] = None): Int = {
-    val (fsys, table) = fs(spark, tablePath)
-    val top = latestOf(fsys, table)
-    val base = top.v
-    require(base >= 1, s"$tablePath has no committed version")
-    val bm = top.meta
-    val baseSchema = recordedSchema(bm, base, tablePath)
+    val top = committedSnapshot(spark, tablePath)
+    val (bm, baseSchema) = (top.meta, top.schema)
     val newCols = partColsOf(newPartCol)
     require(newCols.nonEmpty, "evolvePartitioning: empty partition spec")
     requirePartitionable(baseSchema, newPartCol)
     val oldCols = bm.partCol.toSeq.flatMap(partColsOf)
     require(newCols != oldCols,
       s"table is already partitioned by (${newCols.mkString(",")})")
-    commit(fsys, table, spark, entriesOf(fsys, table, top),
-      expectedLatest.orElse(Some(base)), Seq.empty, bm.copy(partCol = Some(newPartCol)),
+    commit(top.fsys, top.table, spark, top.entries,
+      expectedLatest.orElse(Some(top.version)), Seq.empty, bm.copy(partCol = Some(newPartCol)),
       s"EVOLVE_PARTITIONING(${oldCols.mkString(",")}->${newCols.mkString(",")})")
   }
 
@@ -1573,12 +1607,9 @@ object Versioned {
   }
 
   def readAt(spark: SparkSession, tablePath: String, version: Int): DataFrame = {
-    val (fsys, table) = fs(spark, tablePath)
-    readOf(spark, fsys, table, manifestAt(fsys, table, version))
+    val s = snapshot(spark, tablePath, version)
+    readAs(spark, s.table, s.meta, s.entries)
   }
-
-  private def readOf(spark: SparkSession, fsys: FileSystem, table: Path, m: Manifest): DataFrame =
-    readAs(spark, table, m.meta, entriesOf(fsys, table, m))
 
   /** Entries `es` read as the version whose metadata is `meta` serves
     * them ([[asOf]]: its column mapping, then its schema). [[readAt]]
@@ -1620,7 +1651,8 @@ object Versioned {
 
   def read(spark: SparkSession, tablePath: String): DataFrame = {
     val (fsys, table) = fs(spark, tablePath)
-    readOf(spark, fsys, table, latestOf(fsys, table))
+    val m = latestOf(fsys, table)
+    readAs(spark, table, m.meta, entriesOf(fsys, table, m))
   }
 
   /** The version that was latest AS OF `timestampMs` — commit time is the
@@ -2368,36 +2400,17 @@ object Versioned {
     l
   }
 
-  /** The column whose per-file min/max the version's file entries carry
-    * (`#statskey` manifest line) — what a reader may prune on.
-    */
-  def statsKeyOf(spark: SparkSession, tablePath: String, v: Int): Option[String] =
-    metaOf(spark, tablePath, v).statsKey
-
-  /** The CHECK constraints version `v` carries, as (name, SQL expr). */
-  def constraintsOf(spark: SparkSession, tablePath: String, v: Int): Seq[(String, String)] =
-    metaOf(spark, tablePath, v).constraints
-
-  /** COLUMN MAPPING (`#colmap\t<logical>\t<former1>,<former2>` headers)
-    * of version `v`, for the DSv2 readers: logical column → the FORMER
-    * names its bytes may carry in files written before a rename, newest
-    * first. The store's rename/drop are header-only (Delta's name-mapping
-    * re-derived without physical UUIDs): files are never rewritten,
-    * writers always write CURRENT logical names, and reads resolve each
-    * logical column to the first of (logical, aliases...) present in a
-    * file. Soundness rests on a NAME-REUSE REFUSAL: a name that ever left
-    * the schema (renamed away or dropped) is tombstoned (`#coldropped`)
-    * and can never be re-added — otherwise old files' bytes under that
-    * name would resurrect into the new column instead of NULL-backfilling.
-    */
-  def columnAliasesOf(spark: SparkSession, tablePath: String, v: Int)
-      : Map[String, Seq[String]] = metaOf(spark, tablePath, v).colMap
-
-  /** Names banned from re-introduction at version `v` (spec/DDL
-    * introspection): every tombstoned former name.
-    */
-  def tombstonedColumnsOf(spark: SparkSession, tablePath: String, v: Int)
-      : Set[String] = metaOf(spark, tablePath, v).droppedCols
+  // COLUMN MAPPING (`#colmap\t<logical>\t<former1>,<former2>` headers,
+  // `TableMeta.colMap`), for the DSv2 readers: logical column → the FORMER
+  // names its bytes may carry in files written before a rename, newest
+  // first. The store's rename/drop are header-only (Delta's name-mapping
+  // re-derived without physical UUIDs): files are never rewritten,
+  // writers always write CURRENT logical names, and reads resolve each
+  // logical column to the first of (logical, aliases...) present in a
+  // file. Soundness rests on a NAME-REUSE REFUSAL: a name that ever left
+  // the schema (renamed away or dropped) is tombstoned (`#coldropped`)
+  // and can never be re-added — otherwise old files' bytes under that
+  // name would resurrect into the new column instead of NULL-backfilling.
 
   // A column is load-bearing when a header or constraint names it — the
   // partition layout, the stats domain, and constraint expressions all
@@ -2429,12 +2442,8 @@ object Versioned {
     Seq(oldName, newName).foreach(n => require(
       !n.exists(c => c == '\t' || c == '\n' || c == ','),
       s"column name must be tab/newline/comma-free: $n"))
-    val (fsys, table) = fs(spark, tablePath)
-    val top = latestOf(fsys, table)
-    val base = top.v
-    require(base >= 1, s"$tablePath has no committed version")
-    val bm = top.meta
-    val baseSchema = recordedSchema(bm, base, tablePath)
+    val top = committedSnapshot(spark, tablePath)
+    val (bm, baseSchema) = (top.meta, top.schema)
     require(baseSchema.fieldNames.contains(oldName),
       s"no such column $oldName in ${baseSchema.fieldNames.mkString(",")}")
     require(!baseSchema.fieldNames.exists(_.equalsIgnoreCase(newName)),
@@ -2451,8 +2460,8 @@ object Versioned {
     // every entry's positional xstats bounds stay valid — they are bounds
     // over values, not names); unlike the first-class stats keys this is
     // not load-bearing for merges, so refusing would be needless friction.
-    commit(fsys, table, spark, entriesOf(fsys, table, top),
-      expectedLatest.orElse(Some(base)), Seq.empty,
+    commit(top.fsys, top.table, spark, top.entries,
+      expectedLatest.orElse(Some(top.version)), Seq.empty,
       bm.copy(schema = Some(evolved),
         statsCols = bm.statsCols.map(c => if (c == oldName) newName else c),
         colMap = (map - oldName) +
@@ -2468,12 +2477,8 @@ object Versioned {
     */
   def dropColumn(spark: SparkSession, tablePath: String, name: String,
                  expectedLatest: Option[Int] = None): Int = {
-    val (fsys, table) = fs(spark, tablePath)
-    val top = latestOf(fsys, table)
-    val base = top.v
-    require(base >= 1, s"$tablePath has no committed version")
-    val bm = top.meta
-    val baseSchema = recordedSchema(bm, base, tablePath)
+    val top = committedSnapshot(spark, tablePath)
+    val (bm, baseSchema) = (top.meta, top.schema)
     require(baseSchema.fieldNames.contains(name),
       s"no such column $name in ${baseSchema.fieldNames.mkString(",")}")
     require(baseSchema.fields.length > 1, "cannot drop the last column")
@@ -2486,7 +2491,7 @@ object Versioned {
     // stats scan would look the dropped column up), and leaving the slot
     // would misalign the surviving dimensions' positional bounds.
     val dimIdx = bm.statsCols.indexOf(name)
-    val entries = entriesOf(fsys, table, top).map { e =>
+    val entries = top.entries.map { e =>
       if (dimIdx < 0) e
       else e.copy(xstats = e.xstats.flatMap { x =>
         val slots = x.split(",", -1).toSeq
@@ -2495,8 +2500,8 @@ object Versioned {
         else Some(kept.mkString(","))
       })
     }
-    commit(fsys, table, spark, entries,
-      expectedLatest.orElse(Some(base)), Seq.empty,
+    commit(top.fsys, top.table, spark, entries,
+      expectedLatest.orElse(Some(top.version)), Seq.empty,
       bm.copy(schema = Some(evolved), statsCols = bm.statsCols.filterNot(_ == name),
         colMap = bm.colMap - name,
         droppedCols = bm.droppedCols ++ bm.colMap.getOrElse(name, Seq.empty) + name),
@@ -2514,12 +2519,8 @@ object Versioned {
                  fields: Seq[org.apache.spark.sql.types.StructField],
                  expectedLatest: Option[Int] = None): Int = {
     require(fields.nonEmpty, "addColumns: no fields given")
-    val (fsys, table) = fs(spark, tablePath)
-    val top = latestOf(fsys, table)
-    val base = top.v
-    require(base >= 1, s"$tablePath has no committed version")
-    val bm = top.meta
-    val baseSchema = recordedSchema(bm, base, tablePath)
+    val top = committedSnapshot(spark, tablePath)
+    val (bm, baseSchema) = (top.meta, top.schema)
     val unusable = bm.droppedCols ++ bm.colMap.values.flatten
     fields.foreach { f =>
       require(!baseSchema.fieldNames.exists(_.equalsIgnoreCase(f.name)),
@@ -2533,8 +2534,8 @@ object Versioned {
           "pick a fresh name")
     }
     val evolved = org.apache.spark.sql.types.StructType(baseSchema.fields ++ fields)
-    commit(fsys, table, spark, entriesOf(fsys, table, top),
-      expectedLatest.orElse(Some(base)), Seq.empty, bm.copy(schema = Some(evolved)),
+    commit(top.fsys, top.table, spark, top.entries,
+      expectedLatest.orElse(Some(top.version)), Seq.empty, bm.copy(schema = Some(evolved)),
       s"ADD_COLUMN(${fields.map(_.name).mkString(",")})")
   }
 
@@ -2555,12 +2556,8 @@ object Versioned {
                       newType: org.apache.spark.sql.types.DataType,
                       expectedLatest: Option[Int] = None): Int = {
     import org.apache.spark.sql.types._
-    val (fsys, table) = fs(spark, tablePath)
-    val top = latestOf(fsys, table)
-    val base = top.v
-    require(base >= 1, s"$tablePath has no committed version")
-    val bm = top.meta
-    val baseSchema = recordedSchema(bm, base, tablePath)
+    val top = committedSnapshot(spark, tablePath)
+    val (bm, baseSchema) = (top.meta, top.schema)
     require(baseSchema.fieldNames.contains(name),
       s"no such column $name in ${baseSchema.fieldNames.mkString(",")}")
     val oldType = baseSchema(name).dataType
@@ -2584,21 +2581,9 @@ object Versioned {
         s"cannot alter $name: it is a partition column"))
     val evolved = StructType(baseSchema.fields.map(f =>
       if (f.name == name) f.copy(dataType = newType) else f))
-    commit(fsys, table, spark, entriesOf(fsys, table, top),
-      expectedLatest.orElse(Some(base)), Seq.empty, bm.copy(schema = Some(evolved)),
+    commit(top.fsys, top.table, spark, top.entries,
+      expectedLatest.orElse(Some(top.version)), Seq.empty, bm.copy(schema = Some(evolved)),
       s"WIDEN_COLUMN($name:${oldType.simpleString}->${newType.simpleString})")
-  }
-
-  /** The operation that committed version `v` (`#op` header); "WRITE" on
-    * pre-header manifests. Streaming consumers gate on it: a table tail
-    * accepts APPEND versions and fails loudly on anything that could
-    * change or remove already-delivered rows.
-    */
-  def opOf(spark: SparkSession, tablePath: String, v: Int): String = {
-    val (fsys, table) = fs(spark, tablePath)
-    // A missing manifest must say so (a lagging tail stream probing a
-    // vacuumed version should hear "vacuumed", not a default op).
-    observe(fsys, v, statusOf(fsys, table, v)).meta.op
   }
 
   /** Version `v`'s recorded change-feed dir, if its commit recorded one.
@@ -2607,27 +2592,13 @@ object Versioned {
     */
   private[graft] def recordedFeedOf(spark: SparkSession, tablePath: String,
                                     v: Int): Option[Path] = {
-    val (fsys, table) = fs(spark, tablePath)
-    opOf(spark, tablePath, v)
-    metaOf(fsys, table, v).changesDir.map { d =>
-      val dir = new Path(table, d)
-      require(fsys.exists(dir), s"the recorded change feed of version $v " +
-        s"does not exist (or was vacuumed) at $table")
+    val s = snapshot(spark, tablePath, v)
+    s.meta.changesDir.map { d =>
+      val dir = new Path(s.table, d)
+      require(s.fsys.exists(dir), s"the recorded change feed of version $v " +
+        s"does not exist (or was vacuumed) at ${s.table}")
       dir
     }
-  }
-
-  /** The entries version `v` ADDED relative to `v - 1` (serialized-form
-    * set difference — exact, since parse↔serialize is byte-stable): for
-    * an APPEND commit this is precisely the appended files. Planning
-    * metadata for the append-tail streaming source.
-    */
-  private[graft] def appendedEntriesOf(spark: SparkSession, tablePath: String,
-                                       v: Int): Seq[Entry] = {
-    val (fsys, table) = fs(spark, tablePath)
-    val prev = if (v <= 1) Set.empty[String]
-      else readManifest(fsys, table, v - 1).map(_.serialized).toSet
-    readManifest(fsys, table, v).filterNot(e => prev(e.serialized))
   }
 
   /** ADD a CHECK constraint (SQL-expression CHECK, NULL = pass — the SQL
@@ -2644,27 +2615,23 @@ object Versioned {
                     expectedLatest: Option[Int] = None): Int = {
     require(!name.contains('\t') && !name.contains('\n') && !sqlExpr.contains('\n'),
       "constraint name must be tab/newline-free and the expression single-line")
-    val (fsys, table) = fs(spark, tablePath)
-    val top = latestOf(fsys, table)
-    val base = top.v
+    val top = snapshot(spark, tablePath)
     val bm = top.meta
     require(!bm.constraints.exists(_._1 == name), s"constraint $name already exists")
-    validateConstraints(readAt(spark, tablePath, base), Seq((name, sqlExpr)))
-    commit(fsys, table, spark, entriesOf(fsys, table, top),
-      expectedLatest.orElse(Some(base)), Seq.empty,
+    validateConstraints(readAt(spark, tablePath, top.version), Seq((name, sqlExpr)))
+    commit(top.fsys, top.table, spark, top.entries,
+      expectedLatest.orElse(Some(top.version)), Seq.empty,
       bm.copy(constraints = bm.constraints :+ ((name, sqlExpr))), "ADD_CONSTRAINT")
   }
 
   /** DROP a CHECK constraint by name (a new version without it). */
   def dropConstraint(spark: SparkSession, tablePath: String, name: String,
                      expectedLatest: Option[Int] = None): Int = {
-    val (fsys, table) = fs(spark, tablePath)
-    val top = latestOf(fsys, table)
-    val base = top.v
+    val top = snapshot(spark, tablePath)
     val bm = top.meta
     require(bm.constraints.exists(_._1 == name), s"no constraint named $name")
-    commit(fsys, table, spark, entriesOf(fsys, table, top),
-      expectedLatest.orElse(Some(base)), Seq.empty,
+    commit(top.fsys, top.table, spark, top.entries,
+      expectedLatest.orElse(Some(top.version)), Seq.empty,
       bm.copy(constraints = bm.constraints.filterNot(_._1 == name)), "DROP_CONSTRAINT")
   }
 
@@ -2697,36 +2664,20 @@ object Versioned {
                                           sorted: Array[(Long, Long)]): Boolean =
     e.kmin.isEmpty || e.kmax.isEmpty || coversAnyKey(e, sorted)
 
-  /** The resolved manifest entries of version `v` (planning metadata). */
-  private[graft] def entriesOf(spark: SparkSession, tablePath: String, v: Int)
-      : Seq[Entry] = {
-    val (fsys, table) = fs(spark, tablePath)
-    readManifest(fsys, table, v)
-  }
-
-  /** Deleted keys of a serialized deletion-vector path — planning-time
+  /** Deleted keys of a serialized deletion-vector path of `s` — planning-time
     * helper for the DSv2 connector (metadata-sized by the DV contract).
     */
-  private[graft] def dvKeysOf(spark: SparkSession, tablePath: String,
-                              dvPath: String): Array[Long] = {
-    val (fsys, table) = fs(spark, tablePath)
-    readDvFile(fsys, new Path(table, dvPath))._2
-  }
+  private[graft] def dvKeysOf(s: Snapshot, dvPath: String): Array[Long] =
+    readDvFile(s.fsys, new Path(s.table, dvPath))._2
 
-  /** Live row count of the given (partDir, file) entries from manifest
-    * metadata alone: recorded physical rows minus their deletion vectors'
-    * key counts. None when any entry lacks a recorded count (pre-nrows
+  /** Live row count of `s`'s file entries `es` from manifest metadata
+    * alone: recorded physical rows minus their deletion vectors' key
+    * counts. None when any entry lacks a recorded count (pre-nrows
     * manifests) — the caller reports row stats as unknown, never wrong.
     */
-  private[graft] def fileRowCounts(spark: SparkSession, tablePath: String,
-                                   v: Int, keep: Set[(String, String)]): Option[Long] = {
-    val (fsys, table) = fs(spark, tablePath)
-    val es = readManifest(fsys, table, v).filter(e =>
-      e.file.isDefined && keep.contains((e.partDir, e.file.get)))
+  private[graft] def liveRows(s: Snapshot, es: Seq[Entry]): Option[Long] =
     if (es.exists(_.nrows.isEmpty)) None
-    else Some(es.flatMap(_.nrows).sum - es.flatMap(_.dv)
-      .map(d => readDvFile(fsys, new Path(table, d))._2.length.toLong).sum)
-  }
+    else Some(es.flatMap(_.nrows).sum - es.flatMap(_.dv).map(dvKeysOf(s, _).length.toLong).sum)
 
   /** Bloom probe over a serialized filter — planning-time helper for the
     * DSv2 connector's point-equality file skipping.
@@ -2738,21 +2689,17 @@ object Versioned {
     * spec/vacuum introspection of exactly which files a version serves.
     */
   def fileEntriesOf(spark: SparkSession, tablePath: String, v: Int)
-      : Seq[(String, String, String, Long, Long)] = {
-    val (fsys, table) = fs(spark, tablePath)
-    readManifest(fsys, table, v).collect {
-      case e @ Entry(p, d, Some(f), Some(lo), Some(hi), _, _, _, _, _, _, _) =>
-        (p, d, f, lo, hi)
+      : Seq[(String, String, String, Long, Long)] =
+    snapshot(spark, tablePath, v).entries.collect {
+      case Entry(p, d, Some(f), Some(lo), Some(hi), _, _, _, _, _, _, _) => (p, d, f, lo, hi)
     }
-  }
 
   /** Fraction of a version's file entries carrying a usable key Bloom
     * filter (saturated filters serialize as absent) — validation and
     * spec introspection for the bloom-assisted pruning paths.
     */
   def bloomCoverage(spark: SparkSession, tablePath: String, v: Int): Double = {
-    val (fsys, table) = fs(spark, tablePath)
-    val files = readManifest(fsys, table, v).filter(_.file.isDefined)
+    val files = snapshot(spark, tablePath, v).entries.filter(_.file.isDefined)
     if (files.isEmpty) 0.0
     else files.count(_.bloom.isDefined).toDouble / files.size
   }
@@ -2909,10 +2856,9 @@ object Versioned {
     // Both versions are read as toV serves them (the Delta CDF
     // convention): a row whose only difference is the NULL-backfilled
     // added column, or a column's name before a rename, is NOT a change.
-    val (fsys, table) = fs(spark, tablePath)
-    val toMeta = metaOf(fsys, table, toV)
-    def digests(v: Int): DataFrame = {
-      val df = readAs(spark, table, toMeta, readManifest(fsys, table, v))
+    val to = snapshot(spark, tablePath, toV)
+    def digests(s: Snapshot): DataFrame = {
+      val df = readAs(spark, to.table, to.meta, s.entries)
       df.select(md5(concat_ws("\u0001",
         df.columns.sorted.map(c =>
           coalesce(col(c).cast("string"), lit("\u0000"))): _*)).as("d"))
@@ -2921,8 +2867,9 @@ object Versioned {
     // scanned ONCE, and per-digest side counts reproduce the anti-join's
     // multiset semantics exactly (a digest present on both sides
     // contributes to neither total, however many copies each side holds).
-    val r = digests(toV).select(col("d"), lit(1L).as("na"), lit(0L).as("nb"))
-      .unionAll(digests(fromV).select(col("d"), lit(0L).as("na"), lit(1L).as("nb")))
+    val r = digests(to).select(col("d"), lit(1L).as("na"), lit(0L).as("nb"))
+      .unionAll(digests(snapshot(spark, tablePath, fromV))
+        .select(col("d"), lit(0L).as("na"), lit(1L).as("nb")))
       .groupBy("d")
       .agg(sum("na").as("na"), sum("nb").as("nb"))
       .agg(
@@ -2951,17 +2898,15 @@ object Versioned {
     * makes polling the feed viable on a 100 TB table.
     */
   def changes(spark: SparkSession, tablePath: String, fromV: Int, toV: Int): DataFrame = {
-    val (fsys, table) = fs(spark, tablePath)
-    val eFrom = readManifest(fsys, table, fromV)
-    val eTo = readManifest(fsys, table, toV)
+    val to = snapshot(spark, tablePath, toV)
+    val (eFrom, eTo) = (snapshot(spark, tablePath, fromV).entries, to.entries)
     val common = eFrom.toSet.intersect(eTo.toSet)
     // Both sides are read as toV serves them (the Delta CDF convention):
     // toV's column mapping resolves a renamed column on either side, and a
     // from-side row read through an added column NULL-backfills, so a
     // rewrite's unchanged-but-rewritten rows still cancel.
-    val toMeta = metaOf(fsys, table, toV)
     def side(entries: Seq[Entry]): DataFrame = {
-      val df = readAs(spark, table, toMeta, entries)
+      val df = readAs(spark, to.table, to.meta, entries)
       df.withColumn("_d", md5(concat_ws("\u0001",
         df.columns.sorted.map(c =>
           coalesce(col(c).cast("string"), lit("\u0000"))): _*)))
@@ -2994,9 +2939,8 @@ object Versioned {
   def recordedChanges(spark: SparkSession, tablePath: String,
                       fromV: Int, toV: Int,
                       strict: Boolean = true): DataFrame = {
-    val (fsys, table) = fs(spark, tablePath)
     // toV's column map and schema, keeping each image's _change tag
-    val toMeta = metaOf(fsys, table, toV)
+    val toMeta = snapshot(spark, tablePath, toV).meta
     val tagged = toMeta.copy(schema = toMeta.schema.map(_.add("_change", "string")))
     val range = (fromV + 1) to toV
     val recorded = range.flatMap(v => recordedFeedOf(spark, tablePath, v).map((v, _)))
@@ -3022,18 +2966,16 @@ object Versioned {
     */
   def restore(spark: SparkSession, tablePath: String, v: Int,
               expectedLatest: Option[Int] = None): Int = {
-    val (fsys, table) = fs(spark, tablePath)
-    val entries = readManifest(fsys, table, v)
+    val s = snapshot(spark, tablePath, v)
     // The restored version serves v's table metadata — rolling back past a
     // schema-evolving merge rolls the added columns back with it, and the
     // restored schema resolves with the restored column MAP, not the
     // latest one (rolling back past a rename rolls the map back too).
     // Tombstones stay UNIONED with the latest — a name once used in files
     // is never safe to re-introduce, whatever version serves.
-    val vm = metaOf(fsys, table, v)
-    commit(fsys, table, spark, entries, expectedLatest, Seq.empty,
-      vm.copy(droppedCols = vm.droppedCols ++
-        latestOf(fsys, table).meta.droppedCols),
+    commit(s.fsys, s.table, spark, s.entries, expectedLatest, Seq.empty,
+      s.meta.copy(droppedCols = s.meta.droppedCols ++
+        latestOf(s.fsys, s.table).meta.droppedCols),
       s"RESTORE($v)", ownsColumnMapping = true)
   }
 
@@ -3060,11 +3002,10 @@ object Versioned {
     */
   def cloneTable(spark: SparkSession, srcPath: String, dstPath: String,
                  version: Option[Int] = None): Int = {
-    val (sfs, src) = fs(spark, srcPath)
-    val srcQ = sfs.makeQualified(src)
-    val v = version.getOrElse(latestVersion(spark, srcPath))
-    val entries = readManifest(sfs, src, v)
-    require(entries.nonEmpty, s"cannot clone empty version $v of $srcPath")
+    val s = version.fold(snapshot(spark, srcPath))(snapshot(spark, srcPath, _))
+    val srcQ = s.fsys.makeQualified(s.table)
+    val entries = s.entries
+    require(entries.nonEmpty, s"cannot clone empty version ${s.version} of $srcPath")
     val (dfs, dst) = fs(spark, dstPath)
     require(latestVersion(spark, dstPath) == 0,
       s"clone target $dstPath already has versions — clone creates tables, not branches")
@@ -3074,7 +3015,7 @@ object Versioned {
     // the clone references the source's files — its column map (and the
     // name-reuse tombstones protecting those files) carry over with the
     // rest of the table metadata
-    commit(dfs, dst, spark, abs, Some(0), Seq.empty, metaOf(sfs, src, v), "CLONE",
+    commit(dfs, dst, spark, abs, Some(0), Seq.empty, s.meta, "CLONE",
       ownsColumnMapping = true)
   }
 
@@ -3229,19 +3170,6 @@ object Versioned {
       base.meta, victimScope(victims.flatMap(_._3)), retries = rebaseRetries))
   }
 
-  /** The column whose per-file bounds a version's entries ADDITIONALLY
-    * carry (`#statskey2`, written by [[optimizeZOrder]]) — the second
-    * pruning dimension.
-    */
-  def statsKey2Of(spark: SparkSession, tablePath: String, v: Int): Option[String] =
-    metaOf(spark, tablePath, v).statsKey2
-
-  /** Extra stat columns of version `v` (`#statscols` header) — the
-    * dimensions each entry's `xstats` slot records, in order.
-    */
-  def statsColsOf(spark: SparkSession, tablePath: String, v: Int): Seq[String] =
-    metaOf(spark, tablePath, v).statsCols
-
   /** 32-bit Morton interleave of two 16-bit-quantized integral columns —
     * the z-order clustering value (public Delta `OPTIMIZE ZORDER BY` /
     * the classic Morton curve). Quantization is integer-only:
@@ -3348,7 +3276,8 @@ object Versioned {
     if (ls.versions.isEmpty) return
     val now = System.currentTimeMillis()
     val status = ls.versions.toMap
-    def observed(v: Int): Manifest = observe(fsys, v, status(v))
+    // a kept version's entries are read next, for its live dirs
+    def observed(v: Int): Manifest = observe(fsys, v, status(v), keep = keep(v))
     val (kept, dropped) = ls.versions.map(_._1).partition(keep)
     // Protected from deletion while inside the retention window:
     //  - an UNCOMMITTED claim (an in-flight writer: it will either
@@ -3370,7 +3299,7 @@ object Versioned {
         e.dataDir +: e.dv.map(_.split('/').head).toSeq)).toSet ++
       liveVs.flatMap(_.meta.changesDir).toSet
     // A tail stream's appended-set for kept version v diffs against
-    // v-1's manifest (appendedEntriesOf), so each kept version's
+    // v-1's manifest (appendedEntries), so each kept version's
     // PREDECESSOR manifest survives too — manifest text only, its
     // exclusive data dirs may still be reclaimed. Without this, a tail
     // whose next batch starts at the oldest kept version fails loudly

@@ -844,7 +844,7 @@ class SinksSpec extends SparkSpec {
     }
     // NULL passes (SQL CHECK): k=2's NULL v does not violate v >= 0
     val v2 = Versioned.addConstraint(spark, tbl, "v_nonneg", "v >= 0")
-    assert(v2 == 2 && Versioned.constraintsOf(spark, tbl, 2) ==
+    assert(v2 == 2 && Versioned.snapshot(spark, tbl, 2).meta.constraints ==
       Seq(("v_nonneg", "v >= 0")))
     // a violating merge is refused BEFORE any file lands: version
     // unchanged and no orphan data dir appears
@@ -866,13 +866,13 @@ class SinksSpec extends SparkSpec {
     // legal writes pass and carry the constraint forward
     val v3 = Versioned.merge(spark, tbl,
       Seq((3L, Some(30L), "a", "I")).toDF("k", "v", "p", "_op"), "k", "p")
-    assert(Versioned.constraintsOf(spark, tbl, v3) == Seq(("v_nonneg", "v >= 0")))
+    assert(Versioned.snapshot(spark, tbl, v3).meta.constraints == Seq(("v_nonneg", "v >= 0")))
     // DELETE can never violate; RESTORE carries the restored version's set
     val v4 = Versioned.deleteWhere(spark, tbl, col("k") === 3L, "p")
-    assert(Versioned.constraintsOf(spark, tbl, v4).nonEmpty)
+    assert(Versioned.snapshot(spark, tbl, v4).meta.constraints.nonEmpty)
     // drop re-admits the write that was refused
     val v5 = Versioned.dropConstraint(spark, tbl, "v_nonneg")
-    assert(Versioned.constraintsOf(spark, tbl, v5).isEmpty)
+    assert(Versioned.snapshot(spark, tbl, v5).meta.constraints.isEmpty)
     val v6 = Versioned.merge(spark, tbl,
       Seq((4L, Some(-5L), "a", "I")).toDF("k", "v", "p", "_op"), "k", "p")
     assert(Versioned.readAt(spark, tbl, v6).filter(col("v") < 0).count() == 1)
@@ -890,10 +890,10 @@ class SinksSpec extends SparkSpec {
       try src.getLines().takeWhile(_.startsWith("#")).toList finally src.close()
     }
     def assertHeaders(v: Int, partCol: String): Unit = {
-      assert(Versioned.statsKeyOf(spark, tbl, v).contains("k"), s"v$v #statskey")
-      assert(Versioned.statsKey2Of(spark, tbl, v).contains("v"), s"v$v #statskey2")
-      assert(Versioned.statsColsOf(spark, tbl, v) == Seq("w"), s"v$v #statscols")
-      assert(Versioned.partColOf(spark, tbl, v).contains(partCol), s"v$v #partcol")
+      assert(Versioned.snapshot(spark, tbl, v).meta.statsKey.contains("k"), s"v$v #statskey")
+      assert(Versioned.snapshot(spark, tbl, v).meta.statsKey2.contains("v"), s"v$v #statskey2")
+      assert(Versioned.snapshot(spark, tbl, v).meta.statsCols == Seq("w"), s"v$v #statscols")
+      assert(Versioned.snapshot(spark, tbl, v).partCol.contains(partCol), s"v$v #partcol")
       val block = headerBlock(v)
       Seq("#statskey\tk", "#statskey2\tv", "#statscols\tw", s"#partcol\t$partCol")
         .foreach(h => assert(block.contains(h), s"v$v header block lacks $h: $block"))
@@ -905,8 +905,8 @@ class SinksSpec extends SparkSpec {
     // a constraint change must not undo a partition evolution
     Versioned.evolvePartitioning(spark, tbl, "w")
     val vAfter = Versioned.addConstraint(spark, tbl, "v_pos", "v > 0")
-    assert(Versioned.partColOf(spark, tbl, vAfter).contains("w"))
-    assert(!Versioned.hasUniformLayout(spark, tbl, vAfter),
+    assert(Versioned.snapshot(spark, tbl, vAfter).partCol.contains("w"))
+    assert(!Versioned.snapshot(spark, tbl, vAfter).uniformLayout,
       "pre-evolution files are still laid out by p")
   }
 
@@ -1240,7 +1240,7 @@ class SinksSpec extends SparkSpec {
       grid.toDF("x", "y", "v", "p").repartitionByRange(64, col("x")),
       partCol = Some("p"), fileStatsKey = Some("x"))
     val v2 = Versioned.optimizeZOrder(spark, tbl, "x", "p", "y", filesPerPart = 64)
-    assert(v2 == 2 && Versioned.statsKey2Of(spark, tbl, 2).contains("y"))
+    assert(v2 == 2 && Versioned.snapshot(spark, tbl, 2).meta.statsKey2.contains("y"))
     // layout changed, content identical
     assert(Versioned.readAt(spark, tbl, 2).as[(Long, Long, Long, String)]
       .collect().toSet == grid.toSet)
@@ -1268,7 +1268,7 @@ class SinksSpec extends SparkSpec {
     // carry loose-but-true fresh bounds, spliced files keep their tight
     // ones, and second-dimension skipping stays ON
     val v3 = Versioned.deleteWhere(spark, tbl, col("y") === 63, "p")
-    assert(Versioned.statsKey2Of(spark, tbl, v3).contains("y"))
+    assert(Versioned.snapshot(spark, tbl, v3).meta.statsKey2.contains("y"))
     assert(planned(src(v3).filter(col("y") <= 7)) < planned(src(v3)),
       "second-dimension skipping must survive the rewrite")
     assert(src(v3).filter(col("y") <= 7).count() == 512)

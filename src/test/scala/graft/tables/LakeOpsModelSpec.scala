@@ -237,7 +237,7 @@ class LakeOpsModelSpec extends SparkSpec {
     Versioned.publish(spark, tbl, rows.toDF("k", "v", "w", "i", "p"), partCol = Some("p"),
       fileStatsKey = Some("k"), fileStatsKey2 = Some("v"), fileStatsCols = Seq("w"))
     Versioned.addConstraint(spark, tbl, "k_pos", "k > 0")
-    def meta(t: String, v: Int) = Versioned.metaOf(spark, t, v)
+    def meta(t: String, v: Int) = Versioned.snapshot(spark, t, v).meta
     // TABLE fields only: the per-commit fields never inherit
     def tableOf(m: TableMeta) =
       m.copy(tag = None, changesDir = None, op = "", entriesFile = None, base = None)
@@ -248,8 +248,8 @@ class LakeOpsModelSpec extends SparkSpec {
     val clone = tbl + "_clone"
     // (operation, run it -> new version, expected meta from the base's)
     val ops: Seq[(String, () => Int, TableMeta => TableMeta)] = Seq(
-      ("replaceEntries", () => Versioned.replaceEntries(spark, tbl,
-          Versioned.latestVersion(spark, tbl), Set.empty, Some(staged), "REPLACE"),
+      ("replaceEntries", () => Versioned.replaceEntries(spark, Versioned.snapshot(spark, tbl),
+          Set.empty, Some(staged), "REPLACE"),
         m => m),
       ("addColumns", () => Versioned.addColumns(spark, tbl,
           Seq(StructField("n", LongType))),

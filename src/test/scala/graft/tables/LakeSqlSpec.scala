@@ -25,13 +25,13 @@ class LakeSqlSpec extends SparkSpec {
     assert(Versioned.latestVersion(spark, tbl) == 21)
     def mlen(v: Int) = new java.io.File(tbl, s"_manifests/$v.txt").length()
     // v2 is a delta on v1; bytes well under the full form
-    assert(Versioned.manifestChainOf(spark, tbl, 2).contains((1, 1)))
+    assert(Versioned.snapshot(spark, tbl, 2).meta.base.contains((1, 1)))
     assert(mlen(2) < mlen(1) / 3,
       s"delta manifest ${mlen(2)}B should be far under the full ${mlen(1)}B")
     // depth grows 1..MaxChainDepth, then the next commit checkpoints
-    assert(Versioned.manifestChainOf(spark, tbl, 17).contains((16, Versioned.MaxChainDepth)))
-    assert(Versioned.manifestChainOf(spark, tbl, 18).isEmpty, "v18 must be a full checkpoint")
-    assert(Versioned.manifestChainOf(spark, tbl, 19).contains((18, 1)))
+    assert(Versioned.snapshot(spark, tbl, 17).meta.base.contains((16, Versioned.MaxChainDepth)))
+    assert(Versioned.snapshot(spark, tbl, 18).meta.base.isEmpty, "v18 must be a full checkpoint")
+    assert(Versioned.snapshot(spark, tbl, 19).meta.base.contains((18, 1)))
     // snapshot correctness across the checkpoint boundary, and time travel
     val gone = (1 to 20).map(_ * 7L).toSet
     def state(v: Int) = Versioned.readAt(spark, tbl, v)
@@ -77,7 +77,7 @@ class LakeSqlSpec extends SparkSpec {
       Versioned.fileEntriesOf(spark, path, 3).size)
     // zorder: clustered rewrite recording bounds for BOTH columns
     val vZ = spark.sql("CALL gproc.sys.zorder('ns.t', 'v', 2)").head().getInt(0)
-    assert(vZ == 5 && Versioned.statsKey2Of(spark, path, vZ).contains("v"))
+    assert(vZ == 5 && Versioned.snapshot(spark, path, vZ).meta.statsKey2.contains("v"))
     // restore: roll back to the pre-optimize state as a NEW version
     val vR = spark.sql("CALL gproc.sys.restore('ns.t', 3)").head().getInt(0)
     assert(vR == 6)
@@ -115,10 +115,8 @@ class LakeSqlSpec extends SparkSpec {
     val path = s"$wh/ns/c"
     assert(spark.sql("SELECT sum(v) FROM gctas.ns.c").head().getLong(0) ==
       (0L until 30L).map(_ * 2).sum)
-    assert(Versioned.partColOf(spark, path,
-      Versioned.latestVersion(spark, path)).contains("p"))
-    assert(Versioned.statsKeyOf(spark, path,
-      Versioned.latestVersion(spark, path)).contains("k"))
+    assert(Versioned.snapshot(spark, path).partCol.contains("p"))
+    assert(Versioned.snapshot(spark, path).meta.statsKey.contains("k"))
     // ONE commit: a crash can never expose a committed-but-empty table
     // under the CTAS name (the pre-r16 CREATE-then-APPEND window).
     val ops = Versioned.history(spark, path).collect().map(_.getString(1)).toSeq
@@ -143,7 +141,7 @@ class LakeSqlSpec extends SparkSpec {
     spark.sql("ALTER TABLE galter.ns.t ADD COLUMN note STRING")
     val path = s"$wh/ns/t"
     val vAfter = Versioned.latestVersion(spark, path)
-    assert(Versioned.opOf(spark, path, vAfter).startsWith("ADD_COLUMN"))
+    assert(Versioned.snapshot(spark, path, vAfter).meta.op.startsWith("ADD_COLUMN"))
     // pre-ALTER rows serve NULL; new inserts carry values
     spark.sql("INSERT INTO galter.ns.t SELECT 100 AS k, 0 AS p, 'n1' AS note")
     val rows = spark.sql("SELECT k, note FROM galter.ns.t").collect()
@@ -241,7 +239,7 @@ class LakeSqlSpec extends SparkSpec {
       .toDF("k", "c", "p")
     Versioned.publish(spark, tbl, df.repartitionByRange(8, col("p"), col("k")),
       partCol = Some("p"), fileStatsKey = Some("k"), fileStatsKey2 = Some("c"))
-    assert(Versioned.statsKey2Of(spark, tbl, 1).contains("c"))
+    assert(Versioned.snapshot(spark, tbl, 1).meta.statsKey2.contains("c"))
     def parts(d: org.apache.spark.sql.DataFrame) = d.rdd.getNumPartitions
     val src = spark.read.format("graft.sources.VersionedSource").load(tbl)
     val all = parts(src)
@@ -473,10 +471,10 @@ class LakeSqlSpec extends SparkSpec {
       Versioned.latestVersion(spark, path)).toSet
     spark.sql("ALTER TABLE gmap.ns.t RENAME COLUMN v TO val")
     val vRen = Versioned.latestVersion(spark, path)
-    assert(Versioned.opOf(spark, path, vRen) == "RENAME_COLUMN(v->val)")
+    assert(Versioned.snapshot(spark, path, vRen).meta.op == "RENAME_COLUMN(v->val)")
     assert(Versioned.dataDirsOf(spark, path, vRen).toSet == dirsBefore,
       "rename must not rewrite data")
-    assert(Versioned.columnAliasesOf(spark, path, vRen) == Map("val" -> Seq("v")))
+    assert(Versioned.snapshot(spark, path, vRen).meta.colMap == Map("val" -> Seq("v")))
     assert(spark.sql("SELECT sum(val) FROM gmap.ns.t").head().getLong(0) ==
       (0 to 5).map(_ * 10).sum)
     // the aliased read stays COLUMNAR (the reader resolves the former
@@ -501,7 +499,7 @@ class LakeSqlSpec extends SparkSpec {
       Versioned.latestVersion(spark, path)).toSet
     spark.sql("ALTER TABLE gmap.ns.t DROP COLUMN note")
     val vDrop = Versioned.latestVersion(spark, path)
-    assert(Versioned.opOf(spark, path, vDrop) == "DROP_COLUMN(note)")
+    assert(Versioned.snapshot(spark, path, vDrop).meta.op == "DROP_COLUMN(note)")
     assert(Versioned.dataDirsOf(spark, path, vDrop).toSet == dirsBeforeDrop)
     assert(!spark.table("gmap.ns.t").columns.contains("note"))
     // ... but still serves under time travel
@@ -538,8 +536,8 @@ class LakeSqlSpec extends SparkSpec {
     assert(spark.sql("SELECT sum(v) FROM gmap.ns.t").head().getLong(0) ==
       (0 to 5).map(_ * 10).sum)
     // ...and the tombstones survive the restore (old bytes stay unsafe)
-    assert(Versioned.tombstonedColumnsOf(spark, path, vR).contains("v") ||
-      Versioned.tombstonedColumnsOf(spark, path, vR).contains("note"))
+    assert(Versioned.snapshot(spark, path, vR).meta.droppedCols.contains("v") ||
+      Versioned.snapshot(spark, path, vR).meta.droppedCols.contains("note"))
   }
 
   test("parquet checkpoint manifests: big full entry lists stream to a compressed sidecar; deltas, reads, vacuum ride it") {
@@ -563,12 +561,12 @@ class LakeSqlSpec extends SparkSpec {
       // reads resolve through the sidecar; a small DV delete is a DELTA
       assert(Versioned.read(spark, tbl).count() == 64)
       Versioned.deleteKeys(spark, tbl, Seq(7L))
-      assert(Versioned.manifestChainOf(spark, tbl, 2).contains((1, 1)))
+      assert(Versioned.snapshot(spark, tbl, 2).meta.base.contains((1, 1)))
       assert(Versioned.read(spark, tbl).count() == 63)
       // the depth cap forces the NEXT checkpoint — another sidecar
       (20L until 36L).foreach(k => Versioned.deleteKeys(spark, tbl, Seq(k)))
       val latest = Versioned.latestVersion(spark, tbl)
-      assert(Versioned.manifestChainOf(spark, tbl, latest).isEmpty,
+      assert(Versioned.snapshot(spark, tbl, latest).meta.base.isEmpty,
         "depth cap must have forced a full checkpoint")
       assert(sidecars.length == 2, sidecars.mkString(","))
       assert(Versioned.read(spark, tbl).count() == 64 - 17)
@@ -605,7 +603,7 @@ class LakeSqlSpec extends SparkSpec {
         |       CASE WHEN id % 2 = 0 THEN 'A' ELSE 'B' END AS s,
         |       CAST(0 AS BIGINT) AS p
         |FROM range(0, 4000)""".stripMargin)
-    assert(Versioned.statsColsOf(spark, path, 2) == Seq("dt", "s"))
+    assert(Versioned.snapshot(spark, path, 2).meta.statsCols == Seq("dt", "s"))
     def src = spark.read.format("graft.sources.VersionedSource").load(path)
     val all = src.rdd.getNumPartitions
     assert(all >= 4, s"want several files, got $all")
@@ -639,8 +637,8 @@ class LakeSqlSpec extends SparkSpec {
     val vM = Versioned.merge(spark, path,
       Seq((0L, java.sql.Date.valueOf("1995-01-01"), "A", 0L, "U"))
         .toDF("k", "dt", "s", "p", "_op"), "k", "p")
-    assert(Versioned.statsColsOf(spark, path, vM) == Seq("dt", "s"))
-    assert(Versioned.entriesOf(spark, path, vM).forall(_.xstats.isDefined),
+    assert(Versioned.snapshot(spark, path, vM).meta.statsCols == Seq("dt", "s"))
+    assert(Versioned.snapshot(spark, path, vM).entries.forall(_.xstats.isDefined),
       "every post-merge file entry must carry recomputed xstats")
     assert(src.filter(col("s") === "Z").count() == 40)
     assert(src.count() == 4040)
@@ -676,8 +674,8 @@ class LakeSqlSpec extends SparkSpec {
     // OPTIMIZE bin-packs small files; the rewrite recomputes ALL stats
     // dimensions in its stats scan — the box still prunes afterwards
     val vOpt = Versioned.optimizeTable(spark, path, "k", "p", targetRows = 600)
-    assert(Versioned.statsColsOf(spark, path, vOpt) == Seq("dt", "s"))
-    assert(Versioned.entriesOf(spark, path, vOpt).forall(_.xstats.isDefined),
+    assert(Versioned.snapshot(spark, path, vOpt).meta.statsCols == Seq("dt", "s"))
+    assert(Versioned.snapshot(spark, path, vOpt).entries.forall(_.xstats.isDefined),
       "post-optimize entries must carry recomputed xstats")
     val allOpt = src.rdd.getNumPartitions
     assert(allOpt < all, "optimize must have packed files")
@@ -694,12 +692,12 @@ class LakeSqlSpec extends SparkSpec {
       col("dt") <= to_date(lit("1995-03-31"))).count() == expect)
     // predicate DML (deleteWhere / updateWhere) carries and recomputes too
     val vDel = Versioned.deleteWhere(spark, path, col("k") === 17L, "p")
-    assert(Versioned.statsColsOf(spark, path, vDel) == Seq("dt", "s"))
-    assert(Versioned.entriesOf(spark, path, vDel).forall(_.xstats.isDefined))
+    assert(Versioned.snapshot(spark, path, vDel).meta.statsCols == Seq("dt", "s"))
+    assert(Versioned.snapshot(spark, path, vDel).entries.forall(_.xstats.isDefined))
     val vUpd = Versioned.updateWhere(spark, path, col("k") === 18L,
       Map("s" -> lit("A")), "p")
-    assert(Versioned.statsColsOf(spark, path, vUpd) == Seq("dt", "s"))
-    assert(Versioned.entriesOf(spark, path, vUpd).forall(_.xstats.isDefined))
+    assert(Versioned.snapshot(spark, path, vUpd).meta.statsCols == Seq("dt", "s"))
+    assert(Versioned.snapshot(spark, path, vUpd).entries.forall(_.xstats.isDefined))
     assert(src.count() == 3999)
   }
 
@@ -725,7 +723,7 @@ class LakeSqlSpec extends SparkSpec {
     // (the r16 gap: the stale header name broke every later append)
     spark.sql("ALTER TABLE gn8.ns.t RENAME COLUMN dt TO event_dt")
     val v3 = Versioned.latestVersion(spark, path)
-    assert(Versioned.statsColsOf(spark, path, v3) == Seq("event_dt", "s"))
+    assert(Versioned.snapshot(spark, path, v3).meta.statsCols == Seq("event_dt", "s"))
     def src = spark.read.format("graft.sources.VersionedSource").load(path)
     val all = src.rdd.getNumPartitions
     // bounds survive the rename: a box on the NEW name prunes
@@ -744,7 +742,7 @@ class LakeSqlSpec extends SparkSpec {
     // slot realigns — pruning on the surviving dimension must stay SOUND
     spark.sql("ALTER TABLE gn8.ns.t DROP COLUMN event_dt")
     val v5 = Versioned.latestVersion(spark, path)
-    assert(Versioned.statsColsOf(spark, path, v5) == Seq("s"))
+    assert(Versioned.snapshot(spark, path, v5).meta.statsCols == Seq("s"))
     val zCnt = src.filter(col("s") === "Z").count()
     assert(zCnt == 20, s"misaligned xstats after drop: got $zCnt of 20")
     val aCnt = src.filter(col("s") === "A").count()
@@ -781,7 +779,7 @@ class LakeSqlSpec extends SparkSpec {
     assert(linear == src.rdd.getNumPartitions,
       "linear layout has no s stats — nothing to prune")
     val v2 = Versioned.optimizeZOrder(spark, tbl, "k", "p", "s", filesPerPart = 16)
-    assert(Versioned.statsKey2Of(spark, tbl, v2).contains("s"))
+    assert(Versioned.snapshot(spark, tbl, v2).meta.statsKey2.contains("s"))
     val all = src.rdd.getNumPartitions
     val cOnly = src.filter(col("s") === "C").rdd.getNumPartitions
     assert(cOnly < all / 2,

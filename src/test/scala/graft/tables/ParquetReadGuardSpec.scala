@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * checkpoint sidecar. Data-dir names are minted in one place,
   * `Versioned.newDataDir`, whose `d_*` format vacuum's sweep relies on.
   * Jobs are metered by one SparkListener, `graft.core.Meter`'s. Versions
-  * resolve from one listing of `_manifests/`, `Versioned.listing`.
+  * resolve from one listing of `_manifests/`, `Versioned.listing`, and an
+  * operation reads a version's headers through one `Versioned.Snapshot`.
   */
 class ParquetReadGuardSpec extends AnyFunSuite {
   private val plainRead =
@@ -115,5 +116,22 @@ class ParquetReadGuardSpec extends AnyFunSuite {
     assert(call.findFirstIn("fsys.listStatus(manifestDir(table))").nonEmpty)
     assert(call.findFirstIn("fsys.listStatus(md).toSeq").nonEmpty)
     assert(call.findFirstIn("fsys.listStatus(p).toSeq.filter(_.isDirectory)").nonEmpty)
+  }
+
+  test("src/main reads a version's headers through a Versioned.Snapshot, no per-header accessor") {
+    val gone = Seq("schemaOf", "statsKeyOf", "statsKey2Of", "statsColsOf", "constraintsOf",
+      "columnAliasesOf", "tombstonedColumnsOf", "changesDirOf", "manifestChainOf", "partColOf",
+      "hasUniformLayout", "opOf", "schemaFor")
+    val accessor = gone.mkString("""\b(?:""", "|", """)\b""").r
+    val metaOf = """\bmetaOf\(""".r
+    val hits = mainSources.flatMap { case (path, text) =>
+      val strays = accessor.findAllMatchIn(text) ++
+        (if (path.endsWith("graft/tables/LakeOps.scala")) Iterator.empty
+         else metaOf.findAllMatchIn(text))
+      strays.map(m => s"${m.matched} at $path:${text.substring(0, m.start).count(_ == '\n') + 1}")
+    }
+    assert(hits.isEmpty, s"take one Versioned.snapshot per operation: ${hits.mkString(", ")}")
+    assert(accessor.findFirstIn("Versioned.partColOf(spark, path, v)").nonEmpty)
+    assert(accessor.findFirstIn("val partCol = s.partCol").isEmpty)
   }
 }

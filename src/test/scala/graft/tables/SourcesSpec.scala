@@ -417,7 +417,7 @@ class SourcesSpec extends SparkSpec {
       yield (y.toLong * 1000 + si * 100 + i, y * 10L + i, y, src)
     Versioned.publish(spark, tbl, rows.toDF("k", "v", "y", "src"),
       partCol = Some("y,src"), fileStatsKey = Some("k"))
-    assert(Versioned.partColOf(spark, tbl, 1).contains("y,src"))
+    assert(Versioned.snapshot(spark, tbl, 1).partCol.contains("y,src"))
     // nested layout on disk + leaf-granular manifest entries
     assert(Versioned.fileEntriesOf(spark, tbl, 1)
       .forall(e => e._1.matches("y=\\d+/src=.*")), "entries must be leaf dirs")
@@ -625,7 +625,7 @@ class SourcesSpec extends SparkSpec {
     spark.sql("INSERT INTO gcat_t.ns1.t SELECT * FROM gcat_src")
     assert(spark.sql("SELECT sum(v) FROM gcat_t.ns1.t").head().getLong(0) == 60)
     // the INSERT kept file granularity on the declared stats column
-    assert(Versioned.statsKeyOf(spark, s"$wh/ns1/t", 2).contains("k"))
+    assert(Versioned.snapshot(spark, s"$wh/ns1/t", 2).meta.statsKey.contains("k"))
     assert(Versioned.fileEntriesOf(spark, s"$wh/ns1/t", 2).nonEmpty)
     // DELETE via pushed filters; VERSION AS OF still serves v2
     spark.sql("DELETE FROM gcat_t.ns1.t WHERE p = 'a' AND k > 1")
@@ -1023,8 +1023,8 @@ class SourcesSpec extends SparkSpec {
     // EVOLVE the spec header-only: files untouched
     val vE = spark.sql("CALL gevo.sys.evolve_partitioning('ns.t', 'y,r')")
       .head().getInt(0)
-    assert(Versioned.partColOf(spark, path, vE).contains("y,r"))
-    assert(!Versioned.hasUniformLayout(spark, path, vE))
+    assert(Versioned.snapshot(spark, path, vE).partCol.contains("y,r"))
+    assert(!Versioned.snapshot(spark, path, vE).uniformLayout)
     // value-scoped DML refuses LOUDLY while layouts are mixed
     val err = intercept[IllegalStateException](Versioned.deleteWhere(
       spark, path, col("y") === 1995L, "y,r"))
@@ -1065,7 +1065,7 @@ class SourcesSpec extends SparkSpec {
     assert(conformingPre.nonEmpty, "test shape: some entries already conform")
     spark.sql("CALL gevo.sys.repartition('ns.t')")
     val vR = Versioned.latestVersion(spark, path)
-    assert(Versioned.hasUniformLayout(spark, path, vR))
+    assert(Versioned.snapshot(spark, path, vR).uniformLayout)
     val entriesPost = Versioned.fileEntriesOf(spark, path, vR).toSet
     assert(conformingPre.subsetOf(entriesPost),
       s"conforming entries must splice unchanged; lost: ${conformingPre -- entriesPost}")
@@ -1078,7 +1078,7 @@ class SourcesSpec extends SparkSpec {
     Versioned.deleteWhere(spark, path, col("y") === 1996L && col("r") === "a", "y,r")
     assert(spark.sql("SELECT count(*) FROM gevo.ns.t").head().getLong(0) == 40)
     // time travel BEFORE the evolution serves the old spec
-    assert(Versioned.partColOf(spark, path, 2).contains("y"))
+    assert(Versioned.snapshot(spark, path, 2).partCol.contains("y"))
   }
 
   test("metadata-only COUNT(*): unfiltered counts come from the manifest (DV-exact), filters and groupings fall back to data") {

@@ -3,6 +3,7 @@ package graft.tables
 import graft.SparkSpec
 import java.io.File
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** The one staged write behind SQL INSERT, CTAS, the SQL row-level
@@ -65,7 +66,7 @@ class StagedWriteSpec extends SparkSpec {
     spark.sql("CREATE TABLE gsw.ns.tiny PARTITIONED BY (p) AS " +
       "SELECT id AS k, CAST(id % 2 AS TINYINT) AS p FROM range(0, 4)")
     val tiny = s"$warehouse/ns/tiny"
-    assert(Versioned.opOf(spark, tiny, 1) == "CTAS")
+    assert(Versioned.snapshot(spark, tiny, 1).meta.op == "CTAS")
     assert(spark.sql("SELECT p, count(*) FROM gsw.ns.tiny GROUP BY p ORDER BY p")
       .as[(Byte, Long)].collect().toSeq == Seq((0.toByte, 2L), (1.toByte, 2L)))
     assert(Versioned.read(spark, tiny).filter($"p" === 1).count() == 2)
@@ -117,5 +118,61 @@ class StagedWriteSpec extends SparkSpec {
     val v4 = Versioned.recordedChanges(spark, tbl, 3, 4)
       .select("k", "v", "_change", "_version").as[(Long, Long, String, Int)].collect().toSet
     assert(v4 == Set((3L, 30L, "delete", 4), (3L, 300L, "insert", 4)), v4)
+  }
+
+  test("SQL UPDATE and DELETE keep every row they do not change") {
+    // four files per partition (one per write task): the row-level UPDATE
+    // and DELETE replace partition p=1 whole, so they must rewrite all ten
+    // of its rows, not only the row groups whose footer stats match; and a
+    // DELETE condition with no exact filter form must not shrink to the
+    // part that has one
+    spark.sql("CREATE TABLE gsw.ns.groups (k BIGINT, v BIGINT, p BIGINT) PARTITIONED BY (p)")
+    spark.sql("INSERT INTO gsw.ns.groups SELECT /*+ REPARTITION(4) */ id, id * 10, id % 2 " +
+      "FROM range(0, 20)")
+    spark.sql("UPDATE gsw.ns.groups SET v = v + 1 WHERE k = 5")
+    spark.sql("DELETE FROM gsw.ns.groups WHERE k * 2 = 14 OR v = 90") // not pushable: row-level
+    assert(spark.sql("SELECT k, v FROM gsw.ns.groups ORDER BY k")
+      .as[(Long, Long)].collect().toSeq ==
+      (0L until 20L).filterNot(Set(7L, 9L)).map(k => (k, if (k == 5) 51L else k * 10)))
+  }
+
+  test("a SQL UPDATE that loses its CAS to a concurrent merge fails and leaves no orphan") {
+    val path = s"$warehouse/ns/cas"
+    spark.sql("CREATE TABLE gsw.ns.cas (k BIGINT, v BIGINT, p BIGINT) PARTITIONED BY (p)")
+    spark.sql("INSERT INTO gsw.ns.cas SELECT id, id * 10, id % 2 FROM range(0, 20)")
+    // the competitor lands between the UPDATE's scan and its replace
+    Versioned.preCommitHookForTests = Some(() => {
+      Versioned.preCommitHookForTests = None // one-shot: not for the competitor
+      Versioned.merge(spark, path,
+        Seq((100L, 1000L, 0L, "I")).toDF("k", "v", "p", "_op"), "k", "p")
+    })
+    val err = try intercept[Exception](spark.sql("UPDATE gsw.ns.cas SET v = -1 WHERE k = 5"))
+      finally Versioned.preCommitHookForTests = None
+    assert(causeOf[ConcurrentWriteException](err).nonEmpty, err)
+    val latest = Versioned.latestVersion(spark, path)
+    assert(latest == 3 && Versioned.snapshot(spark, path).meta.op == "MERGE")
+    assert(spark.sql("SELECT count(*), sum(v), max(k) FROM gsw.ns.cas").head().toSeq ==
+      Seq(21L, (0L until 20L).map(_ * 10).sum + 1000L, 100L),
+      "the competitor's row survives and the UPDATE left no trace")
+    val dataDirs = new File(path).list().filter(_.startsWith("d_")).toSet
+    assert(dataDirs == Versioned.dataDirsOf(spark, path, latest).toSet,
+      s"the lost UPDATE must delete its promoted dir: $dataDirs")
+    assert(Option(new File(path, "_sink_stage").list()).forall(_.isEmpty))
+  }
+
+  test("a snapshot is per operation: kept DataFrames read new commits, pinned reads stay") {
+    val path = s"$warehouse/ns/keep"
+    spark.sql("CREATE TABLE gsw.ns.keep PARTITIONED BY (p) AS " +
+      "SELECT id AS k, id * 10 AS v, id % 2 AS p FROM range(0, 10)")
+    def versioned = spark.read.format("graft.sources.VersionedSource")
+    val kept = Seq(spark.table("gsw.ns.keep"), versioned.load(path))
+    val pinned = Seq(spark.sql("SELECT * FROM gsw.ns.keep VERSION AS OF 1"),
+      versioned.option("versionAsOf", "1").load(path))
+    def counts(dfs: Seq[DataFrame]) =
+      dfs.flatMap(df => Seq(df.count(), df.filter($"k" >= 0).count()))
+    assert(counts(kept) == Seq.fill(4)(10L) && counts(pinned) == Seq.fill(4)(10L))
+    spark.sql("INSERT INTO gsw.ns.keep SELECT id, id * 10, id % 2 FROM range(10, 15)")
+    assert(counts(kept) == Seq.fill(4)(15L), "a kept DataFrame reads the new version")
+    assert(counts(pinned) == Seq.fill(4)(10L), "a pinned read stays at version 1")
   }
 }
