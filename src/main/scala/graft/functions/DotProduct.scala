@@ -60,9 +60,12 @@ case class DotProduct(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-/** Session-level registration for graft's native expressions. Called once
+/** Session-level registration for graft's native SQL functions. Called once
   * per SparkSession by every entry point (Verify/Bench/Explain/tests) —
   * never from inside a query builder (no conf/catalog mutation there).
+  * Graft's planner strategies and optimizer rules come in through
+  * `spark.sql.extensions=graft.plans.GraftExtensions`, set where each
+  * session is built.
   */
 object GraftFunctions {
   def register(spark: SparkSession): Unit = {
@@ -78,20 +81,5 @@ object GraftFunctions {
     // directly — registration-free, like VectorOps.dot).
     spark.udf.register("graft_dl",
       (a: String, b: String) => StringDistance.damerauLevenshtein(a, b).toLong)
-    // Planner strategy for the native operators (graft.plans). Idempotent
-    // fallback for sessions not built with
-    // spark.sql.extensions=graft.plans.GraftExtensions (Verify/Bench set
-    // that config; the shared test session lands here).
-    val exp = spark.experimental
-    if (!exp.extraStrategies.contains(graft.plans.TopKPerKeyStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ graft.plans.TopKPerKeyStrategy
-    if (!exp.extraStrategies.contains(graft.plans.RangeJoinStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ graft.plans.RangeJoinStrategy
-    if (!exp.extraStrategies.contains(graft.plans.BeamSearchStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ graft.plans.BeamSearchStrategy
-    if (!exp.extraOptimizations.contains(graft.plans.TopKWindowRewrite))
-      exp.extraOptimizations = exp.extraOptimizations :+ graft.plans.TopKWindowRewrite
-    if (!exp.extraOptimizations.contains(graft.plans.MvRewrite))
-      exp.extraOptimizations = exp.extraOptimizations :+ graft.plans.MvRewrite
   }
 }

@@ -1,14 +1,12 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSessionExtensions}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.types.IntegerType
 
 /** Whole-operator Catalyst extension (SURVEY §2 custom-operator ladder,
   * rung (c)): top-k rows per key, ranked — the workhorse of similarity
@@ -26,11 +24,17 @@ import org.apache.spark.sql.types.IntegerType
   * ≤ k·keys rows per partition reach the exchange. At 100 TB with k=5 that
   * is the difference between shuffling the corpus and shuffling the answer.
   *
-  * Pieces: `TopKPerKeyNode` (logical), `TopKPerKeyPartialExec` /
-  * `TopKPerKeyFinalExec` (physical pair bracketing the exchange, like
-  * partial/final HashAggregate), `TopKPerKeyStrategy` (planner rule), and
-  * `GraftExtensions` (SparkSessionExtensions registration for
-  * `spark.sql.extensions` / `builder.withExtensions`).
+  * The API is the window itself: `row_number() OVER (PARTITION BY … ORDER
+  * BY …) <= k`, in SQL or the DataFrame API. [[TopKWindowRewrite]] plans
+  * that filter on this operator; Spark's
+  * `spark.sql.optimizer.excludedRules=graft.plans.TopKWindowRewrite` turns
+  * the rewrite off and leaves Spark's own window plan.
+  *
+  * Pieces: `TopKPerKeyNode` (logical, built only by the rewrite),
+  * `TopKPerKeyPartialExec` / `TopKPerKeyFinalExec` (physical pair
+  * bracketing the exchange, like partial/final HashAggregate),
+  * `TopKPerKeyStrategy` (planner rule), and `GraftExtensions`
+  * (`spark.sql.extensions` registration of graft's rules and strategies).
   */
 case class TopKPerKeyNode(
     keys: Seq[Expression],
@@ -38,10 +42,10 @@ case class TopKPerKeyNode(
     k: Int,
     rankAttr: AttributeReference,
     child: LogicalPlan) extends UnaryNode {
-  require(k > 0, s"topKPerKey: k must be positive, got $k")
+  require(k > 0, s"TopKPerKeyNode: k must be positive, got $k")
   override def output: Seq[Attribute] = child.output :+ rankAttr
   // rankAttr is born here, not consumed from below — without this the
-  // analyzer counts it as a missing input.
+  // plan's missingInput check counts it as a missing input.
   override def producedAttributes: AttributeSet = AttributeSet(rankAttr :: Nil)
   override def maxRows: Option[Long] = child.maxRows
   override protected def withNewChildInternal(newChild: LogicalPlan): TopKPerKeyNode =
@@ -146,8 +150,8 @@ object TopKPerKeyStrategy extends SparkStrategy {
 }
 
 /** `spark.sql.extensions=graft.plans.GraftExtensions` (or
-  * `builder.withExtensions(new GraftExtensions)`) — the production
-  * registration path for graft's planner strategy.
+  * `builder.withExtensions(new GraftExtensions)`): the one registration
+  * path for graft's planner strategies and optimizer rules.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -159,39 +163,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 }
 
-/** User-facing surface for the custom operators. */
+/** DataFrame surface for the operators no SQL spelling reaches (beam
+  * search, the interval join); top-k per key is the `row_number` window.
+  */
 object GraftOps {
-  /** Top-k rows per key with a 1-based `rankName` column appended, executed
-    * by the native bounded-heap operator above (falls back to nothing —
-    * the strategy must be registered; `GraftFunctions.register` and
-    * `GraftExtensions` both do it).
-    */
-  def topKPerKey(
-      df: DataFrame,
-      keyCols: Seq[String],
-      sortCols: Seq[Column],
-      k: Int,
-      rankName: String = "rnk"): DataFrame = {
-    val child = GraftSqlBridge.analyzed(df)
-    val byName = child.output.map(a => a.name -> a).toMap
-    def res(e: Expression): Expression = e.transformUp {
-      case u: UnresolvedAttribute =>
-        byName.getOrElse(u.name,
-          throw new IllegalArgumentException(
-            s"topKPerKey: column '${u.name}' not in ${byName.keys.mkString(", ")}"))
-    }
-    val order = sortCols.map(GraftSqlBridge.expression(df.sparkSession, _)).map {
-      case so: SortOrder => so.copy(child = res(so.child))
-      case e => SortOrder(res(e), Ascending)
-    }
-    val node = TopKPerKeyNode(
-      keyCols.map(n => byName.getOrElse(n,
-        throw new IllegalArgumentException(s"topKPerKey: unknown key column '$n'"))),
-      order, k,
-      AttributeReference(rankName, IntegerType, nullable = false)(), child)
-    GraftSqlBridge.ofRows(df.sparkSession, node)
-  }
-
   /** Layered beam search of `probes` against the broadcast compact graph
     * `index` via the native `BeamSearchExec` (SQ8 integer scoring; the
     * index ships through a size-guarded BroadcastExchange). Probe side

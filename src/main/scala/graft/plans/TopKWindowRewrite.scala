@@ -22,9 +22,12 @@ import org.apache.spark.sql.types.IntegerType
   * possibly conjoined with other predicates that don't touch the rank —
   * those stay behind as a residual Filter.
   *
-  * Disable with `spark.graft.topk.rewrite=false`.
+  * This is the only place a `TopKPerKeyNode` is built: the window is the
+  * API. Spark's `spark.sql.optimizer.excludedRules=graft.plans.TopKWindowRewrite`
+  * turns the rule off and leaves Spark's own `Window` plan (the reference
+  * the specs check the operator against).
   */
-object TopKWindowRewrite extends Rule[LogicalPlan] {
+object TopKWindowRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
   private def limitOf(cond: Expression, rnk: Attribute): Option[Int] = cond match {
     case LessThanOrEqual(a: Attribute, Literal(k: Int, IntegerType)) if a.semanticEquals(rnk) => Some(k)
@@ -36,35 +39,27 @@ object TopKWindowRewrite extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  private def splitConjuncts(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => splitConjuncts(l) ++ splitConjuncts(r)
-    case other => other :: Nil
-  }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (conf.getConfString("spark.graft.topk.rewrite", "true") != "true") return plan
-    plan.transformUp {
-      case f @ Filter(cond,
-          Window(Seq(alias @ Alias(WindowExpression(RowNumber(), spec), _)),
-                 part, order, child, _))
-          if part.nonEmpty && order.nonEmpty && spec.partitionSpec == part &&
-             spec.orderSpec == order =>
-        val rnk = alias.toAttribute.asInstanceOf[AttributeReference]
-        val conjuncts = splitConjuncts(cond)
-        val (rankPreds, rest) = conjuncts.partition(c => limitOf(c, rnk).isDefined)
-        val ks = rankPreds.flatMap(limitOf(_, rnk))
-        if (ks.isEmpty || ks.exists(_ <= 0) || rest.exists(_.references.contains(rnk))) f
-        else {
-          // Spark's InferWindowGroupLimit may already have fired inside this
-          // fixed-point batch — its pre-filter is subsumed by the heap.
-          val base = child match {
-            case WindowGroupLimit(p, o, _, _, grandchild)
-                if p == part && o == order => grandchild
-            case other => other
-          }
-          val node = TopKPerKeyNode(part, order, ks.min, rnk, base)
-          if (rest.isEmpty) node else Filter(rest.reduce(And), node)
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+    case f @ Filter(cond,
+        Window(Seq(alias @ Alias(WindowExpression(RowNumber(), spec), _)),
+               part, order, child, _))
+        if part.nonEmpty && order.nonEmpty && spec.partitionSpec == part &&
+           spec.orderSpec == order =>
+      val rnk = alias.toAttribute.asInstanceOf[AttributeReference]
+      val conjuncts = splitConjunctivePredicates(cond)
+      val (rankPreds, rest) = conjuncts.partition(c => limitOf(c, rnk).isDefined)
+      val ks = rankPreds.flatMap(limitOf(_, rnk))
+      if (ks.isEmpty || ks.exists(_ <= 0) || rest.exists(_.references.contains(rnk))) f
+      else {
+        // Spark's InferWindowGroupLimit may already have fired inside this
+        // fixed-point batch — its pre-filter is subsumed by the heap.
+        val base = child match {
+          case WindowGroupLimit(p, o, _, _, grandchild)
+              if p == part && o == order => grandchild
+          case other => other
         }
-    }
+        val node = TopKPerKeyNode(part, order, ks.min, rnk, base)
+        if (rest.isEmpty) node else Filter(rest.reduce(And), node)
+      }
   }
 }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.tables.Tables._
 
@@ -74,18 +75,18 @@ object Corpus {
       .orderBy("lang")
   }
 
-  /** Per-group bounded sampling — N deterministic examples per language,
-    * through the native TopKPerKey operator: order by md5(doc_id) (the
-    * engine-portable "random" key, as in q63) and keep the first 3 per
-    * lang. The bounded-heap plan means a language with a billion docs costs
-    * the same shuffle as one with a thousand — no per-lang sort.
+  /** Per-group bounded sampling — N deterministic examples per language:
+    * order by md5(doc_id) (the engine-portable "random" key, as in q63) and
+    * keep the first 3 per lang, a `row_number` window planned on the native
+    * TopKPerKey operator. The bounded-heap plan means a language with a
+    * billion docs costs the same shuffle as one with a thousand — no
+    * per-lang sort.
     */
   def sampleTopNPerLang(spark: SparkSession, dir: String): DataFrame =
-    graft.plans.GraftOps.topKPerKey(
-      documents(spark, dir)
-        .select(col("lang"), col("doc_id"),
-          md5(col("doc_id").cast("string")).as("h")),
-      Seq("lang"), Seq(col("h").asc, col("doc_id").asc), 3)
+    documents(spark, dir)
+      .select(col("lang"), col("doc_id"), md5(col("doc_id").cast("string")).as("h"))
+      .withColumn("rnk", row_number().over(Window.partitionBy("lang").orderBy("h", "doc_id")))
+      .filter(col("rnk") <= 3)
       .select("lang", "rnk", "doc_id")
       .orderBy("lang", "rnk")
 
@@ -207,7 +208,7 @@ object Corpus {
     * zero single-partition exchanges.
     */
   def curriculum(spark: SparkSession, dir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
+    val w = Window
       .partitionBy("lang").orderBy(col("score").desc, col("doc_id"))
     val ranked = TextAnalysis.tokenizedDocs(spark, dir)
       .filter(size(col("toks")) > 0)
@@ -248,7 +249,7 @@ object Corpus {
     * 1/size is a single IEEE division — bit-equal across engines.
     */
   def dedupAwareWeights(spark: SparkSession, dir: String): DataFrame = {
-    val wc = org.apache.spark.sql.expressions.Window.partitionBy("ck")
+    val wc = Window.partitionBy("ck")
     documents(spark, dir).select("doc_id")
       .join(Dedup.ccLabels(spark, dir), Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("cluster_id"), col("doc_id")).as("ck"))

@@ -921,8 +921,8 @@ object Dedup {
     * est_card_1) — the marginal-value number a mixing decision needs.
     *
     * Shape: one distinct over (source, 60-bit md5 hash) — a partial-agg
-    * dedup — then the NATIVE bounded-heap top-k operator (q95's
-    * TopKPerKeyExec in its ASCENDING role) keeps the k=128 smallest
+    * dedup — then a `row_number` window planned on the NATIVE bounded-heap
+    * TopKPerKey operator (in its ASCENDING role) keeps the k=128 smallest
     * hashes per source: each partition forwards ≤ k rows per source, so
     * the sketch build shuffles k·|sources| rows at any corpus size, and
     * the pairwise stage is a broadcast self-join of a |sources|-row table
@@ -940,7 +940,8 @@ object Dedup {
     // (k−1)·2^60: both factors and the product are exact in double.
     val numer = lit(127.0) * lit(1.152921504606846976e18)
     val hx = sourceHashes(spark, dir).select("source", "x").distinct()
-    val bot = graft.plans.GraftOps.topKPerKey(hx, Seq("source"), Seq(col("x").asc), k)
+    val bot = hx.withColumn("rnk", row_number().over(Window.partitionBy("source").orderBy("x")))
+      .filter(col("rnk") <= k)
     val sk = bot.groupBy("source").agg(sort_array(collect_list(col("x"))).as("sk"))
     def est(arr: Column): Column =
       when(size(arr) < k, size(arr).cast("double"))

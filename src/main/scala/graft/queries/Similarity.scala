@@ -45,33 +45,62 @@ object Similarity {
         .withColumn("nrm", sqrt(VectorOps.dot(col("v"), col("v"))))
     }
 
-  /** (probe_id, vec_id, cs) for every probe (vec_id < 10) × corpus vector —
-    * ONE definition of the probe set, broadcast anti-self join, and cosine
-    * expression, shared by the window (q40) and `topKPerKey` (q95, q74)
-    * rankers so the two formulations cannot drift apart silently.
+  /** The family's probe set: the ids every search, recall and ranking
+    * query answers for (vec_id < 10 — bounded by construction, so the
+    * probe side always broadcasts).
     */
-  private def scoredPairs(spark: SparkSession, dir: String): DataFrame = {
-    val e = corpus(spark, dir)
-    val probes = e.filter(col("vec_id") < 10).toDF("probe_id", "pv", "pnrm")
-    e.join(broadcast(probes), col("probe_id") =!= col("vec_id"))
-      .select(col("probe_id"), col("vec_id"),
-        (VectorOps.dot(col("pv"), col("v")) / (col("pnrm") * col("nrm"))).as("cs"))
-  }
+  private def isProbe(id: Column): Column = id < 10
 
-  /** Brute-force cosine top-5 for probe vectors (vec_id < 10). The probe set
-    * is bounded by construction → broadcast; the corpus side streams, so the
-    * only shuffle is the per-probe window. (At extreme scale the window
-    * becomes the bounded per-partition heaps of `topKPerKey` — q95, same
-    * result.)
+  /** The probe table: (probe_id, pv, pnrm) — each probe's vector and norm. */
+  private def probes(spark: SparkSession, dir: String): DataFrame =
+    corpus(spark, dir).filter(isProbe(col("vec_id"))).toDF("probe_id", "pv", "pnrm")
+
+  /** Cosine of the probe vector (pv, pnrm) to the corpus vector (v, nrm) —
+    * one expression, so exact rankings and re-ranks cannot drift apart.
     */
-  def cosineTopK(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("probe_id").orderBy(col("cs").desc, col("vec_id"))
-    scoredPairs(spark, dir)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
-      .select(col("probe_id"), col("rnk"), col("vec_id"), round(col("cs"), 4).as("cs"))
+  private val cosine: Column =
+    VectorOps.dot(col("pv"), col("v")) / (col("pnrm") * col("nrm"))
+
+  /** The `k` first rows per probe under `order`, numbered 1.. in `rank`: a
+    * `row_number` window that `TopKWindowRewrite` plans on the native
+    * bounded-heap TopKPerKey operator (≤ k rows per probe and input
+    * partition cross the exchange). The family's one ranking spelling.
+    */
+  private def topPerProbe(df: DataFrame, k: Int, rank: String, order: Column*): DataFrame =
+    df.withColumn(rank, row_number().over(Window.partitionBy("probe_id").orderBy(order: _*)))
+      .filter(col(rank) <= k)
+
+  /** Top `k` per probe by cosine, ties to the lower vec_id, as `rnk`. */
+  private def topByCosine(scored: DataFrame, k: Int): DataFrame =
+    topPerProbe(scored, k, "rnk", col("cs").desc, col("vec_id"))
+
+  /** The shared tail of q40/q41/q59: (probe_id, rnk, vec_id, cs) in order. */
+  private def ranking(top: DataFrame): DataFrame =
+    top.select(col("probe_id"), col("rnk"), col("vec_id"), round(col("cs"), 4).as("cs"))
       .orderBy("probe_id", "rnk")
-  }
+
+  /** The exact verification step every ANN index ends in (the
+    * candidate/verify split): candidate rows (probe_id, vec_id, …) fetch
+    * the float vectors of both sides, score the shared cosine and keep the
+    * top `k` per probe. Candidates are |probes|·(index fan-out) rows, so
+    * they broadcast onto the corpus and the fetch is a map-side lookup,
+    * never a shuffle of the corpus.
+    */
+  private def rerank(spark: SparkSession, dir: String, cands: DataFrame, k: Int): DataFrame =
+    topByCosine(corpus(spark, dir).join(broadcast(cands), "vec_id")
+      .join(broadcast(probes(spark, dir)), "probe_id")
+      .select(cands.columns.map(col) :+ cosine.as("cs"): _*), k)
+
+  /** q40 (also registered as q74 and q95) — brute-force cosine top-5 per
+    * probe: every probe × corpus vector scored (the probe table
+    * broadcasts, the corpus streams), ranked by the window that plans on
+    * TopKPerKey, so the only shuffle carries ≤ 5 rows per probe and input
+    * partition. The ground truth of the recall evaluators.
+    */
+  def cosineTopK(spark: SparkSession, dir: String): DataFrame =
+    ranking(topByCosine(corpus(spark, dir)
+      .join(broadcast(probes(spark, dir)), col("probe_id") =!= col("vec_id"))
+      .select(col("probe_id"), col("vec_id"), cosine.as("cs")), 5))
 
   /** ANN via random-hyperplane LSH: 16 sign bits per vector, banded 4 × 4
     * bits; probe and corpus rows meet only inside shared band buckets
@@ -91,25 +120,16 @@ object Similarity {
         .as("band"))
     val candIds = bands.as("p")
       .join(bands.as("c"), col("p.band") === col("c.band") &&
-                           col("p.vec_id") < 10 && col("c.vec_id") =!= col("p.vec_id"))
+                           isProbe(col("p.vec_id")) && col("c.vec_id") =!= col("p.vec_id"))
       .select(col("p.vec_id").as("probe_id"), col("c.vec_id").as("vec_id"))
       .distinct()
-    val vecs = corpus(spark, dir)
-    val w = Window.partitionBy("probe_id").orderBy(col("cs").desc, col("vec_id"))
-    candIds
-      .join(vecs.toDF("probe_id", "pv", "pnrm"), "probe_id")
-      .join(vecs.toDF("vec_id", "cv", "cnrm"), "vec_id")
-      .withColumn("cs", VectorOps.dot(col("pv"), col("cv")) / (col("pnrm") * col("cnrm")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
-      .select(col("probe_id"), col("rnk"), col("vec_id"), round(col("cs"), 4).as("cs"))
-      .orderBy("probe_id", "rnk")
+    ranking(rerank(spark, dir, candIds, 5))
   }
 
   // ---- IVF shared pipeline: ONE definition of the coarse-quantizer
   // convention (16 fixed centroids = vec_id < 16, cosine assignment,
-  // argmax tie-break by cent_id) used by q59/q131/q132 — the scoredPairs
-  // anti-drift rule.
+  // argmax tie-break by cent_id) used by q59/q131/q132, so its consumers
+  // cannot drift apart.
 
   /** Cosine of every corpus vector to each of the 16 coarse centroids,
     * carrying the vector and centroid columns so downstream consumers can
@@ -158,22 +178,13 @@ object Similarity {
     */
   def annIvf(spark: SparkSession, dir: String): DataFrame = {
     val assign = ivfAssignFull(spark, dir).select(col("vec_id"), col("cent_id"))
-    val probeBuckets = centroidSims(spark, dir).filter(col("vec_id") < 10)
+    val probeBuckets = centroidSims(spark, dir).filter(isProbe(col("vec_id")))
       .withColumn("rn", row_number().over(wAssign))
       .filter(col("rn") <= 4).select(col("vec_id").as("probe_id"), col("cent_id"))
     val candIds = probeBuckets.join(assign, "cent_id")
       .filter(col("vec_id") =!= col("probe_id"))
       .select("probe_id", "vec_id").distinct()
-    val vecs = corpus(spark, dir)
-    val w = Window.partitionBy("probe_id").orderBy(col("cs").desc, col("vec_id"))
-    candIds
-      .join(vecs.toDF("probe_id", "pv", "pnrm"), "probe_id")
-      .join(vecs.toDF("vec_id", "cv2", "cnrm2"), "vec_id")
-      .withColumn("cs", VectorOps.dot(col("pv"), col("cv2")) / (col("pnrm") * col("cnrm2")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
-      .select(col("probe_id"), col("rnk"), col("vec_id"), round(col("cs"), 4).as("cs"))
-      .orderBy("probe_id", "rnk")
+    ranking(rerank(spark, dir, candIds, 5))
   }
 
   /** Per-label centroid via the typed `Aggregator` (partial-aggregated:
@@ -225,52 +236,27 @@ object Similarity {
     * the INTEGER code dot product — exact arithmetic in both engines, so
     * unlike every float-ADC member the candidate ranking is hash-exact with
     * no rounding games — and keeps top-32 per probe through the native
-    * bounded-heap TopKPerKeyExec. Only those 32 rows per probe fetch their
-    * float vectors for the exact cosine re-rank. At 100 TB this is the
+    * bounded-heap TopKPerKey operator. Only those 32 rows per probe fetch
+    * their float vectors for the shared exact re-rank. At 100 TB this is the
     * point: the corpus-sized scan touches 1 byte/dim codes (4-8× less I/O
     * and memory than the float vectors) plus a broadcast probe table, and
     * full-precision data is read for |probes|·32 rows only.
     */
   def sq8Rerank(spark: SparkSession, dir: String): DataFrame = {
-    val e = corpus(spark, dir)
-    val codes = e.select(col("vec_id"),
+    val codes = corpus(spark, dir).select(col("vec_id"),
       expr("transform(v, x -> CAST(floor(x / nrm * 127.0 + 0.5) AS BIGINT))").as("q"))
-    val probes = codes.filter(col("vec_id") < 10).toDF("probe_id", "pq")
-    val scored = codes.join(broadcast(probes), col("probe_id") =!= col("vec_id"))
+    val pq = codes.filter(isProbe(col("vec_id"))).toDF("probe_id", "pq")
+    val scored = codes.join(broadcast(pq), col("probe_id") =!= col("vec_id"))
       .select(col("probe_id"), col("vec_id"),
         expr("aggregate(zip_with(pq, q, (a, b) -> a * b), " +
           "CAST(0 AS BIGINT), (acc, x) -> acc + x)").as("iscore"))
-    val cand = graft.plans.GraftOps.topKPerKey(scored,
-        Seq("probe_id"), Seq(col("iscore").desc, col("vec_id").asc), 32)
+    val cand = topPerProbe(scored, 32, "irnk", col("iscore").desc, col("vec_id"))
       .select("probe_id", "vec_id", "iscore")
-    val pv = e.filter(col("vec_id") < 10).toDF("probe_id", "pv", "pnrm")
-    // candidate set is |probes|·32 rows — broadcast it onto the corpus so
-    // the full-precision fetch is a map-side semi-lookup, never a shuffle.
-    val rer = e.join(broadcast(cand), "vec_id")
-      .join(broadcast(pv), "probe_id")
-      .withColumn("cs",
-        VectorOps.dot(col("pv"), col("v")) / (col("pnrm") * col("nrm")))
-      .select("probe_id", "vec_id", "iscore", "cs")
-    graft.plans.GraftOps.topKPerKey(rer,
-        Seq("probe_id"), Seq(col("cs").desc, col("vec_id").asc), 5)
+    rerank(spark, dir, cand, 5)
       .select(col("probe_id"), col("rnk"), col("vec_id"), col("iscore"),
         round(col("cs"), 4).as("cs"))
       .orderBy("probe_id", "rnk")
   }
-
-  /** Same result as q40, through the native `TopKPerKeyExec`
-    * (graft.plans): per-partition bounded heaps before the exchange, so the
-    * shuffle carries ≤ k rows per (key, input partition) instead of every
-    * scored pair. Second spelling of one semantics — window (q40), custom
-    * physical operator (q95, and q74 under its own id) — both proven by the
-    * same oracle text.
-    */
-  def cosineTopKNative(spark: SparkSession, dir: String): DataFrame =
-    graft.plans.GraftOps.topKPerKey(
-      scoredPairs(spark, dir),
-      Seq("probe_id"), Seq(col("cs").desc, col("vec_id").asc), 5)
-      .select(col("probe_id"), col("rnk"), col("vec_id"), round(col("cs"), 4).as("cs"))
-      .orderBy("probe_id", "rnk")
 
   /** Recall@5 of the LSH ANN path against the brute-force ground truth —
     * the evaluation loop every ANN deployment runs before trusting an
@@ -312,7 +298,7 @@ object Similarity {
     */
   // ---- PQ shared pipeline: ONE definition of the codebook convention
   // (8 blocks × 8 dims, sub-centroids = vec_id < 16, argmin tie-break by
-  // code) used by q116/q117/q120 — the scoredPairs anti-drift rule.
+  // code) used by q116/q117/q120, so its consumers cannot drift apart.
 
   /** (vec_id, block 0..7, vb): 8-dim sub-blocks of every vector. */
   private def pqBlocks(spark: SparkSession, dir: String): DataFrame =
@@ -362,19 +348,17 @@ object Similarity {
   def pqAdc(spark: SparkSession, dir: String): DataFrame = {
     val blocks = pqBlocks(spark, dir)
     val codes = pqAssign(pqDists(blocks, blocks)).select("vec_id", "block", "code")
-    val ptab = pqDists(blocks.filter(col("vec_id") < 10), blocks)
+    val ptab = pqDists(blocks.filter(isProbe(col("vec_id"))), blocks)
       .select(col("vec_id").as("probe_id"), col("block"), col("code"),
               col("dist").as("t"))
     val perBlock = (0 to 7).map(b =>
       sum(when(col("block") === b, col("t"))).as(s"b$b"))
     val adc = (1 to 7).foldLeft(col("b0")) { (acc, b) => acc + col(s"b$b") }
-    val wTop = Window.partitionBy("probe_id").orderBy(col("adc"), col("vec_id"))
-    codes.join(broadcast(ptab), Seq("block", "code"))
+    topPerProbe(codes.join(broadcast(ptab), Seq("block", "code"))
       .filter(col("vec_id") =!= col("probe_id"))
       .groupBy("probe_id", "vec_id")
       .agg(perBlock.head, perBlock.tail: _*)
-      .withColumn("adc", adc)
-      .withColumn("rnk", row_number().over(wTop)).filter(col("rnk") <= 5)
+      .withColumn("adc", adc), 5, "rnk", col("adc"), col("vec_id"))
       .select(col("probe_id"), col("rnk"), col("vec_id"), round(col("adc"), 4).as("adc"))
       .orderBy("probe_id", "rnk")
   }
@@ -385,13 +369,11 @@ object Similarity {
     * end-to-end.
     */
   def pqRecall(spark: SparkSession, dir: String): DataFrame = {
-    val e = corpus(spark, dir)
-    val probes = e.filter(col("vec_id") < 10).toDF("probe_id", "pv", "pnrm")
-    val w = Window.partitionBy("probe_id").orderBy(col("d"), col("vec_id"))
-    val bruteTop = e.join(broadcast(probes), col("probe_id") =!= col("vec_id"))
+    val bruteTop = topPerProbe(corpus(spark, dir)
+      .join(broadcast(probes(spark, dir)), col("probe_id") =!= col("vec_id"))
       .withColumn("d", expr(
-        "aggregate(zip_with(pv, v, (x, y) -> (x - y) * (x - y)), 0D, (a, s) -> a + s)"))
-      .withColumn("rnk", row_number().over(w)).filter(col("rnk") <= 5)
+        "aggregate(zip_with(pv, v, (x, y) -> (x - y) * (x - y)), 0D, (a, s) -> a + s)")),
+      5, "rnk", col("d"), col("vec_id"))
     recallAt5(bruteTop, pqAdc(spark, dir))
   }
 
@@ -465,7 +447,7 @@ object Similarity {
     val wCode = Window.partitionBy("vec_id", "block").orderBy(col("dist"), col("code"))
     val codes = rdists.withColumn("rn", row_number().over(wCode)).filter(col("rn") === 1)
       .select(col("vec_id"), col("cent_id"), col("block"), col("code"))
-    val pb = centroidSims(spark, dir).filter(col("vec_id") < 10)
+    val pb = centroidSims(spark, dir).filter(isProbe(col("vec_id")))
       .withColumn("rn", row_number().over(wAssign)).filter(col("rn") <= 4)
       .select(col("vec_id").as("probe_id"), col("cent_id"),
               expr("zip_with(v, cv, (x, y) -> x - y)").as("r"))
@@ -476,13 +458,11 @@ object Similarity {
       .select(col("probe_id"), col("cent_id"), col("block"), col("code"), col("t"))
     val perBlock = (0 to 7).map(b => sum(when(col("block") === b, col("t"))).as(s"b$b"))
     val adcSum = (1 to 7).foldLeft(col("b0")) { (acc, b) => acc + col(s"b$b") }
-    val wTop = Window.partitionBy("probe_id").orderBy(col("adc"), col("vec_id"))
-    codes.join(broadcast(ptab), Seq("cent_id", "block", "code"))
+    topPerProbe(codes.join(broadcast(ptab), Seq("cent_id", "block", "code"))
       .filter(col("vec_id") =!= col("probe_id"))
       .groupBy("probe_id", "vec_id")
       .agg(perBlock.head, perBlock.tail: _*)
-      .withColumn("adc", adcSum)
-      .withColumn("rnk", row_number().over(wTop)).filter(col("rnk") <= 5)
+      .withColumn("adc", adcSum), 5, "rnk", col("adc"), col("vec_id"))
       .select(col("probe_id"), col("rnk"), col("vec_id"), round(col("adc"), 4).as("adc"))
       .orderBy("probe_id", "rnk")
   }
@@ -521,13 +501,10 @@ object Similarity {
   def hardNegatives(spark: SparkSession, dir: String): DataFrame = {
     val lab = embeddings(spark, dir).select(col("vec_id"), col("label"))
     val e = corpus(spark, dir).join(lab, "vec_id")
-    val probes = e.filter(col("vec_id") < 10)
+    val labeled = e.filter(isProbe(col("vec_id")))
       .toDF("probe_id", "pv", "pnrm", "p_label")
-    val w = Window.partitionBy("probe_id").orderBy(col("cs").desc, col("vec_id"))
-    e.join(broadcast(probes), col("label") =!= col("p_label"))
-      .withColumn("cs", VectorOps.dot(col("pv"), col("v")) / (col("pnrm") * col("nrm")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 3)
+    topByCosine(e.join(broadcast(labeled), col("label") =!= col("p_label"))
+      .withColumn("cs", cosine), 3)
       .select(col("probe_id"), col("rnk"), col("vec_id"), col("label"),
               round(col("cs"), 4).as("cs"))
       .orderBy("probe_id", "rnk")
@@ -726,21 +703,15 @@ object Similarity {
     import spark.implicits._
     val centDf = cents.toSeq.zipWithIndex.map { case (c, i) => (i, c) }
       .toDF("cent_id", "c")
-    val wp = Window.partitionBy("probe_id").orderBy(col("pd"), col("cent_id"))
-    val probeBuckets = assign.filter(col("vec_id") < 10)
+    val probeBuckets = topPerProbe(assign.filter(isProbe(col("vec_id")))
       .select(col("vec_id").as("probe_id"), col("v").as("pv"))
       .crossJoin(broadcast(centDf))
-      .withColumn("pd", VectorOps.l2sq(col("pv"), col("c")))
-      .withColumn("rn", row_number().over(wp))
-      .filter(col("rn") <= 2)
+      .withColumn("pd", VectorOps.l2sq(col("pv"), col("c"))), 2, "rn", col("pd"), col("cent_id"))
       .select("probe_id", "pv", "cent_id")
-    val w = Window.partitionBy("probe_id").orderBy(col("d2"), col("vec_id"))
-    assign.select(col("vec_id"), col("v"), col("cent_id"))
+    topPerProbe(assign.select(col("vec_id"), col("v"), col("cent_id"))
       .join(broadcast(probeBuckets), "cent_id")
       .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("d2", VectorOps.l2sq(col("pv"), col("v")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
+      .withColumn("d2", VectorOps.l2sq(col("pv"), col("v"))), 5, "rnk", col("d2"), col("vec_id"))
       .select(col("probe_id"), col("rnk"), col("vec_id"), col("d2"))
       .orderBy("probe_id", "rnk")
   }
@@ -754,8 +725,9 @@ object Similarity {
     * its top-K=16, 0 beyond, and the fused top-5 per probe is returned.
     * Rank fusion over integer scores (not RRF's 1/(60+r) floats) keeps the
     * whole query transcendental-free and hash-exact. All three per-probe
-    * top-K cuts run on the NATIVE TopKPerKeyExec (q95's partial/final
-    * operator) — no corpus-sized window partition anywhere.
+    * top-K cuts are `topPerProbe` windows planned on the native
+    * TopKPerKey partial/final pair — no corpus-sized window partition
+    * anywhere.
     * Scale shape: lexical work ∝ capped posting lists; dense work = one
     * corpus scan against a broadcast ≤10-row probe set (the q39-class
     * bounded build); fusion joins two ≤(K·probes)-row lists.
@@ -766,34 +738,31 @@ object Similarity {
       .select(col("vec_id"),
         transform(col("embedding"),
           x => floor(x.cast("double") * lit(1e6)).cast("long")).as("v"))
-    val probes = qv.filter(col("vec_id") < 10)
+    val pq = qv.filter(isProbe(col("vec_id")))
       .select(col("vec_id").as("probe_id"), col("v").as("pv"))
-    val denseAll = qv.crossJoin(broadcast(probes))
+    val denseAll = qv.crossJoin(broadcast(pq))
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id").as("doc_id"),
               VectorOps.l2sq(col("pv"), col("v")).as("d2"))
-    val dense = graft.plans.GraftOps.topKPerKey(denseAll, Seq("probe_id"),
-        Seq(col("d2").asc, col("doc_id").asc), K, "dr")
+    val dense = topPerProbe(denseAll, K, "dr", col("d2"), col("doc_id"))
       .select(col("probe_id"), col("doc_id"),
               (lit(K + 1) - col("dr")).cast("long").as("ds"))
     val allSh = Dedup.shingleStrings(spark, dir)
     val rare = allSh.groupBy("s").agg(count(lit(1)).as("df"))
       .filter(col("df") <= 100).select("s")
     val idx = allSh.join(rare, "s")
-    val probeSh = idx.filter(col("doc_id") < 10)
+    val probeSh = idx.filter(isProbe(col("doc_id")))
       .select(col("doc_id").as("probe_id"), col("s"))
     val overlap = idx.join(probeSh, "s")
       .filter(col("doc_id") =!= col("probe_id"))
       .groupBy("probe_id", "doc_id").agg(count(lit(1)).as("ov"))
-    val lex = graft.plans.GraftOps.topKPerKey(overlap, Seq("probe_id"),
-        Seq(col("ov").desc, col("doc_id").asc), K, "lr")
+    val lex = topPerProbe(overlap, K, "lr", col("ov").desc, col("doc_id"))
       .select(col("probe_id"), col("doc_id"),
               (lit(K + 1) - col("lr")).cast("long").as("ls"))
     val fused = dense.join(lex, Seq("probe_id", "doc_id"), "full")
       .select(col("probe_id"), col("doc_id"),
         (coalesce(col("ds"), lit(0L)) + coalesce(col("ls"), lit(0L))).as("borda"))
-    graft.plans.GraftOps.topKPerKey(fused, Seq("probe_id"),
-        Seq(col("borda").desc, col("doc_id").asc), 5, "rnk")
+    topPerProbe(fused, 5, "rnk", col("borda").desc, col("doc_id"))
       .select(col("probe_id"), col("rnk"), col("doc_id"), col("borda"))
       .orderBy("probe_id", "rnk")
   }
@@ -927,13 +896,16 @@ object Similarity {
         .select("layer", "src", "dst", "cs")
       val oriented = scored.union(scored.select(col("layer"),
         col("dst").as("src"), col("src").as("dst"), col("cs")))
-      // Top-M per (layer, src) through the engine's own bounded-heap
-      // TopKPerKeyExec (q95/q173's operator): per-partition UnsafeRow
-      // heaps before the exchange — the shuffle carries ≤ M rows per
-      // (key, partition) and nothing is boxed (a collect_set-of-structs
-      // formulation measured ~2 s of object churn on the same input).
-      val topm = graft.plans.GraftOps.topKPerKey(oriented,
-          Seq("layer", "src"), Seq(col("cs").desc, col("dst").asc), hnswM)
+      // Top-M per (layer, src): a row_number window planned on the
+      // engine's bounded-heap TopKPerKey operator — per-partition
+      // UnsafeRow heaps before the exchange, so the shuffle carries ≤ M
+      // rows per (key, partition) and nothing is boxed (a
+      // collect_set-of-structs formulation measured ~2 s of object churn
+      // on the same input).
+      val topm = oriented
+        .withColumn("rnk", row_number().over(
+          Window.partitionBy("layer", "src").orderBy(col("cs").desc, col("dst"))))
+        .filter(col("rnk") <= hnswM)
         .select("layer", "src", "dst")
       topm.union(topm.select(col("layer"), col("dst").as("src"),
           col("src").as("dst"))).distinct()
@@ -1009,23 +981,14 @@ object Similarity {
     val entry = hnswLevels(spark, dir)
       .orderBy(col("lvl").desc, col("vec_id")).limit(1)
       .select(col("vec_id").as("entry_id"))
-    val probes = hnswCodes(spark, dir).filter(col("vec_id") < 10)
+    val pq = hnswCodes(spark, dir).filter(isProbe(col("vec_id")))
       .toDF("p_id", "pq").crossJoin(broadcast(entry))
     val fin = graft.plans.GraftOps.beamSearch(
-      probes, hnswIndex(spark, dir),
+      pq, hnswIndex(spark, dir),
       ("p_id", "pq", "entry_id"), ("vec_id", "q", "adj"), hnswSchedule)
-    val e = corpus(spark, dir)
-    val pv = e.filter(col("vec_id") < 10).toDF("probe_id", "pv", "pnrm")
-    // Final beam is |probes|·10 rows — broadcast it onto the corpus so the
-    // full-precision fetch is a map-side semi-lookup, never a shuffle.
-    val rer = e.join(broadcast(fin.filter(col("cand_id") =!= col("probe_id"))),
-        col("vec_id") === col("cand_id"))
-      .join(broadcast(pv), "probe_id")
-      .withColumn("cs",
-        VectorOps.dot(col("pv"), col("v")) / (col("pnrm") * col("nrm")))
-      .select("probe_id", "vec_id", "cs")
-    graft.plans.GraftOps.topKPerKey(rer,
-        Seq("probe_id"), Seq(col("cs").desc, col("vec_id").asc), 5)
+    // the final beam is |probes|·10 rows
+    rerank(spark, dir, fin.filter(col("cand_id") =!= col("probe_id"))
+      .select(col("probe_id"), col("cand_id").as("vec_id")), 5)
       .select("probe_id", "vec_id")
   }
 
@@ -1054,13 +1017,13 @@ object Similarity {
     "q116_pq_codes"           -> pqCodes _,
     "q108_ann_recall"         -> annRecall _,
     "q40_similarity_topk"     -> cosineTopK _,
-    "q95_similarity_topk_native" -> cosineTopKNative _,
+    "q95_similarity_topk_native" -> cosineTopK _,
     "q80_embed_quantize"      -> quantize _,
     "q199_sq8_rerank"         -> sq8Rerank _,
     "q41_similarity_ann_lsh"  -> annLsh _,
     "q42_label_centroid"      -> labelCentroid _,
     "q59_similarity_ann_ivf"  -> annIvf _,
-    "q74_similarity_topk_agg" -> cosineTopKNative _,
+    "q74_similarity_topk_agg" -> cosineTopK _,
   )
 
   /** q186 — per-label embedding DRIFT between the standing corpus and the
@@ -1685,8 +1648,8 @@ object Similarity {
         |       CAST(list_aggregate(q, 'max') AS BIGINT) AS qmax,
         |       CAST(list_aggregate(q, 'sum') AS BIGINT) AS qsum
         |FROM qv ORDER BY vec_id""".stripMargin,
-    // q40 (window) and q95/q74 (native TopKPerKeyExec) compute the
-    // identical result — ONE oracle text proves all three ids.
+    // q40, q74 and q95 register the same function — ONE oracle text
+    // proves all three ids.
     "q40_similarity_topk" -> bruteTopKOracle,
     "q74_similarity_topk_agg" -> bruteTopKOracle,
     "q95_similarity_topk_native" -> bruteTopKOracle,

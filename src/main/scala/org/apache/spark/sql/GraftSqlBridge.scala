@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * custom logical operators (graft.plans) can be turned back into a
   * DataFrame. Lives in `org.apache.spark.sql` purely for access — the
   * standard pattern for out-of-tree Catalyst extensions; nothing here
-  * depends on Spark internals beyond the two stable entry points.
+  * depends on Spark internals beyond these stable entry points.
   */
 object GraftSqlBridge {
   /** DataFrame over a (resolved) custom logical plan. */
@@ -19,15 +19,6 @@ object GraftSqlBridge {
     */
   def analyzed(df: DataFrame): LogicalPlan =
     df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed
-
-  /** Catalyst expression behind a Column (Spark 4 hides `Column.expr`
-    * behind the connect-compatible ColumnNode indirection). Conversion is
-    * EAGER via the session's converter — the lazy
-    * `ExpressionUtils.expression` wrapper is unresolvable and
-    * unserializable once it reaches a physical plan.
-    */
-  def expression(spark: SparkSession, c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
-    spark.asInstanceOf[classic.SparkSession].expression(c)
 
   /** Final physical plan — for plan-shape assertions in tests/Explain. */
   def executedPlan(df: DataFrame): org.apache.spark.sql.execution.SparkPlan =

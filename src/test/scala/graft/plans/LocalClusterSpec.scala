@@ -151,9 +151,9 @@ class LocalClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.ui.enabled", "false")
       .config("spark.executor.extraClassPath", classes)
       .config("spark.executor.extraJavaOptions", opens)
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
     // Don't start asserting until both executor JVMs have registered and
     // taken tasks (executor launch is asynchronous in standalone mode).
     val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
@@ -274,13 +274,16 @@ class LocalClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select(col("id"), (col("id") % 37).as("k"),
         (col("id") * 2654435761L % 1001).as("v"))
       .repartition(13)
-    val native = GraftOps.topKPerKey(df, Seq("k"), Seq(col("v").desc, col("id").asc), 3)
-      .select("k", "id", "rnk").as[(Long, Long, Int)].collect().sorted.toSeq
-    assert(native.exists { case (_, _, r) => r == 3 })
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("k").orderBy(col("v").desc, col("id").asc)
-    val window = df.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= 3)
-      .select("k", "id", "rnk").as[(Long, Long, Int)].collect().sorted.toSeq
+    def top3 = df.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= 3)
+      .select("k", "id", "rnk")
+    val window = graft.SparkSpec.windowReference(spark)(top3)
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted
+    val q = top3
+    val native = q.as[(Long, Long, Int)].collect().sorted.toSeq
+    assert(graft.SparkSpec.planNodes(q).contains("TopKPerKeyFinalExec"))
+    assert(native.exists { case (_, _, r) => r == 3 })
     assert(native == window)
   }
 }

@@ -1,13 +1,15 @@
 package graft.plans
 
 import graft.SparkSpec
-import org.apache.spark.sql.GraftSqlBridge
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** The native TopKPerKey operator: result parity with the window spelling,
-  * plan shape (partial heap below the exchange, final above), and edge
-  * semantics (short groups, ties broken by the declared tiebreaker).
+/** The native TopKPerKey operator, reached through its one spelling (a
+  * `row_number` window filter that TopKWindowRewrite plans on it): result
+  * parity with Spark's own window plan, plan shape (partial heap below the
+  * exchange, final above), and edge semantics (short groups, ties broken by
+  * the declared tiebreaker).
   */
 class TopKPerKeySpec extends SparkSpec {
 
@@ -22,18 +24,22 @@ class TopKPerKeySpec extends SparkSpec {
     ).toDF("k", "s", "id").repartition(4)
   }
 
+  /** The first `k` rows per `k` column value under `order`, as `rnk`. */
+  private def topK(df: DataFrame, k: Int, order: Column*): DataFrame =
+    df.withColumn("rnk", row_number().over(Window.partitionBy("k").orderBy(order: _*)))
+      .filter(col("rnk") <= k)
+
   test("matches the row_number window spelling, ties included") {
-    val native = GraftOps.topKPerKey(sample, Seq("k"), Seq(col("s").desc, col("id").asc), 3)
-      .select("k", "s", "id", "rnk")
-    val w = Window.partitionBy("k").orderBy(col("s").desc, col("id").asc)
-    val expected = sample.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 3).select("k", "s", "id", "rnk")
-    assert(native.except(expected).isEmpty && expected.except(native).isEmpty)
-    assert(native.count() === expected.count())
+    def q = topK(sample, 3, col("s").desc, col("id").asc).select("k", "s", "id", "rnk")
+    val native = q
+    val got = native.collect().toSet
+    assert(planNodes(native).contains("TopKPerKeyFinalExec"))
+    assert(got === windowReference(q).toSet)
+    assert(got.size === 6)
   }
 
   test("groups smaller than k come back whole, ranked from 1") {
-    val out = GraftOps.topKPerKey(sample, Seq("k"), Seq(col("s").asc), 10)
+    val out = topK(sample, 10, col("s").asc)
     assert(out.count() === sample.count())
     val cRanks = out.filter(col("k") === "c").select("rnk")
       .collect().map(_.getInt(0)).toSeq
@@ -41,7 +47,7 @@ class TopKPerKeySpec extends SparkSpec {
   }
 
   test("physical plan is partial heap → exchange → final heap") {
-    val native = GraftOps.topKPerKey(sample, Seq("k"), Seq(col("s").desc), 2)
+    val native = topK(sample, 2, col("s").desc)
     native.collect() // force AQE to finalize the plan
     val plan = GraftSqlBridge.executedPlan(native).toString
     assert(plan.contains("TopKPerKeyFinal"), plan)
@@ -59,8 +65,7 @@ class TopKPerKeySpec extends SparkSpec {
     val prop = Prop.forAll(genRows, Gen.choose(1, 7), Gen.choose(1, 6)) {
       (rows, k, parts) =>
         val df = rows.toDF("k", "s", "id").repartition(parts)
-        val got = GraftOps.topKPerKey(df, Seq("k"),
-            Seq(col("s").desc, col("id").asc, col("k").asc), k)
+        val got = topK(df, k, col("s").desc, col("id").asc, col("k").asc)
           .select("k", "s", "id", "rnk")
           .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getInt(3))).toSet
         // ties beyond (s desc, id asc, k asc) can't exist within a key-group
@@ -74,14 +79,5 @@ class TopKPerKeySpec extends SparkSpec {
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(15), prop)
     assert(res.passed, res.status.toString)
-  }
-
-  test("unknown column names fail fast") {
-    intercept[IllegalArgumentException] {
-      GraftOps.topKPerKey(sample, Seq("nope"), Seq(col("s").asc), 1)
-    }
-    intercept[IllegalArgumentException] {
-      GraftOps.topKPerKey(sample, Seq("k"), Seq(col("nope").asc), 1)
-    }
   }
 }

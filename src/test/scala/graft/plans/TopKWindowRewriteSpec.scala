@@ -47,13 +47,11 @@ class TopKWindowRewriteSpec extends SparkSpec {
     assert(plan.contains("Window"), plan)
   }
 
-  test("rewrite honors spark.graft.topk.rewrite=false") {
-    spark.conf.set("spark.graft.topk.rewrite", "false")
-    try {
-      val q = df.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= 2)
-      q.collect()
-      val plan = GraftSqlBridge.executedPlan(q).toString
-      assert(!plan.contains("TopKPerKey"), plan)
-    } finally spark.conf.set("spark.graft.topk.rewrite", "true")
+  test("spark.sql.optimizer.excludedRules turns the rewrite off: Spark's window plan, same rows") {
+    def q = df.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= 2)
+      .select("k", "id", "rnk")
+    val native = q
+    assert(native.collect().toSet === windowReference(q).toSet)
+    assert(planNodes(native).contains("TopKPerKeyFinalExec"))
   }
 }

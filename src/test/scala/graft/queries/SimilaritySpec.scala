@@ -8,9 +8,9 @@ import org.apache.spark.sql.functions._
   */
 class SimilaritySpec extends SparkSpec {
 
-  test("q74 and q95 (topKPerKey) equal q40 (window rank) row for row") {
-    val viaWindow = Similarity.cosineTopK(spark, sfDir).collect().toSeq
-    Seq("q74_similarity_topk_agg", "q95_similarity_topk_native").foreach { id =>
+  test("q40, q74 and q95 equal Spark's own window plan row for row") {
+    val viaWindow = windowReference(Similarity.cosineTopK(spark, sfDir))
+    Seq("q40_similarity_topk", "q74_similarity_topk_agg", "q95_similarity_topk_native").foreach { id =>
       assert(Similarity.all(id)(spark, sfDir).collect().toSeq == viaWindow, id)
     }
   }
@@ -269,13 +269,24 @@ class SimilaritySpec extends SparkSpec {
     assert(inc.length < trained.size)
   }
 
-  test("hybrid fusion plans every ranking cut on the native top-K operator, never a window") {
-    val plan = Similarity.hybridFusion(spark, sfDir)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("TopKPerKeyPartial") && plan.contains("TopKPerKeyFinal"),
-      s"native top-K exec missing from hybrid fusion plan:\n$plan")
-    assert(!plan.contains("RunningWindowFunction") && !plan.contains("Window ("),
-      s"window-based ranking crept into hybrid fusion:\n$plan")
+  test("every ranking cut of the top-k ids plans on the native top-K operator, never a window") {
+    // the ids whose rankings are row_number windows; q192 and q193 scan
+    // the cached edge build, whose plan planNodes includes
+    val ids = Seq("q40_similarity_topk", "q74_similarity_topk_agg",
+      "q95_similarity_topk_native", "q41_similarity_ann_lsh", "q59_similarity_ann_ivf",
+      "q103_sample_topn_per_group", "q160_hybrid_fusion", "q173_kmv_set_algebra",
+      "q192_hnsw_stats", "q193_hnsw_recall", "q199_sq8_rerank")
+    val bad = ids.flatMap { id =>
+      val df = graft.SparkEntry.queries(id)(spark, sfDir)
+      df.collect()
+      val nodes = planNodes(df)
+      val native = Seq("TopKPerKeyPartialExec", "TopKPerKeyFinalExec").forall(nodes.contains)
+      val windows = nodes.intersect(Set("WindowExec", "WindowGroupLimitExec"))
+      if (native && windows.isEmpty) None
+      else Some(s"$id: native top-K ${if (native) "present" else "missing"}, " +
+        s"window nodes ${windows.mkString("[", ", ", "]")}")
+    }
+    assert(bad.isEmpty, bad.mkString("\n"))
   }
 
   test("hybrid fusion equals an independent JVM recomputation of both rankers") {

@@ -14,6 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * Jobs are metered by one SparkListener, `graft.core.Meter`'s. Versions
   * resolve from one listing of `_manifests/`, `Versioned.listing`, and an
   * operation reads a version's headers through one `Versioned.Snapshot`.
+  * Top-k per key has one spelling, the `row_number` window that
+  * `TopKWindowRewrite` plans on `TopKPerKeyNode`, and graft's rules and
+  * strategies register through `GraftExtensions` only.
   */
 class ParquetReadGuardSpec extends AnyFunSuite {
   private val plainRead =
@@ -133,5 +136,26 @@ class ParquetReadGuardSpec extends AnyFunSuite {
     assert(hits.isEmpty, s"take one Versioned.snapshot per operation: ${hits.mkString(", ")}")
     assert(accessor.findFirstIn("Versioned.partColOf(spark, path, v)").nonEmpty)
     assert(accessor.findFirstIn("val partCol = s.partCol").isEmpty)
+  }
+
+  test("src/main builds TopKPerKeyNode only in TopKWindowRewrite and registers no experimental rules") {
+    // a construction or a second door into the operator; the case class
+    // itself and the strategy's pattern match are neither
+    val route = """\b(TopKPerKeyNode|topKPerKey)\(|\bextra(?:Strategies|Optimizations)\b""".r
+    val hits = mainSources.flatMap { case (path, text) =>
+      route.findAllMatchIn(text).flatMap { m =>
+        val line = text.substring(text.lastIndexOf('\n', m.start) + 1, m.start)
+        val declOrPattern = m.group(1) == "TopKPerKeyNode" && line.trim.matches("(case class|case)")
+        val rewrite = m.group(1) == "TopKPerKeyNode" &&
+          path.endsWith("graft/plans/TopKWindowRewrite.scala")
+        if (declOrPattern || rewrite) None
+        else Some(s"${m.matched} at $path:${text.substring(0, m.start).count(_ == '\n') + 1}")
+      }
+    }
+    assert(hits.isEmpty, "rank with a row_number window (TopKWindowRewrite plans it on " +
+      s"TopKPerKeyNode) and register through GraftExtensions: ${hits.mkString(", ")}")
+    assert(route.findFirstIn("graft.plans.GraftOps.topKPerKey(df,").nonEmpty)
+    assert(route.findFirstIn("exp.extraStrategies = exp.extraStrategies :+ s").nonEmpty)
+    assert(route.findFirstIn("case TopKPerKeyNode(keys, order, k, rankAttr, child) =>").nonEmpty)
   }
 }
